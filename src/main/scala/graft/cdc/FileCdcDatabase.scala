@@ -25,6 +25,11 @@ object FileCdcDatabase {
 
   private val TsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
+  /** Shared parser for metadata reads and quick-probe fallbacks
+    * (ObjectMapper is thread-safe for reads; one per call was measurable
+    * waste on the per-line probe paths). */
+  private[cdc] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Per-snapshot-file PK stats (file is a basename under <table>/snapshot):
     * rows are range-partitioned and sorted by PK at write time, so chunk
     * readers prune non-overlapping files and stop early — the file-dialect
@@ -93,7 +98,6 @@ object FileCdcDatabase {
       .json(root.resolve("log").toString)
 
     // Per-file PK stats: files are PK-sorted, so min/max = first/last line.
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val fileRanges = dataFiles(dir, table, "snapshot").flatMap { f =>
       var first: String = null; var last: String = null
       val it = lines(f)
@@ -117,7 +121,6 @@ object FileCdcDatabase {
   }
 
   def readMeta(dir: String, table: String): TableMeta = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val n = mapper.readTree(
       Files.readString(Paths.get(dir, table, "meta.json")))
     val files = Option(n.get("snapshotFiles")).map(_.elements().asScala.map {
@@ -136,6 +139,11 @@ object FileCdcDatabase {
       optStr("schemaName"), optStr("tenant"))
   }
 
+  /** [[quickLongField]]'s "no plain integer here" value. A field holding
+    * Long.MinValue itself also reads as NoLong; every caller then takes
+    * its full-decode fallback, which reads that value correctly. */
+  private[cdc] final val NoLong = Long.MinValue
+
   /** Fast path: pull a TOP-LEVEL integer field out of a JSONL line without
     * building a tree. The scan tracks brace depth and string context, so a
     * same-named key inside a nested struct (envelope `before`/`after`) or
@@ -144,22 +152,33 @@ object FileCdcDatabase {
     * early-stop/prefilter call sites would then drop data. None when the
     * key is absent at depth 1 or its value is not a plain integer (caller
     * falls back to a full decode). */
-  def quickLongFieldOpt(line: String, field: String): Option[Long] =
-    scanLongField(line, field, topLevelOnly = true)
+  def quickLongFieldOpt(line: String, field: String): Option[Long] = {
+    val v = scanLongField(line, field, topLevelOnly = true)
+    if (v == NoLong) None else Some(v)
+  }
 
   /** Like [[quickLongFieldOpt]] but matches a key at ANY nesting depth —
     * for fields that live inside the envelope's `before`/`after` structs
     * and are value-identical in both (the chunk key: key-stable rows, same
     * contract as the reference's RecordUtils.upsertBinlog dedup). Still
     * key-position only: text inside a string value never matches. */
-  def quickNestedLongFieldOpt(line: String, field: String): Option[Long] =
+  def quickNestedLongFieldOpt(line: String, field: String): Option[Long] = {
+    val v = quickNestedLongField(line, field)
+    if (v == NoLong) None else Some(v)
+  }
+
+  /** [[quickNestedLongFieldOpt]] without the Option: [[NoLong]] = unknown. */
+  private[cdc] def quickNestedLongField(line: String, field: String): Long =
     scanLongField(line, field, topLevelOnly = false)
 
-  private def scanLongField(line: String, field: String,
-      topLevelOnly: Boolean): Option[Long] = {
-    val key = "\"" + field + "\""
+  /** The quick probe itself, [[NoLong]] = unknown. Allocation-free: it
+    * runs once per snapshot line (the pk early stop) and once per log line
+    * (the offset probe). */
+  private[cdc] def scanLongField(line: String, field: String,
+      topLevelOnly: Boolean): Long = {
+    val n = line.length
     var i = 0; var depth = 0; var inStr = false; var esc = false
-    while (i < line.length) {
+    while (i < n) {
       val c = line.charAt(i)
       if (inStr) {
         if (esc) esc = false
@@ -170,35 +189,52 @@ object FileCdcDatabase {
         case '{' | '[' => depth += 1; i += 1
         case '}' | ']' => depth -= 1; i += 1
         case '"' =>
-          if ((!topLevelOnly || depth == 1) && line.startsWith(key, i)) {
-            var j = i + key.length
-            while (j < line.length && line.charAt(j).isWhitespace) j += 1
-            if (j < line.length && line.charAt(j) == ':') {
+          val close = i + 1 + field.length
+          if ((!topLevelOnly || depth == 1) && close < n &&
+              line.startsWith(field, i + 1) && line.charAt(close) == '"') {
+            var j = close + 1
+            while (j < n && line.charAt(j).isWhitespace) j += 1
+            if (j < n && line.charAt(j) == ':') {
               j += 1
-              while (j < line.length && line.charAt(j).isWhitespace) j += 1
-              var end = j
-              while (end < line.length && (line.charAt(end).isDigit ||
-                (end == j && line.charAt(end) == '-'))) end += 1
-              return if (end == j) None
-              else try Some(line.substring(j, end).toLong)
-              catch { case _: NumberFormatException => None }
+              while (j < n && line.charAt(j).isWhitespace) j += 1
+              return parseLongAt(line, j)
             }
             // string token equal to the key text but not a key — skip it
             // as an ordinary string
-            inStr = true; i += 1
-          } else { inStr = true; i += 1 }
+          }
+          inStr = true; i += 1
         case _ => i += 1
       }
     }
-    None
+    NoLong
+  }
+
+  /** The optionally signed digit run at `j` as Long.parseLong reads it;
+    * [[NoLong]] when there is none or it overflows. */
+  private def parseLongAt(line: String, j: Int): Long = {
+    val n = line.length
+    val neg = j < n && line.charAt(j) == '-'
+    val limit = if (neg) Long.MinValue else -Long.MaxValue
+    var k = if (neg) j + 1 else j
+    var acc = 0L // negative accumulation reaches Long.MinValue
+    while (k < n && line.charAt(k).isDigit) {
+      val d = Character.digit(line.charAt(k), 10)
+      if (acc < limit / 10) return NoLong
+      acc *= 10
+      if (acc < limit + d) return NoLong
+      acc -= d
+      k += 1
+    }
+    if (k == (if (neg) j + 1 else j)) NoLong
+    else if (neg) acc else -acc
   }
 
   /** [[quickLongFieldOpt]] with a Jackson fallback — for top-level fields
     * that are always present (e.g. `__offset` in log lines). */
-  def quickLongField(line: String, field: String): Long =
-    quickLongFieldOpt(line, field).getOrElse(
-      new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(line).get(field).asLong())
+  def quickLongField(line: String, field: String): Long = {
+    val v = scanLongField(line, field, topLevelOnly = true)
+    if (v != NoLong) v else mapper.readTree(line).get(field).asLong()
+  }
 
   /** Tables present under `dir` (reference: discoverDataCollections,
     * DataSourceDialect.java:45-52). */

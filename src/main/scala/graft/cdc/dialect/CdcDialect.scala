@@ -138,9 +138,6 @@ object CdcDialects {
  * parses, early stops) live here — the generic source never assumes them.
  */
 object FileCdcDialect extends CdcDialect {
-  /** Shared fallback parser for offset probes (ObjectMapper is thread-safe
-    * for reads; per-line construction was measurable waste). */
-  private val fallbackMapper = new com.fasterxml.jackson.databind.ObjectMapper()
   import graft.cdc.ChangeRecord
 
   val name = "file"
@@ -258,14 +255,16 @@ object FileCdcDialect extends CdcDialect {
     * early stop, and they cannot be range-filtered) so the reader's
     * parse-error policy decides: fail with context, or skip. */
   private def offsetOfOpt(l: String): Option[Long] =
-    FileCdcDatabase.quickLongFieldOpt(l, ChangeRecord.OffsetCol).orElse {
-      // integral nodes only: asLong() on a string/null/object coerces to 0,
-      // which the `off > from` range filter would silently drop even under
-      // parse-error-policy=fail — return None so the reader's policy decides
-      try Option(fallbackMapper.readTree(l).get(ChangeRecord.OffsetCol))
-        .filter(_.canConvertToLong).map(_.asLong())
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
+    FileCdcDatabase.quickLongFieldOpt(l, ChangeRecord.OffsetCol)
+      .orElse(offsetByTree(l))
+
+  // integral nodes only: asLong() on a string/null/object coerces to 0,
+  // which the `off > from` range filter would silently drop even under
+  // parse-error-policy=fail — return None so the reader's policy decides
+  private def offsetByTree(l: String): Option[Long] =
+    try Option(FileCdcDatabase.mapper.readTree(l).get(ChangeRecord.OffsetCol))
+      .filter(_.canConvertToLong).map(_.asLong())
+    catch { case scala.util.control.NonFatal(_) => None }
 
   override def logLines(path: String, table: String,
       from: Long, to: Long): Iterator[String] =
@@ -273,15 +272,23 @@ object FileCdcDialect extends CdcDialect {
       .flatMap { f =>
         // one offset probe per line: the takeWhile predicate and the range
         // filter see each element back-to-back on this single-threaded
-        // iterator, so a one-slot memo removes the double parse
-        var memoLine: String = null; var memoOff: Option[Long] = None
-        def off(l: String): Option[Long] = {
-          if (l ne memoLine) { memoLine = l; memoOff = offsetOfOpt(l) }
-          memoOff
+        // iterator, so a one-slot memo removes the double parse. The memo
+        // is primitive (no Option per line); unknown = no offset, so the
+        // line flows through to the reader's parse-error policy.
+        var memoLine: String = null; var memoOff = 0L; var memoKnown = false
+        def probe(l: String): Unit = if (l ne memoLine) {
+          memoLine = l
+          memoOff = FileCdcDatabase.scanLongField(l, ChangeRecord.OffsetCol,
+            topLevelOnly = true)
+          memoKnown = memoOff != FileCdcDatabase.NoLong || {
+            val t = offsetByTree(l)
+            t.foreach(memoOff = _)
+            t.isDefined
+          }
         }
         FileCdcDatabase.lines(f)
-          .takeWhileClosing(l => off(l).forall(_ <= to))
-          .filter(l => off(l).forall(_ > from))
+          .takeWhileClosing { l => probe(l); !memoKnown || memoOff <= to }
+          .filter { l => probe(l); !memoKnown || memoOff > from }
       }
 
   /** Distinct offsets of offset-sorted log files, memoized per file with a

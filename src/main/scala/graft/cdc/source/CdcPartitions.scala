@@ -5,7 +5,7 @@ import graft.cdc.{ChangeRecord, FileCdcDatabase}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
@@ -29,6 +29,14 @@ import scala.collection.mutable
  *
  * Memory bound: one chunk holds ≤ chunk-size merged rows (default 8096);
  * the log reader streams line by line. Both hold O(chunk), not O(table).
+ * The W2 overlay (one per executor, or one per partition span when it is
+ * oversized) holds O(log-touched keys) entries indexed by chunk key, so
+ * applying it to a chunk range costs O(log E + m log m) for the m of its
+ * E entries in that range, not O(E) per range.
+ *
+ * Both readers decode lines through [[JsonRowCodec]]'s single-pass decoder;
+ * a line it declines takes the Jackson tree decode, so rows, nulls and
+ * parse-error-policy outcomes are the tree decode's.
  */
 /** Partitions carry their payload schema DDL (resolved on the driver from
   * the snapshot schema + DDL history at analysis time) — the same move as
@@ -137,7 +145,17 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
     v.asLong()
   }
 
+  /** Single-pass decode (see [[JsonRowCodec]]); a declined line takes the
+    * tree path, so the outcome is always [[decodeEnvelopeTree]]'s. */
   def decodeEnvelope(line: String): Env = {
+    val r = codec.decodeEnvelopeSinglePass(line)
+    if (r == null) decodeEnvelopeTree(line)
+    else Env(r.getLong(0), r.get(1, StringType).asInstanceOf[String],
+      r.getLong(2), r.getStruct(3, decodeSchema.size),
+      r.getStruct(4, decodeSchema.size))
+  }
+
+  def decodeEnvelopeTree(line: String): Env = {
     val n = codec.parse(line)
     Env(
       requireLong(n, ChangeRecord.OffsetCol),
@@ -176,7 +194,10 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
       case n => decodeSchema.fieldIndex(n)
     }
   }
-  // hoisted: per-row Option.map allocation is decode-loop hot-path cost
+  // hoisted: per-row Option.map / fromString allocation is decode-loop
+  // hot-path cost
+  private val metaDb: UTF8String = UTF8String.fromString(meta.db)
+  private val metaTable: UTF8String = UTF8String.fromString(meta.table)
   private val metaSchemaName: UTF8String =
     meta.schemaName.map(UTF8String.fromString).orNull
   private val metaTenant: UTF8String =
@@ -192,17 +213,18 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
     decodeSchema.fields.map(f => rules.getOrElse(f.name, null))
   }
 
-  /** Project a decoded image + event metadata onto the output schema. */
-  def emit(img: InternalRow, op: String, offset: Long, ts: Long): InternalRow = {
+  /** Project a decoded image + event metadata onto the output schema;
+    * `op` is one of the [[EnvelopeDecoder]] row-kind constants. */
+  def emit(img: InternalRow, op: UTF8String, offset: Long, ts: Long): InternalRow = {
     val out = new GenericInternalRow(outSchema.size)
     var i = 0
     while (i < outSchema.size) {
       outMap(i) match {
-        case MetaOp => out.update(i, UTF8String.fromString(op))
+        case MetaOp => out.update(i, op)
         case MetaOffset => out.update(i, offset)
         case MetaTs => out.update(i, ts)
-        case MetaDb => out.update(i, UTF8String.fromString(meta.db))
-        case MetaTable => out.update(i, UTF8String.fromString(meta.table))
+        case MetaDb => out.update(i, metaDb)
+        case MetaTable => out.update(i, metaTable)
         case MetaSchema => out.update(i, metaSchemaName)
         case MetaTenant => out.update(i, metaTenant)
         case j => out.update(i,
@@ -229,18 +251,125 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
     dialect.snapshotLines(path, table, chunkKey, lo, hi)
 }
 
+private[source] object EnvelopeDecoder {
+  /** Emitted row kinds as UTF8String constants (UTF8String is immutable,
+    * so every emitted row can share them). */
+  val Insert: UTF8String = UTF8String.fromString(ChangeRecord.RowKind.Insert)
+  val UpdateBefore: UTF8String =
+    UTF8String.fromString(ChangeRecord.RowKind.UpdateBefore)
+  val UpdateAfter: UTF8String =
+    UTF8String.fromString(ChangeRecord.RowKind.UpdateAfter)
+  val Delete: UTF8String = UTF8String.fromString(ChangeRecord.RowKind.Delete)
+}
+
 /** Final surviving state of one log-touched key: its chunk-key value
   * (range membership at apply time) and newest (offset, image), None =
   * deleted. */
 private[source] case class OverlayEntry(ckVal: Long,
     value: Option[(Long, InternalRow)])
 
-/** One log pass's merge state: surviving entries per key plus the newest
-  * TRUNCATE offset seen in the slice (0 = none) — the death frontier the
-  * merge applies to snapshot rows and pre-truncate writes alike. */
-private[source] case class SnapshotOverlay(
-    entries: mutable.LinkedHashMap[Long, OverlayEntry],
-    truncateOffset: Long)
+/** One log pass's merge state: the surviving entry of every log-touched
+  * key, in log order (the order the keys were first touched), plus the
+  * newest TRUNCATE offset seen in the slice (0 = none) — the death frontier
+  * the merge applies to snapshot rows and pre-truncate writes alike.
+  *
+  * Entries are held in primitive arrays indexed by log position, with a
+  * permutation sorted by chunk key built once per overlay, so each chunk
+  * range finds its own entries by binary search: applying one range costs
+  * O(log E + m log m) for E entries of which m fall in the range, not a
+  * scan of all E entries per range. */
+private[source] final class SnapshotOverlay private (
+    keys: Array[Long], ckVals: Array[Long], live: Array[Boolean],
+    offsets: Array[Long], images: Array[InternalRow],
+    val truncateOffset: Long) {
+  def size: Int = keys.length
+
+  /** Log positions sorted by chunk key (stable, so ties keep log order),
+    * and the chunk keys in that order for the binary search. */
+  private val byCk: Array[Int] = SnapshotOverlay.sortedByKey(ckVals)
+  private val sortedCk: Array[Long] = byCk.map(ckVals(_))
+
+  def ckVal(i: Int): Long = ckVals(i)
+
+  /** First position in `sortedCk` whose key is >= k. */
+  private def lowerBound(k: Long): Int = {
+    var lo = 0; var hi = sortedCk.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sortedCk(mid) < k) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Log positions of the entries whose chunk key lies in [lo, hi), in
+    * log order. */
+  def indicesInRange(lo: Option[Long], hi: Option[Long]): Array[Int] = {
+    val from = lo.fold(0)(lowerBound)
+    val to = hi.fold(sortedCk.length)(lowerBound)
+    if (from >= to) Array.emptyIntArray
+    else {
+      val idx = java.util.Arrays.copyOfRange(byCk, from, to)
+      java.util.Arrays.sort(idx)
+      idx
+    }
+  }
+
+  /** Apply entry `i` to a chunk's rows by pk: CREATE/UPDATE replace,
+    * DELETE removes, and a write older than the truncate removes. */
+  def applyEntry(byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)],
+      i: Int): Unit =
+    if (live(i) && offsets(i) > truncateOffset)
+      byKey(keys(i)) = (offsets(i), images(i))
+    else byKey.remove(keys(i))
+
+  /** Apply every entry of the chunk range [lo, hi), in log order. */
+  def applyRange(byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)],
+      lo: Option[Long], hi: Option[Long]): Unit =
+    indicesInRange(lo, hi).foreach(applyEntry(byKey, _))
+}
+
+private[source] object SnapshotOverlay {
+  def apply(entries: mutable.LinkedHashMap[Long, OverlayEntry],
+      truncateOffset: Long): SnapshotOverlay = {
+    val n = entries.size
+    val keys = new Array[Long](n); val ckVals = new Array[Long](n)
+    val live = new Array[Boolean](n); val offsets = new Array[Long](n)
+    val images = new Array[InternalRow](n)
+    var i = 0
+    entries.foreach { case (k, e) =>
+      keys(i) = k
+      ckVals(i) = e.ckVal
+      e.value.foreach { case (off, img) =>
+        live(i) = true; offsets(i) = off; images(i) = img
+      }
+      i += 1
+    }
+    new SnapshotOverlay(keys, ckVals, live, offsets, images, truncateOffset)
+  }
+
+  /** Stable sort of positions 0 until keys.length by key (merge sort over
+    * primitive arrays: no boxing at the 2^20-entry cap). */
+  private def sortedByKey(keys: Array[Long]): Array[Int] = {
+    val idx = Array.tabulate(keys.length)(identity)
+    val tmp = new Array[Int](keys.length)
+    def sort(lo: Int, hi: Int): Unit = if (hi - lo > 1) {
+      val mid = (lo + hi) >>> 1
+      sort(lo, mid); sort(mid, hi)
+      if (keys(idx(mid - 1)) > keys(idx(mid))) {
+        System.arraycopy(idx, lo, tmp, lo, hi - lo)
+        var a = lo; var b = mid; var o = lo
+        while (o < hi) {
+          if (b >= hi || (a < mid && keys(tmp(a)) <= keys(tmp(b)))) {
+            idx(o) = tmp(a); a += 1
+          } else { idx(o) = tmp(b); b += 1 }
+          o += 1
+        }
+      }
+    }
+    sort(0, keys.length)
+    idx
+  }
+}
 
 /**
  * Per-executor shared log-overlay builds. Every snapshot partition of one
@@ -267,9 +396,11 @@ private[graft] object SnapshotOverlayCache {
     * builds that have not happened yet). */
   private[graft] def clear(): Unit = cache.clear()
 
+  /** Everything the overlay's content depends on: the decoded images
+    * shift zoneless TIMESTAMP strings by the server time zone. */
   private case class Key(dialect: String, path: String, table: String,
       high: Long, schemaDdl: String, chunkKey: String, policy: String,
-      contentToken: String)
+      serverTimeZone: String, contentToken: String)
   private val Oversized = new AnyRef
   /** Key → SoftReference[map] | Oversized. */
   private val cache =
@@ -284,7 +415,7 @@ private[graft] object SnapshotOverlayCache {
     // content token closes the stale-cache hole: a force=true rewrite at
     // the same path/max-offset changes file sizes/mtimes → new key
     val k = Key(p.dialect, p.path, p.table, p.high, p.schemaDdl,
-      p.chunkKey, p.parsePolicy,
+      p.chunkKey, p.parsePolicy, p.serverTimeZone,
       graft.cdc.dialect.CdcDialects.byName(p.dialect)
         .contentToken(p.path, p.table))
     // computeIfAbsent serializes concurrent builders of the same key: the
@@ -358,8 +489,10 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
       // by the key Struct the same way, RecordUtils.upsertBinlog), so the
       // chunk-key field inside the envelope structs gives range membership;
       // full decode only in-span
-      val quick = FileCdcDatabase.quickNestedLongFieldOpt(line, dec.chunkKey)
-      if (!filterSpan || quick.forall(inSpan))
+      if (!filterSpan || {
+        val quick = FileCdcDatabase.quickNestedLongField(line, dec.chunkKey)
+        quick == FileCdcDatabase.NoLong || inSpan(quick)
+      })
         dec.decodeEnvelopeSafe(line).foreach { env =>
           // schema-change records go to the history, not the data merge
           // (T2); truncate has no images — it only advances the death
@@ -391,7 +524,7 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   // Shared unfiltered overlay when change volume permits (one log scan per
   // executor); span-filtered local build otherwise. mergeRange filters by
   // ckVal either way, so the two modes merge identically.
-  private lazy val overlay: SnapshotOverlay =
+  private[source] lazy val overlay: SnapshotOverlay =
     SnapshotOverlayCache.sharedOverlay(p,
       cap => buildOverlay(filterSpan = false, cap))
       .getOrElse(buildOverlay(filterSpan = true, Int.MaxValue).get)
@@ -404,6 +537,14 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   // is range-pushed to the dialect. Ranges evaluate lazily one at a time
   // (flatMap), so a grouped partition holds O(chunk + span changes) rows.
   private def mergeRange(lo: Option[Long], hi: Option[Long]): Iterator[InternalRow] = {
+    val byKey = snapshotRows(lo, hi)
+    overlay.applyRange(byKey, lo, hi)
+    emitAll(byKey)
+  }
+
+  /** The chunk range's snapshot rows by pk, as (offset 0, image). */
+  private[source] def snapshotRows(lo: Option[Long], hi: Option[Long])
+      : mutable.LinkedHashMap[Long, (Long, InternalRow)] = {
     def inRange(k: Long): Boolean = lo.forall(k >= _) && hi.forall(k < _)
     val byKey = mutable.LinkedHashMap[Long, (Long, InternalRow)]()
     if (overlay.truncateOffset == 0L)
@@ -413,18 +554,15 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
         if (inRange(ck))
           byKey(CdcPlanner.toLongKey(row.get(dec.pkIdx, dec.pkType))) = (0L, row)
       }
-    overlay.entries.foreach { case (k, e) =>
-      if (inRange(e.ckVal)) e.value match {
-        case None => byKey.remove(k)
-        case Some(offImg) =>
-          if (offImg._1 > overlay.truncateOffset) byKey(k) = offImg
-          else byKey.remove(k) // newest write precedes the truncate
-      }
-    }
-    byKey.valuesIterator.map { case (off, img) =>
-      dec.emit(img, ChangeRecord.RowKind.Insert, off, 0L)
-    }
+    byKey
   }
+
+  private[source] def emitAll(
+      byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)])
+      : Iterator[InternalRow] =
+    byKey.valuesIterator.map { case (off, img) =>
+      dec.emit(img, EnvelopeDecoder.Insert, off, 0L)
+    }
 
   private val merged: Iterator[InternalRow] =
     p.ranges.iterator.flatMap { case (lo, hi) => mergeRange(lo, hi) }
@@ -449,7 +587,8 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
 
 class LogRangeReader(p: LogRangePartition)
     extends PartitionReader[InternalRow] {
-  import ChangeRecord.{ExternalOp, RowKind}
+  import ChangeRecord.ExternalOp
+  import EnvelopeDecoder.{Delete, Insert, UpdateAfter, UpdateBefore}
 
   ReaderFailureInjection.maybeFail(isSnapshot = false)
 
@@ -487,14 +626,14 @@ class LogRangeReader(p: LogRangePartition)
           // (its state effect lives in the snapshot merge's death frontier)
           case ExternalOp.SchemaChange | ExternalOp.Truncate => Seq.empty
           case ExternalOp.Create | ExternalOp.Read =>
-            Seq(dec.emit(env.after, RowKind.Insert, env.offset, env.ts))
+            Seq(dec.emit(env.after, Insert, env.offset, env.ts))
           case ExternalOp.Delete =>
-            Seq(dec.emit(env.before, RowKind.Delete, env.offset, env.ts))
+            Seq(dec.emit(env.before, Delete, env.offset, env.ts))
           case ExternalOp.Update if p.changelogMode == "upsert" =>
-            Seq(dec.emit(env.after, RowKind.UpdateAfter, env.offset, env.ts))
+            Seq(dec.emit(env.after, UpdateAfter, env.offset, env.ts))
           case ExternalOp.Update =>
-            Seq(dec.emit(env.before, RowKind.UpdateBefore, env.offset, env.ts),
-              dec.emit(env.after, RowKind.UpdateAfter, env.offset, env.ts))
+            Seq(dec.emit(env.before, UpdateBefore, env.offset, env.ts),
+              dec.emit(env.after, UpdateAfter, env.offset, env.ts))
         }
         // mid-transaction resume (skipRows): rows already delivered from
         // the FIRST event past the seek position are dropped; later

@@ -59,4 +59,44 @@ class OverlayCacheSpec extends SparkSpecBase {
       SnapshotOverlayCache.clear()
     }
   }
+
+  test("server-time-zone keys the shared overlay: log-touched rows shift too") {
+    val dir = tmpDir("ovl-tz")
+    // zoneless wall-clock strings declared TIMESTAMP: the decode reads them
+    // in server-time-zone, so two zones must never share decoded images
+    val wire = StructType(Seq(
+      StructField("id", LongType), StructField("ts", StringType)))
+    val snapshot = spark.createDataFrame(spark.sparkContext.parallelize(
+      (1L to 4L).map(i => Row(i, s"2024-01-15T12:00:0$i"))), wire)
+    val env = StructType(Seq(
+      StructField(OffsetCol, LongType), StructField(OpCol, StringType),
+      StructField(TsCol, LongType), StructField(DbCol, StringType),
+      StructField(TableCol, StringType),
+      StructField(BeforeCol, wire), StructField(AfterCol, wire)))
+    val changes = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "u", 10L, "graft", "t", Row(2L, "2024-01-15T12:00:02"),
+        Row(2L, "2024-01-15T13:00:00")))), env)
+    FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
+      force = true, schemaDdlOverride = Some("id BIGINT,ts TIMESTAMP"))
+
+    def readIn(zone: String): Map[Long, java.time.Instant] =
+      spark.read.format("graft-cdc")
+        .option("path", dir).option("table", "t")
+        .option("scan.startup.mode", "initial")
+        .option("server-time-zone", zone)
+        .load().select("id", "ts").collect()
+        .map(r => r.getLong(0) -> r.getTimestamp(1).toInstant).toMap
+
+    SnapshotOverlayCache.clear()
+    try {
+      val utc = readIn("UTC")
+      val shanghai = readIn("Asia/Shanghai")
+      assert(utc(2L) === java.time.Instant.parse("2024-01-15T13:00:00Z"))
+      // snapshot-only and log-touched rows alike: Shanghai is UTC+8
+      (1L to 4L).foreach { id =>
+        assert(java.time.Duration.between(shanghai(id), utc(id)) ===
+          java.time.Duration.ofHours(8), s"id $id")
+      }
+    } finally SnapshotOverlayCache.clear()
+  }
 }
