@@ -4,8 +4,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /**
@@ -264,26 +266,38 @@ object FileCdcDatabase {
       .toSeq.sorted)
   }
 
-  /** Line iterator that owns its file descriptor: closes on exhaustion, on
-    * an early stop via [[takeWhileClosing]], or explicitly. Open instances
-    * register per-thread so a PartitionReader's `close()` can sweep
-    * whatever a lazily-consumed composition left open — an abandoned fd per
+  /** Line iterator that owns its file descriptor: closes on exhaustion
+    * (the end of its window) or explicitly. Open instances register
+    * per-thread so a PartitionReader's `close()` can sweep whatever a
+    * lazily-consumed composition left open — an abandoned fd per
     * early-stopped chunk scan is executor fd exhaustion at many-chunk
-    * scale. */
-  final class ClosingLineIterator private[FileCdcDatabase] (file: String)
+    * scale.
+    *
+    * Reads the byte window [start, end) = `window(channel)` of the file.
+    * Windows start and end at line starts, so lines split and decode as
+    * `BufferedReader.readLine` over a strict UTF-8 reader of the whole
+    * file returns them (see [[LineReader]]). */
+  final class ClosingLineIterator private[FileCdcDatabase] (file: String,
+      window: FileChannel => (Long, Long))
       extends Iterator[String] with AutoCloseable {
-    private val reader = Files.newBufferedReader(
-      Paths.get(file), StandardCharsets.UTF_8)
+    private val channel = FileChannel.open(Paths.get(file),
+      StandardOpenOption.READ)
     private var closed = false
     registerOpen(this)
+    private val reader = new LineReader(channel, 64 * 1024)
+    private val (start, end) =
+      try window(channel) catch { case e: Throwable => close(); throw e }
+    private var pos = start
     private var nextLine: String = advance()
 
-    private def advance(): String = {
-      if (closed) return null
-      val l = reader.readLine()
-      if (l == null) close()
-      l
-    }
+    private def advance(): String =
+      if (closed) null
+      else if (pos >= end || pos >= reader.size) { close(); null }
+      else {
+        val l = reader.lineAt(pos, strict = true)
+        pos = reader.lineEnd
+        l
+      }
     override def hasNext: Boolean = nextLine != null
     override def next(): String = {
       val l = nextLine
@@ -294,25 +308,174 @@ object FileCdcDatabase {
     override def close(): Unit = if (!closed) {
       closed = true
       nextLine = null
-      // finally: a reader.close() failure must not leave a stale registry
-      // entry for the next scope sweep to trip over
-      try reader.close() finally deregisterOpen(this)
+      // finally: a close failure must not leave a stale registry entry for
+      // the next scope sweep to trip over
+      try channel.close() finally deregisterOpen(this)
+    }
+  }
+
+  /** Whole lines of one file, read at any line start through one reused
+    * block buffer: the window reads and the probes of [[sortedLines]]. Line
+    * ends are those of `BufferedReader.readLine`: `\n`, `\r\n` or a lone
+    * `\r`; a final line needs no terminator. Strict text decodes as a
+    * strict UTF-8 reader does (malformed input throws); probe text
+    * replaces malformed input with U+FFFD, so a probe never fails on a
+    * line outside the window it looks for. */
+  private final class LineReader(ch: FileChannel, block: Int) {
+    val size: Long = ch.size()
+    private var buf = new Array[Byte](block)
+    private var bufStart = 0L; private var bufLen = 0
+    private lazy val strictUtf8 = StandardCharsets.UTF_8.newDecoder()
+    /** Start of the line after the one [[lineAt]] returned last. */
+    var lineEnd: Long = 0L
+
+    /** Buffer [pos, pos + need), or up to the end of the file. */
+    private def fill(pos: Long, need: Int): Unit = {
+      val want = math.min(need.toLong, size - pos)
+      if (pos < bufStart || pos + want > bufStart + bufLen) {
+        if (need > buf.length)
+          buf = new Array[Byte](math.max(need, buf.length * 2))
+        bufStart = pos; bufLen = 0
+        var n = 0
+        while (n >= 0 && bufLen < buf.length && pos + bufLen < size) {
+          n = ch.read(ByteBuffer.wrap(buf, bufLen, buf.length - bufLen),
+            pos + bufLen)
+          if (n > 0) bufLen += n
+        }
+      }
     }
 
-    /** `takeWhile` that closes the underlying file the moment the predicate
-      * first fails — plain `takeWhile` would abandon the open fd. */
-    def takeWhileClosing(p: String => Boolean): Iterator[String] =
-      new Iterator[String] {
-        override def hasNext: Boolean = {
-          val ok = nextLine != null && p(nextLine)
-          if (!ok) close()
-          ok
-        }
-        override def next(): String =
-          if (hasNext) ClosingLineIterator.this.next()
-          else throw new NoSuchElementException(file)
+    private def byteAt(pos: Long): Int =
+      if (pos < 0 || pos >= size) -1
+      else { fill(pos, 1); buf((pos - bufStart).toInt) }
+
+    /** Start of the line after the terminator byte at `pos`. */
+    private def afterTerminator(pos: Long): Long =
+      if (byteAt(pos) == '\r' && byteAt(pos + 1) == '\n') pos + 2 else pos + 1
+
+    /** The first line start at or after `pos` (`size` when none). */
+    def lineStartFrom(pos: Long): Long = {
+      if (pos <= 0) return 0L
+      val prev = byteAt(pos - 1)
+      if (prev == '\n' || (prev == '\r' && byteAt(pos) != '\n')) return pos
+      var p = pos
+      while (p < size) {
+        val c = byteAt(p)
+        if (c == '\n' || c == '\r') return afterTerminator(p)
+        p += 1
       }
+      size
+    }
+
+    /** The line starting at `pos`; sets [[lineEnd]]. */
+    def lineAt(pos: Long, strict: Boolean): String = {
+      var need = 256
+      while (true) {
+        fill(pos, need)
+        val off = (pos - bufStart).toInt
+        var i = off
+        while (i < bufLen && buf(i) != '\n' && buf(i) != '\r') i += 1
+        if (i < bufLen || bufStart + bufLen >= size) {
+          val text = decode(off, i - off, strict)
+          val term = bufStart + i
+          lineEnd = if (term >= size) size else afterTerminator(term)
+          return text
+        }
+        need = (i - off) * 2 + 2 // the line runs past the buffer: widen
+      }
+      throw new IllegalStateException("unreachable")
+    }
+
+    // the String constructor replaces malformed input; strict text that
+    // holds a replacement character is decoded again by a reporting
+    // decoder, which throws when the bytes were malformed
+    private def decode(off: Int, len: Int, strict: Boolean): String = {
+      val s = new String(buf, off, len, StandardCharsets.UTF_8)
+      if (strict && s.indexOf('\uFFFD') >= 0)
+        strictUtf8.decode(ByteBuffer.wrap(buf, off, len)).toString
+      else s
+    }
   }
+
+  /** Below this many bytes the window search scans lines instead of
+    * bisecting. */
+  private val LinearScanBytes = 16 * 1024
+
+  /** Byte position just after the last line whose key is < `k` (`from`
+    * when none lies at or after it), in a file whose keyed lines ascend on
+    * `key` ([[NoLong]] = the line has no key). Bisection on byte offsets
+    * aligned to line starts; a probe that finds no key steps on to the
+    * next line. O(log size) probe lines plus one small linear stretch. */
+  private def afterLastBelow(probe: LineReader, from: Long, k: Long,
+      key: String => Long): Long = {
+    var a = from // a line start; the answer is >= a
+    var z = probe.size // the answer is <= z
+    var bisect = true
+    while (bisect && z - a > LinearScanBytes) {
+      val s = probe.lineStartFrom(a + (z - a) / 2)
+      if (s >= z) bisect = false
+      else {
+        var p = s; var found = false
+        while (!found && p < z) {
+          val v = key(probe.lineAt(p, strict = false))
+          val e = probe.lineEnd
+          if (v != NoLong) {
+            found = true
+            // sorted: every keyed line from s on is >= k
+            if (v < k) a = e else z = s
+          } else p = e
+        }
+        if (!found) z = s
+      }
+    }
+    var res = a; var p = a; var done = false
+    while (!done && p < z) {
+      val v = key(probe.lineAt(p, strict = false))
+      if (v != NoLong) { if (v < k) res = probe.lineEnd else done = true }
+      p = probe.lineEnd
+    }
+    res
+  }
+
+  /** Start of the first keyed line at or after line start `pos` (`size`
+    * when none). */
+  private def nextKeyed(probe: LineReader, pos: Long,
+      key: String => Long): Long = {
+    var p = pos
+    while (p < probe.size) {
+      if (key(probe.lineAt(p, strict = false)) != NoLong) return p
+      p = probe.lineEnd
+    }
+    probe.size
+  }
+
+  /** Lines of `file` whose keys lie in [lo, hi), for a file whose keyed
+    * lines ascend on `key` — the positioned read behind both range scans of
+    * the file dialect (a snapshot file sorted on its pk, a log file sorted
+    * on its offset). Returns the byte window [first line keyed >= lo, first
+    * line keyed >= hi): a line without a key ([[NoLong]]) goes with the
+    * keyed line before it, so the windows of adjacent ranges tile the file
+    * and each line is read once. `openAfterLastBelow` starts the window
+    * just after the last line keyed < lo instead, so it also takes the
+    * unkeyed lines in front of its first keyed line. Costs the window plus
+    * O(log size) probe lines, not the prefix before it. */
+  def sortedLines(file: String, lo: Option[Long], hi: Option[Long],
+      key: String => Long,
+      openAfterLastBelow: Boolean = false): ClosingLineIterator =
+    new ClosingLineIterator(file, { ch =>
+      val probe = new LineReader(ch, 8192)
+      def firstAtOrAbove(from: Long, k: Long): Long =
+        nextKeyed(probe, afterLastBelow(probe, from, k, key), key)
+      val start = lo.fold(0L) { k =>
+        if (openAfterLastBelow) afterLastBelow(probe, 0L, k, key)
+        else firstAtOrAbove(0L, k)
+      }
+      // hi >= lo puts the end at or past the start: search from there
+      val end = hi.fold(probe.size) { h =>
+        math.max(start, firstAtOrAbove(if (lo.exists(h < _)) 0L else start, h))
+      }
+      (start, end)
+    })
 
   /** A registry of lazily-consumed resources (file readers, JDBC cursors)
     * owned by one consumer. Each PartitionReader holds its own scope and
@@ -361,8 +524,56 @@ object FileCdcDatabase {
     * the safety net for scope-less consumers abandoned mid-scan. */
   def closeAllOnThread(): Unit = threadScope.get().closeAll()
 
+  /** The lines of `file` that contain `marker`, in file order, found by a
+    * byte search: only matching lines are decoded. Lines split as
+    * `BufferedReader.readLine` splits them; an ASCII marker never matches
+    * inside a multi-byte UTF-8 character, so on a valid UTF-8 file the
+    * result is the one of `lines(file).filter(_.contains(marker))`. */
+  def linesContaining(file: String, marker: String): Seq[String] = {
+    val m = marker.getBytes(StandardCharsets.UTF_8)
+    require(m.nonEmpty && m.forall(_ >= 0) &&
+      !m.exists(b => b == '\n' || b == '\r'),
+      s"byte search needs a one-line ASCII marker: '$marker'")
+    // Horspool: on a mismatch, slide by the distance from the window's
+    // last byte to its last occurrence in the marker
+    val shift = Array.fill(256)(m.length)
+    for (k <- 0 until m.length - 1) shift(m(k) & 0xff) = m.length - 1 - k
+    val out = Seq.newBuilder[String]
+    val in = Files.newInputStream(Paths.get(file))
+    try {
+      var buf = new Array[Byte](1 << 16)
+      var len = 0 // buf(0 until len): the unfinished line, then new bytes
+      var eof = false
+      def isEol(b: Byte): Boolean = b == '\n' || b == '\r'
+      while (!eof) {
+        if (len == buf.length) buf = java.util.Arrays.copyOf(buf, len * 2)
+        val n = in.read(buf, len, buf.length - len)
+        if (n < 0) eof = true else len += n
+        // complete lines end at the last terminator; at EOF, everything
+        var done = if (eof) len else len - 1
+        while (done >= 0 && !eof && !isEol(buf(done))) done -= 1
+        val lim = if (eof) len else done + 1
+        var i = 0
+        while (i + m.length <= lim) {
+          var j = m.length - 1
+          while (j >= 0 && buf(i + j) == m(j)) j -= 1
+          if (j < 0) {
+            var a = i; while (a > 0 && !isEol(buf(a - 1))) a -= 1
+            var z = i; while (z < lim && !isEol(buf(z))) z += 1
+            out += new String(buf, a, z - a, StandardCharsets.UTF_8)
+            i = z
+          } else i += shift(buf(i + m.length - 1) & 0xff)
+        }
+        System.arraycopy(buf, lim, buf, 0, len - lim)
+        len -= lim
+      }
+    } finally in.close()
+    out.result()
+  }
+
   /** Iterate the lines of a JSONL file (executor-side). */
-  def lines(file: String): ClosingLineIterator = new ClosingLineIterator(file)
+  def lines(file: String): ClosingLineIterator =
+    new ClosingLineIterator(file, ch => (0L, ch.size()))
 
   private def metaToJson(m: TableMeta): String = {
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""

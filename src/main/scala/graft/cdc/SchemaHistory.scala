@@ -30,15 +30,15 @@ object SchemaHistory {
   private def opDdlMark = "\"" + ChangeRecord.OpCol + "\":\"" +
     ChangeRecord.ExternalOp.SchemaChange + "\""
 
-  /** All schema-change events of `table`, offset-ascending. Cheap string
-    * prefilter before the full parse — DDL lines are rare in a real log. */
+  /** All schema-change events of `table`, offset-ascending. The dialect
+    * finds the lines carrying the DDL op marker (a raw byte search in the
+    * file dialect) and only those are parsed — DDL lines are rare in a real
+    * log, and this runs on every analysis of a read. */
   def events(path: String, table: String,
-      dialect: CdcDialect = FileCdcDialect): Seq[DdlEvent] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    dialect.logLines(path, table, 0L, Long.MaxValue)
-      .filter(_.contains(opDdlMark))
+      dialect: CdcDialect = FileCdcDialect): Seq[DdlEvent] =
+    dialect.logLinesContaining(path, table, opDdlMark)
       .flatMap { l =>
-        val n = mapper.readTree(l)
+        val n = FileCdcDatabase.mapper.readTree(l)
         for {
           ddl <- Option(n.get(ChangeRecord.DdlCol))
           schemaDdl <- Option(n.get(ChangeRecord.SchemaDdlCol))
@@ -50,7 +50,6 @@ object SchemaHistory {
           ddl.asText(), schemaDdl.asText())
       }
       .toSeq
-  }
 
   /** Effective payload schema of `table` as of `atOffset`: the snapshot-time
     * schema evolved by every DDL event at or below the offset. */

@@ -31,17 +31,48 @@ trait CdcDialect extends Serializable {
   /** Snapshot rows possibly overlapping chunk range [lo, hi) on
     * `keyColumn` — a dialect pushes the range to the store (SQL WHERE /
     * file pruning). `keyColumn` is the table's chunk key: the primary key
-    * unless overridden (`scan.incremental.snapshot.chunk-key.column`). */
-  def snapshotLines(path: String, table: String, keyColumn: String,
+    * unless overridden (`scan.incremental.snapshot.chunk-key.column`).
+    *
+    * Window semantics: the result may hold rows outside the range (the
+    * caller filters by decoded key), but holds every row inside it. Cost:
+    * a store with an index on `keyColumn` reads O(rows in range) — the SQL
+    * range scan, or the file dialect's seek into its pk-sorted files; a
+    * range on an unindexed key reads the whole table. The file dialect
+    * gives each line of a sorted file to exactly one window of a tiling
+    * range set, so a full chunked read reads every line once. */
+  def snapshotLines(path: String, meta: TableMeta, keyColumn: String,
       lo: Option[Long], hi: Option[Long]): Iterator[String]
+
+  /** [[snapshotLines]] reading the table's meta first. */
+  def snapshotLines(path: String, table: String, keyColumn: String,
+      lo: Option[Long], hi: Option[Long]): Iterator[String] =
+    snapshotLines(path, tableMeta(path, table), keyColumn, lo, hi)
 
   /** (min, max) of an integral column — drives chunk planning when the
     * chunk key is overridden away from the PK (stats SQL of the reference,
     * StatementUtils.java:38-77). */
   def columnStats(path: String, table: String, column: String): (Long, Long)
 
-  /** Log records with offsets in (from, to], offset-ordered. */
+  /** Log records with offsets in (from, to], offset-ordered. Cost:
+    * O(records in range) plus a seek — the database's offset index, or the
+    * file dialect's bisection of its offset-sorted files.
+    *
+    * A record without a readable offset cannot be range-filtered; it is
+    * returned (for the reader's parse-error policy to decide) by the
+    * ranges whose window holds it. In the file dialect the window opens
+    * just after the last record with offset <= `from` and closes at the
+    * first record with offset > `to`: a range never returns such a record
+    * from before its start, and the first range to reach it — the batch
+    * that failed on it before windows existed — still returns it. */
   def logLines(path: String, table: String, from: Long, to: Long): Iterator[String]
+
+  /** Log records with offsets > 0 whose text contains `marker`, in log
+    * order — schema history's scan for its rare DDL records. The generic
+    * implementation filters the whole log; the file dialect searches raw
+    * bytes and decodes only the matching lines. */
+  def logLinesContaining(path: String, table: String,
+      marker: String): Iterator[String] =
+    logLines(path, table, 0L, Long.MaxValue).filter(_.contains(marker))
 
   /** Cheap content fingerprint of one table's backing store — folded into
     * executor-side cache keys (SnapshotOverlayCache) so a forced rewrite
@@ -198,15 +229,15 @@ object FileCdcDialect extends CdcDialect {
     if (r.isEmpty) None else Some(r)
   }
 
-  override def snapshotLines(path: String, table: String, keyColumn: String,
-      lo: Option[Long], hi: Option[Long]): Iterator[String] = {
-    val meta = tableMeta(path, table)
-    // file layout is PK-range-partitioned/sorted: pruning and early stop
+  override def snapshotLines(path: String, meta: TableMeta,
+      keyColumn: String, lo: Option[Long], hi: Option[Long])
+      : Iterator[String] = {
+    // file layout is PK-range-partitioned/sorted: pruning and the seek
     // only apply when the chunk key IS the pk; an overridden chunk key
     // degrades to full-file scans (a store with an index on the override
     // column — the JDBC dialect — keeps the pushdown)
     val prunable = keyColumn == meta.pk
-    val all = FileCdcDatabase.dataFiles(path, table, "snapshot")
+    val all = FileCdcDatabase.dataFiles(path, meta.table, "snapshot")
     val pruned =
       if (!prunable || meta.snapshotFiles.isEmpty) all
       else {
@@ -220,14 +251,27 @@ object FileCdcDialect extends CdcDialect {
         }
       }
     val sortedByPk = prunable && meta.snapshotFiles.nonEmpty
+    val key = pkOf(meta.pk) _
     pruned.iterator.flatMap { f =>
-      val ls = FileCdcDatabase.lines(f)
-      if (sortedByPk && hi.isDefined)
-        // closing takeWhile: the early stop releases the fd immediately
-        ls.takeWhileClosing(l =>
-          FileCdcDatabase.quickLongField(l, meta.pk) < hi.get)
-      else ls
+      if (sortedByPk) FileCdcDatabase.sortedLines(f, lo, hi, key)
+      else FileCdcDatabase.lines(f)
     }
+  }
+
+  /** Sort key of a snapshot line: its top-level pk as the quick scan reads
+    * it, else as Jackson's `asLong` reads a number or numeric text;
+    * [[FileCdcDatabase.NoLong]] when the line has none (it is then read
+    * by the window of the keyed line before it). */
+  private def pkOf(pk: String)(l: String): Long = {
+    val v = FileCdcDatabase.scanLongField(l, pk, topLevelOnly = true)
+    if (v != FileCdcDatabase.NoLong) v
+    else
+      try {
+        val n = FileCdcDatabase.mapper.readTree(l).get(pk)
+        if (n != null && (n.isNumber || n.isTextual))
+          n.asLong(FileCdcDatabase.NoLong)
+        else FileCdcDatabase.NoLong
+      } catch { case scala.util.control.NonFatal(_) => FileCdcDatabase.NoLong }
   }
 
   override def columnStats(path: String, table: String,
@@ -250,45 +294,53 @@ object FileCdcDialect extends CdcDialect {
     }
   }
 
-  /** Offset of a log line, or None when the line is not parseable JSON —
-    * malformed lines flow THROUGH the range scan (they cannot drive the
-    * early stop, and they cannot be range-filtered) so the reader's
-    * parse-error policy decides: fail with context, or skip. */
-  private def offsetOfOpt(l: String): Option[Long] =
-    FileCdcDatabase.quickLongFieldOpt(l, ChangeRecord.OffsetCol)
-      .orElse(offsetByTree(l))
+  /** Offset of a log line, or None when the line carries no integral
+    * offset — such a line cannot be range-filtered, so it flows to the
+    * reader's parse-error policy from the ranges whose window holds it. */
+  private def offsetOfOpt(l: String): Option[Long] = {
+    val v = offsetOf(l)
+    if (v == FileCdcDatabase.NoLong) None else Some(v)
+  }
+
+  /** [[offsetOfOpt]] without the Option, [[FileCdcDatabase.NoLong]] =
+    * unknown: the sort key of a log line. */
+  private def offsetOf(l: String): Long = {
+    val v = FileCdcDatabase.scanLongField(l, ChangeRecord.OffsetCol,
+      topLevelOnly = true)
+    if (v != FileCdcDatabase.NoLong) v
+    else offsetByTree(l).getOrElse(FileCdcDatabase.NoLong)
+  }
 
   // integral nodes only: asLong() on a string/null/object coerces to 0,
-  // which the `off > from` range filter would silently drop even under
+  // which the range filter would silently drop even under
   // parse-error-policy=fail — return None so the reader's policy decides
   private def offsetByTree(l: String): Option[Long] =
     try Option(FileCdcDatabase.mapper.readTree(l).get(ChangeRecord.OffsetCol))
       .filter(_.canConvertToLong).map(_.asLong())
     catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Each offset-sorted log file's window (from, to]: a seek, then the
+    * records in range (see [[CdcDialect.logLines]] for where a record
+    * without an offset goes). */
   override def logLines(path: String, table: String,
       from: Long, to: Long): Iterator[String] =
+    if (from == Long.MaxValue) Iterator.empty
+    else {
+      val hi = if (to == Long.MaxValue) None else Some(to + 1)
+      FileCdcDatabase.dataFiles(path, table, "log").iterator.flatMap(f =>
+        FileCdcDatabase.sortedLines(f, Some(from + 1), hi, offsetOf,
+          openAfterLastBelow = true))
+    }
+
+  /** Byte search for `marker`; only matching lines are decoded, and the
+    * offset filter of `logLines(0, MaxValue)` applies to them. */
+  override def logLinesContaining(path: String, table: String,
+      marker: String): Iterator[String] =
     FileCdcDatabase.dataFiles(path, table, "log").iterator
-      .flatMap { f =>
-        // one offset probe per line: the takeWhile predicate and the range
-        // filter see each element back-to-back on this single-threaded
-        // iterator, so a one-slot memo removes the double parse. The memo
-        // is primitive (no Option per line); unknown = no offset, so the
-        // line flows through to the reader's parse-error policy.
-        var memoLine: String = null; var memoOff = 0L; var memoKnown = false
-        def probe(l: String): Unit = if (l ne memoLine) {
-          memoLine = l
-          memoOff = FileCdcDatabase.scanLongField(l, ChangeRecord.OffsetCol,
-            topLevelOnly = true)
-          memoKnown = memoOff != FileCdcDatabase.NoLong || {
-            val t = offsetByTree(l)
-            t.foreach(memoOff = _)
-            t.isDefined
-          }
-        }
-        FileCdcDatabase.lines(f)
-          .takeWhileClosing { l => probe(l); !memoKnown || memoOff <= to }
-          .filter { l => probe(l); !memoKnown || memoOff > from }
+      .flatMap(FileCdcDatabase.linesContaining(_, marker))
+      .filter { l =>
+        val off = offsetOf(l)
+        off == FileCdcDatabase.NoLong || off > 0L
       }
 
   /** Distinct offsets of offset-sorted log files, memoized per file with a

@@ -223,14 +223,15 @@ object JdbcCdcDialect extends CdcDialect {
 
   // -------------------------------------------------------------- scans
 
-  override def snapshotLines(path: String, table: String, keyColumn: String,
-      lo: Option[Long], hi: Option[Long]): Iterator[String] = {
-    val meta = tableMeta(path, table)
+  override def snapshotLines(path: String, meta: TableMeta,
+      keyColumn: String, lo: Option[Long], hi: Option[Long])
+      : Iterator[String] = {
     val schema = meta.schema // hoisted: never resolve schema per row
     new JdbcLineIterator(path,
       c => {
         val ps = c.prepareStatement(
-          render(path, stmtsFor(path).chunkScan(table, keyColumn, lo, hi)),
+          render(path,
+            stmtsFor(path).chunkScan(meta.table, keyColumn, lo, hi)),
           ResultSet.TYPE_FORWARD_ONLY, ResultSet.CONCUR_READ_ONLY)
         ps.setFetchSize(fetchSizeFor(path))
         ps

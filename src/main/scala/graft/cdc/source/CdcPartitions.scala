@@ -29,10 +29,16 @@ import scala.collection.mutable
  *
  * Memory bound: one chunk holds ≤ chunk-size merged rows (default 8096);
  * the log reader streams line by line. Both hold O(chunk), not O(table).
- * The W2 overlay (one per executor, or one per partition span when it is
- * oversized) holds O(log-touched keys) entries indexed by chunk key, so
- * applying it to a chunk range costs O(log E + m log m) for the m of its
- * E entries in that range, not O(E) per range.
+ * The W2 backfill holds, per executor, the routed lines of the log slice
+ * (≤ [[SnapshotOverlayCache.MaxEntries]] lines, soft-referenced), and per
+ * partition an overlay of its span's log-touched keys, indexed by chunk
+ * key: applying it to a chunk range costs O(log E + m log m) for the m of
+ * its E entries in that range, not O(E) per range.
+ *
+ * Read cost: each chunk range reads only its own snapshot window (the
+ * dialect seeks to it), and each partition decodes only the log lines of
+ * its own key span, so a full read decodes every snapshot line once and
+ * every log line about once (unroutable lines once per partition).
  *
  * Both readers decode lines through [[JsonRowCodec]]'s single-pass decoder;
  * a line it declines takes the Jackson tree decode, so rows, nulls and
@@ -239,16 +245,17 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
     out
   }
 
-  /** Log lines with offsets in (from, to] — dialect-served (offset-sorted,
-    * prefilter + early stop inside the file dialect). */
+  /** Log lines with offsets in (from, to] — dialect-served (a seek to the
+    * range's window of the offset-sorted files in the file dialect). */
   def logLinesInRange(from: Long, to: Long): Iterator[String] =
     dialect.logLines(path, table, from, to)
 
   /** Snapshot lines possibly overlapping the chunk range [lo, hi) on the
-    * chunk key — dialect-served (file pruning via per-file PK stats + early
-    * stop in the file dialect; SQL range pushdown in a JDBC dialect). */
+    * chunk key — dialect-served (file pruning via per-file PK stats + a
+    * seek to the range's window in the file dialect; SQL range pushdown in
+    * a JDBC dialect). */
   def snapshotLines(lo: Option[Long], hi: Option[Long]): Iterator[String] =
-    dialect.snapshotLines(path, table, chunkKey, lo, hi)
+    dialect.snapshotLines(path, meta, chunkKey, lo, hi)
 }
 
 private[source] object EnvelopeDecoder {
@@ -371,71 +378,145 @@ private[source] object SnapshotOverlay {
   }
 }
 
+/** The log slice (0, high] of one table, routed by chunk key without
+  * decoding — the shared half of the W2 backfill. Each line's chunk key is
+  * probed as the span-filtered overlay build prefilters it
+  * ([[FileCdcDatabase.quickNestedLongField]]); a line the probe cannot
+  * route ([[FileCdcDatabase.NoLong]]: truncates, DDL, malformed lines)
+  * goes to every span. So a span's build over [[linesFor]] sees exactly
+  * the lines its full-scan build would decode, in the same order. */
+private[source] final class BackfillRouting private (lines: Array[String],
+    keys: Array[Long]) {
+  /** The lines routed into the span [lo, hi) plus every unroutable line,
+    * in log order: one pass over the probed keys, nothing decoded. */
+  def linesFor(lo: Option[Long], hi: Option[Long]): Iterator[String] = {
+    val l = lo.getOrElse(Long.MinValue)
+    val h = hi.getOrElse(Long.MaxValue); val open = hi.isEmpty
+    val out = mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < keys.length) {
+      val k = keys(i)
+      if (k == FileCdcDatabase.NoLong || (k >= l && (open || k < h)))
+        out += lines(i)
+      i += 1
+    }
+    out.iterator
+  }
+}
+
+private[source] object BackfillRouting {
+  /** Route every line of `it` on `chunkKey`; None once it holds more than
+    * `cap` lines (the caller's scope closes the abandoned scan). */
+  def build(it: Iterator[String], chunkKey: String,
+      cap: Int): Option[BackfillRouting] = {
+    val ls = mutable.ArrayBuffer.empty[String]
+    val ks = mutable.ArrayBuilder.make[Long]
+    while (ls.size <= cap && it.hasNext) {
+      val l = it.next()
+      ls += l
+      ks += FileCdcDatabase.quickNestedLongField(l, chunkKey)
+    }
+    if (ls.size > cap) None
+    else Some(new BackfillRouting(ls.toArray, ks.result()))
+  }
+}
+
 /**
- * Per-executor shared log-overlay builds. Every snapshot partition of one
- * read replays the same log slice (0, high]; on an executor running many
- * such partitions that is k identical store scans + envelope decodes. The
- * cache builds the UNFILTERED overlay once per (source, table, high,
- * projection) and lets each partition apply its own span filter — one log
- * pass per executor instead of one per partition.
+ * Per-executor shared routing of the W2 log slice. Every snapshot partition
+ * of one read backfills from the same log slice (0, high]; on an executor
+ * running many such partitions that would be k identical store scans. The
+ * cache reads and routes the slice once per (source, table, chunk key,
+ * high, content) — a probe per line, no decode — and each partition
+ * decodes only its own span's lines from it, in parallel with its
+ * siblings.
  *
- * Memory contract: an unfiltered overlay holds O(log-touched keys) rows.
- * The build aborts at [[MaxEntries]] and marks the key oversized; every
- * partition then falls back to its own span-FILTERED build (the previous
- * behavior — bounded by span change volume), so executor memory stays
- * bounded no matter the change volume. Values are soft-referenced: memory
- * pressure reclaims cached overlays before an OOM.
+ * Memory contract: a routing holds the slice's lines, and the cache keeps
+ * one routing per table. The build aborts past [[MaxEntries]] lines and
+ * marks the slice oversized; every partition then builds from its own full
+ * scan of the slice, prefiltered line by line (bounded by its span's change
+ * volume), so executor memory stays bounded no matter the change volume.
+ * Routings are soft-referenced: memory pressure reclaims them before an
+ * OOM.
  */
 private[graft] object SnapshotOverlayCache {
-  /** Shared-overlay entry cap (~tens of MB worst case for narrow rows).
-    * Test seam: @volatile var so specs can force the oversized → span-
-    * filtered fallback path at tiny fixture sizes. */
+  /** Shared-routing line cap (~hundreds of MB worst case for wide rows).
+    * Test seam: @volatile var so specs can force the oversized → full-scan
+    * fallback path at tiny fixture sizes. */
   @volatile private[graft] var MaxEntries: Int = 1 << 20
 
-  /** Test seam: drop all cached overlays (a new cap only applies to
+  /** Test seam: drop all cached routings (a new cap only applies to
     * builds that have not happened yet). */
   private[graft] def clear(): Unit = cache.clear()
 
-  /** Everything the overlay's content depends on: the decoded images
-    * shift zoneless TIMESTAMP strings by the server time zone. */
-  private case class Key(dialect: String, path: String, table: String,
-      high: Long, schemaDdl: String, chunkKey: String, policy: String,
-      serverTimeZone: String, contentToken: String)
-  private val Oversized = new AnyRef
-  /** Key → SoftReference[map] | Oversized. */
+  /** The table source a routing belongs to. Routing decodes nothing, so
+    * the projection, parse policy and time zone — which shape the decode —
+    * are not part of it. */
+  private case class Source(dialect: String, path: String, table: String,
+      chunkKey: String)
+  /** The one routing kept per source: of the slice (0, high] of the store
+    * content `contentToken`; `routing` null = that slice is oversized. A
+    * read at a newer log head or content replaces it, so the slices of a
+    * live table do not pile up until memory pressure clears them. */
+  private final case class Entry(high: Long, contentToken: String,
+      routing: java.lang.ref.SoftReference[BackfillRouting])
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[Key, AnyRef]()
+    new java.util.concurrent.ConcurrentHashMap[Source, Entry]()
 
-  /** The shared unfiltered overlay, or None when this (table, high) is
-    * known oversized — caller builds span-filtered locally. `build(cap)`
-    * must return None when the overlay would exceed `cap` entries. */
-  def sharedOverlay(p: SnapshotChunkPartition,
-      build: Int => Option[SnapshotOverlay])
-      : Option[SnapshotOverlay] = {
+  /** The shared routing of `p`'s log slice on `chunkKey`, or None when
+    * that slice is known oversized (or its routing was just reclaimed) —
+    * the caller then scans the slice itself. `build(cap)` must return None
+    * when the slice exceeds `cap` lines. */
+  def sharedRouting(p: SnapshotChunkPartition, chunkKey: String,
+      build: Int => Option[BackfillRouting]): Option[BackfillRouting] = {
     // content token closes the stale-cache hole: a force=true rewrite at
-    // the same path/max-offset changes file sizes/mtimes → new key
-    val k = Key(p.dialect, p.path, p.table, p.high, p.schemaDdl,
-      p.chunkKey, p.parsePolicy, p.serverTimeZone,
-      graft.cdc.dialect.CdcDialects.byName(p.dialect)
-        .contentToken(p.path, p.table))
-    // computeIfAbsent serializes concurrent builders of the same key: the
-    // first partition scans, the rest block and reuse — exactly the
-    // sharing this cache exists for
-    val v = cache.compute(k, (_, cur) => cur match {
-      case Oversized => Oversized
-      case ref: java.lang.ref.SoftReference[_] if ref.get != null => ref
-      case _ => build(MaxEntries) match {
-        case Some(m) => new java.lang.ref.SoftReference(m)
-        case None => Oversized
-      }
-    })
-    v match {
-      case Oversized => None
-      case ref: java.lang.ref.SoftReference[_] =>
-        // a reclaim between compute and here: rebuild locally this once
-        Option(ref.get.asInstanceOf[SnapshotOverlay])
+    // the same path/max-offset changes file sizes/mtimes → new entry
+    val token = graft.cdc.dialect.CdcDialects.byName(p.dialect)
+      .contentToken(p.path, p.table)
+    // compute serializes concurrent callers for the same source: the
+    // first partition routes, the rest block briefly (no decode happens
+    // here) and reuse
+    val e = cache.compute(Source(p.dialect, p.path, p.table, chunkKey),
+      (_, cur) =>
+        if (cur != null && cur.high == p.high && cur.contentToken == token &&
+            (cur.routing == null || cur.routing.get != null)) cur
+        else Entry(p.high, token,
+          build(MaxEntries).map(new java.lang.ref.SoftReference(_)).orNull))
+    Option(e.routing).flatMap(r => Option(r.get))
+  }
+}
+
+/** DSv2 custom metrics of the snapshot read, summed over tasks and shown
+  * on the scan node of the plan (`BatchScanExec.metrics`). The ratio
+  * snapshotLinesRead / snapshotRowsEmitted is the chunk read's waste: 1.0
+  * when every chunk reads only its own window. Spark instantiates each
+  * metric class by name to aggregate, hence one no-arg class per metric. */
+object CdcScanMetrics {
+  import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
+
+  sealed abstract class Sum(metricName: String, desc: String)
+      extends CustomSumMetric {
+    override def name(): String = metricName
+    override def description(): String = desc
+    def value(v: Long): CustomTaskMetric = new CustomTaskMetric {
+      override def name(): String = metricName
+      override def value(): Long = v
     }
   }
+  final class SnapshotLinesReadMetric extends Sum("snapshotLinesRead",
+    "snapshot lines read")
+  final class SnapshotRowsEmittedMetric extends Sum("snapshotRowsEmitted",
+    "snapshot rows emitted")
+  final class BackfillLinesRoutedMetric extends Sum("backfillLinesRouted",
+    "W2 backfill log lines probed for their chunk key")
+  final class BackfillLinesDecodedMetric extends Sum("backfillLinesDecoded",
+    "W2 backfill log lines decoded")
+
+  val SnapshotLinesRead = new SnapshotLinesReadMetric
+  val SnapshotRowsEmitted = new SnapshotRowsEmittedMetric
+  val BackfillLinesRouted = new BackfillLinesRoutedMetric
+  val BackfillLinesDecoded = new BackfillLinesDecodedMetric
+  val all: Array[CustomMetric] = Array(SnapshotLinesRead, SnapshotRowsEmitted,
+    BackfillLinesRouted, BackfillLinesDecoded)
 }
 
 /** Test seam (CdcSourceSpec failover tests, local-mode single-JVM only):
@@ -471,37 +552,41 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   private def inSpan(k: Long): Boolean =
     spanLo.forall(k >= _) && spanHi.forall(k < _)
 
+  // task counters behind currentMetricsValues (CdcScanMetrics)
+  private var snapshotLinesRead = 0L
+  private var rowsEmitted = 0L
+  private var backfillLinesRouted = 0L
+  private var backfillLinesDecoded = 0L
+
   /** ONE log pass building the final surviving entry per log-touched merge
-    * key (pk). Sequential newest-wins application over the offset-sorted
-    * slice equals replaying events per key. `filterSpan` = keep only this
-    * partition's key span (the bounded-memory local mode); unfiltered is
-    * the shared-cache mode. `cap` aborts an oversized unfiltered build. */
-  private def buildOverlay(filterSpan: Boolean, cap: Int)
-      : Option[SnapshotOverlay] = {
+    * key (pk) of this partition's key span. Sequential newest-wins
+    * application over the offset-sorted lines equals replaying events per
+    * key. `prefilter` = probe each line's chunk key first and decode only
+    * in-span or unroutable lines (needed on a full scan of the slice;
+    * routed lines have passed the same probe already). */
+  private def buildOverlay(lines: Iterator[String],
+      prefilter: Boolean): SnapshotOverlay = {
     val m = mutable.LinkedHashMap[Long, OverlayEntry]()
     var truncOff = 0L
-    val it = dec.logLinesInRange(0L, p.high)
-    var oversized = false
-    while (!oversized && it.hasNext) {
-      val line = it.next()
+    lines.foreach { line =>
       // cheap key prefilter: the chunk-key value is identical in before/
       // after (key-stable by the chunk-key contract — the reference dedups
       // by the key Struct the same way, RecordUtils.upsertBinlog), so the
       // chunk-key field inside the envelope structs gives range membership;
       // full decode only in-span
-      if (!filterSpan || {
+      if (!prefilter || {
+        backfillLinesRouted += 1
         val quick = FileCdcDatabase.quickNestedLongField(line, dec.chunkKey)
         quick == FileCdcDatabase.NoLong || inSpan(quick)
-      })
+      }) {
+        backfillLinesDecoded += 1
         dec.decodeEnvelopeSafe(line).foreach { env =>
           // schema-change records go to the history, not the data merge
           // (T2); truncate has no images — it only advances the death
-          // frontier (EVERY key span sees it, so it must be tracked even
-          // in span-filtered builds)
+          // frontier (EVERY key span sees it)
           if (env.op == ExternalOp.Truncate)
             truncOff = math.max(truncOff, env.offset)
-          else if (env.op != ExternalOp.SchemaChange
-            && (!filterSpan || inSpan(env.chunkKeyVal))) {
+          else if (env.op != ExternalOp.SchemaChange && inSpan(env.chunkKeyVal))
             env.op match {
               case ExternalOp.Delete =>
                 m(env.key) = OverlayEntry(env.chunkKeyVal, None)
@@ -509,25 +594,25 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
                 m(env.key) = OverlayEntry(env.chunkKeyVal,
                   Some((env.offset, env.after)))
             }
-            // oversized for sharing: stop wasting this scan (the caller
-            // switches every partition of this read to filtered builds)
-            if (m.size > cap) oversized = true
-          }
         }
+      }
     }
-    if (oversized) {
-      it match { case c: AutoCloseable => c.close(); case _ => () }
-      None
-    } else Some(SnapshotOverlay(m, truncOff))
+    SnapshotOverlay(m, truncOff)
   }
 
-  // Shared unfiltered overlay when change volume permits (one log scan per
-  // executor); span-filtered local build otherwise. mergeRange filters by
-  // ckVal either way, so the two modes merge identically.
-  private[source] lazy val overlay: SnapshotOverlay =
-    SnapshotOverlayCache.sharedOverlay(p,
-      cap => buildOverlay(filterSpan = false, cap))
-      .getOrElse(buildOverlay(filterSpan = true, Int.MaxValue).get)
+  // This span's lines from the executor's shared routing of the log slice
+  // when it is within the cap; otherwise this partition's own prefiltered
+  // full scan of the slice. Both decode the same lines in the same order.
+  private lazy val overlay: SnapshotOverlay = {
+    val routing = SnapshotOverlayCache.sharedRouting(p, dec.chunkKey, cap =>
+      BackfillRouting.build(dec.logLinesInRange(0L, p.high).map { l =>
+        backfillLinesRouted += 1; l
+      }, dec.chunkKey, cap))
+    routing match {
+      case Some(r) => buildOverlay(r.linesFor(spanLo, spanHi), prefilter = false)
+      case None => buildOverlay(dec.logLinesInRange(0L, p.high), prefilter = true)
+    }
+  }
 
   // W2 per chunk range: chunk rows keyed by pk, then the partition's log
   // overlay applied — CREATE/UPDATE replace, DELETE removes, and a
@@ -543,12 +628,13 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   }
 
   /** The chunk range's snapshot rows by pk, as (offset 0, image). */
-  private[source] def snapshotRows(lo: Option[Long], hi: Option[Long])
+  private def snapshotRows(lo: Option[Long], hi: Option[Long])
       : mutable.LinkedHashMap[Long, (Long, InternalRow)] = {
     def inRange(k: Long): Boolean = lo.forall(k >= _) && hi.forall(k < _)
     val byKey = mutable.LinkedHashMap[Long, (Long, InternalRow)]()
     if (overlay.truncateOffset == 0L)
       dec.snapshotLines(lo, hi).foreach { line =>
+        snapshotLinesRead += 1
         val row = dec.codec.decode(line)
         val ck = CdcPlanner.toLongKey(row.get(dec.ckIdx, dec.ckType))
         if (inRange(ck))
@@ -557,7 +643,7 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
     byKey
   }
 
-  private[source] def emitAll(
+  private def emitAll(
       byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)])
       : Iterator[InternalRow] =
     byKey.valuesIterator.map { case (off, img) =>
@@ -573,9 +659,16 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   private val scope = new FileCdcDatabase.ResourceScope
   private var cur: InternalRow = _
   override def next(): Boolean = FileCdcDatabase.inScope(scope) {
-    if (merged.hasNext) { cur = merged.next(); true } else false
+    if (merged.hasNext) { cur = merged.next(); rowsEmitted += 1; true }
+    else false
   }
   override def get(): InternalRow = cur
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(CdcScanMetrics.SnapshotLinesRead.value(snapshotLinesRead),
+      CdcScanMetrics.SnapshotRowsEmitted.value(rowsEmitted),
+      CdcScanMetrics.BackfillLinesRouted.value(backfillLinesRouted),
+      CdcScanMetrics.BackfillLinesDecoded.value(backfillLinesDecoded))
   override def close(): Unit = {
     scope.closeAll()
     // safety net: sweep anything a scope-less consumer left open on this

@@ -539,6 +539,9 @@ class CdcScan(cfg: CdcSourceConfig, schema: StructType,
     extends Scan with SupportsRuntimeFiltering {
   override def readSchema(): StructType = schema
   override def description(): String = s"CdcScan(${cfg.table}, ${cfg.startupMode})"
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    CdcScanMetrics.all
 
   /** Runtime (DPP-style) chunk pruning: a join whose build side filters the
     * chunk key hands the probe-side key set to the scan at execution time;
@@ -667,7 +670,7 @@ object CdcPlanner {
         val codec = new JsonRowCodec(m.schema)
         val ckIdx = m.schema.fieldIndex(ck)
         val ckType = m.schema(ckIdx).dataType
-        cfg.dialect.snapshotLines(cfg.path, table, ck, None, None)
+        cfg.dialect.snapshotLines(cfg.path, m, ck, None, None)
           .map(l => toLongKey(codec.decode(l).get(ckIdx, ckType)))
           .toSeq.sorted.iterator
       },
@@ -822,7 +825,7 @@ case class CdcStreamOffset(logOffset: Long, snapshotted: Seq[String])
 
 object CdcStreamOffset {
   def fromJson(s: String): CdcStreamOffset = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    val n = FileCdcDatabase.mapper.readTree(s)
     val ts = Option(n.get("snapshotted"))
       .map(a => (0 until a.size()).map(a.get(_).asText()))
       .getOrElse(Seq.empty)

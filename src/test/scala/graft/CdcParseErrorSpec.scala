@@ -87,6 +87,68 @@ class CdcParseErrorSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
+  test("a malformed log line fails only the reads whose window holds it") {
+    // the log is offset-sorted; a line without an offset belongs by
+    // position: a range reads it when it lies after the last line with
+    // offset <= from and before the first line with offset > to
+    import java.nio.file.{Files, Paths, StandardOpenOption}
+    val clean = tmpDir("parse-window-clean"); val dir = tmpDir("parse-window")
+    writeDb(clean, corrupt = false); writeDb(dir, corrupt = false)
+    val logFile = Paths.get(
+      graft.cdc.FileCdcDatabase.dataFiles(dir, "t", "log").head)
+    val lines = Files.readAllLines(logFile)
+    val offs = (0 until lines.size).map(i => graft.cdc.FileCdcDatabase
+      .quickLongField(lines.get(i), graft.cdc.ChangeRecord.OffsetCol))
+    val at = lines.size / 2 // garbage goes right after the line at `at`
+    lines.add(at + 1, """{"truncated": [1,""")
+    Files.write(logFile, lines, StandardOpenOption.TRUNCATE_EXISTING)
+
+    def fromOffset(d: String, off: Long) = spark.read.format("graft-cdc")
+      .option("path", d).option("table", "t")
+      .option("scan.startup.mode", "specific-offset")
+      .option("scan.startup.specific-offset", off.toString)
+      .load().select(col("__offset"), col("__op"), col("id"), col("v"))
+      .collect().map(_.toString).sorted
+    def failsOnPolicy(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty else t.getMessage +: chain(t.getCause)
+      assert(chain(e).exists(m => m != null &&
+        m.contains("scan.parse.error-policy=fail")), chain(e).mkString(" | "))
+    }
+    // a batch read that starts past the line no longer reads it
+    val past = offs(at + 2)
+    assert(fromOffset(dir, past).sameElements(fromOffset(clean, past)))
+    // one that starts before it still fails
+    failsOnPolicy(fromOffset(dir, offs(at - 2)))
+
+    // a stream fails in the first batch whose range reaches the line — the
+    // batch ending at or past the offset just before it
+    val perTrigger = 3
+    val failing = (0 until offs.size by perTrigger)
+      .indexWhere(i => offs(math.min(i + perTrigger, offs.size) - 1) >= offs(at))
+    assert(failing > 0)
+    val done = scala.collection.mutable.ArrayBuffer.empty[Long]
+    failsOnPolicy {
+      val q = spark.readStream.format("graft-cdc")
+        .option("path", dir).option("table", "t")
+        .option("scan.startup.mode", "earliest")
+        .option("scan.stream.max-events-per-trigger", perTrigger.toString)
+        .load()
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          batch.collect()
+          done.synchronized(done += id)
+          ()
+        }
+        .option("checkpointLocation", tmpDir("parse-window-ckpt"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    assert(done.toSeq === (0L until failing.toLong))
+  }
+
   test("policy is validated at scan start") {
     val dir = tmpDir("parse-bad")
     writeDb(dir, corrupt = false)

@@ -643,18 +643,42 @@ class CdcSourceSpec extends SparkSpecBase {
       """{"v":"look \"id\":99 here","after":{"id":5}}""", "id") === Some(5L))
   }
 
-  test("takeWhileClosing closes the reader at the early stop") {
+  test("a sorted window closes its file at the window's end") {
     val dir = tmpDir("closing-it")
     val f = new java.io.File(dir, "x.jsonl")
     java.nio.file.Files.writeString(f.toPath,
       (1 to 100).map(i => s"""{"n":$i}""").mkString("\n"))
-    val src = FileCdcDatabase.lines(f.getPath)
-    val taken = src.takeWhileClosing(l =>
-      FileCdcDatabase.quickLongField(l, "n") <= 3).toList
-    assert(taken.size === 3)
-    // the stop closed the underlying reader: the source is exhausted even
-    // though 97 lines were never read
-    assert(!src.hasNext)
+    // descriptors of this process open on the file
+    def openOnFile(): Int = {
+      val fds = new java.io.File("/proc/self/fd").listFiles()
+      fds.count(fd => scala.util.Try(java.nio.file.Files.readSymbolicLink(
+        fd.toPath).toString).toOption.contains(f.getCanonicalPath))
+    }
+    val key = (l: String) => FileCdcDatabase.quickLongField(l, "n")
+    val src = FileCdcDatabase.sortedLines(f.getPath, Some(41L), Some(44L), key)
+    assert(src.next() === """{"n":41}""")
+    assert(openOnFile() === 1)
+    assert(src.toList === Seq("""{"n":42}""", """{"n":43}"""))
+    // the window's end closed the file although 57 lines follow it
+    assert(openOnFile() === 0)
+  }
+
+  test("snapshot read metrics: every line read once, routed backfill") {
+    val dir = tmpDir("cdc-scan-metrics")
+    writeDb(dir, 6L)
+    val df = read(dir, "initial")
+    df.collect()
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+    def metric(n: String): Long = scan.metrics(n).value
+    // chunks of 5 over 20 snapshot rows: each line in exactly one window
+    assert(metric("snapshotLinesRead") === 20L)
+    assert(metric("snapshotRowsEmitted") === finalState.size.toLong)
+    // the 6-event log is routed once (one executor) and each span decodes
+    // only its own events
+    assert(metric("backfillLinesRouted") === 6L)
+    assert(metric("backfillLinesDecoded") === 6L)
   }
 
   test("offsetsBetween honors the enumeration limit") {

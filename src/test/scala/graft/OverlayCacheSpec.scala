@@ -6,8 +6,10 @@ import graft.cdc.source.SnapshotOverlayCache
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** The per-executor shared snapshot-overlay cache: the shared (unfiltered)
-  * and oversized-fallback (span-filtered) modes must merge identically. */
+/** The per-executor shared routing of the W2 log slice: the routed and
+  * oversized-fallback (full-scan, prefiltered) modes must merge
+  * identically, and partitions decoding in different zones must not share
+  * decoded images. */
 class OverlayCacheSpec extends SparkSpecBase {
 
   import spark.implicits._

@@ -74,68 +74,125 @@ class OverlayIndexSpec extends SparkSpecBase {
     StructField("k2", LongType), StructField("v", StringType)))
 
   /** 120 rows; k2 reverses the id order (a key-stable chunk-key override);
-    * updates, deletes and inserts spread over the key space, and an
-    * optional TRUNCATE in the middle of the log. */
-  private def writeTable(dir: String, truncate: Boolean): Unit = {
+    * updates, deletes and inserts spread over the key space, an optional
+    * TRUNCATE in the middle of the log, and optional DDL records (they
+    * carry no chunk key, so the routing sends them to every span). */
+  private def writeTable(dir: String, truncate: Boolean,
+      ddl: Boolean = false): Unit = {
     val snap = spark.createDataFrame(spark.sparkContext.parallelize(
       (1L to 120L).map(i => Row(i, 1000L - i, s"v$i"))), payload)
     def img(i: Long, v: String) = Row(i, 1000L - i, v)
+    def ddlRow(off: Long) = Row(off, "ddl", off, "graft", "t", null, null,
+      "COMMENT ON TABLE t IS 'x'", payload.toDDL)
     val events = (1L to 120L by 7L).map(i =>
-      Row(i, "u", i, "graft", "t", img(i, s"v$i"), img(i, s"u$i"))) ++
+      Row(i, "u", i, "graft", "t", img(i, s"v$i"), img(i, s"u$i"), null,
+        null)) ++
+      (if (ddl) Seq(ddlRow(150L)) else Nil) ++
       (3L to 120L by 11L).map(i =>
-        Row(200L + i, "d", i, "graft", "t", img(i, s"v$i"), null)) ++
+        Row(200L + i, "d", i, "graft", "t", img(i, s"v$i"), null, null,
+          null)) ++
       (121L to 130L).map(i =>
-        Row(400L + i, "c", i, "graft", "t", null, img(i, s"n$i"))) ++
-      (if (truncate) Seq(Row(600L, "t", 600L, "graft", "t", null, null))
+        Row(400L + i, "c", i, "graft", "t", null, img(i, s"n$i"), null,
+          null)) ++
+      (if (truncate) Seq(Row(600L, "t", 600L, "graft", "t", null, null,
+        null, null))
       else Nil) ++
+      (if (ddl) Seq(ddlRow(610L)) else Nil) ++
       (131L to 136L).map(i =>
-        Row(500L + i, "c", i, "graft", "t", null, img(i, s"m$i")))
+        Row(500L + i, "c", i, "graft", "t", null, img(i, s"m$i"), null,
+          null))
+    val env = StructType(envelopeSchema(payload).fields ++ Seq(
+      StructField(DdlCol, StringType), StructField(SchemaDdlCol, StringType)))
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snap,
-      spark.createDataFrame(spark.sparkContext.parallelize(events),
-        envelopeSchema(payload)),
+      spark.createDataFrame(spark.sparkContext.parallelize(events), env),
       snapshotPartitions = 3, force = true)
+  }
+
+  /** The naive full-scan merge of one partition: every snapshot line and
+    * every log line of (0, high] decoded, one unfiltered overlay, and each
+    * range's entries found by scanning them all. */
+  private def naiveMerge(p: SnapshotChunkPartition): Seq[InternalRow] = {
+    val dec = new EnvelopeDecoder(p.dialect, p.path, p.table, p.schemaDdl,
+      p.chunkKey, p.parsePolicy, p.serverTimeZone, p.maskSpec)
+    val m = mutable.LinkedHashMap[Long, OverlayEntry]()
+    var trunc = 0L
+    dec.logLinesInRange(0L, p.high).foreach { line =>
+      dec.decodeEnvelopeSafe(line).foreach { env =>
+        if (env.op == ExternalOp.Truncate) trunc = math.max(trunc, env.offset)
+        else if (env.op != ExternalOp.SchemaChange)
+          m(env.key) = OverlayEntry(env.chunkKeyVal,
+            if (env.op == ExternalOp.Delete) None
+            else Some((env.offset, env.after)))
+      }
+    }
+    val ov = SnapshotOverlay(m, trunc)
+    val snapshot = dec.dialect.snapshotLines(p.path, dec.meta, dec.chunkKey,
+      None, None).map(dec.codec.decode).toVector
+    p.ranges.flatMap { case (lo, hi) =>
+      val byKey: ByKey = mutable.LinkedHashMap.empty
+      if (trunc == 0L) snapshot.foreach { row =>
+        val ck = CdcPlanner.toLongKey(row.get(dec.ckIdx, dec.ckType))
+        if (inRange(lo, hi)(ck))
+          byKey(CdcPlanner.toLongKey(row.get(dec.pkIdx, dec.pkType))) =
+            (0L, row)
+      }
+      naiveApply(ov, byKey, lo, hi)
+      byKey.valuesIterator.map { case (off, img) =>
+        dec.emit(img, EnvelopeDecoder.Insert, off, 0L) }.toList
+    }
   }
 
   test("snapshot reader: indexed merge emits the naive merge's rows, in order") {
     val plain = tmpDir("ovl-index"); writeTable(plain, truncate = false)
     val trunc = tmpDir("ovl-index-trunc"); writeTable(trunc, truncate = true)
+    val ddl = tmpDir("ovl-index-ddl")
+    writeTable(ddl, truncate = false, ddl = true)
     val base = Map("table" -> "t", "scan.startup.mode" -> "initial",
       "scan.incremental.snapshot.chunk.size" -> "10",
       // 12 chunks grouped into 4 partitions of 3 ranges each
       "scan.snapshot.max-partitions" -> "4")
+    val none = CdcKeyBounds(None, None)
     val cases = Seq(
-      "grouped" -> (plain, Map.empty[String, String]),
-      "chunk-key override" -> (plain,
-        Map("scan.incremental.snapshot.chunk-key.column" -> "k2")),
-      "truncate" -> (trunc, Map.empty[String, String]))
+      ("grouped", plain, Map.empty[String, String], none),
+      ("chunk-key override", plain,
+        Map("scan.incremental.snapshot.chunk-key.column" -> "k2"), none),
+      ("truncate", trunc, Map.empty[String, String], none),
+      ("ddl", ddl, Map.empty[String, String], none),
+      // pushed-down key bounds: only the overlapping chunks are planned
+      ("filter pushdown", plain, Map.empty[String, String],
+        CdcKeyBounds(Some(25L), Some(85L))))
     val origCap = SnapshotOverlayCache.MaxEntries
     try {
-      for ((name, (dir, opts)) <- cases; cap <- Seq(origCap, 1)) {
-        // cap 1: every partition takes the span-filtered local build
+      for ((name, dir, opts, bounds) <- cases; cap <- Seq(origCap, 1)) {
+        // cap 1: every partition takes the full-scan prefiltered build
         SnapshotOverlayCache.MaxEntries = cap
         SnapshotOverlayCache.clear()
         val cfg = CdcSourceConfig.fromOptions(new CaseInsensitiveStringMap(
           (base ++ opts + ("path" -> dir)).asJava))
         val parts = CdcPlanner.snapshotPartitions(cfg, "t",
-          cfg.maxOffsetAll, "").collect { case p: SnapshotChunkPartition => p }
+          cfg.maxOffsetAll, "", bounds)
+          .collect { case p: SnapshotChunkPartition => p }
         assert(parts.exists(_.ranges.size > 1), name)
-        var rows = 0
+        val ids = mutable.ArrayBuffer.empty[Long]
         parts.foreach { p =>
           val r = new SnapshotChunkReader(p)
           val got = mutable.ArrayBuffer.empty[InternalRow]
           try while (r.next()) got += r.get()
           finally r.close()
-          val ref = new SnapshotChunkReader(p)
-          val want = try p.ranges.flatMap { case (lo, hi) =>
-            val byKey = ref.snapshotRows(lo, hi)
-            naiveApply(ref.overlay, byKey, lo, hi)
-            ref.emitAll(byKey).toList
-          } finally ref.close()
-          assert(got.toSeq === want, s"$name cap=$cap partition ${p.chunkId}")
-          rows += got.size
+          assert(got.toSeq === naiveMerge(p),
+            s"$name cap=$cap partition ${p.chunkId}")
+          ids ++= got.map(_.getLong(0))
         }
-        val expected = if (dir == trunc) 6 else 120 - 11 + 10 + 6
-        assert(rows === expected, s"$name cap=$cap")
+        if (bounds == none)
+          assert(ids.size === (if (dir == trunc) 6 else 120 - 11 + 10 + 6),
+            s"$name cap=$cap")
+        else {
+          // every surviving id inside the bounds, and not the whole table
+          val deleted = (3L to 120L by 11L).toSet
+          assert((25L until 85L).filterNot(deleted).toSet.subsetOf(ids.toSet),
+            s"$name cap=$cap")
+          assert(ids.size < 120 - 11 + 10 + 6, s"$name cap=$cap")
+        }
       }
     } finally {
       SnapshotOverlayCache.MaxEntries = origCap
