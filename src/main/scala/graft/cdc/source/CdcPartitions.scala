@@ -27,8 +27,10 @@ import scala.collection.mutable
  * the range lower bound, but duplicates from the snapshot merge are provably
  * excluded either way.
  *
- * Memory bound: one chunk holds ≤ chunk-size merged rows (default 8096);
- * the log reader streams line by line. Both hold O(chunk), not O(table).
+ * Memory bound: a snapshot partition holds many chunks but merges one at a
+ * time, so it holds ≤ chunk-size merged rows (default 8096) plus its span's
+ * overlay; the log reader streams line by line. Both hold O(chunk + span
+ * changes), not O(table).
  * The W2 backfill holds, per executor, the routed lines of the log slice
  * (≤ [[SnapshotOverlayCache.MaxEntries]] lines, soft-referenced), and per
  * partition an overlay of its span's log-touched keys, indexed by chunk
@@ -50,13 +52,16 @@ import scala.collection.mutable
   * (MySqlSnapshotSplit.tableSchemas, SURVEY §1.4): executors decode with
   * exactly the analyzed schema, never a fresher one.
   *
-  * A snapshot partition holds one or more consecutive chunk ranges: at
-  * 100 TB a table splits into millions of 8096-row chunks, and one Spark
-  * partition per chunk would melt the scheduler — so the planner groups
-  * consecutive chunks up to `scan.snapshot.max-partitions` partitions
-  * (the scheduling analogue of the reference's chunk-meta groups,
-  * MySqlSourceOptions.java:199-205). The reader still merges ONE chunk at
-  * a time, so task memory stays O(chunk), not O(group). */
+  * A snapshot partition holds a run of consecutive chunk ranges: one task
+  * per chunk pays task launch and reader set-up once per 8096 rows, and at
+  * 100 TB would melt the scheduler. The planner sizes the partition count
+  * to the cluster as Spark sizes a file scan — about one per slot, more
+  * when the table's estimated bytes exceed `maxPartitionBytes` per slot,
+  * at most `scan.snapshot.max-partitions`
+  * ([[CdcPlanner.snapshotPartitionCount]]) — as the reference hands its
+  * chunks to N parallel readers (MySqlSourceEnumerator.java:178-230). The
+  * reader still merges ONE chunk at a time, so task memory stays
+  * O(chunk + span changes), not O(group). */
 case class SnapshotChunkPartition(dialect: String, path: String,
     table: String, chunkId: Int,
     ranges: Seq[(Option[Long], Option[Long])],
@@ -488,7 +493,9 @@ private[graft] object SnapshotOverlayCache {
 /** DSv2 custom metrics of the snapshot read, summed over tasks and shown
   * on the scan node of the plan (`BatchScanExec.metrics`). The ratio
   * snapshotLinesRead / snapshotRowsEmitted is the chunk read's waste: 1.0
-  * when every chunk reads only its own window. Spark instantiates each
+  * when every chunk reads only its own window. snapshotChunksRead counts
+  * chunk ranges merged; a task merges a run of them, so it exceeds the
+  * task count whenever chunks are grouped. Spark instantiates each
   * metric class by name to aggregate, hence one no-arg class per metric. */
 object CdcScanMetrics {
   import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
@@ -510,13 +517,16 @@ object CdcScanMetrics {
     "W2 backfill log lines probed for their chunk key")
   final class BackfillLinesDecodedMetric extends Sum("backfillLinesDecoded",
     "W2 backfill log lines decoded")
+  final class SnapshotChunksReadMetric extends Sum("snapshotChunksRead",
+    "snapshot chunks read")
 
   val SnapshotLinesRead = new SnapshotLinesReadMetric
   val SnapshotRowsEmitted = new SnapshotRowsEmittedMetric
   val BackfillLinesRouted = new BackfillLinesRoutedMetric
   val BackfillLinesDecoded = new BackfillLinesDecodedMetric
+  val SnapshotChunksRead = new SnapshotChunksReadMetric
   val all: Array[CustomMetric] = Array(SnapshotLinesRead, SnapshotRowsEmitted,
-    BackfillLinesRouted, BackfillLinesDecoded)
+    BackfillLinesRouted, BackfillLinesDecoded, SnapshotChunksRead)
 }
 
 /** Test seam (CdcSourceSpec failover tests, local-mode single-JVM only):
@@ -557,6 +567,7 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   private var rowsEmitted = 0L
   private var backfillLinesRouted = 0L
   private var backfillLinesDecoded = 0L
+  private var chunksRead = 0L
 
   /** ONE log pass building the final surviving entry per log-touched merge
     * key (pk) of this partition's key span. Sequential newest-wins
@@ -622,6 +633,7 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   // is range-pushed to the dialect. Ranges evaluate lazily one at a time
   // (flatMap), so a grouped partition holds O(chunk + span changes) rows.
   private def mergeRange(lo: Option[Long], hi: Option[Long]): Iterator[InternalRow] = {
+    chunksRead += 1
     val byKey = snapshotRows(lo, hi)
     overlay.applyRange(byKey, lo, hi)
     emitAll(byKey)
@@ -668,7 +680,8 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
     Array(CdcScanMetrics.SnapshotLinesRead.value(snapshotLinesRead),
       CdcScanMetrics.SnapshotRowsEmitted.value(rowsEmitted),
       CdcScanMetrics.BackfillLinesRouted.value(backfillLinesRouted),
-      CdcScanMetrics.BackfillLinesDecoded.value(backfillLinesDecoded))
+      CdcScanMetrics.BackfillLinesDecoded.value(backfillLinesDecoded),
+      CdcScanMetrics.SnapshotChunksRead.value(chunksRead))
   override def close(): Unit = {
     scope.closeAll()
     // safety net: sweep anything a scope-less consumer left open on this

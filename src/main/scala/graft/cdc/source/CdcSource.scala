@@ -3,10 +3,13 @@ package graft.cdc.source
 import graft.cdc.ChunkSplitter.ChunkRange
 import graft.cdc.dialect.{CdcDialect, CdcDialects}
 import graft.cdc.{ChangeRecord, ChunkSplitter, FileCdcDatabase}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,10 +31,15 @@ import scala.jdk.CollectionConverters._
  * Startup modes mirror StartupOptions.java:39-90: initial (snapshot + log),
  * earliest (log from 0), latest (log from current).
  *
- * Scale design: each snapshot chunk is one InputPartition (default 8096 rows,
- * MySqlSourceOptions.java:104-109) so a 100 TB table fans out to bounded-
- * memory chunk tasks across the cluster; the log phase is a single ordered
- * partition per micro-batch, as in the reference (mysql-cdc.md:495).
+ * Scale design: the snapshot splits into chunks (default 8096 rows,
+ * MySqlSourceOptions.java:104-109), and runs of consecutive chunks form the
+ * InputPartitions, sized to the cluster as Spark sizes a file scan (about
+ * one task per slot at small sizes, `maxPartitionBytes` apiece at large
+ * ones; [[CdcPlanner.snapshotPartitionCount]]) — the reference hands its
+ * chunks to N parallel readers the same way. A task reads its chunks one
+ * at a time, so a 100 TB table still fans out to bounded-memory tasks
+ * across the cluster. The log phase is a single ordered partition per
+ * micro-batch, as in the reference (mysql-cdc.md:495).
  */
 object CdcSourceConfig {
   val PathKey = "path"
@@ -131,10 +139,11 @@ object CdcSourceConfig {
     * core's decode rate, and consumers already order by `__offset`, never
     * by partition layout — so decode parallelism is semantics-free. */
   val LogPartitionsKey = "scan.stream.log-partitions"
-  /** Cap on snapshot-phase Spark partitions: consecutive chunks group until
-    * the partition count fits (scheduler protection at 100 TB — millions of
-    * 8096-row chunks must not become millions of tasks; cf. the reference's
-    * chunk-meta groups, MySqlSourceOptions.java:199-205). */
+  /** Cap on snapshot-phase Spark partitions. Below it the count follows
+    * the cluster ([[CdcPlanner.snapshotPartitionCount]]); the cap bounds it
+    * when the table's size asks for more (scheduler protection at 100 TB —
+    * millions of 8096-row chunks must not become millions of tasks; cf. the
+    * reference's chunk-meta groups, MySqlSourceOptions.java:199-205). */
   val MaxSnapshotPartitionsKey = "scan.snapshot.max-partitions"
   /** Even-distribution factor bounds steering arithmetic-vs-lazy splitting
     * (names and defaults from MySqlSourceOptions.java:207-231). */
@@ -714,22 +723,53 @@ object CdcPlanner {
         "BIGINT/INT/DECIMAL, MySqlChunkSplitter.java:385-395)")
   }
 
-  /** Consecutive chunks grouped so the snapshot phase yields at most
-    * `maxSnapshotPartitions` Spark partitions (scale note on
-    * [[SnapshotChunkPartition]]); chunks outside pushed key bounds are
-    * dropped before grouping (a point lookup plans one chunk). */
+  /** The snapshot phase's Spark partitions: runs of consecutive chunks,
+    * [[snapshotPartitionCount]] of them, balanced to within one chunk
+    * (scale note on [[SnapshotChunkPartition]]). Chunks outside pushed key
+    * bounds are dropped first (a point lookup plans one chunk). */
   def snapshotPartitions(cfg: CdcSourceConfig, table: String, high: Long,
       schemaDdl: String,
       bounds: CdcKeyBounds = CdcKeyBounds(None, None)): Seq[InputPartition] = {
-    val cs = chunks(cfg, table)
-      .filter(c => bounds.overlaps(c.lo, c.hi))
-    val group = math.max(1,
-      math.ceil(cs.size.toDouble / cfg.maxSnapshotPartitions).toInt)
-    cs.grouped(group).zipWithIndex.map { case (g, i) =>
+    val all = chunks(cfg, table)
+    val cs = all.filter(c => bounds.overlaps(c.lo, c.hi)).toIndexedSeq
+    val n = snapshotPartitionCount(cfg, table, cs.size, all.size)
+    (0 until n).map { i =>
+      // Long products: millions of chunks times thousands of partitions
+      val g = cs.slice((i.toLong * cs.size / n).toInt,
+        ((i + 1).toLong * cs.size / n).toInt)
       SnapshotChunkPartition(cfg.dialectName, cfg.path, table, i,
         g.map(c => (c.lo, c.hi)), high, schemaDdl, cfg.chunkKey,
         cfg.parseErrorPolicy, cfg.serverTimeZone, cfg.columnMaskSpec)
-    }.toSeq
+    }
+  }
+
+  /** How many partitions `kept` of a table's `total` chunks become, sized
+    * to the cluster the way Spark sizes a file scan — the reference hands
+    * its chunks round-robin to N parallel readers, N = the job's
+    * parallelism (MySqlSourceEnumerator.java:178-230):
+    *
+    *   n = min(kept, max-partitions, max(P, ceil(estBytes / maxPartitionBytes)))
+    *
+    * P is `spark.sql.leafNodeDefaultParallelism` when set, else the
+    * cluster's default parallelism (Spark's rule for leaf scans); estBytes
+    * is the kept chunks' share of the dialect's metadata-only table size
+    * (avgRowSizeBytes × rowCount). A dialect that cannot estimate counts
+    * every chunk as maxPartitionBytes, which leaves one chunk per
+    * partition up to the cap. */
+  def snapshotPartitionCount(cfg: CdcSourceConfig, table: String,
+      kept: Int, total: Int): Int = {
+    val spark = SparkSession.active
+    val maxBytes = JavaUtils.byteStringAsBytes(
+      spark.conf.get(SQLConf.FILES_MAX_PARTITION_BYTES.key))
+    val p = spark.conf.getOption(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM.key)
+      .fold(spark.sparkContext.defaultParallelism)(_.toInt)
+    val estBytes: Double = cfg.dialect.avgRowSizeBytes(cfg.path, table)
+      .map(_.toDouble * cfg.dialect.tableMeta(cfg.path, table).rowCount *
+        kept / math.max(1, total))
+      .getOrElse(kept.toDouble * maxBytes)
+    val byBytes = math.ceil(estBytes / maxBytes).toLong
+    math.min(kept.toLong, math.min(cfg.maxSnapshotPartitions.toLong,
+      math.max(p.toLong, byBytes))).toInt
   }
 
   /** Partitions for a fully-specified read: per captured table, snapshot

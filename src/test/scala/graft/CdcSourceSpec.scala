@@ -679,6 +679,29 @@ class CdcSourceSpec extends SparkSpecBase {
     // only its own events
     assert(metric("backfillLinesRouted") === 6L)
     assert(metric("backfillLinesDecoded") === 6L)
+    assert(metric("snapshotChunksRead") === 4L)
+  }
+
+  test("snapshotChunksRead: every planned chunk, across grouped tasks") {
+    val dir = tmpDir("cdc-chunks-metric")
+    writeDb(dir, 6L)
+    val df = spark.read.format("graft-cdc")
+      .option("path", dir).option("table", "t")
+      .option("scan.startup.mode", "initial")
+      .option("scan.incremental.snapshot.chunk.size", "2")
+      .load()
+    df.collect()
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+    val cfg = graft.cdc.source.CdcSourceConfig(path = dir, table = "t",
+      startupMode = "initial", chunkSize = 2, changelogMode = "all")
+    val planned = graft.cdc.source.CdcPlanner.chunks(cfg, "t").size
+    val tasks = scan.inputRDD.getNumPartitions
+    assert(scan.metrics("snapshotChunksRead").value === planned.toLong)
+    assert(planned > tasks, s"$planned chunks in $tasks tasks")
+    assert(df.select("id", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet === finalState)
   }
 
   test("offsetsBetween honors the enumeration limit") {

@@ -23,4 +23,15 @@ abstract class SparkSpecBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Sets session confs for `body`, then restores the previous values. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -108,6 +108,52 @@ class OverlayIndexSpec extends SparkSpecBase {
       snapshotPartitions = 3, force = true)
   }
 
+  /** A generated log over the same 120-row snapshot, from `seed`: updates,
+    * deletes and inserts of fresh keys over the live key set, a TRUNCATE
+    * (which empties it) at a random point in half the logs, and DDL
+    * records at random points. Returns the ids live at the log's end. */
+  private def writeGenerated(dir: String, seed: Long): Set[Long] = {
+    val rnd = new scala.util.Random(seed)
+    val snap = spark.createDataFrame(spark.sparkContext.parallelize(
+      (1L to 120L).map(i => Row(i, 1000L - i, s"v$i"))), payload)
+    def img(i: Long, v: String) = Row(i, 1000L - i, v)
+    val live = mutable.LinkedHashMap((1L to 120L).map(i => i -> s"v$i"): _*)
+    var nextKey = 121L
+    val n = 150
+    val truncAt = if (rnd.nextBoolean()) rnd.nextInt(n) + 1 else -1
+    val events = (1 to n).map(_.toLong).map { off =>
+      val r = rnd.nextInt(100)
+      if (off == truncAt) {
+        live.clear()
+        Row(off, "t", off, "graft", "t", null, null, null, null)
+      } else if (r < 5)
+        Row(off, "ddl", off, "graft", "t", null, null,
+          "COMMENT ON TABLE t IS 'x'", payload.toDDL)
+      else if (live.isEmpty || r < 25) {
+        val k = nextKey; nextKey += 1
+        live(k) = s"n$off"
+        Row(off, "c", off, "graft", "t", null, img(k, s"n$off"), null, null)
+      } else {
+        val k = live.keys.drop(rnd.nextInt(live.size)).head
+        val before = img(k, live(k))
+        if (r < 45) {
+          live.remove(k)
+          Row(off, "d", off, "graft", "t", before, null, null, null)
+        } else {
+          live(k) = s"u$off"
+          Row(off, "u", off, "graft", "t", before, img(k, s"u$off"), null,
+            null)
+        }
+      }
+    }
+    val env = StructType(envelopeSchema(payload).fields ++ Seq(
+      StructField(DdlCol, StringType), StructField(SchemaDdlCol, StringType)))
+    FileCdcDatabase.write(spark, dir, "t", "graft", "id", snap,
+      spark.createDataFrame(spark.sparkContext.parallelize(events), env),
+      snapshotPartitions = 3, force = true)
+    live.keySet.toSet
+  }
+
   /** The naive full-scan merge of one partition: every snapshot line and
     * every log line of (0, high] decoded, one unfiltered overlay, and each
     * range's entries found by scanning them all. */
@@ -147,10 +193,14 @@ class OverlayIndexSpec extends SparkSpecBase {
     val trunc = tmpDir("ovl-index-trunc"); writeTable(trunc, truncate = true)
     val ddl = tmpDir("ovl-index-ddl")
     writeTable(ddl, truncate = false, ddl = true)
+    val generated = (0 until 4).map { k =>
+      val s = seed * 17L + k
+      val d = tmpDir(s"ovl-index-gen-$k")
+      (s"generated seed $s", d, writeGenerated(d, s))
+    }
+    println(s"OverlayIndexSpec: generated log seeds ${generated.map(_._1).mkString(", ")}")
     val base = Map("table" -> "t", "scan.startup.mode" -> "initial",
-      "scan.incremental.snapshot.chunk.size" -> "10",
-      // 12 chunks grouped into 4 partitions of 3 ranges each
-      "scan.snapshot.max-partitions" -> "4")
+      "scan.incremental.snapshot.chunk.size" -> "10")
     val none = CdcKeyBounds(None, None)
     val cases = Seq(
       ("grouped", plain, Map.empty[String, String], none),
@@ -160,39 +210,60 @@ class OverlayIndexSpec extends SparkSpecBase {
       ("ddl", ddl, Map.empty[String, String], none),
       // pushed-down key bounds: only the overlapping chunks are planned
       ("filter pushdown", plain, Map.empty[String, String],
-        CdcKeyBounds(Some(25L), Some(85L))))
+        CdcKeyBounds(Some(25L), Some(85L)))) ++
+      generated.map { case (name, d, _) =>
+        (name, d, Map.empty[String, String], none) }
+    val liveAtEnd = generated.map { case (_, d, live) => d -> live }.toMap
+    // how the chunks group: capped to 4 partitions of 3 ranges each, the
+    // default (one partition per slot of the local[4] session), and P = 1
+    // (every chunk in one partition)
+    val sizings = Seq(
+      ("cap 4", Map("scan.snapshot.max-partitions" -> "4"),
+        Seq.empty[(String, String)]),
+      ("default", Map.empty[String, String], Seq.empty[(String, String)]),
+      ("P=1", Map.empty[String, String],
+        Seq("spark.sql.leafNodeDefaultParallelism" -> "1")))
     val origCap = SnapshotOverlayCache.MaxEntries
     try {
-      for ((name, dir, opts, bounds) <- cases; cap <- Seq(origCap, 1)) {
+      for ((name, dir, opts, bounds) <- cases;
+           (sizing, sizeOpts, confs) <- sizings; cap <- Seq(origCap, 1)) {
+        val label = s"$name $sizing cap=$cap"
         // cap 1: every partition takes the full-scan prefiltered build
         SnapshotOverlayCache.MaxEntries = cap
         SnapshotOverlayCache.clear()
         val cfg = CdcSourceConfig.fromOptions(new CaseInsensitiveStringMap(
-          (base ++ opts + ("path" -> dir)).asJava))
-        val parts = CdcPlanner.snapshotPartitions(cfg, "t",
-          cfg.maxOffsetAll, "", bounds)
-          .collect { case p: SnapshotChunkPartition => p }
-        assert(parts.exists(_.ranges.size > 1), name)
+          (base ++ opts ++ sizeOpts + ("path" -> dir)).asJava))
+        val parts = withConf(confs: _*) {
+          CdcPlanner.snapshotPartitions(cfg, "t", cfg.maxOffsetAll, "", bounds)
+            .collect { case p: SnapshotChunkPartition => p }
+        }
+        assert(parts.exists(_.ranges.size > 1), label)
+        if (sizing == "P=1") assert(parts.size === 1, label)
+        // the partitions tile the planned chunks, in order
+        assert(parts.flatMap(_.ranges) === CdcPlanner.chunks(cfg, "t")
+          .filter(c => bounds.overlaps(c.lo, c.hi)).map(c => (c.lo, c.hi)),
+          label)
         val ids = mutable.ArrayBuffer.empty[Long]
         parts.foreach { p =>
           val r = new SnapshotChunkReader(p)
           val got = mutable.ArrayBuffer.empty[InternalRow]
           try while (r.next()) got += r.get()
           finally r.close()
-          assert(got.toSeq === naiveMerge(p),
-            s"$name cap=$cap partition ${p.chunkId}")
+          // each partition's rows are its chunks' naive merges, concatenated
+          assert(got.toSeq === naiveMerge(p), s"$label partition ${p.chunkId}")
           ids ++= got.map(_.getLong(0))
         }
-        if (bounds == none)
-          assert(ids.size === (if (dir == trunc) 6 else 120 - 11 + 10 + 6),
-            s"$name cap=$cap")
-        else {
+        assert(ids.size === ids.distinct.size, label)
+        if (bounds != none) {
           // every surviving id inside the bounds, and not the whole table
           val deleted = (3L to 120L by 11L).toSet
           assert((25L until 85L).filterNot(deleted).toSet.subsetOf(ids.toSet),
-            s"$name cap=$cap")
-          assert(ids.size < 120 - 11 + 10 + 6, s"$name cap=$cap")
-        }
+            label)
+          assert(ids.size < 120 - 11 + 10 + 6, label)
+        } else if (dir == trunc) assert(ids.size === 6, label)
+        else if (liveAtEnd.contains(dir))
+          assert(ids.toSet === liveAtEnd(dir), label)
+        else assert(ids.size === 120 - 11 + 10 + 6, label)
       }
     } finally {
       SnapshotOverlayCache.MaxEntries = origCap
