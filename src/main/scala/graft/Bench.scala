@@ -1,18 +1,64 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Bench's command line. With no flags: the whole suite, three passes. */
+case class BenchArgs(only: Option[Seq[String]] = None, runs: Int = 3,
+    plansDir: Option[String] = None, fds: Boolean = false)
+
+object BenchArgs {
+  val usage: String =
+    """usage: Bench [--only q1,q2] [--runs N] [--plans DIR] [--fds]
+      |  --only q1,q2  warm and time only these queries, printing each pass
+      |  --runs N      N timed passes (default 3) cycling through three orders
+      |  --plans DIR   then write each AQE-final explain("formatted") to
+      |                DIR/<query>.txt
+      |  --fds         report each query's open-fd growth over its passes and
+      |                the open-fd targets at the end""".stripMargin
+
+  /** The parsed flags, or an error message ending in the usage text. */
+  def parse(args: Seq[String]): Either[String, BenchArgs] = {
+    def names(v: String) = v.split(",").map(_.trim).filter(_.nonEmpty).distinct
+    @annotation.tailrec
+    def go(rest: List[String], acc: BenchArgs): Either[String, BenchArgs] =
+      rest match {
+        case Nil => Right(acc)
+        case "--only" :: v :: tail if names(v).nonEmpty =>
+          go(tail, acc.copy(only = Some(names(v).toSeq)))
+        case "--runs" :: v :: tail if v.toIntOption.exists(_ >= 1) =>
+          go(tail, acc.copy(runs = v.toInt))
+        case "--plans" :: v :: tail => go(tail, acc.copy(plansDir = Some(v)))
+        case "--fds" :: tail => go(tail, acc.copy(fds = true))
+        case _ => Left(s"bad argument: ${rest.take(2).mkString(" ")}\n$usage")
+      }
+    go(args.toList, BenchArgs())
+  }
+}
+
 object Bench {
+  /** Open file descriptors of this JVM, by target path (Linux procfs). */
+  private def openFds: Seq[String] =
+    Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
+      .flatMap { f =>
+        try Some(java.nio.file.Files.readSymbolicLink(f.toPath).toString)
+        catch { case _: Exception => None }
+      }
+
   def main(args: Array[String]): Unit = {
+    val opts = BenchArgs.parse(args.toSeq) match {
+      case Right(o) => o
+      case Left(err) => System.err.println(err); sys.exit(2)
+    }
+    val selected = opts.only.fold(SparkEntry.queries.toSeq) { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      if (unknown.nonEmpty) {
+        System.err.println(s"unknown query: ${unknown.mkString(",")}")
+        sys.exit(2)
+      }
+      names.map(n => n -> SparkEntry.queries(n))
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Untimed warmup at the smallest SF: JIT, whole-stage codegen, parquet
     // reader and streaming machinery all pay first-use costs that would
     // otherwise land on whichever queries happen to run first.
@@ -25,8 +71,8 @@ object Bench {
     // Warm EVERY query shape at the smallest SF: whole-stage codegen and
     // JIT are per-plan-shape, so a partial warmup leaves whichever unwarmed
     // query runs first paying multi-second compilation inside its timing.
-    SparkEntry.queries.keys.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir).count()
+    selected.foreach { case (_, fn) =>
+      try fn(spark, warmDir).count()
       catch { case _: Throwable => () }
     }
     spark.catalog.clearCache()
@@ -80,10 +126,10 @@ object Bench {
     // and record both in the output JSON. A reading well above the band
     // says the run was hot (neighbor-tenant load), making >25% per-query
     // deltas mechanically discountable from the artifact itself instead
-    // of post-hoc TimeQ notes. MIN OF 4 back-to-back runs (bench
+    // of post-hoc single-query timings. MIN OF 4 back-to-back runs (bench
     // semantics: caches cleared each run, JIT warm): a single shot after
     // 300+ other queries pays page-cache/JIT-code-cache re-warm that the
-    // pinned quiet band (taken from settled TimeQ runs) never sees —
+    // pinned quiet band (taken from settled single-query runs) never sees —
     // measured 2.4 s single-shot vs 1.2-1.6 settled on a provably cool
     // run — so the settling repetition is what makes the reading
     // band-comparable. ~8 s per calibration point, twice per bench.
@@ -109,8 +155,18 @@ object Bench {
     // samples to discount, instead of one start/end pair averaging over
     // three passes. The per-query min across passes already discards a
     // single hot pass's inflation; these points certify WHICH pass that
-    // was. ~8 s per point, 4 points.
-    val calPoints = scala.collection.mutable.ArrayBuffer[Double](calibrate())
+    // was. ~8 s per point, 4 points. A focused run over a few queries
+    // (--only) is not a suite reading and skips calibration.
+    val calibrated = opts.only.isEmpty
+    val calPoints = scala.collection.mutable.ArrayBuffer.empty[Double]
+    if (calibrated) calPoints += calibrate()
+    // Locale.ROOT: a comma-decimal default locale would render 1,234 and
+    // break the JSON these lines exist to provide
+    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f",
+      Double.box(v))
+    // --fds: open-descriptor growth of each query run, per pass
+    val fdGrowth = scala.collection.mutable.Map.empty[String, Vector[Int]]
+      .withDefaultValue(Vector.empty)
     // Three timed passes, min per query: the shared host shows rotating
     // multi-second stalls (a query steady-stating at 1.6 s can record 19 s
     // in one pass while vmstat sits idle). The min of two independent
@@ -118,9 +174,11 @@ object Bench {
     // benchmark measures — noise inflation is not plan cost.
     // (elapsed, succeeded) per query: a pass that THREW must not win the
     // min with its fast time-to-failure and mask the error
-    def timedPass(order: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
+    def timedPass(pass: Int,
+        order: Seq[(String, (SparkSession, String) => DataFrame)])
         : Map[String, (Double, Boolean)] = order.map {
       case (name, fn) =>
+        val fds0 = if (opts.fds) openFds.size else 0
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
           catch { case _: Throwable => false }
@@ -128,22 +186,61 @@ object Bench {
         // intra-query caches must not shift cost (or memory) onto later
         // queries
         spark.catalog.clearCache()
+        if (opts.fds) fdGrowth(name) :+= openFds.size - fds0
+        if (!calibrated)
+          println(s"TIME $name pass$pass ${f3(t)} s" +
+            (if (ok) "" else " FAILED"))
         name -> ((t, ok))
     }.toMap
     // Passes 2 and 3 run in REVERSE and half-ROTATED order: a stall induced
     // by a neighboring query (GC pressure, page-cache eviction, host noise
     // with a period) hits the same victim when the order repeats, surviving
     // the min. Three decorrelated orders make a query's min robust even
-    // when the host stalls during two of the passes.
-    val order = SparkEntry.queries.toSeq
-    val rotated = order.drop(order.size / 2) ++ order.take(order.size / 2)
-    val passes = Seq(order, order.reverse, rotated).map { o =>
-      val r = timedPass(o)
-      calPoints += calibrate()
+    // when the host stalls during two of the passes; more passes (--runs)
+    // cycle through the same three.
+    val rotated = selected.drop(selected.size / 2) ++
+      selected.take(selected.size / 2)
+    val orders = Seq(selected, selected.reverse, rotated)
+    val passes = (0 until opts.runs).map { p =>
+      val r = timedPass(p + 1, orders(p % orders.size))
+      if (calibrated) calPoints += calibrate()
       r
     }
-    val calStart = calPoints.head
-    val calEnd = calPoints.last
+    // --plans: one more run per query after timing, so the recorded plan
+    // is the AQE-final one
+    opts.plansDir.foreach { dir =>
+      new java.io.File(dir).mkdirs()
+      selected.foreach { case (name, fn) =>
+        try {
+          val df = fn(spark, sfDir)
+          df.collect()
+          val path = java.nio.file.Paths.get(dir, s"$name.txt")
+          java.nio.file.Files.writeString(path,
+            df.queryExecution.explainString(FormattedMode))
+          println(s"PLAN_WRITTEN=$path")
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] plan of $name failed: ${e.getMessage}")
+        }
+        spark.catalog.clearCache()
+      }
+    }
+    if (opts.fds) {
+      fdGrowth.toSeq.sortBy(-_._2.sum).foreach { case (name, ds) =>
+        println(f"FDS ${ds.sum}%+6d  $name%-40s per pass: ${ds.mkString(" ")}")
+      }
+      // collect unreachable streams first: what stays open is held
+      System.gc()
+      val open = openFds
+      println(s"FDS open now: ${open.size}; by target:")
+      // a file by its first three path components (classpath jars sit
+      // one per directory), anything else by kind (socket, pipe, ...)
+      open.groupBy(t =>
+          if (t.startsWith("/")) t.split('/').take(4).mkString("/")
+          else t.takeWhile(_ != ':'))
+        .toSeq.sortBy(-_._2.size).take(30).foreach { case (k, v) =>
+          println(f"${v.size}%6d  $k")
+        }
+    }
     val results = passes.head.map { case (name, _) =>
       val runs = passes.flatMap(_.get(name))
       val good = runs.collect { case (t, true) => t }
@@ -153,22 +250,20 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // Locale.ROOT: a comma-decimal default locale would render 1,234 and
-    // break the JSON these lines exist to provide
-    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(v))
     // The quiet band is pinned for sf0.1 on this host generation
     // (BASELINE §3d); at any other SF the raw calibration seconds are
     // still recorded but no band is claimed — a band the readings cannot
     // legitimately be compared against would read as false certification.
     val bandField =
       if (sfName == "sf0.1") ""","calibration_band":[1.16,1.57]""" else ""
-    val calFields = s""""calibration_start_s":${f3(calStart)},""" +
-      s""""calibration_end_s":${f3(calEnd)},""" +
-      s""""calibration_points_s":[${calPoints.map(f3).mkString(",")}]""" +
-      bandField
+    val calFields =
+      if (!calibrated) ""
+      else s""","calibration_start_s":${f3(calPoints.head)},""" +
+        s""""calibration_end_s":${f3(calPoints.last)},""" +
+        s""""calibration_points_s":[${calPoints.map(f3).mkString(",")}]""" +
+        bandField
     // Full-precision record (complete, for log readers that keep all output).
-    println(s"""{"metric":"total","value":$total,"unit":"sec",$calFields,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec"$calFields,"queries":$qs,"sf":"$sfDir"}""")
     // The harness that records this run keeps only the LAST ~2000 chars of
     // output and parses the JSON line found there; with 80 queries the
     // full-precision line is ~3200 chars and never fits, so the recorded
@@ -177,7 +272,7 @@ object Bench {
     // omitted count/sum) once the line would outgrow the capture window.
     val bySlowest = results.toSeq.sortBy(-_._2)
     val budget = 1700 // line budget: capture window minus sbt's epilogue
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec",$calFields,"sf":"$sfDir","queries":{"""
+    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec"$calFields,"sf":"$sfDir","queries":{"""
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 60 // reserve room for the closing fields
     var omitted = 0; var omittedSec = 0.0

@@ -1,8 +1,6 @@
 // scratch determinism harness (not part of the library)
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import java.util.concurrent.{Executors, TimeUnit}
 
 /** Stress queries for run-to-run determinism inside one dirty JVM session.
@@ -20,21 +18,12 @@ import java.util.concurrent.{Executors, TimeUnit}
   *    k leaking into query k+1), which single-query isolation runs never
   *    exercise.
   *
+  * Both run on 32 task threads whatever the host, so that tasks interleave.
   * Fails loudly (exit 1) on any drift. */
 object DetCheck {
   private val usage =
     """usage: DetCheck <queryName> [sfDir] [runs]
       |       DetCheck --suite [sfDir] [passes] [outDir]""".stripMargin
-
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println(usage); sys.exit(2) }
@@ -48,7 +37,7 @@ object DetCheck {
     val sfDir = if (rest.length > 0) rest(0) else "/root/testdata/sf0.01"
     val passes = if (rest.length > 1) rest(1).toInt else 2
     val outDir = if (rest.length > 2) rest(2) else "/tmp/detcheck_suite"
-    val spark = session()
+    val spark = GraftSession.local(32)
     val perPass = Array.fill(passes)(
       scala.collection.mutable.TreeMap.empty[String, String])
     for (p <- 0 until passes) {
@@ -87,7 +76,7 @@ object DetCheck {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val runs = if (args.length > 2) args(2).toInt else 20
-    val spark = session()
+    val spark = GraftSession.local(32)
     val fn = SparkEntry.queries.getOrElse(name, {
       System.err.println(s"unknown query '$name'\n$usage"); sys.exit(2)
     })

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Cap-fire scaling harness: runs every [[graft.queries.InflationProbes]]
  * family on ×1 / ×4 / ×16 exact-copy inflated corpora and prints one
@@ -19,16 +17,7 @@ object ScaleCheck {
     val factors = args.lift(1).getOrElse("1,4,16")
       .split(",").map(_.trim.toInt).toSeq
     val filter = args.lift(2).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // untimed JIT/codegen warmup at factor 1
     graft.queries.InflationProbes.families(spark, sfDir, 1)
       .filter(_._1.contains(filter)).foreach { case (_, run) => run() }

@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object SmokeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val df = SparkEntry.entry(spark)
     println("SMOKE_ROWS=" + df.count())
     df.show(5)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,8 @@ object Verify {
     // optional 3rd arg: comma-separated query names (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // per-query canonical result hash (rows sorted by string form) — lets a
     // later hash-mismatch be diagnosed post-hoc by diffing hashes.json
@@ -60,7 +51,7 @@ object Verify {
         .mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/session_info.json"),
       "{" + q("spark.version") + ": " + q(spark.version) + ", " +
-        q("cores") + ": " + q(cpus) + ", " +
+        q("cores") + ": " + q(cpus.toString) + ", " +
         q("spark.sql.shuffle.partitions") + ": " +
         q(spark.conf.get("spark.sql.shuffle.partitions")) + "}")
     spark.stop()

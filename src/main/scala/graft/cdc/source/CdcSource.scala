@@ -344,6 +344,13 @@ case class CdcSourceConfig(
       s"$maxEventsPerTrigger")
   require(logPartitions >= 1,
     s"${CdcSourceConfig.LogPartitionsKey} must be >= 1: $logPartitions")
+  // ≤ 0 would plan no snapshot partition (an empty read) or cut chunks
+  // every `i % 0` rows
+  require(maxSnapshotPartitions >= 1,
+    s"${CdcSourceConfig.MaxSnapshotPartitionsKey} must be >= 1: " +
+      s"$maxSnapshotPartitions")
+  require(chunkSize >= 1,
+    s"${CdcSourceConfig.ChunkSizeKey} must be >= 1: $chunkSize")
   require(chunkSizeMb >= 0,
     s"${CdcSourceConfig.ChunkSizeMbKey} must be >= 0: $chunkSizeMb")
   require(boundedOffset >= -1L,
@@ -354,15 +361,22 @@ case class CdcSourceConfig(
     * tables (reference P1 — `table-name` patterns select sharded tables with
     * one schema, TableDiscoveryUtils / BinlogSplitReader.java:104-110). */
   lazy val matchedTables: Seq[String] = {
-    val all = dialect.discoverTables(path)
-    val m =
-      if (all.contains(table)) Seq(table)
-      else all.filter(_.matches(table))
+    val m = matchingTables()
     require(m.nonEmpty, s"no table matches '$table' under $path")
     val schemas = m.map(t => dialect.tableMeta(path, t).schema).distinct
     require(schemas.size == 1,
       s"tables matched by '$table' must share one schema, got ${schemas.size}")
     m
+  }
+
+  /** Tables `table` selects among those the dialect lists now: the exact
+    * name when it exists, else every name the regex matches. Fresh
+    * discovery each call (unlike [[matchedTables]]' lazy cache), so a
+    * stream picks up tables that newly match between batches and across
+    * restarts (T6, `scan.newly-added-table.enabled` semantics). */
+  def matchingTables(): Seq[String] = {
+    val all = dialect.discoverTables(path)
+    if (all.contains(table)) Seq(table) else all.filter(_.matches(table))
   }
 
   /** Meta of the first captured table (schema representative). */
@@ -783,23 +797,24 @@ object CdcPlanner {
         if (withSnapshot)
           snapshotPartitions(cfg, table, snapshotHigh, schemaDdl, bounds)
         else Seq.empty
-      val log: Seq[InputPartition] =
-        if (logTo > logFrom)
-          // finished-chunk high watermarks drive the stream-phase shouldEmit
-          // filter (BinlogSplitReader.shouldEmit, :222-273). With a static
-          // file snapshot all chunks share one high == logFrom.
-          logRanges(logFrom, logTo, cfg.logPartitions).map { case (lo, hi) =>
-            LogRangePartition(cfg.dialectName, cfg.path, table,
-              lo, hi, cfg.changelogMode, schemaDdl, cfg.parseErrorPolicy,
-              cfg.serverTimeZone, cfg.columnMaskSpec,
-              cfg.skippedOperations.toSeq.sorted.mkString(","),
-              // rows-to-skip target the FIRST event past the seek
-              // position, which lives in the range starting at logFrom
-              skipRows = if (lo == logFrom) skipRows else 0)
-          }
-        else Seq.empty
-      snap ++ log
+      // finished-chunk high watermarks drive the stream-phase shouldEmit
+      // filter (BinlogSplitReader.shouldEmit, :222-273). With a static
+      // file snapshot all chunks share one high == logFrom.
+      snap ++ logPartitions(cfg, table, logFrom, logTo, schemaDdl, skipRows)
     }.toArray
+
+  /** One table's log range (from, to] as ordered partitions, none when
+    * to ≤ from. Rows-to-skip target the FIRST event past the seek position,
+    * which lives in the range starting at `from`; the others skip none. */
+  def logPartitions(cfg: CdcSourceConfig, table: String, from: Long, to: Long,
+      schemaDdl: String, skipRows: Int): Seq[InputPartition] =
+    logRanges(from, to, cfg.logPartitions).map { case (lo, hi) =>
+      LogRangePartition(cfg.dialectName, cfg.path, table,
+        lo, hi, cfg.changelogMode, schemaDdl, cfg.parseErrorPolicy,
+        cfg.serverTimeZone, cfg.columnMaskSpec,
+        cfg.skippedOperations.toSeq.sorted.mkString(","),
+        skipRows = if (lo == from) skipRows else 0)
+    }
 
   /** Fan a log range (from, to] into ≤ k contiguous offset sub-ranges —
     * the decode-parallelism scale hedge (LogPartitionsKey). Offsets are a
@@ -904,15 +919,6 @@ class CdcMicroBatchStream(cfg: CdcSourceConfig, schemaDdl: String,
       "currentFetchEventTimeLag", lag.toString)
   }
 
-  /** Fresh discovery each call (unlike cfg.matchedTables' lazy cache) so
-    * tables that newly match the regex are picked up between batches /
-    * across restarts (T6, `scan.newly-added-table.enabled` semantics). */
-  private def discovered(): Seq[String] = {
-    val all = cfg.dialect.discoverTables(cfg.path)
-    if (all.contains(cfg.table)) Seq(cfg.table)
-    else all.filter(_.matches(cfg.table))
-  }
-
   /** Specific-offset start with skip-events applied; resolved once — the
     * skip target is fixed by configuration, not by when planning runs. */
   private lazy val specificStart: Long =
@@ -922,15 +928,17 @@ class CdcMicroBatchStream(cfg: CdcSourceConfig, schemaDdl: String,
     // initial: nothing snapshotted yet — first batch snapshots everything
     case "initial" => CdcStreamOffset(-1L, Seq.empty)
     // the rest skip the snapshot phase: mark current tables as done
-    case "earliest" => CdcStreamOffset(0L, discovered())
-    case "latest" => CdcStreamOffset(cfg.maxOffsetAll, discovered())
-    case "specific-offset" => CdcStreamOffset(specificStart, discovered())
+    case "earliest" => CdcStreamOffset(0L, cfg.matchingTables())
+    case "latest" => current()
+    case "specific-offset" =>
+      CdcStreamOffset(specificStart, cfg.matchingTables())
     case "timestamp" => CdcStreamOffset(
-      CdcPlanner.offsetForTimestamp(cfg, cfg.timestampMs), discovered())
+      CdcPlanner.offsetForTimestamp(cfg, cfg.timestampMs),
+      cfg.matchingTables())
   }
 
   private def current(): CdcStreamOffset =
-    CdcStreamOffset(cfg.maxOffsetAll, discovered())
+    CdcStreamOffset(cfg.maxOffsetAll, cfg.matchingTables())
 
   /** Trigger.AvailableNow support: pin the end offset once, drain to it. */
   @volatile private var availableTarget: CdcStreamOffset = _
@@ -983,7 +991,7 @@ class CdcMicroBatchStream(cfg: CdcSourceConfig, schemaDdl: String,
       if (!s.snapshotted.contains(table))
         CdcPlanner.snapshotPartitions(cfg, table, e.logOffset, schemaDdl,
           bounds)
-      else if (e.logOffset > s.logOffset) {
+      else {
         // skip-rows apply exactly when this batch starts AT the resolved
         // specific offset — i.e. the stream's first log batch (a WAL
         // replay of that batch re-plans identically, keeping the restart
@@ -992,15 +1000,9 @@ class CdcMicroBatchStream(cfg: CdcSourceConfig, schemaDdl: String,
           if (cfg.startupMode == "specific-offset" && cfg.skipRows > 0 &&
               s.logOffset == specificStart) cfg.skipRows
           else 0
-        CdcPlanner.logRanges(s.logOffset, e.logOffset, cfg.logPartitions)
-          .map { case (lo, hi) =>
-            LogRangePartition(cfg.dialectName, cfg.path, table,
-              lo, hi, cfg.changelogMode, schemaDdl, cfg.parseErrorPolicy,
-              cfg.serverTimeZone, cfg.columnMaskSpec,
-              cfg.skippedOperations.toSeq.sorted.mkString(","),
-              skipRows = if (lo == s.logOffset) skipRows else 0)
-          }
-      } else Seq.empty
+        CdcPlanner.logPartitions(cfg, table, s.logOffset, e.logOffset,
+          schemaDdl, skipRows)
+      }
     }.toArray
   }
 

@@ -10,9 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.Divide
  * SQL surface for the native sketching expressions — `spark.sql(...)` users
  * get the same codepaths as the Column API (SURVEY §2.6: the UDF/extension
  * boundary; the reference's equivalent is the per-connector factory SPI).
- * Register with
- * `SparkSession.builder.withExtensions(new GraftExtensions)` or
- * `spark.sql.extensions=graft.functions.GraftExtensions`:
+ * Register with a session builder's `withExtensions(new GraftExtensions)`,
+ * `spark.sql.extensions=graft.functions.GraftExtensions` or `register(spark)`:
  *
  *   graft_shingle_hashes(text, k)   -> ARRAY<BIGINT>  60-bit shingle hashes
  *   graft_minhash(hashes, n)        -> ARRAY<BIGINT>  minhash signature

@@ -1032,6 +1032,20 @@ class CdcSourceSpec extends SparkSpecBase {
     }
   }
 
+  test("max-partitions and chunk size below 1 fail at analysis") {
+    // ≤ 0 max-partitions used to plan no snapshot partition: an initial
+    // read returned no rows and no error
+    for (key <- Seq("scan.snapshot.max-partitions",
+        "scan.incremental.snapshot.chunk.size"); v <- Seq("0", "-1")) {
+      val e = intercept[IllegalArgumentException] {
+        graft.cdc.source.CdcSourceConfig.fromOptions(
+          new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+            java.util.Map.of("path", "/tmp/unused", "table", "t", key, v)))
+      }
+      assert(e.getMessage.contains(key), s"$key=$v")
+    }
+  }
+
   test("truncate event: death frontier in the merge, silent in log replay") {
     val dir = tmpDir("cdc-trunc")
     // snapshot 1..20; update id1, insert 21, TRUNCATE, insert 22 and 23,

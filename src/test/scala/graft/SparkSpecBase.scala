@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM: four cores
+  * whatever the host, because specs size partitions against `local[4]`
+  * (SnapshotPartitionSizingSpec, OverlayIndexSpec). */
 object TestSpark {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
