@@ -372,13 +372,6 @@ object UpsertSink {
     * through the root). */
   def mergeInto(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       path: String, numBuckets: Int = 32): Unit = {
-    val profOn = sys.props.contains("graft.profile")
-    def prof[A](label: String)(body: => A): A =
-      if (!profOn) body else {
-        val t0 = System.nanoTime(); val r = body
-        println(f"PROF merge.$label ${(System.nanoTime() - t0) / 1e9}%.3f")
-        r
-      }
     require(numBuckets > 0, s"numBuckets must be positive: $numBuckets")
     val payload = batch.schema.fieldNames.filterNot(MetaCols.contains).toSeq
     require(!payload.contains(BucketCol) && !keyCols.contains(BucketCol),
@@ -405,8 +398,8 @@ object UpsertSink {
       .withColumn(BucketCol, bucketOf)
     // ≤ numBuckets values — a driver-side planning stat, same pattern as
     // Spark's own JDBC columnPartition
-    val touched = prof("touched")(incoming.select(col(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).sorted)
+    val touched = incoming.select(col(BucketCol)).distinct()
+      .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
     val liveDirs = touched.map(bucketDir(root, _)).filter(_.isDirectory)
     val existing =
@@ -428,9 +421,9 @@ object UpsertSink {
         (payload :+ OffsetCol).map(c => col(s"__v.$c").as(c)): _*)
     val staging = new java.io.File(root, ".staging")
     deleteRecursively(staging)
-    prof("write")(merged.repartition(touched.length, col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(staging.getPath))
-    prof("swap")(touched.foreach { b =>
+    merged.repartition(touched.length, col(BucketCol))
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(staging.getPath)
+    touched.foreach { b =>
       val live = bucketDir(root, b)
       val aside = new java.io.File(root, s"$asidePrefix$b")
       val staged = new java.io.File(staging, s"$BucketCol=$b")
@@ -441,7 +434,7 @@ object UpsertSink {
       if (staged.isDirectory)
         java.nio.file.Files.move(staged.toPath, live.toPath)
       deleteRecursively(aside)
-    })
+    }
     deleteRecursively(staging)
     // all state deleted: leave a schema-only bucket so the root stays
     // readable (rare; only when every key in the table is gone)

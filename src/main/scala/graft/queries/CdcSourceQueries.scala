@@ -769,13 +769,27 @@ object CdcSourceQueries {
   private val typedSpec = ChangelogGen.Spec(pk = "ck", measure = "bal",
     table = "typed")
 
+  // The fixture wire rows below are NOT `private`: a private case class
+  // defeats whole-stage codegen for its Dataset encoder (janino cannot
+  // reference the private accessors, Spark logs a CodeGenerator compile
+  // error per consumer and falls back to the interpreted path for the
+  // whole fixture build).
+
   /** Wire row of the custom-type fixture: SET as the comma-joined string
     * Debezium emits, geometry as the (base64 WKB, srid) struct, YEAR as the
     * raw two-digit-capable int — the DECLARED schema (schemaDdlOverride)
     * types them ARRAY<STRING> / STRING / INT with `graft.type` tags, and
     * the registered converters (U2) bridge the gap at decode time. */
-  private case class TypedSrcRow(ck: Long, flags: String, wkb: String,
-      srid: Int, est: Int, bal: Long)
+  private[queries] case class TypedSrcRow(ck: Long, flags: String,
+      wkb: String, srid: Int, est: Int, bal: Long)
+
+  /** Wire row of the charset fixture (base64 of latin1 and GBK bytes). */
+  private[queries] case class CharsetSrcRow(ck: Long, latin1B64: String,
+      gbkB64: String, v: Long)
+
+  /** Wire row of the BSON extended-JSON fixture. */
+  private[queries] case class MongoSrcRow(mk: Long, oid: String,
+      decs: String, b64: String, v: Long)
 
   /** File CDC database exercising the custom-converter hook
     * (CustomConverters): columns whose catalog type differs from the wire
@@ -821,9 +835,6 @@ object CdcSourceQueries {
   private val charsetSpec = ChangelogGen.Spec(pk = "ck", measure = "val",
     table = "charsets")
 
-  private case class CharsetSrcRow(ck: Long, latin1B64: String,
-      gbkB64: String, v: Long)
-
   /** File CDC database whose string wire values are raw bytes in non-UTF-8
     * charsets (base64-wrapped): latin1 é/º single bytes, GBK multibyte
     * hanzi — exactly what a charset-diverse MySQL ships. */
@@ -855,13 +866,6 @@ object CdcSourceQueries {
           "s_gbk STRING COMMENT 'graft.type=charset:GBK',val BIGINT"))
     dir
   }
-
-  // NOT `private`: a private case class defeats whole-stage codegen for
-  // its Dataset encoder (janino cannot reference the private accessors,
-  // Spark logs a CodeGenerator compile error per consumer and falls back
-  // to the interpreted path for the whole fixture build)
-  private[queries] case class MongoSrcRow(mk: Long, oid: String,
-      decs: String, b64: String, v: Long)
 
   /** File CDC database whose wire values are BSON extended JSON: ObjectId
     * `{"$oid":…}`, Decimal128 `{"$numberDecimal":…}`, UUID-subtype binary

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions._
+import graft.operators.Pairs
 import graft.{QueryDef, Tables}
 // (source-similarity uses the DECIMAL(38,0) exact-moment device)
 import org.apache.spark.sql.expressions.Window
@@ -1486,9 +1487,7 @@ object CorpusQueries {
           .cache()
         val norms = cnt.groupBy(col("source"))
           .agg(sum(dec(col("c")) * dec(col("c"))).as("n2"))
-        val dots = cnt.as("a").join(cnt.as("b"),
-            col("a.w") === col("b.w")
-              && col("a.source") < col("b.source"))
+        val dots = Pairs.withinKey(cnt, Seq("w"), "source")
           .groupBy(col("a.source").as("src_a"),
             col("b.source").as("src_b"))
           .agg(sum(dec(col("a.c")) * dec(col("b.c"))).as("d"))

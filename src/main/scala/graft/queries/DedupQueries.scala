@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions._
+import graft.operators.Pairs
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,7 +26,7 @@ import org.apache.spark.sql.types._
  */
 object DedupQueries {
 
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
   /** SimHash signature width: the word-hash entropy both engines share
     * (60-bit md5 prefix — HashUtil.md5Long60 / sqlMd5Long). */
@@ -169,6 +170,60 @@ object DedupQueries {
       shEx.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= cap).select(col("h")), "h")
 
+  /** The lsh queries' doc sample: a deterministic quarter of the ids
+    * (the oracle's `md5(CAST(id AS VARCHAR)) < '4'`). */
+  private def sampled(c: Column): Column = md5(c.cast(StringType)) < lit("4")
+
+  /** Band-bucket candidate pairs (id_a < id_b) of `ex(doc_id, band, key)`
+    * that touch the sample. The gate runs before the dedup exchange (r13,
+    * guide §2.3): the predicate is per pair, so the ~56% of pairs touching
+    * no sampled doc are dropped before they are shuffled, not after. */
+  private def sampledCands(ex: DataFrame): DataFrame =
+    Pairs.withinKey(ex, Seq("band", "key"), "doc_id")
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .filter(sampled(col("id_a")) || sampled(col("id_b")))
+      .dropDuplicates("id_a", "id_b")
+
+  /** The lsh queries' exact truth: pairs (id_a < id_b) touching the sample
+    * whose 3-shingle Jaccard over the df-capped index of `sigs(doc_id, sh)`
+    * is ≥ 0.5. The cap (TruthDfCap, mirrored in the oracle) drops
+    * boilerplate shingles from BOTH sides of the Jaccard, so a key's
+    * posting list stays bounded at corpus scale. Shingle sets are
+    * distinct, so |A∩B| is a countDistinct over the index and
+    * |A∪B| = |A|+|B|-|A∩B|: the arrays are never joined to the pairs.
+    *
+    * Shared-shingle triples come from one evaluation of the capped index,
+    * not a kept⋈kept probe that re-evaluated it once per side (r13, guide
+    * §2.4): each key's posting list and its sampled sublist are collected
+    * (a second collect_list over a codegen'd per-row predicate, since
+    * collect_list drops nulls), and each sampled member s is paired with
+    * every partner d ≠ s. `array_remove(ds, s)` is the codegen form of
+    * `filter(ds, y -> y != s)`, whose lambda is interpreted per element
+    * (r13 §2a). After least/greatest this is the sampled-a ⋈ any-b join,
+    * and countDistinct(h) absorbs its both-sampled double emission. */
+  private def sampledTruth(sigs: DataFrame): DataFrame = {
+    val kept = cappedShingleIndex(
+      sigs.select(col("doc_id"), explode(col("sh")).as("h")), TruthDfCap)
+    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    kept
+      .groupBy(col("h")).agg(collect_list(col("doc_id")).as("ds"),
+        collect_list(when(sampled(col("doc_id")), col("doc_id"))).as("ss"))
+      .select(col("h"), explode(col("ss")).as("s"), col("ds"))
+      .select(col("h"), col("s"),
+        explode(array_remove(col("ds"), col("s"))).as("d"))
+      .select(col("h"), least(col("s"), col("d")).as("id_a"),
+        greatest(col("s"), col("d")).as("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(countDistinct(col("h")).as("i"))
+      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
+        "id_a")
+      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
+        "id_b")
+      .filter(round(col("i").cast(DoubleType)
+        / (col("na") + col("nb") - col("i")), 6) >= 0.5d)
+      .select(col("id_a"), col("id_b"))
+  }
+
   /** The candidate-generation half of the LSH index: `sigs` is the cached
     * signature table, `cands` the deduped candidate pairs. */
   private case class LshIndex(sigs: DataFrame, cands: DataFrame)
@@ -195,19 +250,16 @@ object DedupQueries {
       .cache()
     val exploded = sigs.select(col("doc_id"),
       posexplode(col("bands")).as(Seq("band", "key")))
-    val bucketEq =
-      col("a.band") === col("b.band") && col("a.key") === col("b.key")
     val cands = probeFilter match {
       case None =>
-        exploded.as("a")
-          .join(exploded.as("b"),
-            bucketEq && col("a.doc_id") < col("b.doc_id"))
+        Pairs.withinKey(exploded, Seq("band", "key"), "doc_id")
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
           .dropDuplicates("id_a", "id_b")
       case Some(isNew) =>
         exploded.filter(isNew).as("a")
           .join(exploded.as("b"),
-            bucketEq && col("a.doc_id") =!= col("b.doc_id"))
+            col("a.band") === col("b.band") && col("a.key") === col("b.key")
+              && col("a.doc_id") =!= col("b.doc_id"))
           .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
             greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
           .dropDuplicates("id_a", "id_b")
@@ -237,9 +289,7 @@ object DedupQueries {
       .select(col("vec_id"), col("label"), col("embedding"),
         norm(col("embedding")).as("nrm"))
       .cache()
-    e.as("a")
-      .join(e.as("b"), col("a.label") === col("b.label")
-        && col("a.vec_id") < col("b.vec_id"))
+    Pairs.withinKey(e, Seq("label"), "vec_id")
       .withColumn("cos", round(
         dot(col("a.embedding"), col("b.embedding"))
           / (col("a.nrm") * col("b.nrm")), 6))
@@ -295,26 +345,11 @@ object DedupQueries {
     val capped = fps.groupBy(col("fp"))
       .agg(count(lit(1)).as("dfc")).filter(col("dfc") <= WinnowFpCap)
       .select(col("fp"))
-    val b = fps.join(capped, "fp")
-    // per-fp pair generation WITHOUT a self-join (r13, guide §2.4): the
-    // fp df cap bounds each posting list at WinnowFpCap, so x<y pairs
-    // ride ONE evaluation of the capped postings via collect_list +
-    // bounded explosion — the old b⋈b probe re-ran the winnowedFps
-    // extraction (the expensive per-document text pass) once per side.
-    // The explosion is sort_array + posexplode + slice-after-position
-    // (all codegen expressions) rather than a higher-order filter()
-    // lambda, which is interpreted per array element (r13 §2a root
-    // cause). Same pair multiset: over the SORTED list, elements at
-    // later positions than doc_a's are exactly those ≥ doc_a, and the
-    // doc_b > doc_a guard drops equal-element artifacts — ≡ the
-    // x.doc_id < y.doc_id equi-self-join row-for-row.
-    b.groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "doc_a")))
-      .select(col("doc_a"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds"))))
-          .as("doc_b"))
-      .filter(col("doc_b") > col("doc_a"))
+    // the fp df cap bounds each posting list at WinnowFpCap; a b⋈b
+    // self-join would re-run the winnowedFps extraction (the expensive
+    // per-document text pass) once per side
+    Pairs.withinCappedKey(fps.join(capped, "fp"), Seq("fp"), "doc_id",
+        out = ("doc_a", "doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2)
@@ -1004,17 +1039,10 @@ object DedupQueries {
         // prove both closure paths agree (FallbackEquivalenceSpec)
         val repairGate = sys.props.getOrElse("graft.dedup.repairGate",
           "100000").toInt
-        val profOn = sys.props.contains("graft.profile")
-        def prof[A](label: String)(body: => A): A =
-          if (!profOn) body else {
-            val t0 = System.nanoTime(); val r = body
-            println(f"PROF $label ${(System.nanoTime() - t0) / 1e9}%.3f")
-            r
-          }
         val q = pairEvts.toDF()
           .writeStream
           .foreachBatch { (batch0: DataFrame, bid: Long) =>
-            val evs = prof(s"b$bid.collect")(batch0.collect()) // Δ-sized: this batch's events
+            val evs = batch0.collect() // Δ-sized: this batch's events
             if (evs.nonEmpty) {
               val delIds = evs.filter(_.getString(0) == "d")
                 .map(_.getLong(1)).toSet
@@ -1044,13 +1072,13 @@ object DedupQueries {
               // the batch's new pairs, minus anything touching a retired
               // doc (a retired doc's cluster is always affected, so
               // unaffected edges cannot touch it)
-              val pulledTagged = prof(s"b$bid.pull")(probeCids match {
+              val pulledTagged = probeCids match {
                 case Some(p) => edges.join(broadcast(p), Seq("cid"))
                   .select(col("cid"), col("a"), col("b"))
                   .limit(repairGate).collect()
                   .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
                 case None => Array.empty[(Long, Long, Long)]
-              })
+              }
               val pulledArr = pulledTagged.map(t => (t._2, t._3))
               // past the gate the pull is truncated and so is its cid set —
               // the (rare) distributed fallback re-probes the store for the
@@ -1063,8 +1091,7 @@ object DedupQueries {
                   // forced to 0 to exercise the fallback): nothing stored,
                   // nothing affected
                   case None => Seq.empty[Long]
-                  case Some(p) => prof(s"b$bid.probe")(
-                    p.collect().map(_.getLong(0)).toSeq)
+                  case Some(p) => p.collect().map(_.getLong(0)).toSeq
                 }
               val affected = affectedIds.toDF("cid")
               val (retagged, upsBase) =
@@ -1144,14 +1171,14 @@ object DedupQueries {
                           lit(graft.cdc.ChangeRecord.RowKind.Delete))))
                 }
               val prevEdges = edges
-              edges = prof(s"b$bid.edges")(prevEdges
+              edges = prevEdges
                 .join(broadcast(affected), Seq("cid"), "left_anti")
-                .unionByName(retagged).localCheckpoint(true))
+                .unionByName(retagged).localCheckpoint(true)
               prevEdges.unpersist()
-              prof(s"b$bid.merge")(graft.cdc.UpsertSink.mergeInto(s,
+              graft.cdc.UpsertSink.mergeInto(s,
                 upsBase.withColumn(graft.cdc.ChangeRecord.OffsetCol,
                   lit(bid)),
-                Seq("doc_id"), out, numBuckets = 4))
+                Seq("doc_id"), out, numBuckets = 4)
             }
             ()
           }
@@ -1163,11 +1190,11 @@ object DedupQueries {
         // the finally covers the failure paths too (a failed stream or
         // checkpoint must not orphan the dir either)
         try {
-          prof("stream.total")(q.awaitTermination())
-          prof("final.read")(graft.cdc.UpsertSink.readState(s, out)
+          q.awaitTermination()
+          graft.cdc.UpsertSink.readState(s, out)
             .select(col("doc_id"), col("cluster_id"))
             .orderBy(col("doc_id"))
-            .localCheckpoint(true))
+            .localCheckpoint(true)
         } finally graft.QueryUtil.deleteRecursively(new java.io.File(out))
       },
       Some {
@@ -1434,71 +1461,13 @@ object DedupQueries {
     // corpus-squared all-shared-pairs shape. One row.
     "dedup_lsh_recall" -> QueryDef(
       (s, dir) => {
-        def sampled(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          md5(c.cast(StringType)) < lit("4")
         val sigs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), shingleHashes(col("text"), 3).as("sh"))
           .withColumn("bands", bandKeys(minHashSignature(col("sh"), 16), 4, 4))
           .cache()
-        val ex = sigs.select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band", "key")))
-        val cands = ex.as("a")
-          .join(ex.as("b"), col("a.band") === col("b.band")
-            && col("a.key") === col("b.key")
-            && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          // sample gate BEFORE the dedup exchange (r13, guide §2.3): the
-          // predicate is per-pair, so filtering ahead of dropDuplicates
-          // drops the ~56% of candidate pairs touching no sampled doc
-          // before they are shuffled, instead of after
-          .filter(sampled(col("id_a")) || sampled(col("id_b")))
-          .dropDuplicates("id_a", "id_b")
-        // exact truth WITHOUT materializing pair×array joins: shingle sets
-        // are distinct, so |A∩B| is a countDistinct over the inverted
-        // index and |A∪B| = |A|+|B|-|A∩B| — the same integer-ratio
-        // Jaccard, never touching the arrays again. The index is
-        // df-capped (TruthDfCap, mirrored in the oracle): boilerplate
-        // shingles leave the Jaccard space on BOTH sides, so the truth
-        // self-join's per-key fan-in stays bounded at corpus scale.
-        val kept = cappedShingleIndex(
-          sigs.select(col("doc_id"), explode(col("sh")).as("h")),
-          TruthDfCap)
-        val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        // shared-shingle triples WITHOUT a self-join (r13, guide §2.4):
-        // the df cap bounds each key's posting list at TruthDfCap, so the
-        // per-key pair surface is a collect_list + bounded array explosion
-        // riding kept's existing h-partitioning — the old asymmetric
-        // kept⋈kept probe re-evaluated the df-capped index subtree (scan +
-        // explode + df aggregate + cap join) once per side. Same triple
-        // set: each sampled member s paired with every partner d ≠ s in
-        // key h ≡ the sampled-a ⋈ any-b join after least/greatest, and
-        // countDistinct(h) absorbs the old shape's both-sampled double
-        // emission exactly as before.
-        val inter = kept
-          // the sampled sublist is a second collect_list over a codegen'd
-          // per-row predicate (collect_list drops nulls) — not a
-          // per-element md5 lambda over every key's array
-          .groupBy(col("h")).agg(collect_list(col("doc_id")).as("ds"),
-            collect_list(when(sampled(col("doc_id")), col("doc_id")))
-              .as("ss"))
-          .select(col("h"), explode(col("ss")).as("s"), col("ds"))
-          // array_remove(ds, s) ≡ filter(ds, y -> y != s) and is a codegen
-          // binary expression — the higher-order filter() evaluates an
-          // interpreted lambda per array element (r13 §2a root cause)
-          .select(col("h"), col("s"),
-            explode(array_remove(col("ds"), col("s"))).as("d"))
-          .select(col("h"), least(col("s"), col("d")).as("id_a"),
-            greatest(col("s"), col("d")).as("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(countDistinct(col("h")).as("i"))
-        val truth = inter
-          .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
-            "id_a")
-          .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
-            "id_b")
-          .filter(round(col("i").cast(DoubleType)
-            / (col("na") + col("nb") - col("i")), 6) >= 0.5d)
-          .select(col("id_a"), col("id_b"))
+        val cands = sampledCands(sigs.select(col("doc_id"),
+          posexplode(col("bands")).as(Seq("band", "key"))))
+        val truth = sampledTruth(sigs)
         truth.withColumn("t", lit(1))
           .join(cands.withColumn("c", lit(1)), Seq("id_a", "id_b"), "full")
           .agg(sum(col("t")).cast(LongType).as("n_truth"),
@@ -1563,67 +1532,17 @@ object DedupQueries {
     // the expensive truth side is paid ONCE for all three configs.
     "dedup_lsh_band_sweep" -> QueryDef(
       (s, dir) => {
-        def sampled(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          md5(c.cast(StringType)) < lit("4")
         val sigs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), shingleHashes(col("text"), 3).as("sh"))
           .withColumn("sig", minHashSignature(col("sh"), 16))
           .cache()
-        // truth over the df-capped shingle space (TruthDfCap, mirrored
-        // in the oracle) — the same hot-fingerprint cap as
-        // dedup_winnow_pairs, so a boilerplate shingle in millions of
-        // docs never fans out the truth self-join
-        val kept = cappedShingleIndex(
-          sigs.select(col("doc_id"), explode(col("sh")).as("h")),
-          TruthDfCap)
-        val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        // shared-shingle triples WITHOUT a self-join (r13, guide §2.4):
-        // the df cap bounds each key's posting list at TruthDfCap, so the
-        // per-key pair surface is a collect_list + bounded array explosion
-        // riding kept's existing h-partitioning — the old asymmetric
-        // kept⋈kept probe re-evaluated the df-capped index subtree (scan +
-        // explode + df aggregate + cap join) once per side. Same triple
-        // set: each sampled member s paired with every partner d ≠ s in
-        // key h ≡ the sampled-a ⋈ any-b join after least/greatest, and
-        // countDistinct(h) absorbs the old shape's both-sampled double
-        // emission exactly as before.
-        val inter = kept
-          // the sampled sublist is a second collect_list over a codegen'd
-          // per-row predicate (collect_list drops nulls) — not a
-          // per-element md5 lambda over every key's array
-          .groupBy(col("h")).agg(collect_list(col("doc_id")).as("ds"),
-            collect_list(when(sampled(col("doc_id")), col("doc_id")))
-              .as("ss"))
-          .select(col("h"), explode(col("ss")).as("s"), col("ds"))
-          // array_remove(ds, s) ≡ filter(ds, y -> y != s), codegen instead
-          // of an interpreted per-element lambda (see dedup_lsh_recall)
-          .select(col("h"), col("s"),
-            explode(array_remove(col("ds"), col("s"))).as("d"))
-          .select(col("h"), least(col("s"), col("d")).as("id_a"),
-            greatest(col("s"), col("d")).as("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(countDistinct(col("h")).as("i"))
-        val truth = graft.operators.IterBarrier.cut(inter
-          .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),
-            "id_a")
-          .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")),
-            "id_b")
-          .filter(round(col("i").cast(DoubleType)
-            / (col("na") + col("nb") - col("i")), 6) >= 0.5d)
-          .select(col("id_a"), col("id_b")), 1, reliableEvery = 0)
+        val truth = graft.operators.IterBarrier.cut(sampledTruth(sigs), 1,
+          reliableEvery = 0)
         val rows = Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
           val ex = sigs.select(col("doc_id"),
             posexplode(bandKeys(col("sig"), b, r, SweepM))
               .as(Seq("band", "key")))
-          val cands = ex.as("a")
-            .join(ex.as("b"), col("a.band") === col("b.band")
-              && col("a.key") === col("b.key")
-              && col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-            // sample gate before the dedup exchange (r13, guide §2.3) —
-            // same per-pair predicate, ~56% fewer pairs shuffled
-            .filter(sampled(col("id_a")) || sampled(col("id_b")))
-            .dropDuplicates("id_a", "id_b")
+          val cands = sampledCands(ex)
           truth.withColumn("t", lit(1))
             .join(cands.withColumn("c", lit(1)), Seq("id_a", "id_b"), "full")
             .agg(sum(col("t")).cast(LongType).as("n_truth"),
@@ -1726,18 +1645,10 @@ object DedupQueries {
         val kept = tok.join(dfreq.filter(col("df") <= cap),
           Seq("lang", "source", "h"))
         val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        // Pair counts from ONE capped-index evaluation via sort_array +
-        // posexplode + slice (all codegen — no interpreted higher-order
-        // lambda); multiset-exact vs the strict-< self-join. See
-        // dedup_ngram_jaccard_capped for the full derivation.
-        val inter = kept
-          .groupBy(col("lang"), col("source"), col("h"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .select(col("ds"), posexplode(col("ds")).as(Seq("i", "id_a")))
-          .select(col("id_a"),
-            explode(slice(col("ds"), col("i") + lit(2), size(col("ds"))))
-              .as("id_b"))
-          .filter(col("id_b") > col("id_a"))
+        // pair counts from ONE capped-index evaluation, as in
+        // dedup_ngram_jaccard_capped
+        val inter = Pairs.withinCappedKey(kept, Seq("lang", "source", "h"),
+            "doc_id")
           .groupBy(col("id_a"), col("id_b"))
           .agg(count(lit(1)).as("ni"))
         inter
@@ -2386,10 +2297,7 @@ object DedupQueries {
         }: _*)
         val banded = sigs.select(col("doc_id"), col("lang"), col("sig"),
           posexplode(bandVals).as(Seq("band", "bv")))
-        banded.as("a")
-          .join(banded.as("b"), col("a.lang") === col("b.lang")
-            && col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
-            && col("a.doc_id") < col("b.doc_id"))
+        Pairs.withinKey(banded, Seq("lang", "band", "bv"), "doc_id")
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
             col("a.sig").as("sa"), col("b.sig").as("sb"))
           .distinct() // a pair agreeing on several bands appears once
@@ -2426,11 +2334,7 @@ object DedupQueries {
         val sizes = docs.select(col("doc_id"), size(col("sh")).as("n"))
         val tok = docs.select(col("doc_id"), col("lang"), col("source"),
           explode(col("sh")).as("h"))
-        val inter = tok.as("a")
-          .join(tok.as("b"), col("a.lang") === col("b.lang")
-            && col("a.source") === col("b.source")
-            && col("a.h") === col("b.h")
-            && col("a.doc_id") < col("b.doc_id"))
+        val inter = Pairs.withinKey(tok, Seq("lang", "source", "h"), "doc_id")
           .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
           .agg(count(lit(1)).as("ni"))
         inter
@@ -2487,26 +2391,11 @@ object DedupQueries {
         val kept = tok.join(dfreq.filter(col("df") <= cap),
           Seq("lang", "source", "h"))
         val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        // Shared-shingle pair counts from ONE capped-index evaluation
-        // (guide §2.4): the df cap bounds each key's posting list at
-        // `cap`, so x<y pairs ride a collect_list + bounded explosion
-        // instead of the kept⋈kept self-join that re-evaluated the whole
-        // capped-index subtree once per side. The r13 first attempt at
-        // this shape was reverted because its higher-order filter()
-        // lambda is interpreted per array element; this shape is
-        // sort_array + posexplode + slice-after-position — all codegen
-        // expressions. Multiset equality: over the SORTED list, elements
-        // after id_a's position are exactly those ≥ id_a, and the > guard
-        // drops equal-element artifacts — per-pair counts match the
-        // strict-< self-join exactly.
-        val inter = kept
-          .groupBy(col("lang"), col("source"), col("h"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .select(col("ds"), posexplode(col("ds")).as(Seq("i", "id_a")))
-          .select(col("id_a"),
-            explode(slice(col("ds"), col("i") + lit(2), size(col("ds"))))
-              .as("id_b"))
-          .filter(col("id_b") > col("id_a"))
+        // shared-shingle pair counts from ONE capped-index evaluation
+        // (guide §2.4; the df cap bounds each posting list at `cap`), not
+        // the kept⋈kept self-join that evaluates the subtree once per side
+        val inter = Pairs.withinCappedKey(kept, Seq("lang", "source", "h"),
+            "doc_id")
           .groupBy(col("id_a"), col("id_b"))
           .agg(count(lit(1)).as("ni"))
         inter
@@ -2578,9 +2467,7 @@ object DedupQueries {
           .select(col("vec_id"), col("label"), col("embedding"),
             norm(col("embedding")).as("nrm"))
           .cache()
-        val hist = e.as("a")
-          .join(e.as("b"), col("a.label") === col("b.label")
-            && col("a.vec_id") < col("b.vec_id"))
+        val hist = Pairs.withinKey(e, Seq("label"), "vec_id")
           .select(round(dot(col("a.embedding"), col("b.embedding"))
               / (col("a.nrm") * col("b.nrm")) * 1e6d, 0).cast(LongType)
             .as("cos_ppm"))
@@ -2661,9 +2548,7 @@ object DedupQueries {
           .select(col("vec_id"), col("v.embedding").as("embedding"),
             col("v.nrm").as("nrm"), col("v.c_label").as("cell"))
           .cache()
-        assigned.as("a")
-          .join(assigned.as("b"), col("a.cell") === col("b.cell")
-            && col("a.vec_id") < col("b.vec_id"))
+        Pairs.withinKey(assigned, Seq("cell"), "vec_id")
           .withColumn("cos", round(
             dot(col("a.embedding"), col("b.embedding"))
               / (col("a.nrm") * col("b.nrm")), 6))
@@ -3030,28 +2915,12 @@ object DedupQueries {
         val kept = cappedShingleIndex(
           idx.sigs.select(col("doc_id"), explode(col("sh")).as("h")),
           TruthDfCap)
-        // Pair domain from ONE capped-index evaluation (guide §2.4): the
-        // df cap bounds each posting list at TruthDfCap, so x<y pairs
-        // ride a collect_list + bounded explosion instead of the
-        // kept⋈kept self-join that re-evaluated the whole capped-index
-        // subtree once per side. The r13 first attempt at this shape
-        // was reverted because its higher-order filter() lambda is
-        // interpreted per array element; this shape is sort_array +
-        // posexplode + slice-after-position — all codegen expressions.
-        // Set equality: over the SORTED list, elements after id_a's
-        // position are exactly those ≥ id_a (the > guard drops
-        // equal-element artifacts), and the md5 gate keys on the smaller
-        // id exactly as the old a-side pre-join filter did; distinct()
-        // absorbs multiplicity as before.
-        val dom = kept
-          .groupBy(col("h"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .select(col("ds"), posexplode(col("ds")).as(Seq("i", "id_a")))
-          .filter(md5(col("id_a").cast(StringType)) < lit("4"))
-          .select(col("id_a"),
-            explode(slice(col("ds"), col("i") + lit(2), size(col("ds"))))
-              .as("id_b"))
-          .filter(col("id_b") > col("id_a"))
+        // pair domain from ONE capped-index evaluation (guide §2.4; the df
+        // cap bounds each posting list at TruthDfCap); the md5 gate keys
+        // on the smaller id as the old a-side pre-join filter did, and
+        // distinct() absorbs multiplicity
+        val dom = Pairs.withinCappedKey(kept, Seq("h"), "doc_id",
+            gate = Some(sampled(_)))
           .distinct()
         val j = dom
           .join(idx.sigs.select(col("doc_id").as("id_a"),

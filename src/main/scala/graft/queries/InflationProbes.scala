@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.operators.Pairs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,8 +61,7 @@ object InflationProbes {
       .collect()(0)
     val kept = DedupQueries.cappedShingleIndex(shEx,
       DedupQueries.TruthDfCap)
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+    val pairs = Pairs.withinKey(kept, Seq("h"), "doc_id")
       .groupBy(col("a.doc_id"), col("b.doc_id")).agg(count(lit(1)))
       .count()
     Map("n_keys" -> dfreq.getLong(1), "max_df" -> dfreq.getLong(0),
@@ -105,11 +105,7 @@ object InflationProbes {
       .collect()(0)
     val kept = tok.join(dfreq.filter(col("df") <= cap),
       Seq("lang", "source", "h"))
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a.lang") === col("b.lang")
-          && col("a.source") === col("b.source")
-          && col("a.h") === col("b.h")
-          && col("a.doc_id") < col("b.doc_id"))
+    val pairs = Pairs.withinKey(kept, Seq("lang", "source", "h"), "doc_id")
       .groupBy(col("a.doc_id"), col("b.doc_id")).agg(count(lit(1)))
       .count()
     Map("max_df" -> stats.getLong(0), "capped_keys" -> stats.getLong(1),

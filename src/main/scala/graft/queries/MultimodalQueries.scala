@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions.hamming
+import graft.operators.Pairs
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -182,10 +183,7 @@ object MultimodalQueries {
     }: _*)
     val banded = sigs.select(col("doc_id"), col("sig"),
       posexplode(bandVals).as(Seq("band", "bv")))
-    banded.as("a")
-      .join(banded.as("b"), col("a.band") === col("b.band")
-        && col("a.bv") === col("b.bv")
-        && col("a.doc_id") < col("b.doc_id"))
+    Pairs.withinKey(banded, Seq("band", "bv"), "doc_id")
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         col("a.sig").as("sa"), col("b.sig").as("sb"))
       .distinct()

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions._
+import graft.operators.Pairs
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -464,9 +465,8 @@ object SimilarityQueries {
               case _ => ()
             }
           }
-          val cand = assigned.as("a").join(assigned.as("b"),
-              col("a.cell") === col("b.cell")
-                && col("a.vec_id") =!= col("b.vec_id"))
+          val cand = Pairs.withinKey(assigned, Seq("cell"), "vec_id",
+              ordered = true)
             .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
               (col("a.dself") + col("b.dself") - lit(2L) *
                 graft.functions.TextFunctions.dotLong(col("a.qv"),
@@ -2239,9 +2239,8 @@ object SimilarityQueries {
             graft.functions.TextFunctions.dotLong(col("qv"), col("qv"))
               .as("dself"))
           .repartition(col("cell")).cache()
-        val cand = assigned.as("a").join(assigned.as("b"),
-            col("a.cell") === col("b.cell")
-              && col("a.vec_id") =!= col("b.vec_id"))
+        val cand = Pairs.withinKey(assigned, Seq("cell"), "vec_id",
+            ordered = true)
           .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
             (col("a.dself") + col("b.dself") - lit(2L) *
               graft.functions.TextFunctions.dotLong(col("a.qv"),
@@ -2337,9 +2336,8 @@ object SimilarityQueries {
             graft.functions.TextFunctions.dotLong(col("qv"), col("qv"))
               .as("dself"))
           .repartition(col("cell")).cache()
-        val per = assigned.as("a").join(assigned.as("b"),
-            col("a.cell") === col("b.cell")
-              && col("a.vec_id") =!= col("b.vec_id"))
+        val per = Pairs.withinKey(assigned, Seq("cell"), "vec_id",
+            ordered = true)
           .select(col("a.vec_id").as("src"),
             col("a.label").as("lbl"),
             (col("a.label") === col("b.label")).as("same"),
