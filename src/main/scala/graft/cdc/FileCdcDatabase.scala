@@ -4,6 +4,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import org.apache.spark.unsafe.Platform
+
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
@@ -101,8 +103,8 @@ object FileCdcDatabase {
 
     // Per-file PK stats: files are PK-sorted, so min/max = first/last line.
     val fileRanges = dataFiles(dir, table, "snapshot").flatMap { f =>
-      var first: String = null; var last: String = null
-      val it = lines(f)
+      var first: Utf8Line = null; var last: Utf8Line = null
+      val it = byteLines(f)
       while (it.hasNext) {
         val l = it.next()
         if (first == null) first = l
@@ -110,8 +112,8 @@ object FileCdcDatabase {
       }
       if (first == null) None
       else Some(FileRange(Paths.get(f).getFileName.toString,
-        mapper.readTree(first).get(pk).asLong(),
-        mapper.readTree(last).get(pk).asLong()))
+        mapper.readTree(first.toString).get(pk).asLong(),
+        mapper.readTree(last.toString).get(pk).asLong()))
     }
 
     val meta = TableMeta(table, db, pk,
@@ -141,10 +143,12 @@ object FileCdcDatabase {
       optStr("schemaName"), optStr("tenant"))
   }
 
-  /** [[quickLongField]]'s "no plain integer here" value. A field holding
+  /** [[scanLongField]]'s "no plain integer here" value. A field holding
     * Long.MinValue itself also reads as NoLong; every caller then takes
     * its full-decode fallback, which reads that value correctly. */
   private[cdc] final val NoLong = Long.MinValue
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
   /** Fast path: pull a TOP-LEVEL integer field out of a JSONL line without
     * building a tree. The scan tracks brace depth and string context, so a
@@ -155,7 +159,7 @@ object FileCdcDatabase {
     * key is absent at depth 1 or its value is not a plain integer (caller
     * falls back to a full decode). */
   def quickLongFieldOpt(line: String, field: String): Option[Long] = {
-    val v = scanLongField(line, field, topLevelOnly = true)
+    val v = scanLongField(Utf8Line(line), utf8(field), topLevelOnly = true)
     if (v == NoLong) None else Some(v)
   }
 
@@ -165,41 +169,39 @@ object FileCdcDatabase {
     * contract as the reference's RecordUtils.upsertBinlog dedup). Still
     * key-position only: text inside a string value never matches. */
   def quickNestedLongFieldOpt(line: String, field: String): Option[Long] = {
-    val v = quickNestedLongField(line, field)
+    val v = scanLongField(Utf8Line(line), utf8(field), topLevelOnly = false)
     if (v == NoLong) None else Some(v)
   }
 
-  /** [[quickNestedLongFieldOpt]] without the Option: [[NoLong]] = unknown. */
-  private[cdc] def quickNestedLongField(line: String, field: String): Long =
-    scanLongField(line, field, topLevelOnly = false)
-
-  /** The quick probe itself, [[NoLong]] = unknown. Allocation-free: it
-    * runs once per snapshot line (the pk early stop) and once per log line
-    * (the offset probe). */
-  private[cdc] def scanLongField(line: String, field: String,
+  /** The quick probe itself over the line's bytes, [[NoLong]] = unknown;
+    * `field` is the key's UTF-8 encoding. Allocation-free: it runs once
+    * per snapshot line on a window's bisection, once per log line (the
+    * offset probe) and once per routed backfill line (the chunk key). The
+    * structural bytes it looks for are ASCII, which never occur inside a
+    * multi-byte UTF-8 character. */
+  private[cdc] def scanLongField(line: Utf8Line, field: Array[Byte],
       topLevelOnly: Boolean): Long = {
-    val n = line.length
-    var i = 0; var depth = 0; var inStr = false; var esc = false
+    val b = line.bytes; val n = line.end
+    val fl = field.length
+    var i = line.start; var depth = 0; var inStr = false; var esc = false
     while (i < n) {
-      val c = line.charAt(i)
+      val c = b(i)
       if (inStr) {
         if (esc) esc = false
         else if (c == '\\') esc = true
         else if (c == '"') inStr = false
         i += 1
-      } else c match {
+      } else c.toInt match {
         case '{' | '[' => depth += 1; i += 1
         case '}' | ']' => depth -= 1; i += 1
         case '"' =>
-          val close = i + 1 + field.length
+          val close = i + 1 + fl
           if ((!topLevelOnly || depth == 1) && close < n &&
-              line.startsWith(field, i + 1) && line.charAt(close) == '"') {
-            var j = close + 1
-            while (j < n && line.charAt(j).isWhitespace) j += 1
-            if (j < n && line.charAt(j) == ':') {
-              j += 1
-              while (j < n && line.charAt(j).isWhitespace) j += 1
-              return parseLongAt(line, j)
+              b(close) == '"' && sameBytes(b, i + 1, field)) {
+            var j = skipSpace(b, close + 1, n)
+            if (j < n && b(j) == ':') {
+              j = skipSpace(b, j + 1, n)
+              return parseLongAt(b, j, n)
             }
             // string token equal to the key text but not a key — skip it
             // as an ordinary string
@@ -211,16 +213,31 @@ object FileCdcDatabase {
     NoLong
   }
 
+  /** `b` holds `field` at `at` (the caller checked the bounds). */
+  private def sameBytes(b: Array[Byte], at: Int, field: Array[Byte]): Boolean = {
+    var j = 0
+    while (j < field.length && b(at + j) == field(j)) j += 1
+    j == field.length
+  }
+
+  /** The first position at or after `j` that is not ASCII whitespace (as
+    * `Character.isWhitespace` classes the ASCII range). */
+  private def skipSpace(b: Array[Byte], j0: Int, n: Int): Int = {
+    var j = j0
+    while (j < n && { val c = b(j); c == ' ' || (c >= 0x09 && c <= 0x0d) ||
+        (c >= 0x1c && c <= 0x1f) }) j += 1
+    j
+  }
+
   /** The optionally signed digit run at `j` as Long.parseLong reads it;
     * [[NoLong]] when there is none or it overflows. */
-  private def parseLongAt(line: String, j: Int): Long = {
-    val n = line.length
-    val neg = j < n && line.charAt(j) == '-'
+  private def parseLongAt(b: Array[Byte], j: Int, n: Int): Long = {
+    val neg = j < n && b(j) == '-'
     val limit = if (neg) Long.MinValue else -Long.MaxValue
     var k = if (neg) j + 1 else j
     var acc = 0L // negative accumulation reaches Long.MinValue
-    while (k < n && line.charAt(k).isDigit) {
-      val d = Character.digit(line.charAt(k), 10)
+    while (k < n && b(k) >= '0' && b(k) <= '9') {
+      val d = b(k) - '0'
       if (acc < limit / 10) return NoLong
       acc *= 10
       if (acc < limit + d) return NoLong
@@ -231,12 +248,15 @@ object FileCdcDatabase {
     else if (neg) acc else -acc
   }
 
-  /** [[quickLongFieldOpt]] with a Jackson fallback — for top-level fields
-    * that are always present (e.g. `__offset` in log lines). */
-  def quickLongField(line: String, field: String): Long = {
-    val v = scanLongField(line, field, topLevelOnly = true)
-    if (v != NoLong) v else mapper.readTree(line).get(field).asLong()
+  /** A top-level integer field with a Jackson fallback — for fields that
+    * are always present (e.g. `__offset` in log lines). */
+  def quickLongField(line: Utf8Line, field: String): Long = {
+    val v = scanLongField(line, utf8(field), topLevelOnly = true)
+    if (v != NoLong) v else mapper.readTree(line.toString).get(field).asLong()
   }
+
+  def quickLongField(line: String, field: String): Long =
+    quickLongField(Utf8Line(line), field)
 
   /** Tables present under `dir` (reference: discoverDataCollections,
     * DataSourceDialect.java:45-52). */
@@ -273,33 +293,88 @@ object FileCdcDatabase {
     * early-stopped chunk scan is executor fd exhaustion at many-chunk
     * scale.
     *
-    * Reads the byte window [start, end) = `window(channel)` of the file.
-    * Windows start and end at line starts, so lines split and decode as
-    * `BufferedReader.readLine` over a strict UTF-8 reader of the whole
-    * file returns them (see [[LineReader]]). */
+    * Reads the byte window [start, end) = `window(channel)` of the file
+    * in blocks and hands out each line as a slice of the block it was read
+    * into; a line that runs past a block's end is carried into the next,
+    * fresh block, so no block a line points into is ever written again.
+    * Windows start and end at line starts, so lines split as
+    * `BufferedReader.readLine` splits the whole file: at `\n`, `\r\n` or a
+    * lone `\r`, a final line needing no terminator. A line holding
+    * non-ASCII bytes must be well-formed UTF-8, or the read throws the
+    * strict decoder's `CharacterCodingException`. */
   final class ClosingLineIterator private[FileCdcDatabase] (file: String,
       window: FileChannel => (Long, Long))
-      extends Iterator[String] with AutoCloseable {
+      extends Iterator[Utf8Line] with AutoCloseable {
     private val channel = FileChannel.open(Paths.get(file),
       StandardOpenOption.READ)
     private var closed = false
     registerOpen(this)
-    private val reader = new LineReader(channel, 64 * 1024)
     private val (start, end) =
-      try window(channel) catch { case e: Throwable => close(); throw e }
-    private var pos = start
-    private var nextLine: String = advance()
+      try {
+        val (a, z) = window(channel)
+        (a, math.min(z, channel.size()))
+      } catch { case e: Throwable => close(); throw e }
+    private var block = Array.emptyByteArray
+    private var blockLen = 0 // bytes of the window read into block
+    private var cursor = 0 // start of the next line in block
+    private var filePos = start // file position of block(blockLen)
+    private var nextLine: Utf8Line = advance()
 
-    private def advance(): String =
-      if (closed) null
-      else if (pos >= end || pos >= reader.size) { close(); null }
-      else {
-        val l = reader.lineAt(pos, strict = true)
-        pos = reader.lineEnd
-        l
+    /** Carry the unfinished line block[cursor, blockLen) into a fresh
+      * block and read on behind it, up to the window's end. */
+    private def refill(): Unit = {
+      val carry = blockLen - cursor
+      val next = new Array[Byte](math.min(
+        math.max(BlockBytes, carry * 2).toLong, carry + end - filePos).toInt)
+      System.arraycopy(block, cursor, next, 0, carry)
+      block = next; blockLen = carry; cursor = 0
+      var n = 0
+      while (n >= 0 && blockLen < block.length) {
+        n = channel.read(ByteBuffer.wrap(block, blockLen, block.length - blockLen),
+          filePos)
+        if (n > 0) { blockLen += n; filePos += n }
       }
+    }
+
+    private def advance(): Utf8Line = {
+      while (!closed) {
+        val b = block
+        var i = cursor
+        var bits = 0L // negative once a byte >= 0x80 was seen
+        // eight bytes at a time up to the word holding a terminator (whose
+        // bytes past it may also set `bits`: that only costs a check)
+        while (i + 8 <= blockLen && {
+          val w = Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i)
+          bits |= w
+          !hasByte(w, NewLines) && !hasByte(w, Returns)
+        }) i += 8
+        while (i < blockLen && { val c = b(i); bits |= c; c != '\n' && c != '\r' })
+          i += 1
+        val more = filePos < end
+        if (i < blockLen && !(b(i) == '\r' && i + 1 == blockLen && more)) {
+          val line = lineOf(b, cursor, i, bits)
+          cursor = if (b(i) == '\r' && i + 1 < blockLen && b(i + 1) == '\n') i + 2
+            else i + 1
+          return line
+        } else if (more) refill()
+        else if (cursor < blockLen) { // the file's last line, unterminated
+          val line = lineOf(b, cursor, blockLen, bits)
+          cursor = blockLen
+          return line
+        } else close()
+      }
+      null
+    }
+
+    private def lineOf(b: Array[Byte], from: Int, to: Int, bits0: Long): Utf8Line = {
+      var bits = bits0
+      bits |= bits << 8; bits |= bits << 16; bits |= bits << 32
+      if (bits < 0 && !Utf8Line.isWellFormed(b, from, to))
+        Utf8Line.reject(b, from, to)
+      new Utf8Line(b, from, to)
+    }
     override def hasNext: Boolean = nextLine != null
-    override def next(): String = {
+    override def next(): Utf8Line = {
       val l = nextLine
       if (l == null) throw new NoSuchElementException(file)
       nextLine = advance()
@@ -314,18 +389,25 @@ object FileCdcDatabase {
     }
   }
 
-  /** Whole lines of one file, read at any line start through one reused
-    * block buffer: the window reads and the probes of [[sortedLines]]. Line
-    * ends are those of `BufferedReader.readLine`: `\n`, `\r\n` or a lone
-    * `\r`; a final line needs no terminator. Strict text decodes as a
-    * strict UTF-8 reader does (malformed input throws); probe text
-    * replaces malformed input with U+FFFD, so a probe never fails on a
-    * line outside the window it looks for. */
+  /** A [[ClosingLineIterator]]'s lines as text, one String per line, for
+    * callers that need text; closing it closes the file. */
+  final class StringLines private[FileCdcDatabase] (lines: ClosingLineIterator)
+      extends Iterator[String] with AutoCloseable {
+    override def hasNext: Boolean = lines.hasNext
+    override def next(): String = lines.next().toString
+    override def close(): Unit = lines.close()
+  }
+
+  /** Whole lines of one file, read at any line start through a block
+    * buffer: the probes of [[sortedLines]]' window search. Line ends are
+    * those of `BufferedReader.readLine`: `\n`, `\r\n` or a lone `\r`; a
+    * final line needs no terminator. A probe takes the bytes as they are,
+    * so it never fails on a malformed line outside the window it looks
+    * for. */
   private final class LineReader(ch: FileChannel, block: Int) {
     val size: Long = ch.size()
-    private var buf = new Array[Byte](block)
+    private var buf = Array.emptyByteArray
     private var bufStart = 0L; private var bufLen = 0
-    private lazy val strictUtf8 = StandardCharsets.UTF_8.newDecoder()
     /** Start of the line after the one [[lineAt]] returned last. */
     var lineEnd: Long = 0L
 
@@ -333,11 +415,13 @@ object FileCdcDatabase {
     private def fill(pos: Long, need: Int): Unit = {
       val want = math.min(need.toLong, size - pos)
       if (pos < bufStart || pos + want > bufStart + bufLen) {
-        if (need > buf.length)
-          buf = new Array[Byte](math.max(need, buf.length * 2))
+        // a fresh buffer: the line a probe holds stays intact while the
+        // reader looks past its terminator
+        buf = new Array[Byte](
+          math.max(0L, math.min(math.max(need, block).toLong, size - pos)).toInt)
         bufStart = pos; bufLen = 0
         var n = 0
-        while (n >= 0 && bufLen < buf.length && pos + bufLen < size) {
+        while (n >= 0 && bufLen < buf.length) {
           n = ch.read(ByteBuffer.wrap(buf, bufLen, buf.length - bufLen),
             pos + bufLen)
           if (n > 0) bufLen += n
@@ -368,7 +452,7 @@ object FileCdcDatabase {
     }
 
     /** The line starting at `pos`; sets [[lineEnd]]. */
-    def lineAt(pos: Long, strict: Boolean): String = {
+    def lineAt(pos: Long): Utf8Line = {
       var need = 256
       while (true) {
         fill(pos, need)
@@ -376,25 +460,26 @@ object FileCdcDatabase {
         var i = off
         while (i < bufLen && buf(i) != '\n' && buf(i) != '\r') i += 1
         if (i < bufLen || bufStart + bufLen >= size) {
-          val text = decode(off, i - off, strict)
+          val line = new Utf8Line(buf, off, i)
           val term = bufStart + i
           lineEnd = if (term >= size) size else afterTerminator(term)
-          return text
+          return line
         }
         need = (i - off) * 2 + 2 // the line runs past the buffer: widen
       }
       throw new IllegalStateException("unreachable")
     }
+  }
 
-    // the String constructor replaces malformed input; strict text that
-    // holds a replacement character is decoded again by a reporting
-    // decoder, which throws when the bytes were malformed
-    private def decode(off: Int, len: Int, strict: Boolean): String = {
-      val s = new String(buf, off, len, StandardCharsets.UTF_8)
-      if (strict && s.indexOf('\uFFFD') >= 0)
-        strictUtf8.decode(ByteBuffer.wrap(buf, off, len)).toString
-      else s
-    }
+  /** Bytes a window reads at a time. */
+  private final val BlockBytes = 64 * 1024
+  private final val NewLines = 0x0a0a0a0a0a0a0a0aL
+  private final val Returns = 0x0d0d0d0d0d0d0d0dL
+
+  /** Whether any byte of `w` equals the byte repeated in `pattern`. */
+  private def hasByte(w: Long, pattern: Long): Boolean = {
+    val x = w ^ pattern
+    ((x - 0x0101010101010101L) & ~x & 0x8080808080808080L) != 0L
   }
 
   /** Below this many bytes the window search scans lines instead of
@@ -407,7 +492,7 @@ object FileCdcDatabase {
     * aligned to line starts; a probe that finds no key steps on to the
     * next line. O(log size) probe lines plus one small linear stretch. */
   private def afterLastBelow(probe: LineReader, from: Long, k: Long,
-      key: String => Long): Long = {
+      key: Utf8Line => Long): Long = {
     var a = from // a line start; the answer is >= a
     var z = probe.size // the answer is <= z
     var bisect = true
@@ -417,7 +502,7 @@ object FileCdcDatabase {
       else {
         var p = s; var found = false
         while (!found && p < z) {
-          val v = key(probe.lineAt(p, strict = false))
+          val v = key(probe.lineAt(p))
           val e = probe.lineEnd
           if (v != NoLong) {
             found = true
@@ -430,7 +515,7 @@ object FileCdcDatabase {
     }
     var res = a; var p = a; var done = false
     while (!done && p < z) {
-      val v = key(probe.lineAt(p, strict = false))
+      val v = key(probe.lineAt(p))
       if (v != NoLong) { if (v < k) res = probe.lineEnd else done = true }
       p = probe.lineEnd
     }
@@ -440,10 +525,10 @@ object FileCdcDatabase {
   /** Start of the first keyed line at or after line start `pos` (`size`
     * when none). */
   private def nextKeyed(probe: LineReader, pos: Long,
-      key: String => Long): Long = {
+      key: Utf8Line => Long): Long = {
     var p = pos
     while (p < probe.size) {
-      if (key(probe.lineAt(p, strict = false)) != NoLong) return p
+      if (key(probe.lineAt(p)) != NoLong) return p
       p = probe.lineEnd
     }
     probe.size
@@ -460,7 +545,7 @@ object FileCdcDatabase {
     * unkeyed lines in front of its first keyed line. Costs the window plus
     * O(log size) probe lines, not the prefix before it. */
   def sortedLines(file: String, lo: Option[Long], hi: Option[Long],
-      key: String => Long,
+      key: Utf8Line => Long,
       openAfterLastBelow: Boolean = false): ClosingLineIterator =
     new ClosingLineIterator(file, { ch =>
       val probe = new LineReader(ch, 8192)
@@ -571,9 +656,12 @@ object FileCdcDatabase {
     out.result()
   }
 
-  /** Iterate the lines of a JSONL file (executor-side). */
-  def lines(file: String): ClosingLineIterator =
+  /** The lines of a JSONL file as UTF-8 bytes (executor-side). */
+  def byteLines(file: String): ClosingLineIterator =
     new ClosingLineIterator(file, ch => (0L, ch.size()))
+
+  /** [[byteLines]] as text. */
+  def lines(file: String): StringLines = new StringLines(byteLines(file))
 
   private def metaToJson(m: TableMeta): String = {
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""

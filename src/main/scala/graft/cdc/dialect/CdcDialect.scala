@@ -1,6 +1,6 @@
 package graft.cdc.dialect
 
-import graft.cdc.{ChangeRecord, FileCdcDatabase}
+import graft.cdc.{ChangeRecord, FileCdcDatabase, Utf8Line}
 import graft.cdc.FileCdcDatabase.TableMeta
 
 /**
@@ -12,8 +12,10 @@ import graft.cdc.FileCdcDatabase.TableMeta
  * a dialect = the reference's one `IncrementalSource` parameterized the same
  * way (SURVEY §2.1 S11).
  *
- * Executor-side methods return raw record lines; the generic source owns
- * decoding (JsonRowCodec) and the watermark merge. Implementations must be
+ * Executor-side methods return raw record lines as UTF-8 bytes
+ * ([[Utf8Line]]); the generic source owns decoding (JsonRowCodec) and the
+ * watermark merge. The `…Lines` methods are text views of the same reads,
+ * for callers that need a String per line. Implementations must be
  * driver-constructible AND executor-resolvable by name (partitions carry
  * `(dialect, path, table)` strings, not object graphs).
  */
@@ -40,8 +42,13 @@ trait CdcDialect extends Serializable {
     * range on an unindexed key reads the whole table. The file dialect
     * gives each line of a sorted file to exactly one window of a tiling
     * range set, so a full chunked read reads every line once. */
+  def snapshotRecords(path: String, meta: TableMeta, keyColumn: String,
+      lo: Option[Long], hi: Option[Long]): Iterator[Utf8Line]
+
+  /** [[snapshotRecords]] as text. */
   def snapshotLines(path: String, meta: TableMeta, keyColumn: String,
-      lo: Option[Long], hi: Option[Long]): Iterator[String]
+      lo: Option[Long], hi: Option[Long]): Iterator[String] =
+    snapshotRecords(path, meta, keyColumn, lo, hi).map(_.toString)
 
   /** [[snapshotLines]] reading the table's meta first. */
   def snapshotLines(path: String, table: String, keyColumn: String,
@@ -64,7 +71,13 @@ trait CdcDialect extends Serializable {
     * first record with offset > `to`: a range never returns such a record
     * from before its start, and the first range to reach it — the batch
     * that failed on it before windows existed — still returns it. */
-  def logLines(path: String, table: String, from: Long, to: Long): Iterator[String]
+  def logRecords(path: String, table: String, from: Long,
+      to: Long): Iterator[Utf8Line]
+
+  /** [[logRecords]] as text. */
+  def logLines(path: String, table: String, from: Long,
+      to: Long): Iterator[String] =
+    logRecords(path, table, from, to).map(_.toString)
 
   /** Log records with offsets > 0 whose text contains `marker`, in log
     * order — schema history's scan for its rare DDL records. The generic
@@ -124,10 +137,11 @@ trait CdcDialect extends Serializable {
   def eventTimeOfOffset(path: String, tables: Seq[String],
       offset: Long): Option[Long] = {
     var best = Long.MinValue
+    val tsKey = ChangeRecord.TsCol.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     tables.foreach { t =>
-      logLines(path, t, Long.MinValue, offset).foreach { l =>
-        FileCdcDatabase.quickLongFieldOpt(l, ChangeRecord.TsCol)
-          .foreach(ts => if (ts > best) best = ts)
+      logRecords(path, t, Long.MinValue, offset).foreach { l =>
+        val ts = FileCdcDatabase.scanLongField(l, tsKey, topLevelOnly = true)
+        if (ts != FileCdcDatabase.NoLong && ts > best) best = ts
       }
     }
     if (best == Long.MinValue) None else Some(best)
@@ -229,9 +243,9 @@ object FileCdcDialect extends CdcDialect {
     if (r.isEmpty) None else Some(r)
   }
 
-  override def snapshotLines(path: String, meta: TableMeta,
+  override def snapshotRecords(path: String, meta: TableMeta,
       keyColumn: String, lo: Option[Long], hi: Option[Long])
-      : Iterator[String] = {
+      : Iterator[Utf8Line] = {
     // file layout is PK-range-partitioned/sorted: pruning and the seek
     // only apply when the chunk key IS the pk; an overridden chunk key
     // degrades to full-file scans (a store with an index on the override
@@ -251,23 +265,34 @@ object FileCdcDialect extends CdcDialect {
         }
       }
     val sortedByPk = prunable && meta.snapshotFiles.nonEmpty
-    val key = pkOf(meta.pk) _
+    val key = pkOf(meta.pk, utf8(meta.pk)) _
     pruned.iterator.flatMap { f =>
       if (sortedByPk) FileCdcDatabase.sortedLines(f, lo, hi, key)
-      else FileCdcDatabase.lines(f)
+      else FileCdcDatabase.byteLines(f)
     }
+  }
+
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val offsetKey = utf8(ChangeRecord.OffsetCol)
+  private val tsKey = utf8(ChangeRecord.TsCol)
+
+  /** `__ts_ms` of a log line, None when it has no plain integer one. */
+  private def tsOf(l: Utf8Line): Option[Long] = {
+    val v = FileCdcDatabase.scanLongField(l, tsKey, topLevelOnly = true)
+    if (v == FileCdcDatabase.NoLong) None else Some(v)
   }
 
   /** Sort key of a snapshot line: its top-level pk as the quick scan reads
     * it, else as Jackson's `asLong` reads a number or numeric text;
     * [[FileCdcDatabase.NoLong]] when the line has none (it is then read
     * by the window of the keyed line before it). */
-  private def pkOf(pk: String)(l: String): Long = {
-    val v = FileCdcDatabase.scanLongField(l, pk, topLevelOnly = true)
+  private def pkOf(pk: String, pkBytes: Array[Byte])(l: Utf8Line): Long = {
+    val v = FileCdcDatabase.scanLongField(l, pkBytes, topLevelOnly = true)
     if (v != FileCdcDatabase.NoLong) v
     else
       try {
-        val n = FileCdcDatabase.mapper.readTree(l).get(pk)
+        val n = FileCdcDatabase.mapper.readTree(l.toString).get(pk)
         if (n != null && (n.isNumber || n.isTextual))
           n.asLong(FileCdcDatabase.NoLong)
         else FileCdcDatabase.NoLong
@@ -282,7 +307,7 @@ object FileCdcDialect extends CdcDialect {
       // one prefix-parsing driver pass; chunk planning is one-time work
       var mn = Long.MaxValue; var mx = Long.MinValue
       FileCdcDatabase.dataFiles(path, table, "snapshot").foreach { f =>
-        val it = FileCdcDatabase.lines(f)
+        val it = FileCdcDatabase.byteLines(f)
         try it.foreach { l =>
           val v = FileCdcDatabase.quickLongField(l, column)
           if (v < mn) mn = v
@@ -297,16 +322,15 @@ object FileCdcDialect extends CdcDialect {
   /** Offset of a log line, or None when the line carries no integral
     * offset — such a line cannot be range-filtered, so it flows to the
     * reader's parse-error policy from the ranges whose window holds it. */
-  private def offsetOfOpt(l: String): Option[Long] = {
+  private def offsetOfOpt(l: Utf8Line): Option[Long] = {
     val v = offsetOf(l)
     if (v == FileCdcDatabase.NoLong) None else Some(v)
   }
 
   /** [[offsetOfOpt]] without the Option, [[FileCdcDatabase.NoLong]] =
     * unknown: the sort key of a log line. */
-  private def offsetOf(l: String): Long = {
-    val v = FileCdcDatabase.scanLongField(l, ChangeRecord.OffsetCol,
-      topLevelOnly = true)
+  private def offsetOf(l: Utf8Line): Long = {
+    val v = FileCdcDatabase.scanLongField(l, offsetKey, topLevelOnly = true)
     if (v != FileCdcDatabase.NoLong) v
     else offsetByTree(l).getOrElse(FileCdcDatabase.NoLong)
   }
@@ -314,16 +338,17 @@ object FileCdcDialect extends CdcDialect {
   // integral nodes only: asLong() on a string/null/object coerces to 0,
   // which the range filter would silently drop even under
   // parse-error-policy=fail — return None so the reader's policy decides
-  private def offsetByTree(l: String): Option[Long] =
-    try Option(FileCdcDatabase.mapper.readTree(l).get(ChangeRecord.OffsetCol))
+  private def offsetByTree(l: Utf8Line): Option[Long] =
+    try Option(FileCdcDatabase.mapper.readTree(l.toString)
+        .get(ChangeRecord.OffsetCol))
       .filter(_.canConvertToLong).map(_.asLong())
     catch { case scala.util.control.NonFatal(_) => None }
 
   /** Each offset-sorted log file's window (from, to]: a seek, then the
     * records in range (see [[CdcDialect.logLines]] for where a record
     * without an offset goes). */
-  override def logLines(path: String, table: String,
-      from: Long, to: Long): Iterator[String] =
+  override def logRecords(path: String, table: String,
+      from: Long, to: Long): Iterator[Utf8Line] =
     if (from == Long.MaxValue) Iterator.empty
     else {
       val hi = if (to == Long.MaxValue) None else Some(to + 1)
@@ -339,7 +364,7 @@ object FileCdcDialect extends CdcDialect {
     FileCdcDatabase.dataFiles(path, table, "log").iterator
       .flatMap(FileCdcDatabase.linesContaining(_, marker))
       .filter { l =>
-        val off = offsetOf(l)
+        val off = offsetOf(Utf8Line(l))
         off == FileCdcDatabase.NoLong || off > 0L
       }
 
@@ -364,7 +389,7 @@ object FileCdcDialect extends CdcDialect {
     val cur = offsetMemo.get(f)
     if (cur != null && cur.size == size && cur.mtime == mtime) cur
     else {
-      val it = FileCdcDatabase.lines(f)
+      val it = FileCdcDatabase.byteLines(f)
       // malformed lines carry no offset: they are invisible to the
       // rate-limit enumeration (the reader-side policy handles them).
       // ts rides along per offset (Long.MinValue = line carries none) for
@@ -373,8 +398,7 @@ object FileCdcDialect extends CdcDialect {
       try it.foreach { l =>
         offsetOfOpt(l).foreach { off =>
           ob += off
-          tb += FileCdcDatabase.quickLongFieldOpt(l, ChangeRecord.TsCol)
-            .getOrElse(Long.MinValue)
+          tb += tsOf(l).getOrElse(Long.MinValue)
         }
       } finally it.close()
       val e = OffsetsEntry(size, mtime, ob.result(), tb.result())
@@ -441,12 +465,12 @@ object FileCdcDialect extends CdcDialect {
     var first = Long.MaxValue
     tables.foreach { t =>
       FileCdcDatabase.dataFiles(path, t, "log").foreach { f =>
-        val it = FileCdcDatabase.lines(f)
+        val it = FileCdcDatabase.byteLines(f)
         try {
           var found = false
           while (!found && it.hasNext) {
             val l = it.next()
-            val ts = FileCdcDatabase.quickLongFieldOpt(l, ChangeRecord.TsCol)
+            val ts = tsOf(l)
             if (ts.exists(_ >= tsMs)) {
               offsetOfOpt(l).foreach { off =>
                 first = math.min(first, off)

@@ -1,6 +1,6 @@
 package graft.cdc.dialect
 
-import graft.cdc.{ChangeRecord, FileCdcDatabase}
+import graft.cdc.{ChangeRecord, FileCdcDatabase, Utf8Line}
 import graft.cdc.FileCdcDatabase.TableMeta
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -223,9 +223,9 @@ object JdbcCdcDialect extends CdcDialect {
 
   // -------------------------------------------------------------- scans
 
-  override def snapshotLines(path: String, meta: TableMeta,
+  override def snapshotRecords(path: String, meta: TableMeta,
       keyColumn: String, lo: Option[Long], hi: Option[Long])
-      : Iterator[String] = {
+      : Iterator[Utf8Line] = {
     val schema = meta.schema // hoisted: never resolve schema per row
     new JdbcLineIterator(path,
       c => {
@@ -239,8 +239,8 @@ object JdbcCdcDialect extends CdcDialect {
       rs => snapshotRowJson(rs, schema))
   }
 
-  override def logLines(path: String, table: String,
-      from: Long, to: Long): Iterator[String] = {
+  override def logRecords(path: String, table: String,
+      from: Long, to: Long): Iterator[Utf8Line] = {
     val meta = tableMeta(path, table)
     new JdbcLineIterator(path,
       c => {
@@ -399,14 +399,14 @@ object JdbcCdcDialect extends CdcDialect {
     try f(c) finally giveBack(path, c)
   }
 
-  /** Streaming ResultSet → JSON-line iterator. Owns connection, statement
+  /** Streaming ResultSet → UTF-8 JSON-line iterator. Owns connection, statement
     * and cursor: closes them on exhaustion or via the owning reader's
     * scope sweep ([[FileCdcDatabase.ResourceScope]]) — the JDBC twin of
     * the file dialect's ClosingLineIterator. */
   private final class JdbcLineIterator(path: String,
       prepare: Connection => PreparedStatement,
       render: ResultSet => String)
-      extends Iterator[String] with AutoCloseable {
+      extends Iterator[Utf8Line] with AutoCloseable {
     private val conn = borrow(path)
     // a failing prepare/execute must hand the connection back — the ctor
     // aborts before any close hook exists, so nothing else ever would
@@ -428,9 +428,10 @@ object JdbcCdcDialect extends CdcDialect {
       has
     }
     override def hasNext: Boolean = ready
-    override def next(): String = {
+    override def next(): Utf8Line = {
       if (!ready) throw new NoSuchElementException(path)
-      val line = render(rs)
+      // the rendered JSON is encoded once, here
+      val line = Utf8Line(render(rs))
       ready = advance()
       line
     }

@@ -1,11 +1,11 @@
 package graft.cdc.source
 
 import graft.cdc.dialect.CdcDialects
-import graft.cdc.{ChangeRecord, FileCdcDatabase}
+import graft.cdc.{ChangeRecord, FileCdcDatabase, Utf8Line}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
@@ -28,19 +28,27 @@ import scala.collection.mutable
  * excluded either way.
  *
  * Memory bound: a snapshot partition holds many chunks but merges one at a
- * time, so it holds ≤ chunk-size merged rows (default 8096) plus its span's
- * overlay; the log reader streams line by line. Both hold O(chunk + span
- * changes), not O(table).
- * The W2 backfill holds, per executor, the routed lines of the log slice
+ * time, so it holds ≤ chunk-size merged rows (default 8096) — an array of
+ * rows plus a primitive pk index ([[ChunkMerge]]), reused range after
+ * range, with the 64 KiB read blocks the rows' strings view — plus its
+ * span's overlay; the log reader streams line by line. Both hold
+ * O(chunk + span changes), not O(table).
+ * The W2 backfill holds, per executor, the routed log slice as its read
+ * blocks with each line's bounds and probed chunk key
  * (≤ [[SnapshotOverlayCache.MaxEntries]] lines, soft-referenced), and per
- * partition an overlay of its span's log-touched keys, indexed by chunk
- * key: applying it to a chunk range costs O(log E + m log m) for the m of
- * its E entries in that range, not O(E) per range.
+ * partition an overlay of its span's log-touched keys, whose images own
+ * their strings, indexed by chunk key: applying it to a chunk range costs
+ * O(log E + m log m) for the m of its E entries in that range, not O(E)
+ * per range.
  *
  * Read cost: each chunk range reads only its own snapshot window (the
  * dialect seeks to it), and each partition decodes only the log lines of
  * its own key span, so a full read decodes every snapshot line once and
- * every log line about once (unroutable lines once per partition).
+ * every log line about once (unroutable lines once per partition). Every
+ * line reaches the decoder as UTF-8 bytes sliced from its read block
+ * ([[graft.cdc.Utf8Line]]), never as a String, and is decoded straight
+ * into its output row: one row allocation per emitted row, completed in
+ * place when emitted, with the pk and chunk key handed back as longs.
  *
  * Both readers decode lines through [[JsonRowCodec]]'s single-pass decoder;
  * a line it declines takes the Jackson tree decode, so rows, nulls and
@@ -98,11 +106,19 @@ class CdcReaderFactory extends PartitionReaderFactory {
   * original order) with whichever metadata columns the query references.
   * Decode runs over only the required payload fields (plus the chunk key,
   * which the merge always needs) — at 100 TB a 2-column projection over a
-  * 40-column table must not JSON-decode the other 38. */
+  * 40-column table must not JSON-decode the other 38.
+  *
+  * Lines decode straight into the output layout: every row and envelope
+  * image is one `GenericInternalRow` of the output width, which [[finish]]
+  * completes in place (metadata columns, masks) when it is emitted. The
+  * pk and chunk key come back as longs. One decoder per reader: it holds
+  * the reader's scanner and the keys of the row it decoded last. */
 private[source] class EnvelopeDecoder(dialectName: String, path: String,
     table: String, schemaDdl: String, chunkKeyOpt: String = "",
     parsePolicy: String = "fail", serverTimeZone: String = "UTC",
     maskSpec: String = "") {
+  import ChangeRecord._
+
   val dialect = CdcDialects.byName(dialectName)
   val meta: FileCdcDatabase.TableMeta = dialect.tableMeta(path, table)
   /** Snapshot split key: pk unless overridden (chunk-key.column). Range
@@ -116,7 +132,7 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
       StructType(meta.schema.fields ++ CdcTable.metaFields)
     else StructType.fromDDL(schemaDdl)
 
-  private val metaNames = ChangeRecord.MetaCols.toSet
+  private val metaNames = MetaCols.toSet
   /** Requested payload columns, in output order. */
   val payload: StructType =
     StructType(outSchema.fields.filterNot(f => metaNames.contains(f.name)))
@@ -136,13 +152,45 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
   val ckIdx: Int = decodeSchema.fieldIndex(chunkKey)
   val ckType = decodeSchema(ckIdx).dataType
 
-  case class Env(offset: Long, op: String, ts: Long,
-      before: InternalRow, after: InternalRow) {
-    private def img: InternalRow = if (after != null) after else before
+  private val outNames = outSchema.fieldNames
+  /** Output ordinal of each decoded field; -1 = decoded for the merge
+    * only (a pruned pk or chunk key). */
+  private val outPos: Array[Int] = decodeSchema.fieldNames.map(outNames.indexOf(_))
+  private val layout =
+    new JsonRowCodec.Layout(outSchema.size, outPos, pkIdx, ckIdx)
+  // change envelopes: their images may be kept in an overlay for a whole
+  // partition, so their strings are copies, never views of a buffer
+  private val scan = codec.scanner(layout)
+  // snapshot rows: emitted within their chunk, so strings view the line
+  private val rowScan = codec.scanner(layout, shareBytes = true)
+
+  /** A row of the tree decode (decodeSchema layout) in the output layout. */
+  private def toOutput(r: InternalRow): InternalRow =
+    if (r == null) null
+    else {
+      val out = new GenericInternalRow(outSchema.size)
+      var j = 0
+      while (j < outPos.length) {
+        if (outPos(j) >= 0) out.update(outPos(j), r.get(j, decodeSchema(j).dataType))
+        j += 1
+      }
+      out
+    }
+
+  /** A decoded change envelope; images in the output layout. The keys are
+    * those of the after image (the before image when there is none). */
+  final class Env private[EnvelopeDecoder] (val offset: Long, val op: String,
+      val ts: Long, val before: InternalRow, val after: InternalRow,
+      pk: Long, ck: Long,
+      /** Tree decodes only: the key image in decodeSchema layout, whose
+        * keys are read (and fail) when asked for, as they always were. */
+      treeImage: InternalRow, fromTree: Boolean) {
     /** Merge identity (primary key). */
-    def key: Long = CdcPlanner.toLongKey(img.get(pkIdx, pkType))
+    def key: Long =
+      if (fromTree) CdcPlanner.toLongKey(treeImage.get(pkIdx, pkType)) else pk
     /** Range membership (chunk key; key-stable by contract). */
-    def chunkKeyVal: Long = CdcPlanner.toLongKey(img.get(ckIdx, ckType))
+    def chunkKeyVal: Long =
+      if (fromTree) CdcPlanner.toLongKey(treeImage.get(ckIdx, ckType)) else ck
   }
 
   // meta longs must be integral JSON numbers: Jackson's asLong() coerces a
@@ -158,53 +206,79 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
 
   /** Single-pass decode (see [[JsonRowCodec]]); a declined line takes the
     * tree path, so the outcome is always [[decodeEnvelopeTree]]'s. */
-  def decodeEnvelope(line: String): Env = {
-    val r = codec.decodeEnvelopeSinglePass(line)
-    if (r == null) decodeEnvelopeTree(line)
-    else Env(r.getLong(0), r.get(1, StringType).asInstanceOf[String],
-      r.getLong(2), r.getStruct(3, decodeSchema.size),
-      r.getStruct(4, decodeSchema.size))
+  def decodeEnvelope(line: Utf8Line): Env =
+    if (scan.tryEnvelope(line))
+      new Env(scan.offset, scan.op, scan.ts, scan.before, scan.after,
+        scan.pk, scan.ck, null, fromTree = false)
+    else decodeEnvelopeTree(line)
+
+  def decodeEnvelope(line: String): Env = decodeEnvelope(Utf8Line(line))
+
+  def decodeEnvelopeTree(line: Utf8Line): Env = {
+    val n = codec.parse(line)
+    val offset = requireLong(n, OffsetCol)
+    val op = n.get(OpCol).asText()
+    val ts = requireLong(n, TsCol)
+    val before = codec.convertStruct(n.get(BeforeCol), decodeSchema)
+    val after = codec.convertStruct(n.get(AfterCol), decodeSchema)
+    new Env(offset, op, ts, toOutput(before), toOutput(after), 0L, 0L,
+      if (after != null) after else before, fromTree = true)
   }
 
-  def decodeEnvelopeTree(line: String): Env = {
-    val n = codec.parse(line)
-    Env(
-      requireLong(n, ChangeRecord.OffsetCol),
-      n.get(ChangeRecord.OpCol).asText(),
-      requireLong(n, ChangeRecord.TsCol),
-      codec.convertStruct(n.get(ChangeRecord.BeforeCol), decodeSchema),
-      codec.convertStruct(n.get(ChangeRecord.AfterCol), decodeSchema))
-  }
+  /** Whether the single-pass scanner accepts an envelope line (tests). */
+  private[source] def singlePassAccepts(line: String): Boolean =
+    scan.tryEnvelope(Utf8Line(line))
 
   /** [[decodeEnvelope]] under the parse-error policy (the reference's
-    * Debezium errors.tolerance): None = line dropped (`skip`); `fail`
+    * Debezium errors.tolerance): null = line dropped (`skip`); `fail`
     * rethrows with the offending line's prefix for diagnosis. */
-  def decodeEnvelopeSafe(line: String): Option[Env] =
-    try Some(decodeEnvelope(line))
+  def decodeEnvelopeSafe(line: Utf8Line): Env =
+    try decodeEnvelope(line)
     catch {
       case scala.util.control.NonFatal(e) =>
-        if (parsePolicy == "skip") None
+        if (parsePolicy == "skip") null
         else throw new IllegalStateException(
           s"undecodable log line for $table (scan.parse.error-policy=fail): " +
-            s"'${line.take(120)}'", e)
+            s"'${line.toString.take(120)}'", e)
     }
 
-  // out position -> decodeSchema position (payload) or -1-tag (meta col)
-  private val MetaOp = -1; private val MetaOffset = -2; private val MetaTs = -3
-  private val MetaDb = -4; private val MetaTable = -5
-  private val MetaSchema = -6; private val MetaTenant = -7
-  private val outMap: Array[Int] = outSchema.fields.map { f =>
-    f.name match {
-      case ChangeRecord.OpCol => MetaOp
-      case ChangeRecord.OffsetCol => MetaOffset
-      case ChangeRecord.TsCol => MetaTs
-      case ChangeRecord.DbCol => MetaDb
-      case ChangeRecord.TableCol => MetaTable
-      case ChangeRecord.SchemaCol => MetaSchema
-      case ChangeRecord.TenantCol => MetaTenant
-      case n => decodeSchema.fieldIndex(n)
+  // the tree-decoded row of the last decodeRow (null after a single-pass
+  // one): its keys are read, and fail, only when asked for
+  private var treeRow: InternalRow = null
+  private var rowPk0 = 0L
+  private var rowCk0 = 0L
+
+  /** One snapshot line in the output layout; its keys are [[rowPk]] and
+    * [[rowCk]] until the next call. Its strings may view the line's bytes:
+    * emit the row before dropping the line's buffer. */
+  def decodeRow(line: Utf8Line): InternalRow = {
+    val r = rowScan.tryRow(line)
+    if (r != null) {
+      treeRow = null; rowPk0 = rowScan.pk; rowCk0 = rowScan.ck
+      r
+    } else {
+      val t = codec.decodeTree(line)
+      if (t == null) throw new NullPointerException(
+        s"snapshot line of $table is not a row: '${line.toString.take(120)}'")
+      treeRow = t
+      toOutput(t)
     }
   }
+  def rowPk: Long =
+    if (treeRow == null) rowPk0
+    else CdcPlanner.toLongKey(treeRow.get(pkIdx, pkType))
+  def rowCk: Long =
+    if (treeRow == null) rowCk0
+    else CdcPlanner.toLongKey(treeRow.get(ckIdx, ckType))
+
+  private def metaPos(c: String): Int = outNames.indexOf(c)
+  private val opPos = metaPos(OpCol)
+  private val offsetPos = metaPos(OffsetCol)
+  private val tsPos = metaPos(TsCol)
+  private val dbPos = metaPos(DbCol)
+  private val tablePos = metaPos(TableCol)
+  private val schemaPos = metaPos(SchemaCol)
+  private val tenantPos = metaPos(TenantCol)
   // hoisted: per-row Option.map / fromString allocation is decode-loop
   // hot-path cost
   private val metaDb: UTF8String = UTF8String.fromString(meta.db)
@@ -214,53 +288,49 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
   private val metaTenant: UTF8String =
     meta.tenant.map(UTF8String.fromString).orNull
 
-  /** Capture-time mask rule per decodeSchema slot (null = pass-through) —
-    * applied at emit so BOTH images of every change event and all snapshot
-    * rows leave the reader already redacted (Debezium applies its
-    * column.mask/truncate options at the same point: before the record is
-    * handed to the pipeline). Pruned-away masked columns cost nothing. */
-  private val maskers: Array[ColumnMasks.Rule] = {
+  /** Capture-time mask rules by output ordinal — applied at emit so BOTH
+    * images of every change event and all snapshot rows leave the reader
+    * already redacted (Debezium applies its column.mask/truncate options
+    * at the same point: before the record is handed to the pipeline).
+    * Pruned-away masked columns cost nothing. */
+  private val (maskedPos, maskRules): (Array[Int], Array[ColumnMasks.Rule]) = {
     val rules = ColumnMasks.decode(maskSpec)
-    decodeSchema.fields.map(f => rules.getOrElse(f.name, null))
+    val m = payload.fieldNames.flatMap(n => rules.get(n).map(outNames.indexOf(n) -> _))
+    (m.map(_._1), m.map(_._2))
   }
 
-  /** Project a decoded image + event metadata onto the output schema;
-    * `op` is one of the [[EnvelopeDecoder]] row-kind constants. */
-  def emit(img: InternalRow, op: UTF8String, offset: Long, ts: Long): InternalRow = {
-    val out = new GenericInternalRow(outSchema.size)
-    var i = 0
-    while (i < outSchema.size) {
-      outMap(i) match {
-        case MetaOp => out.update(i, op)
-        case MetaOffset => out.update(i, offset)
-        case MetaTs => out.update(i, ts)
-        case MetaDb => out.update(i, metaDb)
-        case MetaTable => out.update(i, metaTable)
-        case MetaSchema => out.update(i, metaSchemaName)
-        case MetaTenant => out.update(i, metaTenant)
-        case j => out.update(i,
-          if (img.isNullAt(j)) null
-          else if (maskers(j) != null)
-            maskers(j)(img.get(j, decodeSchema(j).dataType)
-              .asInstanceOf[UTF8String])
-          else img.get(j, decodeSchema(j).dataType))
-      }
-      i += 1
+  /** Complete a decoded row in place for emission: the event metadata
+    * and the masks. `op` is one of the [[EnvelopeDecoder]] row-kind
+    * constants. Each decoded row is emitted once, so it is finished once. */
+  def finish(row: InternalRow, op: UTF8String, offset: Long,
+      ts: Long): InternalRow = {
+    if (opPos >= 0) row.update(opPos, op)
+    if (offsetPos >= 0) row.setLong(offsetPos, offset)
+    if (tsPos >= 0) row.setLong(tsPos, ts)
+    if (dbPos >= 0) row.update(dbPos, metaDb)
+    if (tablePos >= 0) row.update(tablePos, metaTable)
+    if (schemaPos >= 0) row.update(schemaPos, metaSchemaName)
+    if (tenantPos >= 0) row.update(tenantPos, metaTenant)
+    var k = 0
+    while (k < maskedPos.length) {
+      val p = maskedPos(k)
+      if (!row.isNullAt(p)) row.update(p, maskRules(k)(row.getUTF8String(p)))
+      k += 1
     }
-    out
+    row
   }
 
   /** Log lines with offsets in (from, to] — dialect-served (a seek to the
     * range's window of the offset-sorted files in the file dialect). */
-  def logLinesInRange(from: Long, to: Long): Iterator[String] =
-    dialect.logLines(path, table, from, to)
+  def logRecords(from: Long, to: Long): Iterator[Utf8Line] =
+    dialect.logRecords(path, table, from, to)
 
   /** Snapshot lines possibly overlapping the chunk range [lo, hi) on the
     * chunk key — dialect-served (file pruning via per-file PK stats + a
     * seek to the range's window in the file dialect; SQL range pushdown in
     * a JDBC dialect). */
-  def snapshotLines(lo: Option[Long], hi: Option[Long]): Iterator[String] =
-    dialect.snapshotLines(path, meta, chunkKey, lo, hi)
+  def snapshotRecords(lo: Option[Long], hi: Option[Long]): Iterator[Utf8Line] =
+    dialect.snapshotRecords(path, meta, chunkKey, lo, hi)
 }
 
 private[source] object EnvelopeDecoder {
@@ -274,11 +344,131 @@ private[source] object EnvelopeDecoder {
   val Delete: UTF8String = UTF8String.fromString(ChangeRecord.RowKind.Delete)
 }
 
-/** Final surviving state of one log-touched key: its chunk-key value
-  * (range membership at apply time) and newest (offset, image), None =
-  * deleted. */
-private[source] case class OverlayEntry(ckVal: Long,
-    value: Option[(Long, InternalRow)])
+/** Open-addressing hash index from long keys to slot numbers (>= 0), with
+  * removal: the primitive long → slot index of the chunk merge and the
+  * overlay build, one probe per key and no boxed key or entry per row. */
+private[source] final class LongIndex {
+  // vals: 0 = empty, v + 1 = slot v, -1 = key removed (reads as absent)
+  private var keys = new Array[Long](16)
+  private var vals = new Array[Int](16)
+  private var used = 0
+
+  private def home(k: Long): Int = {
+    val h = k * 0x9E3779B97F4A7C15L
+    (h ^ (h >>> 32)).toInt & (keys.length - 1)
+  }
+
+  /** Position of `k` in the table, or of the empty cell where it goes. */
+  private def find(k: Long): Int = {
+    val mask = keys.length - 1
+    var p = home(k)
+    while (vals(p) != 0 && keys(p) != k) p = (p + 1) & mask
+    p
+  }
+
+  /** The slot of `k`; -1 when absent or removed. */
+  def get(k: Long): Int = {
+    val v = vals(find(k))
+    if (v > 0) v - 1 else -1
+  }
+
+  def put(k: Long, slot: Int): Unit = {
+    var p = find(k)
+    if (vals(p) == 0) {
+      if ((used + 1) * 2 > keys.length) { grow(); p = find(k) }
+      used += 1
+      keys(p) = k
+    }
+    vals(p) = slot + 1
+  }
+
+  def remove(k: Long): Unit = {
+    val p = find(k)
+    if (vals(p) != 0) vals(p) = -1
+  }
+
+  /** Keys entered since the last clear (removed ones included). */
+  def size: Int = used
+
+  def clear(): Unit = if (used > 0) { java.util.Arrays.fill(vals, 0); used = 0 }
+
+  private def grow(): Unit = {
+    val ok = keys; val ov = vals
+    keys = new Array[Long](ok.length * 2); vals = new Array[Int](ov.length * 2)
+    var i = 0
+    while (i < ok.length) {
+      if (ov(i) != 0) { val p = find(ok(i)); keys(p) = ok(i); vals(p) = ov(i) }
+      i += 1
+    }
+  }
+}
+
+/** One chunk range's merge: rows by pk with their offsets, in the order a
+  * `LinkedHashMap` keyed by pk keeps them — snapshot order, a write to a
+  * present key replacing its row in place, a new key appended, a delete
+  * dropping it — held as an array of rows in that order plus a primitive
+  * pk → slot index. The leading run of slots whose pks ascend (a chunk of
+  * a pk-sorted snapshot is one such run) is found by bisection and needs
+  * no index entries; the index holds the slots after it. Reused range
+  * after range by one reader. */
+private[source] final class ChunkMerge {
+  private var rows = new Array[InternalRow](64)
+  private var offs = new Array[Long](64)
+  private var keys = new Array[Long](64)
+  private var n = 0
+  /** Slots [0, run) hold strictly ascending pks. */
+  private var run = 0
+  private val index = new LongIndex
+
+  /** Slots in use; a deleted row's slot holds null. */
+  def size: Int = n
+  def row(i: Int): InternalRow = rows(i)
+  def offset(i: Int): Long = offs(i)
+
+  /** The live slot of `k`, -1 when absent. */
+  private def slotOf(k: Long): Int = {
+    val s = if (index.size == 0) -1 else index.get(k)
+    if (s >= 0) s
+    else {
+      var lo = 0; var hi = run
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (keys(mid) < k) lo = mid + 1 else hi = mid
+      }
+      if (lo < run && keys(lo) == k && rows(lo) != null) lo else -1
+    }
+  }
+
+  def put(k: Long, row: InternalRow, offset: Long): Unit = {
+    val s = slotOf(k)
+    if (s >= 0) { rows(s) = row; offs(s) = offset }
+    else {
+      if (n == rows.length) {
+        rows = java.util.Arrays.copyOf(rows, n * 2)
+        offs = java.util.Arrays.copyOf(offs, n * 2)
+        keys = java.util.Arrays.copyOf(keys, n * 2)
+      }
+      rows(n) = row; offs(n) = offset; keys(n) = k
+      if (n == run && (n == 0 || k > keys(n - 1))) run += 1
+      else index.put(k, n)
+      n += 1
+    }
+  }
+
+  def remove(k: Long): Unit = {
+    val s = slotOf(k)
+    if (s >= 0) {
+      rows(s) = null
+      if (s >= run) index.remove(k)
+    }
+  }
+
+  def clear(): Unit = {
+    java.util.Arrays.fill(rows.asInstanceOf[Array[AnyRef]], 0, n, null)
+    n = 0; run = 0
+    index.clear()
+  }
+}
 
 /** One log pass's merge state: the surviving entry of every log-touched
   * key, in log order (the order the keys were first touched), plus the
@@ -328,35 +518,61 @@ private[source] final class SnapshotOverlay private (
 
   /** Apply entry `i` to a chunk's rows by pk: CREATE/UPDATE replace,
     * DELETE removes, and a write older than the truncate removes. */
-  def applyEntry(byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)],
-      i: Int): Unit =
+  def applyEntry(merge: ChunkMerge, i: Int): Unit =
     if (live(i) && offsets(i) > truncateOffset)
-      byKey(keys(i)) = (offsets(i), images(i))
-    else byKey.remove(keys(i))
+      merge.put(keys(i), images(i), offsets(i))
+    else merge.remove(keys(i))
 
   /** Apply every entry of the chunk range [lo, hi), in log order. */
-  def applyRange(byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)],
-      lo: Option[Long], hi: Option[Long]): Unit =
-    indicesInRange(lo, hi).foreach(applyEntry(byKey, _))
+  def applyRange(merge: ChunkMerge, lo: Option[Long], hi: Option[Long]): Unit =
+    indicesInRange(lo, hi).foreach(applyEntry(merge, _))
 }
 
 private[source] object SnapshotOverlay {
-  def apply(entries: mutable.LinkedHashMap[Long, OverlayEntry],
-      truncateOffset: Long): SnapshotOverlay = {
-    val n = entries.size
-    val keys = new Array[Long](n); val ckVals = new Array[Long](n)
-    val live = new Array[Boolean](n); val offsets = new Array[Long](n)
-    val images = new Array[InternalRow](n)
-    var i = 0
-    entries.foreach { case (k, e) =>
-      keys(i) = k
-      ckVals(i) = e.ckVal
-      e.value.foreach { case (off, img) =>
-        live(i) = true; offsets(i) = off; images(i) = img
+  /** Collects the log pass: the newest write per pk at the position where
+    * the pk was first touched (a `LinkedHashMap` update's order), in
+    * primitive arrays behind a [[LongIndex]]. */
+  final class Collector {
+    private var n = 0
+    private var keys = new Array[Long](64)
+    private var ckVals = new Array[Long](64)
+    private var live = new Array[Boolean](64)
+    private var offsets = new Array[Long](64)
+    private var images = new Array[InternalRow](64)
+    private val index = new LongIndex
+    private var truncateOffset = 0L
+
+    /** A truncate at `offset`: advances the death frontier. */
+    def truncate(offset: Long): Unit =
+      truncateOffset = math.max(truncateOffset, offset)
+
+    /** Key `pk`'s newest write: its image at `offset`, or a delete
+      * (`image` null). */
+    def put(pk: Long, ck: Long, offset: Long, image: InternalRow): Unit = {
+      var s = index.get(pk)
+      if (s < 0) {
+        if (n == keys.length) {
+          val c = n * 2
+          keys = java.util.Arrays.copyOf(keys, c)
+          ckVals = java.util.Arrays.copyOf(ckVals, c)
+          live = java.util.Arrays.copyOf(live, c)
+          offsets = java.util.Arrays.copyOf(offsets, c)
+          images = java.util.Arrays.copyOf(images, c)
+        }
+        s = n; n += 1
+        keys(s) = pk
+        index.put(pk, s)
       }
-      i += 1
+      ckVals(s) = ck
+      live(s) = image != null
+      offsets(s) = if (image != null) offset else 0L
+      images(s) = image
     }
-    new SnapshotOverlay(keys, ckVals, live, offsets, images, truncateOffset)
+
+    def result(): SnapshotOverlay = new SnapshotOverlay(
+      java.util.Arrays.copyOf(keys, n), java.util.Arrays.copyOf(ckVals, n),
+      java.util.Arrays.copyOf(live, n), java.util.Arrays.copyOf(offsets, n),
+      java.util.Arrays.copyOf(images, n), truncateOffset)
   }
 
   /** Stable sort of positions 0 until keys.length by key (merge sort over
@@ -384,45 +600,67 @@ private[source] object SnapshotOverlay {
 }
 
 /** The log slice (0, high] of one table, routed by chunk key without
-  * decoding — the shared half of the W2 backfill. Each line's chunk key is
-  * probed as the span-filtered overlay build prefilters it
-  * ([[FileCdcDatabase.quickNestedLongField]]); a line the probe cannot
-  * route ([[FileCdcDatabase.NoLong]]: truncates, DDL, malformed lines)
-  * goes to every span. So a span's build over [[linesFor]] sees exactly
-  * the lines its full-scan build would decode, in the same order. */
-private[source] final class BackfillRouting private (lines: Array[String],
+  * decoding — the shared half of the W2 backfill. Holds the slice as the
+  * byte blocks it was read in (never written again once read), each
+  * line's block and bounds in them, and each line's probed chunk key
+  * ([[FileCdcDatabase.scanLongField]], as the span-filtered overlay build
+  * prefilters it); a line the probe cannot route
+  * ([[FileCdcDatabase.NoLong]]: truncates, DDL, malformed lines) goes to
+  * every span. So a span's build over [[linesFor]] sees exactly the lines
+  * its full-scan build would decode, in the same order. */
+private[source] final class BackfillRouting private (blocks: Array[Array[Byte]],
+    block: Array[Int], starts: Array[Int], ends: Array[Int],
     keys: Array[Long]) {
   /** The lines routed into the span [lo, hi) plus every unroutable line,
-    * in log order: one pass over the probed keys, nothing decoded. */
-  def linesFor(lo: Option[Long], hi: Option[Long]): Iterator[String] = {
+    * in log order: slices of the held blocks, nothing decoded. */
+  def linesFor(lo: Option[Long], hi: Option[Long]): Iterator[Utf8Line] = {
     val l = lo.getOrElse(Long.MinValue)
     val h = hi.getOrElse(Long.MaxValue); val open = hi.isEmpty
-    val out = mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < keys.length) {
+    def routed(i: Int): Boolean = {
       val k = keys(i)
-      if (k == FileCdcDatabase.NoLong || (k >= l && (open || k < h)))
-        out += lines(i)
-      i += 1
+      k == FileCdcDatabase.NoLong || (k >= l && (open || k < h))
     }
-    out.iterator
+    new Iterator[Utf8Line] {
+      private var i = 0
+      private def skip(): Unit = while (i < keys.length && !routed(i)) i += 1
+      skip()
+      override def hasNext: Boolean = i < keys.length
+      override def next(): Utf8Line = {
+        if (i >= keys.length) throw new NoSuchElementException
+        val line = new Utf8Line(blocks(block(i)), starts(i), ends(i))
+        i += 1
+        skip()
+        line
+      }
+    }
   }
 }
 
 private[source] object BackfillRouting {
   /** Route every line of `it` on `chunkKey`; None once it holds more than
     * `cap` lines (the caller's scope closes the abandoned scan). */
-  def build(it: Iterator[String], chunkKey: String,
+  def build(it: Iterator[Utf8Line], chunkKey: String,
       cap: Int): Option[BackfillRouting] = {
-    val ls = mutable.ArrayBuffer.empty[String]
+    val key = chunkKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val blocks = mutable.ArrayBuffer.empty[Array[Byte]]
+    val block = mutable.ArrayBuilder.make[Int]
+    val starts = mutable.ArrayBuilder.make[Int]
+    val ends = mutable.ArrayBuilder.make[Int]
     val ks = mutable.ArrayBuilder.make[Long]
-    while (ls.size <= cap && it.hasNext) {
+    var last: Array[Byte] = null
+    var count = 0
+    while (count <= cap && it.hasNext) {
       val l = it.next()
-      ls += l
-      ks += FileCdcDatabase.quickNestedLongField(l, chunkKey)
+      if (l.bytes ne last) { last = l.bytes; blocks += last }
+      block += blocks.size - 1
+      starts += l.start
+      ends += l.end
+      ks += FileCdcDatabase.scanLongField(l, key, topLevelOnly = false)
+      count += 1
     }
-    if (ls.size > cap) None
-    else Some(new BackfillRouting(ls.toArray, ks.result()))
+    if (count > cap) None
+    else Some(new BackfillRouting(blocks.toArray, block.result(),
+      starts.result(), ends.result(), ks.result()))
   }
 }
 
@@ -434,6 +672,12 @@ private[source] object BackfillRouting {
  * high, content) — a probe per line, no decode — and each partition
  * decodes only its own span's lines from it, in parallel with its
  * siblings.
+ *
+ * The first caller for a source builds its routing under that source's
+ * own once-holder ([[Entry]]), outside the map's bin lock: only callers
+ * for the same source wait for the build, never a source whose key shares
+ * the bin. A build that throws leaves the holder empty, and the next
+ * caller builds again.
  *
  * Memory contract: a routing holds the slice's lines, and the cache keeps
  * one routing per table. The build aborts past [[MaxEntries]] lines and
@@ -456,14 +700,35 @@ private[graft] object SnapshotOverlayCache {
   /** The table source a routing belongs to. Routing decodes nothing, so
     * the projection, parse policy and time zone — which shape the decode —
     * are not part of it. */
-  private case class Source(dialect: String, path: String, table: String,
-      chunkKey: String)
+  private[graft] case class Source(dialect: String, path: String,
+      table: String, chunkKey: String)
+
   /** The one routing kept per source: of the slice (0, high] of the store
-    * content `contentToken`; `routing` null = that slice is oversized. A
+    * content `contentToken`, built once by the first caller that asks. A
     * read at a newer log head or content replaces it, so the slices of a
     * live table do not pile up until memory pressure clears them. */
-  private final case class Entry(high: Long, contentToken: String,
-      routing: java.lang.ref.SoftReference[BackfillRouting])
+  private final class Entry(val high: Long, val contentToken: String) {
+    @volatile private var built = false
+    /** null = that slice is oversized. */
+    private var routing: java.lang.ref.SoftReference[BackfillRouting] = _
+
+    /** Still the routing for a read of (0, high] over `token`. */
+    def serves(h: Long, token: String): Boolean =
+      high == h && contentToken == token &&
+        (!built || routing == null || routing.get != null)
+
+    /** The routing, built by this caller when no one has built it yet
+      * (callers of this entry wait on its monitor meanwhile). */
+    def get(build: Int => Option[BackfillRouting]): Option[BackfillRouting] = {
+      if (!built) synchronized {
+        if (!built) {
+          routing = build(MaxEntries).map(new java.lang.ref.SoftReference(_)).orNull
+          built = true
+        }
+      }
+      Option(routing).flatMap(r => Option(r.get))
+    }
+  }
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[Source, Entry]()
 
@@ -477,26 +742,24 @@ private[graft] object SnapshotOverlayCache {
     // the same path/max-offset changes file sizes/mtimes → new entry
     val token = graft.cdc.dialect.CdcDialects.byName(p.dialect)
       .contentToken(p.path, p.table)
-    // compute serializes concurrent callers for the same source: the
-    // first partition routes, the rest block briefly (no decode happens
-    // here) and reuse
+    // the bin lock covers only this comparison; the build runs in get
     val e = cache.compute(Source(p.dialect, p.path, p.table, chunkKey),
       (_, cur) =>
-        if (cur != null && cur.high == p.high && cur.contentToken == token &&
-            (cur.routing == null || cur.routing.get != null)) cur
-        else Entry(p.high, token,
-          build(MaxEntries).map(new java.lang.ref.SoftReference(_)).orNull))
-    Option(e.routing).flatMap(r => Option(r.get))
+        if (cur != null && cur.serves(p.high, token)) cur
+        else new Entry(p.high, token))
+    e.get(build)
   }
 }
 
-/** DSv2 custom metrics of the snapshot read, summed over tasks and shown
-  * on the scan node of the plan (`BatchScanExec.metrics`). The ratio
-  * snapshotLinesRead / snapshotRowsEmitted is the chunk read's waste: 1.0
-  * when every chunk reads only its own window. snapshotChunksRead counts
-  * chunk ranges merged; a task merges a run of them, so it exceeds the
-  * task count whenever chunks are grouped. Spark instantiates each
-  * metric class by name to aggregate, hence one no-arg class per metric. */
+/** DSv2 custom metrics of the snapshot and log reads, summed over tasks
+  * and shown on the scan node of the plan (`BatchScanExec.metrics`). The
+  * ratio snapshotLinesRead / snapshotRowsEmitted is the chunk read's
+  * waste: 1.0 when every chunk reads only its own window.
+  * snapshotChunksRead counts chunk ranges merged; a task merges a run of
+  * them, so it exceeds the task count whenever chunks are grouped. The log
+  * read counts the lines of its windows, the lines the parse-error policy
+  * `skip` dropped, and the rows it emitted. Spark instantiates each metric
+  * class by name to aggregate, hence one no-arg class per metric. */
 object CdcScanMetrics {
   import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 
@@ -519,14 +782,24 @@ object CdcScanMetrics {
     "W2 backfill log lines decoded")
   final class SnapshotChunksReadMetric extends Sum("snapshotChunksRead",
     "snapshot chunks read")
+  final class LogLinesReadMetric extends Sum("logLinesRead",
+    "log lines read")
+  final class LogRowsEmittedMetric extends Sum("logRowsEmitted",
+    "log rows emitted")
+  final class LogLinesSkippedMetric extends Sum("logLinesSkipped",
+    "log lines skipped by parse.error-policy=skip")
 
   val SnapshotLinesRead = new SnapshotLinesReadMetric
   val SnapshotRowsEmitted = new SnapshotRowsEmittedMetric
   val BackfillLinesRouted = new BackfillLinesRoutedMetric
   val BackfillLinesDecoded = new BackfillLinesDecodedMetric
   val SnapshotChunksRead = new SnapshotChunksReadMetric
+  val LogLinesRead = new LogLinesReadMetric
+  val LogRowsEmitted = new LogRowsEmittedMetric
+  val LogLinesSkipped = new LogLinesSkippedMetric
   val all: Array[CustomMetric] = Array(SnapshotLinesRead, SnapshotRowsEmitted,
-    BackfillLinesRouted, BackfillLinesDecoded, SnapshotChunksRead)
+    BackfillLinesRouted, BackfillLinesDecoded, SnapshotChunksRead,
+    LogLinesRead, LogRowsEmitted, LogLinesSkipped)
 }
 
 /** Test seam (CdcSourceSpec failover tests, local-mode single-JVM only):
@@ -555,10 +828,11 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   private val dec = new EnvelopeDecoder(p.dialect, p.path, p.table,
     p.schemaDdl, p.chunkKey, p.parsePolicy, p.serverTimeZone, p.maskSpec)
 
+  private val ranges = p.ranges.toArray
   // The partition's chunk ranges are consecutive, so the whole partition
   // spans one contiguous key interval.
-  private val spanLo: Option[Long] = p.ranges.head._1
-  private val spanHi: Option[Long] = p.ranges.last._2
+  private val spanLo: Option[Long] = ranges.head._1
+  private val spanHi: Option[Long] = ranges.last._2
   private def inSpan(k: Long): Boolean =
     spanLo.forall(k >= _) && spanHi.forall(k < _)
 
@@ -575,10 +849,10 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
     * key. `prefilter` = probe each line's chunk key first and decode only
     * in-span or unroutable lines (needed on a full scan of the slice;
     * routed lines have passed the same probe already). */
-  private def buildOverlay(lines: Iterator[String],
+  private def buildOverlay(lines: Iterator[Utf8Line],
       prefilter: Boolean): SnapshotOverlay = {
-    val m = mutable.LinkedHashMap[Long, OverlayEntry]()
-    var truncOff = 0L
+    val b = new SnapshotOverlay.Collector
+    val ckBytes = dec.chunkKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     lines.foreach { line =>
       // cheap key prefilter: the chunk-key value is identical in before/
       // after (key-stable by the chunk-key contract — the reference dedups
@@ -587,28 +861,27 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
       // full decode only in-span
       if (!prefilter || {
         backfillLinesRouted += 1
-        val quick = FileCdcDatabase.quickNestedLongField(line, dec.chunkKey)
+        val quick = FileCdcDatabase.scanLongField(line, ckBytes,
+          topLevelOnly = false)
         quick == FileCdcDatabase.NoLong || inSpan(quick)
       }) {
         backfillLinesDecoded += 1
-        dec.decodeEnvelopeSafe(line).foreach { env =>
-          // schema-change records go to the history, not the data merge
-          // (T2); truncate has no images — it only advances the death
-          // frontier (EVERY key span sees it)
-          if (env.op == ExternalOp.Truncate)
-            truncOff = math.max(truncOff, env.offset)
-          else if (env.op != ExternalOp.SchemaChange && inSpan(env.chunkKeyVal))
-            env.op match {
-              case ExternalOp.Delete =>
-                m(env.key) = OverlayEntry(env.chunkKeyVal, None)
-              case _ =>
-                m(env.key) = OverlayEntry(env.chunkKeyVal,
-                  Some((env.offset, env.after)))
-            }
+        val env = dec.decodeEnvelopeSafe(line)
+        // schema-change records go to the history, not the data merge
+        // (T2); truncate has no images — it only advances the death
+        // frontier (EVERY key span sees it)
+        if (env != null) {
+          if (env.op == ExternalOp.Truncate) b.truncate(env.offset)
+          else if (env.op != ExternalOp.SchemaChange) {
+            val ck = env.chunkKeyVal
+            if (inSpan(ck))
+              b.put(env.key, ck, env.offset,
+                if (env.op == ExternalOp.Delete) null else env.after)
+          }
         }
       }
     }
-    SnapshotOverlay(m, truncOff)
+    b.result()
   }
 
   // This span's lines from the executor's shared routing of the log slice
@@ -616,63 +889,70 @@ class SnapshotChunkReader(p: SnapshotChunkPartition)
   // full scan of the slice. Both decode the same lines in the same order.
   private lazy val overlay: SnapshotOverlay = {
     val routing = SnapshotOverlayCache.sharedRouting(p, dec.chunkKey, cap =>
-      BackfillRouting.build(dec.logLinesInRange(0L, p.high).map { l =>
+      BackfillRouting.build(dec.logRecords(0L, p.high).map { l =>
         backfillLinesRouted += 1; l
       }, dec.chunkKey, cap))
     routing match {
       case Some(r) => buildOverlay(r.linesFor(spanLo, spanHi), prefilter = false)
-      case None => buildOverlay(dec.logLinesInRange(0L, p.high), prefilter = true)
+      case None => buildOverlay(dec.logRecords(0L, p.high), prefilter = true)
     }
   }
+
+  private val merge = new ChunkMerge
+  private var nextRange = 0
+  private var slot = 0
 
   // W2 per chunk range: chunk rows keyed by pk, then the partition's log
   // overlay applied — CREATE/UPDATE replace, DELETE removes, and a
   // TRUNCATE in (0, high] kills every row whose newest write precedes it
   // (the snapshot is state at offset 0, so a truncate skips its scan
   // entirely — only post-truncate log writes can be live). Snapshot input
-  // is range-pushed to the dialect. Ranges evaluate lazily one at a time
-  // (flatMap), so a grouped partition holds O(chunk + span changes) rows.
-  private def mergeRange(lo: Option[Long], hi: Option[Long]): Iterator[InternalRow] = {
+  // is range-pushed to the dialect. Ranges merge one at a time, so a
+  // grouped partition holds O(chunk + span changes) rows.
+  private def mergeRange(lo: Option[Long], hi: Option[Long]): Unit = {
     chunksRead += 1
-    val byKey = snapshotRows(lo, hi)
-    overlay.applyRange(byKey, lo, hi)
-    emitAll(byKey)
+    merge.clear()
+    if (overlay.truncateOffset == 0L) snapshotRows(lo, hi)
+    overlay.applyRange(merge, lo, hi)
   }
 
-  /** The chunk range's snapshot rows by pk, as (offset 0, image). */
-  private def snapshotRows(lo: Option[Long], hi: Option[Long])
-      : mutable.LinkedHashMap[Long, (Long, InternalRow)] = {
-    def inRange(k: Long): Boolean = lo.forall(k >= _) && hi.forall(k < _)
-    val byKey = mutable.LinkedHashMap[Long, (Long, InternalRow)]()
-    if (overlay.truncateOffset == 0L)
-      dec.snapshotLines(lo, hi).foreach { line =>
-        snapshotLinesRead += 1
-        val row = dec.codec.decode(line)
-        val ck = CdcPlanner.toLongKey(row.get(dec.ckIdx, dec.ckType))
-        if (inRange(ck))
-          byKey(CdcPlanner.toLongKey(row.get(dec.pkIdx, dec.pkType))) = (0L, row)
-      }
-    byKey
-  }
-
-  private def emitAll(
-      byKey: mutable.LinkedHashMap[Long, (Long, InternalRow)])
-      : Iterator[InternalRow] =
-    byKey.valuesIterator.map { case (off, img) =>
-      dec.emit(img, EnvelopeDecoder.Insert, off, 0L)
+  /** The chunk range's snapshot rows by pk, at offset 0. */
+  private def snapshotRows(lo: Option[Long], hi: Option[Long]): Unit = {
+    val it = dec.snapshotRecords(lo, hi)
+    while (it.hasNext) {
+      snapshotLinesRead += 1
+      val row = dec.decodeRow(it.next())
+      val ck = dec.rowCk
+      if (lo.forall(ck >= _) && hi.forall(ck < _))
+        merge.put(dec.rowPk, row, 0L)
     }
+  }
 
-  private val merged: Iterator[InternalRow] =
-    p.ranges.iterator.flatMap { case (lo, hi) => mergeRange(lo, hi) }
-
-  // resources opened while this reader's loop runs land in its own scope,
-  // so close() sweeps exactly this reader's leftovers (fd hygiene at
-  // many-chunk scale) even if Spark interleaves readers on one task thread
+  // resources opened while this reader merges a range land in its own
+  // scope, so close() sweeps exactly this reader's leftovers (fd hygiene
+  // at many-chunk scale) even if Spark interleaves readers on one task
+  // thread. A range's files open and close inside its merge.
   private val scope = new FileCdcDatabase.ResourceScope
   private var cur: InternalRow = _
-  override def next(): Boolean = FileCdcDatabase.inScope(scope) {
-    if (merged.hasNext) { cur = merged.next(); rowsEmitted += 1; true }
-    else false
+  override def next(): Boolean = {
+    while (true) {
+      while (slot < merge.size) {
+        val r = merge.row(slot)
+        val off = merge.offset(slot)
+        slot += 1
+        if (r != null) {
+          cur = dec.finish(r, EnvelopeDecoder.Insert, off, 0L)
+          rowsEmitted += 1
+          return true
+        }
+      }
+      if (nextRange >= ranges.length) return false
+      val (lo, hi) = ranges(nextRange)
+      nextRange += 1
+      FileCdcDatabase.inScope(scope)(mergeRange(lo, hi))
+      slot = 0
+    }
+    false
   }
   override def get(): InternalRow = cur
   override def currentMetricsValues()
@@ -702,26 +982,45 @@ class LogRangeReader(p: LogRangePartition)
     p.schemaDdl, parsePolicy = p.parsePolicy,
     serverTimeZone = p.serverTimeZone, maskSpec = p.maskSpec)
 
-  // lazy: a JDBC dialect's logLines borrows a pooled connection and
-  // registers the cursor the moment it is CALLED — that must happen inside
-  // next()'s inScope so the cursor lands in this reader's scope (a
-  // constructor-time open would fall into the thread scope and survive
-  // close() on early-stopped scans, leaking the pooled connection)
   // Debezium skipped.operations: op types dropped from the emitted stream
   // (log phase only — the snapshot merge still applies every op, like
   // Debezium's snapshot of live state that already reflects them)
   private val skipped: Set[String] =
     p.skippedOps.split(",").map(_.trim).filter(_.nonEmpty).toSet
 
-  private lazy val rows: Iterator[InternalRow] = {
-    // shouldEmit (W3): only events past the key's finished-chunk high
-    // watermark; uniform high == p.from for the file dialect. Offsets are
-    // prefiltered cheaply before the full envelope decode.
-    var firstEventOffset = Long.MinValue
-    dec.logLinesInRange(p.from, p.to).flatMap(dec.decodeEnvelopeSafe)
-      .filterNot(env => skipped.contains(env.op))
-      .flatMap { env =>
-        val emitted: Seq[InternalRow] = env.op match {
+  // task counters behind currentMetricsValues (CdcScanMetrics)
+  private var linesRead = 0L
+  private var rowsEmitted = 0L
+  private var linesSkipped = 0L
+
+  // lazy: a JDBC dialect's logRecords borrows a pooled connection and
+  // registers the cursor the moment it is CALLED — that must happen inside
+  // next()'s inScope so the cursor lands in this reader's scope (a
+  // constructor-time open would fall into the thread scope and survive
+  // close() on early-stopped scans, leaking the pooled connection)
+  private lazy val lines: Iterator[Utf8Line] = dec.logRecords(p.from, p.to)
+
+  // the rows of the current event still to emit: pending(next until n)
+  private val pending = new Array[InternalRow](2)
+  private var pendingNext = 0
+  private var pendingN = 0
+  private var firstEventOffset = Long.MinValue
+
+  /** Decode lines until one yields rows to emit; false at the end. */
+  private def fill(): Boolean = {
+    while (lines.hasNext) {
+      linesRead += 1
+      val env = dec.decodeEnvelopeSafe(lines.next())
+      if (env == null) linesSkipped += 1
+      else if (!skipped.contains(env.op)) {
+        // shouldEmit (W3): only events past the key's finished-chunk high
+        // watermark; uniform high == p.from for the file dialect
+        pendingN = 0
+        def add(img: InternalRow, kind: UTF8String): Unit = {
+          pending(pendingN) = dec.finish(img, kind, env.offset, env.ts)
+          pendingN += 1
+        }
+        env.op match {
           // schema changes route to SchemaHistory, not the row stream (the
           // reference emits them only under includeSchemaChanges);
           // truncates carry no images and Flink's retract stream has no
@@ -730,35 +1029,46 @@ class LogRangeReader(p: LogRangePartition)
           // (whose else-branch would otherwise mis-emit them as updates)
           // ever sees one, so a truncate contributes no log-phase rows
           // (its state effect lives in the snapshot merge's death frontier)
-          case ExternalOp.SchemaChange | ExternalOp.Truncate => Seq.empty
-          case ExternalOp.Create | ExternalOp.Read =>
-            Seq(dec.emit(env.after, Insert, env.offset, env.ts))
-          case ExternalOp.Delete =>
-            Seq(dec.emit(env.before, Delete, env.offset, env.ts))
+          case ExternalOp.SchemaChange | ExternalOp.Truncate => ()
+          case ExternalOp.Create | ExternalOp.Read => add(env.after, Insert)
+          case ExternalOp.Delete => add(env.before, Delete)
           case ExternalOp.Update if p.changelogMode == "upsert" =>
-            Seq(dec.emit(env.after, UpdateAfter, env.offset, env.ts))
+            add(env.after, UpdateAfter)
           case ExternalOp.Update =>
-            Seq(dec.emit(env.before, UpdateBefore, env.offset, env.ts),
-              dec.emit(env.after, UpdateAfter, env.offset, env.ts))
+            add(env.before, UpdateBefore); add(env.after, UpdateAfter)
         }
         // mid-transaction resume (skipRows): rows already delivered from
         // the FIRST event past the seek position are dropped; later
         // events are never affected (BinlogOffset.rowsToSkip scope)
-        if (p.skipRows > 0 && emitted.nonEmpty &&
+        pendingNext = 0
+        if (p.skipRows > 0 && pendingN > 0 &&
             (firstEventOffset == Long.MinValue ||
               env.offset == firstEventOffset)) {
           firstEventOffset = env.offset
-          emitted.drop(p.skipRows)
-        } else emitted
+          pendingNext = math.min(p.skipRows, pendingN)
+        }
+        if (pendingNext < pendingN) return true
       }
+    }
+    false
   }
 
   private val scope = new FileCdcDatabase.ResourceScope
   private var cur: InternalRow = _
-  override def next(): Boolean = FileCdcDatabase.inScope(scope) {
-    if (rows.hasNext) { cur = rows.next(); true } else false
-  }
+  override def next(): Boolean =
+    if (pendingNext < pendingN || FileCdcDatabase.inScope(scope)(fill())) {
+      cur = pending(pendingNext)
+      pending(pendingNext) = null
+      pendingNext += 1
+      rowsEmitted += 1
+      true
+    } else false
   override def get(): InternalRow = cur
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(CdcScanMetrics.LogLinesRead.value(linesRead),
+      CdcScanMetrics.LogRowsEmitted.value(rowsEmitted),
+      CdcScanMetrics.LogLinesSkipped.value(linesSkipped))
   override def close(): Unit = {
     scope.closeAll()
     FileCdcDatabase.closeAllOnThread()

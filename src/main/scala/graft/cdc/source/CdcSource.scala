@@ -693,7 +693,7 @@ object CdcPlanner {
         val codec = new JsonRowCodec(m.schema)
         val ckIdx = m.schema.fieldIndex(ck)
         val ckType = m.schema(ckIdx).dataType
-        cfg.dialect.snapshotLines(cfg.path, m, ck, None, None)
+        cfg.dialect.snapshotRecords(cfg.path, m, ck, None, None)
           .map(l => toLongKey(codec.decode(l).get(ckIdx, ckType)))
           .toSeq.sorted.iterator
       },

@@ -82,9 +82,8 @@ object InflationProbes {
         sum(when(col("dfc") > cap, 1L).otherwise(0L)).as("capped"))
       .collect()(0)
     val b = fps.join(dfreq.filter(col("dfc") <= cap).select(col("fp")), "fp")
-    val pairs = b.as("x").join(b.as("y"), Seq("fp"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id"), col("y.doc_id"))
+    val pairs = Pairs.withinKey(b, Seq("fp"), "doc_id")
+      .groupBy(col("a.doc_id"), col("b.doc_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2).count()
     Map("max_df" -> stats.getLong(0), "capped_keys" -> stats.getLong(1),

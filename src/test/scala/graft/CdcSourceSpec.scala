@@ -654,11 +654,11 @@ class CdcSourceSpec extends SparkSpecBase {
       fds.count(fd => scala.util.Try(java.nio.file.Files.readSymbolicLink(
         fd.toPath).toString).toOption.contains(f.getCanonicalPath))
     }
-    val key = (l: String) => FileCdcDatabase.quickLongField(l, "n")
+    val key = (l: graft.cdc.Utf8Line) => FileCdcDatabase.quickLongField(l, "n")
     val src = FileCdcDatabase.sortedLines(f.getPath, Some(41L), Some(44L), key)
-    assert(src.next() === """{"n":41}""")
+    assert(src.next().toString === """{"n":41}""")
     assert(openOnFile() === 1)
-    assert(src.toList === Seq("""{"n":42}""", """{"n":43}"""))
+    assert(src.map(_.toString).toList === Seq("""{"n":42}""", """{"n":43}"""))
     // the window's end closed the file although 57 lines follow it
     assert(openOnFile() === 0)
   }
@@ -680,6 +680,34 @@ class CdcSourceSpec extends SparkSpecBase {
     assert(metric("backfillLinesRouted") === 6L)
     assert(metric("backfillLinesDecoded") === 6L)
     assert(metric("snapshotChunksRead") === 4L)
+  }
+
+  test("log read metrics: lines read, rows emitted, lines skipped") {
+    val dir = tmpDir("cdc-log-metrics")
+    writeDb(dir, 6L)
+    // one undecodable line in the middle of the offset-sorted log file
+    val logFile = java.nio.file.Paths.get(
+      FileCdcDatabase.dataFiles(dir, "t", "log").head)
+    val lines = java.nio.file.Files.readAllLines(logFile)
+    lines.add(lines.size / 2, """{"truncated": [1,""")
+    java.nio.file.Files.write(logFile, lines)
+    val df = spark.read.format("graft-cdc")
+      .option("path", dir).option("table", "t")
+      .option("scan.startup.mode", "earliest")
+      .option("scan.parse.error-policy", "skip")
+      .option("scan.stream.log-partitions", "1")
+      .load()
+    val rows = df.collect()
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+    def metric(n: String): Long = scan.metrics(n).value
+    // 2 updates -> 4 rows, 2 deletes, 2 inserts
+    assert(rows.length === 8)
+    assert(metric("logLinesRead") === 7L)
+    assert(metric("logLinesSkipped") === 1L)
+    assert(metric("logRowsEmitted") === 8L)
+    assert(metric("snapshotLinesRead") === 0L)
   }
 
   test("snapshotChunksRead: every planned chunk, across grouped tasks") {

@@ -101,4 +101,40 @@ class OverlayCacheSpec extends SparkSpecBase {
       }
     } finally SnapshotOverlayCache.clear()
   }
+
+  test("a routing build blocks only its own source's callers") {
+    import SnapshotOverlayCache.Source
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val path = tmpDir("ovl-bins") // no tables: an empty content token
+    def part(table: String) = graft.cdc.source.SnapshotChunkPartition("file",
+      path, table, 0, Seq((None, None)), 10L, "")
+    // the map bin of a source's key at every table size up to 2^16
+    def bin(t: String): Int = {
+      val h = Source("file", path, t, "id").hashCode
+      (h ^ (h >>> 16)) & 0xffff
+    }
+    // a second source whose key shares the first one's bin
+    val other = Iterator.from(0).map(i => s"b$i").find(t => bin(t) == bin("a")).get
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    SnapshotOverlayCache.clear()
+    val blocked = Future(SnapshotOverlayCache.sharedRouting(part("a"), "id", _ => {
+      entered.countDown()
+      release.await()
+      None
+    }))
+    try {
+      assert(entered.await(30, TimeUnit.SECONDS))
+      // source B's read goes through while source A's build still blocks
+      val read = Future(SnapshotOverlayCache.sharedRouting(part(other), "id",
+        _ => None))
+      assert(Await.result(read, 10.seconds) === None)
+      assert(!blocked.isCompleted)
+    } finally release.countDown()
+    assert(Await.result(blocked, 30.seconds) === None)
+    SnapshotOverlayCache.clear()
+  }
 }

@@ -14,28 +14,45 @@ import org.scalacheck.rng.Seed
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** The chunk-key index of [[SnapshotOverlay]]: applying a chunk range's
-  * entries found by binary search must equal the naive full scan over every
-  * entry in log order — the same surviving rows, in the same per-partition
-  * order. Seeds are printed; GRAFT_PROP_SEED replays another one. */
+/** The chunk-key index of [[SnapshotOverlay]] and the array merge of
+  * [[ChunkMerge]]: applying a chunk range's entries found by binary search
+  * must equal the naive full scan over every entry in log order, merged
+  * the boxed way — rows by pk in a `LinkedHashMap` — with the same
+  * surviving rows in the same per-partition row order. Seeds are printed;
+  * GRAFT_PROP_SEED replays another one. */
 class OverlayIndexSpec extends SparkSpecBase {
 
   private val seed: Long =
     sys.env.get("GRAFT_PROP_SEED").map(_.toLong).getOrElse(20261017L)
 
+  /** The reference merge: rows by pk as (offset, image), in the order a
+    * LinkedHashMap keeps them. */
   private type ByKey = mutable.LinkedHashMap[Long, (Long, InternalRow)]
+  /** The reference overlay: per pk, in first-touch order, its chunk key
+    * and its newest write (None = deleted). */
+  private type RefOverlay = mutable.LinkedHashMap[Long, (Long, Option[(Long, InternalRow)])]
 
   private def inRange(lo: Option[Long], hi: Option[Long])(k: Long): Boolean =
     lo.forall(k >= _) && hi.forall(k < _)
 
-  /** The reference: every entry, in log order, filtered by chunk key. */
-  private def naiveApply(ov: SnapshotOverlay, byKey: ByKey,
+  /** Every entry of the reference overlay, in log order, filtered by chunk
+    * key: CREATE/UPDATE replace, DELETE removes, and a write at or before
+    * the truncate removes. */
+  private def naiveApply(ov: RefOverlay, trunc: Long, byKey: ByKey,
       lo: Option[Long], hi: Option[Long]): Unit =
-    (0 until ov.size).filter(i => inRange(lo, hi)(ov.ckVal(i)))
-      .foreach(ov.applyEntry(byKey, _))
+    ov.foreach { case (pk, (ck, v)) =>
+      if (inRange(lo, hi)(ck)) v match {
+        case Some((off, img)) if off > trunc => byKey(pk) = (off, img)
+        case _ => byKey.remove(pk)
+      }
+    }
 
-  private def render(byKey: ByKey): Seq[(Long, Long, Any)] =
-    byKey.toSeq.map { case (k, (off, img)) => (k, off, img.getLong(0)) }
+  private def render(m: ChunkMerge): Seq[(Long, Any)] =
+    (0 until m.size).filter(m.row(_) != null)
+      .map(i => (m.offset(i), m.row(i).getLong(0)))
+
+  private def render(byKey: ByKey): Seq[(Long, Any)] =
+    byKey.valuesIterator.map { case (off, img) => (off, img.getLong(0)) }.toSeq
 
   test("indexed range apply equals the naive full scan (generated overlays)") {
     println(s"OverlayIndexSpec: seed=$seed")
@@ -52,21 +69,39 @@ class OverlayIndexSpec extends SparkSpecBase {
       val s = seed * 31L + k
       val ((es, trunc), lo, hi) = Gen.zip(overlay, bound, bound)
         .pureApply(Gen.Parameters.default, Seed(s))
-      val m = mutable.LinkedHashMap[Long, OverlayEntry]()
+      val ref: RefOverlay = mutable.LinkedHashMap.empty
+      val b = new SnapshotOverlay.Collector
+      if (trunc > 0L) b.truncate(trunc)
       es.foreach { case (pk, ck, off) =>
-        m(pk) = OverlayEntry(ck, off.map(o => (o, new GenericInternalRow(
-          Array[Any](pk * 1000 + o)))))
+        val img = off.map(o => new GenericInternalRow(Array[Any](pk * 1000 + o)))
+        ref(pk) = (ck, off.map(o => (o, img.get)))
+        b.put(pk, ck, off.getOrElse(0L), img.orNull)
       }
-      val ov = SnapshotOverlay(m, trunc)
+      val ov = b.result()
+      assert(ov.truncateOffset === trunc, s"seed $s")
+      // the collector keeps the reference's first-touch order
+      assert((0 until ov.size).map(ov.ckVal) === ref.values.map(_._1).toSeq,
+        s"seed $s")
       assert(ov.indicesInRange(lo, hi).toSeq ===
         (0 until ov.size).filter(i => inRange(lo, hi)(ov.ckVal(i))),
         s"seed $s")
-      // the snapshot side: rows of a few keys, some also in the overlay
-      def start: ByKey = mutable.LinkedHashMap((0L to 30L by 3L).map(pk =>
-        pk -> (0L, new GenericInternalRow(Array[Any](-pk)): InternalRow)): _*)
-      val indexed = start; ov.applyRange(indexed, lo, hi)
-      val naive = start; naiveApply(ov, naive, lo, hi)
-      assert(render(indexed) === render(naive), s"seed $s")
+      // the snapshot side: rows of a few keys, some also in the overlay,
+      // in pk order (a sorted chunk) or shuffled, with a repeated key
+      val sorted = (0L to 30L by 3L).map(pk =>
+        pk -> (new GenericInternalRow(Array[Any](-pk)): InternalRow))
+      val snapshot = if (k % 2 == 0) sorted
+        else new scala.util.Random(s).shuffle(sorted :+ (sorted(2)._1 ->
+          (new GenericInternalRow(Array[Any](-1000L)): InternalRow)))
+      val merge = new ChunkMerge
+      // a used merge: clear() must leave nothing of the previous range
+      merge.put(99L, new GenericInternalRow(Array[Any](99L)), 5L)
+      merge.clear()
+      snapshot.foreach { case (pk, row) => merge.put(pk, row, 0L) }
+      ov.applyRange(merge, lo, hi)
+      val naive: ByKey = mutable.LinkedHashMap(snapshot.map {
+        case (pk, row) => pk -> ((0L, row)) }: _*)
+      naiveApply(ref, trunc, naive, lo, hi)
+      assert(render(merge) === render(naive), s"seed $s")
     }
   }
 
@@ -155,36 +190,36 @@ class OverlayIndexSpec extends SparkSpecBase {
   }
 
   /** The naive full-scan merge of one partition: every snapshot line and
-    * every log line of (0, high] decoded, one unfiltered overlay, and each
-    * range's entries found by scanning them all. */
+    * every log line of (0, high] decoded, one unfiltered reference overlay,
+    * and each range merged the boxed way by scanning every entry. */
   private def naiveMerge(p: SnapshotChunkPartition): Seq[InternalRow] = {
     val dec = new EnvelopeDecoder(p.dialect, p.path, p.table, p.schemaDdl,
       p.chunkKey, p.parsePolicy, p.serverTimeZone, p.maskSpec)
-    val m = mutable.LinkedHashMap[Long, OverlayEntry]()
+    val ov: RefOverlay = mutable.LinkedHashMap.empty
     var trunc = 0L
-    dec.logLinesInRange(0L, p.high).foreach { line =>
-      dec.decodeEnvelopeSafe(line).foreach { env =>
+    dec.logRecords(0L, p.high).foreach { line =>
+      val env = dec.decodeEnvelopeSafe(line)
+      if (env != null) {
         if (env.op == ExternalOp.Truncate) trunc = math.max(trunc, env.offset)
         else if (env.op != ExternalOp.SchemaChange)
-          m(env.key) = OverlayEntry(env.chunkKeyVal,
+          ov(env.key) = (env.chunkKeyVal,
             if (env.op == ExternalOp.Delete) None
             else Some((env.offset, env.after)))
       }
     }
-    val ov = SnapshotOverlay(m, trunc)
-    val snapshot = dec.dialect.snapshotLines(p.path, dec.meta, dec.chunkKey,
-      None, None).map(dec.codec.decode).toVector
+    val snapshot = dec.dialect.snapshotRecords(p.path, dec.meta, dec.chunkKey,
+      None, None).map { l =>
+      val row = dec.decodeRow(l)
+      (dec.rowPk, dec.rowCk, row)
+    }.toVector
     p.ranges.flatMap { case (lo, hi) =>
       val byKey: ByKey = mutable.LinkedHashMap.empty
-      if (trunc == 0L) snapshot.foreach { row =>
-        val ck = CdcPlanner.toLongKey(row.get(dec.ckIdx, dec.ckType))
-        if (inRange(lo, hi)(ck))
-          byKey(CdcPlanner.toLongKey(row.get(dec.pkIdx, dec.pkType))) =
-            (0L, row)
+      if (trunc == 0L) snapshot.foreach { case (pk, ck, row) =>
+        if (inRange(lo, hi)(ck)) byKey(pk) = (0L, row)
       }
-      naiveApply(ov, byKey, lo, hi)
+      naiveApply(ov, trunc, byKey, lo, hi)
       byKey.valuesIterator.map { case (off, img) =>
-        dec.emit(img, EnvelopeDecoder.Insert, off, 0L) }.toList
+        dec.finish(img, EnvelopeDecoder.Insert, off, 0L) }.toList
     }
   }
 
@@ -249,7 +284,8 @@ class OverlayIndexSpec extends SparkSpecBase {
           val got = mutable.ArrayBuffer.empty[InternalRow]
           try while (r.next()) got += r.get()
           finally r.close()
-          // each partition's rows are its chunks' naive merges, concatenated
+          // each partition's rows are its chunks' naive merges,
+          // concatenated: the same rows in the same order
           assert(got.toSeq === naiveMerge(p), s"$label partition ${p.chunkId}")
           ids ++= got.map(_.getLong(0))
         }

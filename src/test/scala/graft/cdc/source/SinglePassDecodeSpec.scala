@@ -1,7 +1,7 @@
 package graft.cdc.source
 
 import graft.SparkSpecBase
-import graft.cdc.{ChangeRecord, FileCdcDatabase}
+import graft.cdc.{ChangeRecord, FileCdcDatabase, Utf8Line}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
@@ -11,11 +11,15 @@ import org.scalacheck.rng.Seed
 
 import scala.util.Try
 
-/** Differential property test: the single-pass line decoder of
+/** Differential property test: the single-pass byte decoder of
   * [[JsonRowCodec]] against the Jackson tree decode it must agree with —
   * same value, or the same exception — for row lines and change-envelope
-  * lines over the full type set, under adversarial mutations. A line the
-  * single-pass decoder accepts must decode to exactly the tree's value.
+  * lines over the full type set, under adversarial mutations: multi-byte
+  * UTF-8 in values and keys, `\uXXXX` surrogate pairs and other escapes,
+  * shapes the scanner declines, and bytes that are not well-formed UTF-8.
+  * A line the single-pass decoder accepts must decode to exactly the
+  * tree's value. Lines are decoded as slices in the middle of a larger
+  * buffer, as the file reader hands them out.
   *
   * Seeds are printed; set GRAFT_PROP_SEED to replay or explore another
   * one, GRAFT_PROP_CASES to change the number of lines per seed. */
@@ -34,6 +38,16 @@ class SinglePassDecodeSpec extends SparkSpecBase {
       s -> gen.pureApply(Gen.Parameters.default, Seed(s))
     }
 
+  /** `line`'s UTF-8 bytes as a slice of a larger buffer whose bytes
+    * around it would change the result if a scan ran past its ends. */
+  private def sliced(bytes: Array[Byte]): Utf8Line = {
+    val before = "{\"id\":1,\"c_str\":\"".getBytes("UTF-8")
+    val after = "\"}\n{\"id\":2}".getBytes("UTF-8")
+    new Utf8Line(before ++ bytes ++ after, before.length,
+      before.length + bytes.length)
+  }
+  private def sliced(line: String): Utf8Line = sliced(line.getBytes("UTF-8"))
+
   /** Value or exception, rendered so that any difference shows. */
   private def outcome[A](t: Try[A])(render: A => String): String =
     t.fold(e => s"throws ${e.getClass.getName}: ${e.getMessage}", render)
@@ -43,14 +57,18 @@ class SinglePassDecodeSpec extends SparkSpecBase {
     val codec = new JsonRowCodec(schema, "Asia/Shanghai")
     var accepted = 0
     lines(rowLine, 1).foreach { case (s, line) =>
-      val tree = Try(codec.decodeTree(line))
-      val fast = codec.decodeSinglePass(line)
+      val bytes = sliced(line)
+      val tree = Try(codec.decodeTree(bytes))
+      val fast = codec.decodeSinglePass(bytes)
       if (fast != null) {
         accepted += 1
         assert(tree.isSuccess && canon(fast, schema) == canon(tree.get, schema),
           s"seed $s: single-pass ${canon(fast, schema)} vs tree " +
             s"${outcome(tree)(canon(_, schema))} on line: $line")
       }
+      assert(outcome(Try(codec.decode(bytes)))(canon(_, schema)) ===
+        outcome(tree)(canon(_, schema)), s"seed $s line: $line")
+      // the String entry points decode the string's UTF-8 encoding
       assert(outcome(Try(codec.decode(line)))(canon(_, schema)) ===
         outcome(tree)(canon(_, schema)), s"seed $s line: $line")
     }
@@ -77,13 +95,45 @@ class SinglePassDecodeSpec extends SparkSpecBase {
         canon(e.after, schema)
     var accepted = 0
     lines(envelopeLine, 2).foreach { case (s, line) =>
-      if (dec.codec.decodeEnvelopeSinglePass(line) != null) accepted += 1
-      assert(outcome(Try(dec.decodeEnvelope(line)))(render) ===
-        outcome(Try(dec.decodeEnvelopeTree(line)))(render),
+      if (dec.singlePassAccepts(line)) accepted += 1
+      val bytes = sliced(line)
+      val tree = outcome(Try(dec.decodeEnvelopeTree(bytes)))(render)
+      assert(outcome(Try(dec.decodeEnvelope(bytes)))(render) === tree,
+        s"seed $s line: $line")
+      assert(outcome(Try(dec.decodeEnvelope(line)))(render) === tree,
         s"seed $s line: $line")
     }
     println(s"SinglePassDecodeSpec envelopes: accepted $accepted of $cases")
     assert(accepted > cases / 4 && accepted < cases)
+  }
+
+  test("bytes that are not well-formed UTF-8: byte decode equals the tree decode") {
+    println(s"SinglePassDecodeSpec malformed UTF-8: seed=$seed cases=$cases")
+    val codec = new JsonRowCodec(schema, "Asia/Shanghai")
+    val strict = java.nio.charset.StandardCharsets.UTF_8
+    var malformed = 0
+    lines(damagedLine, 3).foreach { case (s, line) =>
+      val bytes = line.getBytes("ISO-8859-1") // one char per byte
+      val wellFormed = scala.util.Try(strict.newDecoder()
+        .decode(java.nio.ByteBuffer.wrap(bytes))).isSuccess
+      assert(Utf8Line.isWellFormed(bytes, 0, bytes.length) === wellFormed,
+        s"seed $s bytes: ${bytes.map("%02x".format(_)).mkString(" ")}")
+      val l = sliced(bytes)
+      val tree = Try(codec.decodeTree(l))
+      val fast = codec.decodeSinglePass(l)
+      if (!wellFormed) {
+        malformed += 1
+        assert(fast == null, s"seed $s: accepted malformed bytes")
+        assert(tree.failed.toOption.exists(
+          _.isInstanceOf[java.nio.charset.CharacterCodingException]), s"seed $s")
+      } else if (fast != null)
+        assert(tree.isSuccess && canon(fast, schema) == canon(tree.get, schema),
+          s"seed $s")
+      assert(outcome(Try(codec.decode(l)))(canon(_, schema)) ===
+        outcome(tree)(canon(_, schema)), s"seed $s")
+    }
+    println(s"SinglePassDecodeSpec malformed UTF-8: $malformed of $cases malformed")
+    assert(malformed > cases / 4 && malformed < cases)
   }
 }
 
@@ -112,6 +162,8 @@ object SinglePassDecodeSpec {
     StructField("c_map", MapType(StringType, LongType)),
     StructField("c_row", nested),
     StructField("c_rows", ArrayType(nested)),
+    // a key whose UTF-8 bytes are not ASCII
+    StructField("c_\u00e9\u4e2d", StringType),
     StructField("c_year", IntegerType, nullable = true,
       new MetadataBuilder().putString("comment", "graft.type=year").build())))
 
@@ -182,11 +234,14 @@ object SinglePassDecodeSpec {
 
   /** Text with everything an escape or encoding path can trip on. */
   private val rawText: Gen[String] = few(Gen.frequency(
-    20 -> Gen.alphaNumChar,
-    2 -> Gen.oneOf(' ', '"', '\\', '/', ':', ',', '{', '}', '[', ']'),
-    1 -> Gen.oneOf('\n', '\t', '\u0000', '\u001f', '\u007f'),
-    2 -> Gen.oneOf('\u00e9', '\u00df', '\u4e2d', '\u2028', '\ufeff'),
-    1 -> Gen.oneOf('\ud83d', '\ude00')), 16).map(_.mkString)
+    20 -> Gen.alphaNumChar.map(_.toString),
+    2 -> oneOf(" ", "\"", "\\", "/", ":", ",", "{", "}", "[", "]"),
+    1 -> oneOf("\n", "\t", "\u0000", "\u001f", "\u007f"),
+    2 -> oneOf("\u00e9", "\u00df", "\u4e2d", "\u2028", "\ufeff"),
+    1 -> oneOf("\ud83d", "\ude00"),
+    // a whole surrogate pair: raw, a 4-byte UTF-8 character; escaped, a
+    // \uXXXX pair (or half of one, when only one char gets escaped)
+    1 -> Gen.const("\ud83d\ude00")), 16).map(_.mkString)
 
   /** A JSON string literal of `raw`, each character escaped in a random
     * valid style; hostile lines sometimes carry a raw control character
@@ -338,6 +393,33 @@ object SinglePassDecodeSpec {
 
   val rowLine: Gen[String] = Gen.oneOf(false, true).flatMap { hostile =>
     objectOf(schema, 3, hostile).flatMap(mutate(_, hostile))
+  }
+
+  /** Byte sequences to splice into a line: malformed ones (a stray
+    * continuation byte, overlong forms, truncated sequences, an encoded
+    * surrogate, a code point past U+10FFFF, bytes UTF-8 never uses) and
+    * well-formed multi-byte characters. */
+  private val damages = Seq(Array(0x80), Array(0xc0, 0xaf), Array(0xc3),
+    Array(0xe2, 0x82), Array(0xed, 0xa0, 0x80), Array(0xf4, 0x90, 0x80, 0x80),
+    Array(0xff), Array(0xe0, 0x80, 0xaf), Array(0xf0, 0x80, 0x80, 0xaf),
+    Array(0xf8, 0x88, 0x80, 0x80, 0x80), Array(0xc3, 0xa9),
+    Array(0xe4, 0xb8, 0xad), Array(0xf0, 0x9f, 0x98, 0x80))
+    .map(d => new String(d.map(_.toByte), "ISO-8859-1"))
+
+  /** A row line's UTF-8 bytes, one char per byte (ISO-8859-1), with up to
+    * three [[damages]] spliced in — mostly just inside a string. */
+  val damagedLine: Gen[String] = for {
+    line <- rowLine
+    n <- Gen.choose(0, 3)
+    cuts <- Gen.listOfN(n, Gen.zip(Gen.choose(0.0, 1.0), Gen.oneOf(damages)))
+  } yield cuts.foldLeft(new String(line.getBytes("UTF-8"), "ISO-8859-1")) {
+    case (b, (at, d)) =>
+      val quotes = b.indices.filter(b(_) == '"')
+      val pos =
+        if (quotes.nonEmpty && at < 0.8)
+          quotes(math.min(quotes.size - 1, (at / 0.8 * quotes.size).toInt)) + 1
+        else (at * b.length).toInt
+      b.patch(pos, d, 0)
   }
 
   val envelopeLine: Gen[String] = Gen.oneOf(false, true).flatMap { hostile =>
