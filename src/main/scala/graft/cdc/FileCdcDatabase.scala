@@ -4,8 +4,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import org.apache.spark.unsafe.Platform
-
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
@@ -294,14 +292,11 @@ object FileCdcDatabase {
     * scale.
     *
     * Reads the byte window [start, end) = `window(channel)` of the file
-    * in blocks and hands out each line as a slice of the block it was read
-    * into; a line that runs past a block's end is carried into the next,
-    * fresh block, so no block a line points into is ever written again.
-    * Windows start and end at line starts, so lines split as
-    * `BufferedReader.readLine` splits the whole file: at `\n`, `\r\n` or a
-    * lone `\r`, a final line needing no terminator. A line holding
-    * non-ASCII bytes must be well-formed UTF-8, or the read throws the
-    * strict decoder's `CharacterCodingException`. */
+    * through a [[LineReader]] and hands out each line as a slice of the
+    * buffer it was read into. Windows start and end at line starts, so
+    * lines split as `BufferedReader.readLine` splits the whole file. A
+    * line must be well-formed UTF-8, or the read throws the strict
+    * decoder's `CharacterCodingException`. */
   final class ClosingLineIterator private[FileCdcDatabase] (file: String,
       window: FileChannel => (Long, Long))
       extends Iterator[Utf8Line] with AutoCloseable {
@@ -309,70 +304,22 @@ object FileCdcDatabase {
       StandardOpenOption.READ)
     private var closed = false
     registerOpen(this)
+    private val reader = new LineReader(channel, 64 * 1024)
     private val (start, end) =
-      try {
-        val (a, z) = window(channel)
-        (a, math.min(z, channel.size()))
-      } catch { case e: Throwable => close(); throw e }
-    private var block = Array.emptyByteArray
-    private var blockLen = 0 // bytes of the window read into block
-    private var cursor = 0 // start of the next line in block
-    private var filePos = start // file position of block(blockLen)
+      try window(channel) catch { case e: Throwable => close(); throw e }
+    private var pos = start
     private var nextLine: Utf8Line = advance()
 
-    /** Carry the unfinished line block[cursor, blockLen) into a fresh
-      * block and read on behind it, up to the window's end. */
-    private def refill(): Unit = {
-      val carry = blockLen - cursor
-      val next = new Array[Byte](math.min(
-        math.max(BlockBytes, carry * 2).toLong, carry + end - filePos).toInt)
-      System.arraycopy(block, cursor, next, 0, carry)
-      block = next; blockLen = carry; cursor = 0
-      var n = 0
-      while (n >= 0 && blockLen < block.length) {
-        n = channel.read(ByteBuffer.wrap(block, blockLen, block.length - blockLen),
-          filePos)
-        if (n > 0) { blockLen += n; filePos += n }
+    private def advance(): Utf8Line =
+      if (closed) null
+      else if (pos >= end || pos >= reader.size) { close(); null }
+      else {
+        val l = reader.lineAt(pos)
+        if (!reader.lineAscii && !Utf8Line.isWellFormed(l.bytes, l.start, l.end))
+          Utf8Line.reject(l.bytes, l.start, l.end)
+        pos = reader.lineEnd
+        l
       }
-    }
-
-    private def advance(): Utf8Line = {
-      while (!closed) {
-        val b = block
-        var i = cursor
-        var bits = 0L // negative once a byte >= 0x80 was seen
-        // eight bytes at a time up to the word holding a terminator (whose
-        // bytes past it may also set `bits`: that only costs a check)
-        while (i + 8 <= blockLen && {
-          val w = Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i)
-          bits |= w
-          !hasByte(w, NewLines) && !hasByte(w, Returns)
-        }) i += 8
-        while (i < blockLen && { val c = b(i); bits |= c; c != '\n' && c != '\r' })
-          i += 1
-        val more = filePos < end
-        if (i < blockLen && !(b(i) == '\r' && i + 1 == blockLen && more)) {
-          val line = lineOf(b, cursor, i, bits)
-          cursor = if (b(i) == '\r' && i + 1 < blockLen && b(i + 1) == '\n') i + 2
-            else i + 1
-          return line
-        } else if (more) refill()
-        else if (cursor < blockLen) { // the file's last line, unterminated
-          val line = lineOf(b, cursor, blockLen, bits)
-          cursor = blockLen
-          return line
-        } else close()
-      }
-      null
-    }
-
-    private def lineOf(b: Array[Byte], from: Int, to: Int, bits0: Long): Utf8Line = {
-      var bits = bits0
-      bits |= bits << 8; bits |= bits << 16; bits |= bits << 32
-      if (bits < 0 && !Utf8Line.isWellFormed(b, from, to))
-        Utf8Line.reject(b, from, to)
-      new Utf8Line(b, from, to)
-    }
     override def hasNext: Boolean = nextLine != null
     override def next(): Utf8Line = {
       val l = nextLine
@@ -399,17 +346,19 @@ object FileCdcDatabase {
   }
 
   /** Whole lines of one file, read at any line start through a block
-    * buffer: the probes of [[sortedLines]]' window search. Line ends are
-    * those of `BufferedReader.readLine`: `\n`, `\r\n` or a lone `\r`; a
-    * final line needs no terminator. A probe takes the bytes as they are,
-    * so it never fails on a malformed line outside the window it looks
-    * for. */
+    * buffer: the window reads and the probes of [[sortedLines]]. Line ends
+    * are those of `BufferedReader.readLine`: `\n`, `\r\n` or a lone `\r`;
+    * a final line needs no terminator. A line is a slice of a buffer the
+    * reader never writes again. A probe takes the bytes as they are, so it
+    * never fails on a malformed line outside the window it looks for. */
   private final class LineReader(ch: FileChannel, block: Int) {
     val size: Long = ch.size()
     private var buf = Array.emptyByteArray
     private var bufStart = 0L; private var bufLen = 0
     /** Start of the line after the one [[lineAt]] returned last. */
     var lineEnd: Long = 0L
+    /** Whether the line [[lineAt]] returned last is all ASCII. */
+    var lineAscii: Boolean = true
 
     /** Buffer [pos, pos + need), or up to the end of the file. */
     private def fill(pos: Long, need: Int): Unit = {
@@ -451,35 +400,30 @@ object FileCdcDatabase {
       size
     }
 
-    /** The line starting at `pos`; sets [[lineEnd]]. */
+    /** The line starting at `pos`; sets [[lineEnd]] and [[lineAscii]]. */
     def lineAt(pos: Long): Utf8Line = {
       var need = 256
       while (true) {
         fill(pos, need)
+        val b = buf; val n = bufLen
         val off = (pos - bufStart).toInt
         var i = off
-        while (i < bufLen && buf(i) != '\n' && buf(i) != '\r') i += 1
-        if (i < bufLen || bufStart + bufLen >= size) {
-          val line = new Utf8Line(buf, off, i)
+        var bits = 0 // negative once a byte >= 0x80 was seen
+        // most bytes lie above '\r' (a byte >= 0x80 is negative)
+        while (i < n && { val c = b(i); bits |= c
+            c > '\r' || (c != '\n' && c != '\r') })
+          i += 1
+        if (i < n || bufStart + n >= size) {
+          val line = new Utf8Line(b, off, i)
           val term = bufStart + i
           lineEnd = if (term >= size) size else afterTerminator(term)
+          lineAscii = bits >= 0
           return line
         }
         need = (i - off) * 2 + 2 // the line runs past the buffer: widen
       }
       throw new IllegalStateException("unreachable")
     }
-  }
-
-  /** Bytes a window reads at a time. */
-  private final val BlockBytes = 64 * 1024
-  private final val NewLines = 0x0a0a0a0a0a0a0a0aL
-  private final val Returns = 0x0d0d0d0d0d0d0d0dL
-
-  /** Whether any byte of `w` equals the byte repeated in `pattern`. */
-  private def hasByte(w: Long, pattern: Long): Boolean = {
-    val x = w ^ pattern
-    ((x - 0x0101010101010101L) & ~x & 0x8080808080808080L) != 0L
   }
 
   /** Below this many bytes the window search scans lines instead of

@@ -160,7 +160,7 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
     new JsonRowCodec.Layout(outSchema.size, outPos, pkIdx, ckIdx)
   // change envelopes: their images may be kept in an overlay for a whole
   // partition, so their strings are copies, never views of a buffer
-  private val scan = codec.scanner(layout)
+  private[source] val scan = codec.scanner(layout)
   // snapshot rows: emitted within their chunk, so strings view the line
   private val rowScan = codec.scanner(layout, shareBytes = true)
 
@@ -212,8 +212,6 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
         scan.pk, scan.ck, null, fromTree = false)
     else decodeEnvelopeTree(line)
 
-  def decodeEnvelope(line: String): Env = decodeEnvelope(Utf8Line(line))
-
   def decodeEnvelopeTree(line: Utf8Line): Env = {
     val n = codec.parse(line)
     val offset = requireLong(n, OffsetCol)
@@ -224,10 +222,6 @@ private[source] class EnvelopeDecoder(dialectName: String, path: String,
     new Env(offset, op, ts, toOutput(before), toOutput(after), 0L, 0L,
       if (after != null) after else before, fromTree = true)
   }
-
-  /** Whether the single-pass scanner accepts an envelope line (tests). */
-  private[source] def singlePassAccepts(line: String): Boolean =
-    scan.tryEnvelope(Utf8Line(line))
 
   /** [[decodeEnvelope]] under the parse-error policy (the reference's
     * Debezium errors.tolerance): null = line dropped (`skip`); `fail`
@@ -387,9 +381,6 @@ private[source] final class LongIndex {
     if (vals(p) != 0) vals(p) = -1
   }
 
-  /** Keys entered since the last clear (removed ones included). */
-  def size: Int = used
-
   def clear(): Unit = if (used > 0) { java.util.Arrays.fill(vals, 0); used = 0 }
 
   private def grow(): Unit = {
@@ -407,17 +398,11 @@ private[source] final class LongIndex {
   * `LinkedHashMap` keyed by pk keeps them — snapshot order, a write to a
   * present key replacing its row in place, a new key appended, a delete
   * dropping it — held as an array of rows in that order plus a primitive
-  * pk → slot index. The leading run of slots whose pks ascend (a chunk of
-  * a pk-sorted snapshot is one such run) is found by bisection and needs
-  * no index entries; the index holds the slots after it. Reused range
-  * after range by one reader. */
+  * pk → slot index. Reused range after range by one reader. */
 private[source] final class ChunkMerge {
   private var rows = new Array[InternalRow](64)
   private var offs = new Array[Long](64)
-  private var keys = new Array[Long](64)
   private var n = 0
-  /** Slots [0, run) hold strictly ascending pks. */
-  private var run = 0
   private val index = new LongIndex
 
   /** Slots in use; a deleted row's slot holds null. */
@@ -425,47 +410,28 @@ private[source] final class ChunkMerge {
   def row(i: Int): InternalRow = rows(i)
   def offset(i: Int): Long = offs(i)
 
-  /** The live slot of `k`, -1 when absent. */
-  private def slotOf(k: Long): Int = {
-    val s = if (index.size == 0) -1 else index.get(k)
-    if (s >= 0) s
-    else {
-      var lo = 0; var hi = run
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (keys(mid) < k) lo = mid + 1 else hi = mid
-      }
-      if (lo < run && keys(lo) == k && rows(lo) != null) lo else -1
-    }
-  }
-
   def put(k: Long, row: InternalRow, offset: Long): Unit = {
-    val s = slotOf(k)
+    val s = index.get(k)
     if (s >= 0) { rows(s) = row; offs(s) = offset }
     else {
       if (n == rows.length) {
         rows = java.util.Arrays.copyOf(rows, n * 2)
         offs = java.util.Arrays.copyOf(offs, n * 2)
-        keys = java.util.Arrays.copyOf(keys, n * 2)
       }
-      rows(n) = row; offs(n) = offset; keys(n) = k
-      if (n == run && (n == 0 || k > keys(n - 1))) run += 1
-      else index.put(k, n)
+      rows(n) = row; offs(n) = offset
+      index.put(k, n)
       n += 1
     }
   }
 
   def remove(k: Long): Unit = {
-    val s = slotOf(k)
-    if (s >= 0) {
-      rows(s) = null
-      if (s >= run) index.remove(k)
-    }
+    val s = index.get(k)
+    if (s >= 0) { rows(s) = null; index.remove(k) }
   }
 
   def clear(): Unit = {
     java.util.Arrays.fill(rows.asInstanceOf[Array[AnyRef]], 0, n, null)
-    n = 0; run = 0
+    n = 0
     index.clear()
   }
 }
