@@ -36,6 +36,20 @@ object BenchArgs {
 }
 
 object Bench {
+  /** Each query's fastest passing time over the passes of (elapsed,
+    * succeeded), and the queries that failed in every pass: a failed
+    * pass's time-to-failure is not a timing, so it never enters a min or
+    * the total. */
+  def fold(passes: Seq[Map[String, (Double, Boolean)]])
+      : (Map[String, Double], Seq[String]) = {
+    val names = passes.headOption.toSeq.flatMap(_.keys)
+    val best = names.flatMap { name =>
+      val good = passes.flatMap(_.get(name)).collect { case (t, true) => t }
+      good.minOption.map(name -> _)
+    }.toMap
+    (best, names.filterNot(best.contains).sorted)
+  }
+
   /** Open file descriptors of this JVM, by target path (Linux procfs). */
   private def openFds: Seq[String] =
     Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
@@ -66,8 +80,14 @@ object Bench {
       if (new java.io.File("/root/testdata/sf0.001").isDirectory)
         "/root/testdata/sf0.001" else sfDir
     // One-time target-SF CDC fixture writes belong to setup, not queries.
+    // A fixture that cannot be built fails the run here, by name, instead
+    // of as a slow or failed query later.
     try graft.queries.Fixtures.prepareAll(spark, sfDir)
-    catch { case _: Throwable => () }
+    catch { case e: Exception =>
+      e.printStackTrace()
+      spark.stop()
+      sys.exit(1)
+    }
     // Warm EVERY query shape at the smallest SF: whole-stage codegen and
     // JIT are per-plan-shape, so a partial warmup leaves whichever unwarmed
     // query runs first paying multi-second compilation inside its timing.
@@ -90,31 +110,8 @@ object Bench {
     new java.io.File(sfDir).listFiles(f => f.getName.endsWith(".parquet"))
       .foreach(warmRead)
     val sfName = new java.io.File(sfDir).getName
-    Seq(s"/root/repo/.scratch/cdcdb/$sfName",
-        s"/root/repo/.scratch/cdcdb_tenant/$sfName",
-        s"/root/repo/.scratch/cdcdb_trunc/$sfName",
-        s"/root/repo/.scratch/bpe_v1/$sfName",
-        s"/root/repo/.scratch/doc_clusters_v1/$sfName",
-        s"/root/repo/.scratch/semantic_clusters_v1/$sfName",
-        s"/root/repo/.scratch/er_clusters_v1/$sfName",
-        s"/root/repo/.scratch/trade_graph_v1/$sfName",
-        s"/root/repo/.scratch/qvecs_v1/$sfName",
-        s"/root/repo/.scratch/nav_graph_v2/$sfName",
-        s"/root/repo/.scratch/pq_model_v1/$sfName",
-        s"/root/repo/.scratch/phash_clusters_v2/$sfName",
-        s"/root/repo/.scratch/cdcdb_ddl/$sfName",
-        s"/root/repo/.scratch/cdcdb_docs/$sfName",
-        s"/root/repo/.scratch/cdcdb_docs_replay/$sfName",
-        s"/root/repo/.scratch/cdcdb_typed/$sfName",
-        s"/root/repo/.scratch/cdcdb_tz/$sfName",
-        s"/root/repo/.scratch/cdcdb_mongo/$sfName",
-        s"/root/repo/.scratch/cdcdb_charset/$sfName",
-        s"/root/repo/.scratch/cdcdb_vecs_replay/$sfName",
-        s"/root/repo/.scratch/json_roundtrip/$sfName",
-        s"/root/repo/.scratch/json_roundtrip_schema/$sfName",
-        s"/root/repo/.scratch/bucketed/$sfName",
-        s"/root/repo/.scratch/jdbccdc/$sfName")
-      .map(new java.io.File(_)).filter(_.isDirectory).foreach(warmRead)
+    Option(new java.io.File(Artifacts.Root).listFiles()).toSeq.flatten
+      .map(new java.io.File(_, sfName)).filter(_.isDirectory).foreach(warmRead)
     // fixture generation wrote ~1 GB; flush the writeback queue so the
     // kernel doesn't steal I/O from the timed section
     try Runtime.getRuntime.exec(Array("sync")).waitFor()
@@ -241,14 +238,10 @@ object Bench {
           println(f"${v.size}%6d  $k")
         }
     }
-    val results = passes.head.map { case (name, _) =>
-      val runs = passes.flatMap(_.get(name))
-      val good = runs.collect { case (t, true) => t }
-      name -> (if (good.nonEmpty) good.min
-               else runs.map(_._1).max) // all failed: report slow
-    }
+    val (results, failed) = fold(passes)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedField = failed.map(n => s"\"$n\"").mkString(""""failed":[""", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // The quiet band is pinned for sf0.1 on this host generation
     // (BASELINE §3d); at any other SF the raw calibration seconds are
@@ -263,7 +256,7 @@ object Bench {
         s""""calibration_points_s":[${calPoints.map(f3).mkString(",")}]""" +
         bandField
     // Full-precision record (complete, for log readers that keep all output).
-    println(s"""{"metric":"total","value":$total,"unit":"sec"$calFields,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec"$calFields,"queries":$qs,$failedField,"sf":"$sfDir"}""")
     // The harness that records this run keeps only the LAST ~2000 chars of
     // output and parses the JSON line found there; with 80 queries the
     // full-precision line is ~3200 chars and never fits, so the recorded
@@ -272,7 +265,7 @@ object Bench {
     // omitted count/sum) once the line would outgrow the capture window.
     val bySlowest = results.toSeq.sortBy(-_._2)
     val budget = 1700 // line budget: capture window minus sbt's epilogue
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec"$calFields,"sf":"$sfDir","queries":{"""
+    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec"$calFields,"sf":"$sfDir",$failedField,"queries":{"""
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 60 // reserve room for the closing fields
     var omitted = 0; var omittedSec = 0.0

@@ -69,7 +69,7 @@ object QueryUtil {
   /** Remove a PER-RUN scratch dir (e.g. a streaming query's nanoTime-keyed
     * state store) once its contents are materialized — per-run dirs that
     * outlive their query are unbounded disk growth across Verify/Bench
-    * cycles. Never use on the (sf, version)-keyed `_DONE` artifacts. */
+    * cycles. Never use on the published [[Artifacts]]. */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) {
       val fs = f.listFiles()

@@ -64,8 +64,12 @@ object FileCdcDatabase {
     @transient lazy val schema: StructType = StructType.fromDDL(schemaDdl)
   }
 
-  /** Write a table (snapshot state at offset 0) + its change log. Driver-side
-    * fixture generation only; idempotent (skips if already written). */
+  /** Write a table (snapshot state at offset 0) + its change log.
+    * Driver-side fixture generation only. The table is built in a staging
+    * dir and published by [[graft.Artifacts.publish]]'s atomic rename, so
+    * a reader sees the whole table or none of it; `meta.json` marks a
+    * published table. Without `force` an existing table is kept; with it,
+    * the table is rebuilt and replaces the old one. */
   /** `schemaDdlOverride`: declared schema when it differs from the wire
     * encoding — a database's catalog type (GEOMETRY, SET) vs what the log
     * serializer physically emits; the gap is bridged by a registered
@@ -76,51 +80,49 @@ object FileCdcDatabase {
       regionBoundaries: Seq[Long] = Seq.empty,
       schemaDdlOverride: Option[String] = None,
       schemaName: Option[String] = None,
-      tenant: Option[String] = None): Unit = {
-    val root = Paths.get(dir, table)
-    val donePath = root.resolve("_WRITTEN")
-    if (!force && Files.exists(donePath)) return
-    // coalesce: an empty table has NULL min/max (stats 0/0/0 → one chunk)
-    val stats = snapshot.agg(
-      count(lit(1)), coalesce(min(col(pk)).cast("long"), lit(0L)),
-      coalesce(max(col(pk)).cast("long"), lit(0L)))
-      .collect()(0)
-    val maxOff = changes.agg(coalesce(max(col(ChangeRecord.OffsetCol)), lit(0L)))
-      .collect()(0).getLong(0)
+      tenant: Option[String] = None): Unit =
+    graft.Artifacts.publish(Paths.get(dir, table), replace = force,
+        p => Files.exists(p.resolve("meta.json"))) { root =>
+      // coalesce: an empty table has NULL min/max (stats 0/0/0 → one chunk)
+      val stats = snapshot.agg(
+        count(lit(1)), coalesce(min(col(pk)).cast("long"), lit(0L)),
+        coalesce(max(col(pk)).cast("long"), lit(0L)))
+        .collect()(0)
+      val maxOff = changes.agg(coalesce(max(col(ChangeRecord.OffsetCol)), lit(0L)))
+        .collect()(0).getLong(0)
 
-    // Range-partition + sort the snapshot by PK so readers can prune whole
-    // files against a chunk range and early-terminate inside a file.
-    snapshot.repartitionByRange(snapshotPartitions, col(pk))
-      .sortWithinPartitions(col(pk))
-      .write.mode("overwrite").option("timestampFormat", TsFmt)
-      .json(root.resolve("snapshot").toString)
-    changes.orderBy(col(ChangeRecord.OffsetCol))
-      .coalesce(1)
-      .write.mode("overwrite").option("timestampFormat", TsFmt)
-      .json(root.resolve("log").toString)
+      // Range-partition + sort the snapshot by PK so readers can prune whole
+      // files against a chunk range and early-terminate inside a file.
+      snapshot.repartitionByRange(snapshotPartitions, col(pk))
+        .sortWithinPartitions(col(pk))
+        .write.mode("overwrite").option("timestampFormat", TsFmt)
+        .json(root.resolve("snapshot").toString)
+      changes.orderBy(col(ChangeRecord.OffsetCol))
+        .coalesce(1)
+        .write.mode("overwrite").option("timestampFormat", TsFmt)
+        .json(root.resolve("log").toString)
 
-    // Per-file PK stats: files are PK-sorted, so min/max = first/last line.
-    val fileRanges = dataFiles(dir, table, "snapshot").flatMap { f =>
-      var first: Utf8Line = null; var last: Utf8Line = null
-      val it = byteLines(f)
-      while (it.hasNext) {
-        val l = it.next()
-        if (first == null) first = l
-        last = l
+      // Per-file PK stats: files are PK-sorted, so min/max = first/last line.
+      val fileRanges = dataFiles(root.getParent.toString, table, "snapshot").flatMap { f =>
+        var first: Utf8Line = null; var last: Utf8Line = null
+        val it = byteLines(f)
+        while (it.hasNext) {
+          val l = it.next()
+          if (first == null) first = l
+          last = l
+        }
+        if (first == null) None
+        else Some(FileRange(Paths.get(f).getFileName.toString,
+          mapper.readTree(first.toString).get(pk).asLong(),
+          mapper.readTree(last.toString).get(pk).asLong()))
       }
-      if (first == null) None
-      else Some(FileRange(Paths.get(f).getFileName.toString,
-        mapper.readTree(first.toString).get(pk).asLong(),
-        mapper.readTree(last.toString).get(pk).asLong()))
-    }
 
-    val meta = TableMeta(table, db, pk,
-      schemaDdlOverride.getOrElse(snapshot.schema.toDDL),
-      stats.getLong(0), stats.getLong(1), stats.getLong(2), maxOff,
-      fileRanges, regionBoundaries, schemaName, tenant)
-    Files.writeString(root.resolve("meta.json"), metaToJson(meta))
-    Files.writeString(donePath, "ok")
-  }
+      val meta = TableMeta(table, db, pk,
+        schemaDdlOverride.getOrElse(snapshot.schema.toDDL),
+        stats.getLong(0), stats.getLong(1), stats.getLong(2), maxOff,
+        fileRanges, regionBoundaries, schemaName, tenant)
+      Files.writeString(root.resolve("meta.json"), metaToJson(meta))
+    }
 
   def readMeta(dir: String, table: String): TableMeta = {
     val n = mapper.readTree(

@@ -71,6 +71,33 @@ object AdvancedQueries {
       cnt: Long, level_milli: Long, trend_milli: Long,
       forecast_milli: Long)
 
+  /** The deduped (customer, supplier) pair table — node ids disambiguated
+    * by parity (c·2 / p·2+1). A pure function of the input dir, consumed
+    * by THREE graph queries (PageRank, BFS, degree histogram), so it is a
+    * write-once artifact: the orders ⋈ lineitem + distinct (the only
+    * corpus-sized shuffle in any of them) runs once and every graph
+    * analytic reads the edge snapshot back. This is also the production
+    * shape — a graph table is materialized once per corpus snapshot, not
+    * rebuilt per algorithm.
+    * Downstream consumers are order-insensitive (integer sums, mins,
+    * counts), so the artifact's parquet row order cannot reach a result.
+    * Bump the version when the pair derivation changes shape. */
+  private[queries] def tradePairs(s: SparkSession, dir: String): DataFrame = {
+    val out = graft.Artifacts.once("trade_graph", version = 1, dir) { stage =>
+      val o = Tables.load(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"))
+      val l = Tables.load(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_suppkey"))
+      graft.QueryUtil.writeArtifact(
+        o.join(l, col("o_orderkey") === col("l_orderkey"))
+          .select((col("o_custkey") * 2).as("c"),
+            (col("l_suppkey") * 2 + 1).as("p"))
+          .distinct(),
+        "c", s"$stage/pairs")
+    }
+    s.read.parquet(s"$out/pairs")
+  }
+
   /** The customer↔supplier trade graph both graph queries walk, built in
     * ONE folded pass: the deduped pair table is the only big shuffle;
     * per-side degrees are tiny aggregates broadcast back onto it; both
@@ -87,41 +114,6 @@ object AdvancedQueries {
     * an in-query unpersist would silently force a full graph rebuild.
     * Release is the harness's per-query `spark.catalog.clearCache()`
     * (Verify/Bench both do this between queries). */
-  /** Bump when the pair derivation changes shape — versions the persisted
-    * edge-list artifact so a stale one can never be read back. */
-  private val TradeGraphVersion = 1
-
-  /** The deduped (customer, supplier) pair table — node ids disambiguated
-    * by parity (c·2 / p·2+1). A pure function of the input dir, consumed
-    * by THREE graph queries (PageRank, BFS, degree histogram), so it is a
-    * write-once ARTIFACT like the dedup cluster closure: the orders ⋈
-    * lineitem + distinct (the only corpus-sized shuffle in any of them)
-    * runs once per (sf, version) and every graph analytic reads the edge
-    * snapshot back. This is also the production shape — a graph table is
-    * materialized once per corpus snapshot, not rebuilt per algorithm.
-    * Downstream consumers are order-insensitive (integer sums, mins,
-    * counts), so the artifact's parquet row order cannot reach a result. */
-  private[queries] def tradePairs(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName
-    val out = s"/root/repo/.scratch/trade_graph_v$TradeGraphVersion/$sf"
-    this.synchronized {
-      if (!new java.io.File(out, "_DONE").isFile) {
-        val o = Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-        val l = Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"))
-        graft.QueryUtil.writeArtifact(
-          o.join(l, col("o_orderkey") === col("l_orderkey"))
-            .select((col("o_custkey") * 2).as("c"),
-              (col("l_suppkey") * 2 + 1).as("p"))
-            .distinct(),
-          "c", s"$out/pairs")
-        new java.io.File(out, "_DONE").createNewFile()
-      }
-    }
-    s.read.parquet(s"$out/pairs")
-  }
-
   private def tradeGraph(s: SparkSession, dir: String,
       withDegrees: Boolean = true): TradeGraph = {
     val pairs = tradePairs(s, dir).cache()

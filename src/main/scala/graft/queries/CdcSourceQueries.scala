@@ -27,17 +27,10 @@ object CdcSourceQueries {
   private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
 
-  /** Root for generated CDC databases (gitignored scratch inside the repo —
-    * the environment forbids writes outside /root/repo). */
-  private def dbDir(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/.scratch/cdcdb/$sf"
-  }
-
   /** Idempotently materialize the file CDC database for `orders` at this sf.
     * Chunk size forces multiple snapshot chunks even at sf0.001. */
   private[queries] def prepare(spark: SparkSession, sfDir: String): String = {
-    val dir = dbDir(sfDir)
+    val dir = graft.Artifacts.dir("cdcdb", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
       snapshot = base,
@@ -49,8 +42,7 @@ object CdcSourceQueries {
   /** Idempotently materialize the embedded-Derby CDC database for `orders`
     * at this sf (same changelog spec as the file fixture). */
   private[queries] def prepareJdbc(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/jdbccdc/$sf"
+    val dir = graft.Artifacts.dir("jdbccdc", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     graft.cdc.dialect.JdbcCdcDatabase.write(spark, dir, "orders", "graft",
       ordersSpec.pk, snapshot = base,
@@ -720,8 +712,7 @@ object CdcSourceQueries {
     * written BY THE QUERY while its stream runs, so any copy from a prior
     * run must be removed here. */
   private[queries] def prepareDynDb(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_dyn/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_dyn", sfDir)
     val even = Tables.load(spark, sfDir, "customer")
       .filter(col("c_custkey") <= 2000 && col("c_custkey") % 2 === 0)
     FileCdcDatabase.write(spark, dir, "dyn_a", "graft", custSpec.pk,
@@ -741,7 +732,7 @@ object CdcSourceQueries {
   /** Add a `customer` table to the same CDC database as `orders` — one
     * shared transaction-log offset space across tables, like a binlog. */
   private[queries] def prepareCustomer(spark: SparkSession, sfDir: String): String = {
-    val dir = dbDir(sfDir)
+    val dir = graft.Artifacts.dir("cdcdb", sfDir)
     val base = Tables.load(spark, sfDir, "customer")
     FileCdcDatabase.write(spark, dir, "customer", "graft", custSpec.pk,
       snapshot = base,
@@ -755,8 +746,7 @@ object CdcSourceQueries {
     * `schema_name`, OceanBase `tenant_name`; a real store has one or the
     * other, the fixture sets both to exercise both columns at once). */
   private[queries] def prepareTenant(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_tenant/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_tenant", sfDir)
     val base = Tables.load(spark, sfDir, "customer")
     FileCdcDatabase.write(spark, dir, "customer", "graft", custSpec.pk,
       snapshot = base,
@@ -795,8 +785,7 @@ object CdcSourceQueries {
     * (CustomConverters): columns whose catalog type differs from the wire
     * encoding, as MySQL SET/GEOMETRY/YEAR do through Debezium. */
   private[queries] def prepareTyped(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_typed/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_typed", sfDir)
     import spark.implicits._
     val rows = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").cast("long").as("ck")).as[Long]
@@ -839,8 +828,7 @@ object CdcSourceQueries {
     * charsets (base64-wrapped): latin1 é/º single bytes, GBK multibyte
     * hanzi — exactly what a charset-diverse MySQL ships. */
   private[queries] def prepareCharset(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_charset/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_charset", sfDir)
     import spark.implicits._
     val rows = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").cast("long").as("ck")).as[Long]
@@ -872,8 +860,7 @@ object CdcSourceQueries {
     * `{"$binary":{"base64":…,"subType":"04"}}` — what a Mongo changelog
     * physically ships; the declared schema tags the converter per column. */
   private[queries] def prepareMongo(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_mongo/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_mongo", sfDir)
     import spark.implicits._
     val rows = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").cast("long").as("mk")).as[Long]
@@ -906,8 +893,7 @@ object CdcSourceQueries {
     * formatted), while the declared schema says TIMESTAMP — decode must
     * shift by `server-time-zone` to recover the UTC instants. */
   private[queries] def prepareTz(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_tz/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_tz", sfDir)
     // UTC session: unix_timestamp parses as UTC, date_format renders UTC —
     // so rendering (instant + 8 h) zoneless IS the Shanghai wall clock
     val wallBase = unix_timestamp(lit("1995-06-01 08:00:00")
@@ -928,8 +914,7 @@ object CdcSourceQueries {
 
   /** File CDC database whose log contains the DDL + post-DDL note updates. */
   private[queries] def prepareDdl(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_ddl/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_ddl", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
       snapshot = base,

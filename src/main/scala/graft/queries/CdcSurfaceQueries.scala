@@ -21,14 +21,9 @@ object CdcSurfaceQueries {
   private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
 
-  private def dbDir(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/.scratch/cdcdb/$sf"
-  }
-
   /** The `orders` CDC database (shared with CdcSourceQueries.prepare). */
   private[queries] def prepare(spark: SparkSession, sfDir: String): String = {
-    val dir = dbDir(sfDir)
+    val dir = graft.Artifacts.dir("cdcdb", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
       snapshot = base,
@@ -40,7 +35,7 @@ object CdcSurfaceQueries {
   /** Two shards of `orders` split by key parity — the sharded-table layout
     * the reference's `table-name` regex captures (P1). */
   private[queries] def prepareSharded(spark: SparkSession, sfDir: String): String = {
-    val dir = dbDir(sfDir)
+    val dir = graft.Artifacts.dir("cdcdb", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     Seq(0, 1).foreach { p =>
       val shard = base.filter(col("o_orderkey") % 2 === p)
@@ -63,8 +58,7 @@ object CdcSurfaceQueries {
   private[queries] def prepareJsonFixture(spark: SparkSession, sfDir: String,
       base: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.Dataset[String] = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/json_roundtrip/$sf"
+    val dir = graft.Artifacts.dir("json_roundtrip", sfDir)
     if (!new java.io.File(dir, "_SUCCESS").exists()) {
       val env = ChangelogGen.full(base, ordersSpec)
       Deserializers.toJsonStrings(env).write.mode("overwrite").parquet(dir)
@@ -77,8 +71,7 @@ object CdcSurfaceQueries {
   private[queries] def prepareJsonSchemaFixture(spark: SparkSession,
       sfDir: String, base: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.Dataset[String] = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/json_roundtrip_schema/$sf"
+    val dir = graft.Artifacts.dir("json_roundtrip_schema", sfDir)
     if (!new java.io.File(dir, "_SUCCESS").exists()) {
       val env = ChangelogGen.full(base, ordersSpec)
       Deserializers.toJsonStringsWithSchema(env, base.schema)
@@ -90,8 +83,7 @@ object CdcSurfaceQueries {
 
   private[queries] def prepareCorrupt(spark: SparkSession, sfDir: String): String = {
     import java.nio.file.{Files, Paths, StandardOpenOption}
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_corrupt/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_corrupt", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
       snapshot = base,
@@ -116,8 +108,7 @@ object CdcSurfaceQueries {
     * (Debezium emits `t` for MySQL TRUNCATE TABLE; the merge treats it as
     * the death frontier for every earlier write). */
   private[queries] def prepareTrunc(spark: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_trunc/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_trunc", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     val truncOff = 1500000000L
     val truncRow = base.limit(1).select(

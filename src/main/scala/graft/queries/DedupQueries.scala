@@ -41,60 +41,37 @@ object DedupQueries {
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
     minhashPairsOf(Tables.load(s, dir, "documents"))
 
-  /** Bump when the pair generation or the CC closure changes shape —
-    * versions the persisted cluster artifact so a stale one from an
-    * older build can never be read back. */
-  private val DocClustersVersion = 1
-
   /** Near-dup cluster assignments (id, component) for the documents
     * table: MinHash-LSH verified pairs closed by star-contraction CC.
-    * The closure is deterministic, so the assignment is a pure function
-    * of the input dir — a pipeline ARTIFACT like the trained PQ model:
-    * written ONCE per (sf dir, version) to a `_DONE`-markered scratch
-    * dir by whichever query first needs it, read back by the rest. Six
-    * queries (cluster table, filtered corpus, funnel, downweighted
-    * sample, keep-best, quality-by-size) previously each re-ran the
-    * identical ~1.5 s pairs + O(log² n)-round closure. This is also the
-    * production shape: dedup clusters are computed once per corpus
-    * snapshot and every downstream consumer reads the assignment
-    * table. */
+    * The closure is deterministic, so the assignment is a write-once
+    * artifact: six queries (cluster table, filtered corpus, funnel,
+    * downweighted sample, keep-best, quality-by-size) previously each
+    * re-ran the identical ~1.5 s pairs + O(log² n)-round closure. This is
+    * also the production shape: dedup clusters are computed once per
+    * corpus snapshot and every downstream consumer reads the assignment
+    * table. Bump the version when the pair generation or the closure
+    * changes shape. */
   private def docClusters(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName
-    val out = s"/root/repo/.scratch/doc_clusters_v$DocClustersVersion/$sf"
-    this.synchronized {
-      if (!new java.io.File(out, "_DONE").isFile) {
-        graft.QueryUtil.writeArtifact(graft.operators.ConnectedComponents
-          .components(minhashPairs(s, dir), "id_a", "id_b"),
-          "id", s"$out/clusters")
-        new java.io.File(out, "_DONE").createNewFile()
-      }
+    val out = graft.Artifacts.once("doc_clusters", version = 1, dir) { stage =>
+      graft.QueryUtil.writeArtifact(graft.operators.ConnectedComponents
+        .components(minhashPairs(s, dir), "id_a", "id_b"),
+        "id", s"$stage/clusters")
     }
     s.read.parquet(s"$out/clusters")
   }
 
-  /** Bump when the cosine-pair generation or the CC closure changes
-    * shape — versions the persisted semantic-cluster artifact. */
-  private val SemanticClustersVersion = 1
-
   /** Semantic near-dup cluster assignments (vec_id, cluster_id) over the
     * embeddings table: label-blocked cosine pairs closed by
-    * star-contraction CC. Same write-once artifact discipline as
-    * [[docClusters]] — the closure is a deterministic function of the
-    * input dir, so it is computed once per (sf dir, version) into a
-    * `_DONE`-markered scratch dir and read back thereafter, instead of
-    * re-paying ~5 eager closure rounds of job fixed cost per execution. */
+    * star-contraction CC. A write-once artifact, instead of re-paying ~5
+    * eager closure rounds of job fixed cost per execution. Bump the
+    * version when the cosine-pair generation or the closure changes
+    * shape. */
   private def semanticClusters(s: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName
-    val out =
-      s"/root/repo/.scratch/semantic_clusters_v$SemanticClustersVersion/$sf"
-    this.synchronized {
-      if (!new java.io.File(out, "_DONE").isFile) {
-        graft.QueryUtil.writeArtifact(graft.operators.ConnectedComponents
-          .components(cosinePairs(s, dir), "id_a", "id_b")
-          .select(col("id").as("vec_id"), col("component").as("cluster_id")),
-          "vec_id", s"$out/clusters")
-        new java.io.File(out, "_DONE").createNewFile()
-      }
+    val out = graft.Artifacts.once("semantic_clusters", version = 1, dir) { stage =>
+      graft.QueryUtil.writeArtifact(graft.operators.ConnectedComponents
+        .components(cosinePairs(s, dir), "id_a", "id_b")
+        .select(col("id").as("vec_id"), col("component").as("cluster_id")),
+        "vec_id", s"$stage/clusters")
     }
     s.read.parquet(s"$out/clusters")
   }
@@ -601,8 +578,7 @@ object DedupQueries {
     * have retired deleted docs for the late pairs to be right. */
   private[queries] def prepareDocsReplay(s: SparkSession, sfDir: String): String = {
     import graft.cdc.ChangeRecord._
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_docs_replay/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_docs_replay", sfDir)
     val base = Tables.load(s, sfDir, "documents")
     def img(over: Map[String, org.apache.spark.sql.Column]) =
       struct(base.schema.fieldNames.toSeq
@@ -629,8 +605,7 @@ object DedupQueries {
 
   /** Idempotently materialize the documents CDC database for this SF. */
   private[queries] def prepareDocs(s: SparkSession, sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_docs/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_docs", sfDir)
     val base = Tables.load(s, sfDir, "documents")
     graft.cdc.FileCdcDatabase.write(s, dir, "documents", "graft",
       docsSpec.pk, snapshot = base,
@@ -995,7 +970,8 @@ object DedupQueries {
         import graft.cdc.ChangeRecord._
         import s.implicits._
         val dir = prepareDocsReplay(s, dir0)
-        val out = s"/root/repo/.scratch/stream_clusters/${System.nanoTime()}"
+        val out = graft.Artifacts.dir("stream_clusters",
+          System.nanoTime().toString)
         val nBase = Tables.load(s, dir0, "documents").count()
         val evts = s.readStream.format("graft-cdc")
           .option("path", dir).option("table", "documents")

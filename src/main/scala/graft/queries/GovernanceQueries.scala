@@ -44,38 +44,28 @@ object GovernanceQueries {
     (dirty, cand)
   }
 
-  /** Bump when the candidate generation or the CC closure changes
-    * shape — versions the persisted ER-cluster artifact. */
-  private val ErClustersVersion = 1
-
   /** ER component assignments (id, component) over the parity-encoded
     * match-edge graph: [[erCandidates]] edges closed by star-contraction
-    * CC. Write-once artifact (same discipline as the dedup cluster
-    * closures): the closure is a deterministic function of the input dir,
-    * so it is computed once per (sf dir, version) into a `_DONE`-markered
-    * scratch dir instead of re-paying ~5 eager localCheckpoint rounds of
-    * job fixed cost on every execution. This is also the production
-    * shape — entity clusters are resolved once per registry snapshot and
-    * every stewardship consumer reads the assignment table. */
+    * CC. A write-once artifact, instead of re-paying ~5 eager
+    * localCheckpoint rounds of job fixed cost on every execution. This is
+    * also the production shape — entity clusters are resolved once per
+    * registry snapshot and every stewardship consumer reads the
+    * assignment table. Bump the version when the candidate generation or
+    * the closure changes shape. */
   private def erClusters(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val sf = new java.io.File(dir).getName
-    val out = s"/root/repo/.scratch/er_clusters_v$ErClustersVersion/$sf"
-    this.synchronized {
-      if (!new java.io.File(out, "_DONE").isFile) {
-        val (_, cand) = erCandidates(s, dir)
-        val edges = cand.selectExpr("c_custkey * 2 AS u",
-          "d_key * 2 + 1 AS v")
-        // the closure rounds are EAGER (per-round localCheckpoint), so the
-        // partition pin is honored; the match-edge set is customers-sized,
-        // and 32-task exchanges over it are pure scheduling fixed cost.
-        // At cluster scale the caller sizes partitions to edge volume.
-        val comp = graft.QueryUtil.withShufflePartitions(s, 4) {
-          graft.operators.ConnectedComponents.components(edges, "u", "v")
-        }
-        graft.QueryUtil.writeArtifact(comp, "id", s"$out/clusters")
-        new java.io.File(out, "_DONE").createNewFile()
+    val out = graft.Artifacts.once("er_clusters", version = 1, dir) { stage =>
+      val (_, cand) = erCandidates(s, dir)
+      val edges = cand.selectExpr("c_custkey * 2 AS u",
+        "d_key * 2 + 1 AS v")
+      // the closure rounds are EAGER (per-round localCheckpoint), so the
+      // partition pin is honored; the match-edge set is customers-sized,
+      // and 32-task exchanges over it are pure scheduling fixed cost.
+      // At cluster scale the caller sizes partitions to edge volume.
+      val comp = graft.QueryUtil.withShufflePartitions(s, 4) {
+        graft.operators.ConnectedComponents.components(edges, "u", "v")
       }
+      graft.QueryUtil.writeArtifact(comp, "id", s"$stage/clusters")
     }
     s.read.parquet(s"$out/clusters")
   }

@@ -174,7 +174,7 @@ object InflationProbes {
     val cap = 32L
     val base = inflate(Tables.load(s, dir, "documents"), k, "doc_id")
     val sf = new java.io.File(dir).getName
-    val replay = s"/root/repo/.scratch/scalecheck_replay/${sf}_x$k"
+    val replay = graft.Artifacts.dir("scalecheck_replay", s"${sf}_x$k")
     def img = struct(base.schema.fieldNames.toSeq.map(col): _*)
     val ins = base.select((lit(1L) + col("doc_id")).as(OffsetCol),
       lit(ExternalOp.Create).as(OpCol), (lit(1L) + col("doc_id")).as(TsCol),
@@ -246,7 +246,7 @@ object InflationProbes {
     val base = inflate(Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text")), k, "doc_id")
     val sf = new java.io.File(dir).getName
-    val replay = s"/root/repo/.scratch/scalecheck_winnow/${sf}_x$k"
+    val replay = graft.Artifacts.dir("scalecheck_winnow", s"${sf}_x$k")
     def img = struct(base.schema.fieldNames.toSeq.map(col): _*)
     val ins = base.select((lit(1L) + col("doc_id")).as(OffsetCol),
       lit(ExternalOp.Create).as(OpCol), (lit(1L) + col("doc_id")).as(TsCol),
@@ -347,7 +347,7 @@ object InflationProbes {
         (col("user_id") + col("__i") * 100000000L).as("user_id"),
         col("ts"), col("event_type"))
     val sf = new java.io.File(dir).getName
-    val replay = s"/root/repo/.scratch/scalecheck_outer/${sf}_x$k"
+    val replay = graft.Artifacts.dir("scalecheck_outer", s"${sf}_x$k")
     try {
       infl.write.mode("overwrite").parquet(s"$replay/events.parquet")
       val n = s.read.parquet(s"$replay/events.parquet").count()

@@ -144,10 +144,6 @@ object FakeCodec {
  */
 object MultimodalQueries {
 
-  /** Version of the phash-clusters scratch artifact; bumped whenever the
-    * signature definition changes (v2 = the 63-bit DCT pHash). */
-  private val PhashClustersVersion = 2
-
   /** Near-dup hamming radius on the 63-bit DCT signature. 7 = the
     * classic perceptual-dedup operating point (near-dups land at
     * small-but-nonzero distance); the 8×8-bit banding below is
@@ -434,31 +430,14 @@ object MultimodalQueries {
     // signatures never enter the closure.
     "mm_phash_clusters" -> QueryDef(
       (s, dir) => {
-        // same write-once artifact device as the text-side docClusters:
-        // the closure is a deterministic function of the corpus. v2 =
-        // the DCT pHash signature (v1 was the stripe-threshold stub).
-        val sf = new java.io.File(dir).getName
-        val out = s"/root/repo/.scratch/phash_clusters_v$PhashClustersVersion/$sf"
-        this.synchronized {
-          if (!new java.io.File(out, "_DONE").isFile) {
-            // a version bump supersedes every older artifact — sweep all
-            // phash_clusters_v* below the current version (same device
-            // as the nav-graph sweep) so no dead parquet strands on disk
-            val vdir = "phash_clusters_v(\\d+)".r
-            val scratch = new java.io.File("/root/repo/.scratch").listFiles()
-            if (scratch != null) scratch.foreach { f =>
-              f.getName match {
-                case vdir(v) if v.toInt < PhashClustersVersion =>
-                  graft.QueryUtil.deleteRecursively(f)
-                case _ => ()
-              }
-            }
-            val pairs = phashPairs(s, dir).select(col("id_a"), col("id_b"))
-            graft.QueryUtil.writeArtifact(graft.operators.ConnectedComponents
-              .components(pairs, "id_a", "id_b"),
-              "id", s"$out/clusters")
-            new java.io.File(out, "_DONE").createNewFile()
-          }
+        // the closure is a deterministic function of the corpus, so it is
+        // a write-once artifact, versioned by the signature definition
+        // (v2 = the 63-bit DCT pHash; v1 was the stripe-threshold stub)
+        val out = graft.Artifacts.once("phash_clusters", version = 2, dir) { stage =>
+          val pairs = phashPairs(s, dir).select(col("id_a"), col("id_b"))
+          graft.QueryUtil.writeArtifact(graft.operators.ConnectedComponents
+            .components(pairs, "id_a", "id_b"),
+            "id", s"$stage/clusters")
         }
         s.read.parquet(s"$out/clusters")
           .groupBy(col("component").as("cluster_id"))

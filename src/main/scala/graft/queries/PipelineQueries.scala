@@ -58,7 +58,7 @@ object PipelineQueries {
   private[queries] def prepareBucketed(s: SparkSession,
       sfDir: String): (String, String) = {
     val sf = new java.io.File(sfDir).getName.replace('.', '_')
-    val root = s"/root/repo/.scratch/bucketed/$sf"
+    val root = graft.Artifacts.dir("bucketed", sfDir)
     def ensure(source: String, cols: Seq[String], key: String): String = {
       val name = s"${source}_bkt_$sf"
       if (!s.catalog.tableExists(name)) {

@@ -343,37 +343,29 @@ object SimilarityQueries {
       if (old != null && valid(old.asInstanceOf[A])) old else build
     ).asInstanceOf[A]
 
-  /** Bump when the quantization contract changes — versions the persisted
-    * quantized-embedding artifact. */
-  private val QvecsVersion = 1
-
   /** int8-quantized copies of every embedding (vec_id, qv: ARRAY<BIGINT>)
     * — the integer domain all exact-arithmetic vector math runs in.
-    * A WRITE-ONCE ARTIFACT like the PQ model / trade graph: the
-    * quantization pass (corpus-wide max-abs + one map) is a pure
-    * function of the input dir, consumed by a dozen ann/embed queries —
-    * the harness's per-query clearCache defeated the DataFrame-cache
-    * memo, so every consumer was re-quantizing (~0.5-1 s each at
-    * sf0.1); the parquet snapshot survives cache churn. Consumers are
-    * order-insensitive (exact-integer reductions and per-row maps), so
-    * parquet row order cannot reach a result. The session memo stays on
-    * top so one bench pass also shares a single cached read. */
+    * A write-once artifact: the quantization pass (corpus-wide max-abs +
+    * one map) is a pure function of the input dir, consumed by a dozen
+    * ann/embed queries — the harness's per-query clearCache defeated the
+    * DataFrame-cache memo, so every consumer was re-quantizing
+    * (~0.5-1 s each at sf0.1); the parquet snapshot survives cache churn.
+    * Consumers are order-insensitive (exact-integer reductions and
+    * per-row maps), so parquet row order cannot reach a result. The
+    * session memo stays on top so one bench pass also shares a single
+    * cached read. Bump the version when the quantization contract
+    * changes. */
   private def quantizedVecs(s: SparkSession, dir: String): DataFrame =
     memoized[DataFrame](s, dir, "qvecs")(
       _.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      val sf = new java.io.File(dir).getName
-      val out = s"/root/repo/.scratch/qvecs_v$QvecsVersion/$sf"
-      this.synchronized {
-        if (!new java.io.File(out, "_DONE").isFile) {
-          val e = emb(s, dir)
-          val scale = e.select(explode(col("embedding")).as("x"))
-            .agg(max(abs(col("x"))).cast(DoubleType).as("scale"))
-          e.crossJoin(broadcast(scale))
-            .select(col("vec_id"),
-              quantizeInt8Vec(col("embedding"), col("scale")).as("qv"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/qvecs")
-          new java.io.File(out, "_DONE").createNewFile()
-        }
+      val out = graft.Artifacts.once("qvecs", version = 1, dir) { stage =>
+        val e = emb(s, dir)
+        val scale = e.select(explode(col("embedding")).as("x"))
+          .agg(max(abs(col("x"))).cast(DoubleType).as("scale"))
+        e.crossJoin(broadcast(scale))
+          .select(col("vec_id"),
+            quantizeInt8Vec(col("embedding"), col("scale")).as("qv"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$stage/qvecs")
       }
       s.read.parquet(s"$out/qvecs").cache()
     }
@@ -414,16 +406,14 @@ object SimilarityQueries {
     * 100 TB shape: the kNN build is the cell-blocked pair stage every
     * vector query here uses (never corpus²), the hub layers are
     * node-sized + K², and the edge table would be written bucketed by src
-    * — the search scans it with frontier hash joins, never pointer-chases. */
-  /** Bump when the graph-construction contract changes — versions the
-    * persisted navigable-graph edge artifact. v2: edges carry the
-    * DESTINATION vector + self-dot inline (the HNSW trick of storing
-    * vectors with the graph), so the beam search scores at expansion —
-    * one join per hop instead of expand + a second corpus-wide scoring
-    * join. Storage cost is out-degree-bounded (≤ NavKnn + uplink +
-    * mesh per node). */
-  private val NavGraphVersion = 2
-
+    * — the search scans it with frontier hash joins, never pointer-chases.
+    *
+    * The edge table is a write-once artifact, versioned by the
+    * graph-construction contract. v2: edges carry the DESTINATION vector
+    * + self-dot inline (the HNSW trick of storing vectors with the
+    * graph), so the beam search scores at expansion — one join per hop
+    * instead of expand + a second corpus-wide scoring join. Storage cost
+    * is out-degree-bounded (≤ NavKnn + uplink + mesh per node). */
   private def navGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Long) =
     memoized[(DataFrame, DataFrame, Long)](s, dir, "navGraph")(
@@ -444,55 +434,36 @@ object SimilarityQueries {
           graft.functions.TextFunctions.dotLong(col("qv"), col("qv"))
             .as("dself"))
         .repartition(col("cell")).cache()
-      // the kNN pair stage is the expensive leg → WRITE-ONCE ARTIFACT
-      // like the trade graph: built once per (sf, version), read by both
-      // graph-ANN queries every pass (consumers re-rank by (d2, id), so
-      // parquet row order cannot reach a result)
-      val sf = new java.io.File(dir).getName
-      val out = s"/root/repo/.scratch/nav_graph_v$NavGraphVersion/$sf"
-      this.synchronized {
-        if (!new java.io.File(out, "_DONE").isFile) {
-          // a version bump supersedes EVERY older artifact — sweep all
-          // nav_graph_v* with version < current (not just the immediate
-          // predecessor) so a multi-version bump, or a machine that
-          // skipped a version, never strands dead parquet on disk
-          val vdir = "nav_graph_v(\\d+)".r
-          val scratch = new java.io.File("/root/repo/.scratch").listFiles()
-          if (scratch != null) scratch.foreach { f =>
-            f.getName match {
-              case vdir(v) if v.toInt < NavGraphVersion =>
-                graft.QueryUtil.deleteRecursively(f)
-              case _ => ()
-            }
-          }
-          val cand = Pairs.withinKey(assigned, Seq("cell"), "vec_id",
-              ordered = true)
-            .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-              (col("a.dself") + col("b.dself") - lit(2L) *
-                graft.functions.TextFunctions.dotLong(col("a.qv"),
-                  col("b.qv"))).as("d2"))
-          val w = Window.partitionBy(col("src"))
-            .orderBy(col("d2"), col("dst"))
-          val knn = cand.withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= NavKnn).select(col("src"), col("dst"))
-          val seedOf = map(seeds.flatMap { case (l, sid, _) =>
-            Seq(lit(l), lit(sid)) }.toSeq: _*)
-          val toSeed = assigned
-            .select(col("vec_id").as("src"),
-              element_at(seedOf, col("cell")).as("dst"))
-            .filter(col("src") =!= col("dst"))
-          val mesh = seeds.flatMap { case (_, x, _) =>
-            seeds.collect { case (_, y, _) if y != x => (x, y) } }
-            .toSeq.toDF("src", "dst")
-          val topo = knn.unionByName(toSeed).unionByName(mesh)
-          val enriched = topo.join(assigned.select(
-              col("vec_id").as("dst"), col("qv").as("dst_qv"),
-              col("dself").as("dst_dself")), "dst")
-            .select(col("src"), col("dst"), col("dst_qv"),
-              col("dst_dself"))
-          graft.QueryUtil.writeArtifact(enriched, "src", s"$out/edges")
-          new java.io.File(out, "_DONE").createNewFile()
-        }
+      // the kNN pair stage is the expensive leg → write-once artifact,
+      // read by both graph-ANN queries every pass (consumers re-rank by
+      // (d2, id), so parquet row order cannot reach a result)
+      val out = graft.Artifacts.once("nav_graph", version = 2, dir) { stage =>
+        val cand = Pairs.withinKey(assigned, Seq("cell"), "vec_id",
+            ordered = true)
+          .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
+            (col("a.dself") + col("b.dself") - lit(2L) *
+              graft.functions.TextFunctions.dotLong(col("a.qv"),
+                col("b.qv"))).as("d2"))
+        val w = Window.partitionBy(col("src"))
+          .orderBy(col("d2"), col("dst"))
+        val knn = cand.withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= NavKnn).select(col("src"), col("dst"))
+        val seedOf = map(seeds.flatMap { case (l, sid, _) =>
+          Seq(lit(l), lit(sid)) }.toSeq: _*)
+        val toSeed = assigned
+          .select(col("vec_id").as("src"),
+            element_at(seedOf, col("cell")).as("dst"))
+          .filter(col("src") =!= col("dst"))
+        val mesh = seeds.flatMap { case (_, x, _) =>
+          seeds.collect { case (_, y, _) if y != x => (x, y) } }
+          .toSeq.toDF("src", "dst")
+        val topo = knn.unionByName(toSeed).unionByName(mesh)
+        val enriched = topo.join(assigned.select(
+            col("vec_id").as("dst"), col("qv").as("dst_qv"),
+            col("dself").as("dst_dself")), "dst")
+          .select(col("src"), col("dst"), col("dst_qv"),
+            col("dst_dself"))
+        graft.QueryUtil.writeArtifact(enriched, "src", s"$stage/edges")
       }
       val edges = s.read.parquet(s"$out/edges").cache()
       (assigned, edges, seeds.head._2)
@@ -675,56 +646,44 @@ object SimilarityQueries {
       .selectExpr("vec_id", "m",
         s"slice(qv, m * $PqSubDim + 1, $PqSubDim) AS sv")
 
-  /** Bump when the training pipeline or its constants change shape —
-    * versions the persisted model artifact so a stale one from an older
-    * build can never be read back. */
-  private val PqModelVersion = 1
-
   /** The trained PQ model. Training is deterministic integer Lloyd, so
-    * the model is a pure function of the input dir — a pipeline ARTIFACT,
-    * not per-query work. Like every derived fixture in this suite
-    * (changelog DBs, bucketed tables — see [[Fixtures]]), it is written
-    * ONCE per (sf dir, version) to a `_DONE`-markered scratch dir by
-    * whichever query first needs it, and read back by the rest:
-    * `ann_pq_train`, `ann_pq_topk` and `ann_ivfpq_topk` previously each
+    * the model is a pure function of the input dir — a write-once
+    * artifact, not per-query work: `ann_pq_train`, `ann_pq_topk` and `ann_ivfpq_topk` previously each
     * re-ran the identical ~2 s two-iteration training inline. This is
     * also the 100 TB shape — a real pipeline trains the codebook once,
     * stores codes (N·M bytes) + codebook (M·K rows, broadcastable) as
     * the index, and every search reads the stored index. Persisted `a2`
     * keeps only (m, vec_id, cid, d2) — the sv payload stays derivable
-    * from the cached quantized vectors and never hits disk twice. */
+    * from the cached quantized vectors and never hits disk twice. Bump
+    * the version when the training pipeline or its constants change
+    * shape. */
   private def pqPipeline(s: SparkSession, dir: String): PqModel = {
-    val sf = new java.io.File(dir).getName
-    val out = s"/root/repo/.scratch/pq_model_v$PqModelVersion/$sf"
-    this.synchronized {
-      if (!new java.io.File(out, "_DONE").isFile) {
-        val qv = quantizedVecs(s, dir)
-        val sub = subvectors(qv)
-        val c0 = sub.filter(col("vec_id") < PqK)
-          .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv"))
-        val c1 = pqUpdate(pqAssign(sub, c0))
-        // a2 (N·M rows) and c2 (M·K rows) are both cached during the
-        // build: the writer references a2 twice (persist + c2's input),
-        // and without the barrier each reference re-runs the full
-        // two-iteration Lloyd pipeline
-        val a2 = pqAssign(sub, c1).cache()
-        val c2 = pqUpdate(a2).cache()
-        // a2 and codes are CORPUS-sized (N·M rows) → hash-partitioned
-        // artifact writes; c2 is the M·K codebook — a model artifact,
-        // single-file by design
-        graft.QueryUtil.writeArtifact(
-          a2.select(col("m"), col("vec_id"), col("cid"), col("d2")),
-          "vec_id", s"$out/a2")
-        c2.coalesce(1).write.mode("overwrite").parquet(s"$out/c2")
-        // the stored index itself: every corpus vector's final code
-        // against the trained codebook — (N·M) narrow rows, the table
-        // both ADC searches previously re-derived per query
-        graft.QueryUtil.writeArtifact(
-          pqAssign(sub, c2).select(col("m"), col("vec_id"), col("cid")),
-          "vec_id", s"$out/codes")
-        a2.unpersist(); c2.unpersist()
-        new java.io.File(out, "_DONE").createNewFile()
-      }
+    val out = graft.Artifacts.once("pq_model", version = 1, dir) { stage =>
+      val qv = quantizedVecs(s, dir)
+      val sub = subvectors(qv)
+      val c0 = sub.filter(col("vec_id") < PqK)
+        .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv"))
+      val c1 = pqUpdate(pqAssign(sub, c0))
+      // a2 (N·M rows) and c2 (M·K rows) are both cached during the
+      // build: the writer references a2 twice (persist + c2's input),
+      // and without the barrier each reference re-runs the full
+      // two-iteration Lloyd pipeline
+      val a2 = pqAssign(sub, c1).cache()
+      val c2 = pqUpdate(a2).cache()
+      // a2 and codes are CORPUS-sized (N·M rows) → hash-partitioned
+      // artifact writes; c2 is the M·K codebook — a model artifact,
+      // single-file by design
+      graft.QueryUtil.writeArtifact(
+        a2.select(col("m"), col("vec_id"), col("cid"), col("d2")),
+        "vec_id", s"$stage/a2")
+      c2.coalesce(1).write.mode("overwrite").parquet(s"$stage/c2")
+      // the stored index itself: every corpus vector's final code
+      // against the trained codebook — (N·M) narrow rows, the table
+      // both ADC searches previously re-derived per query
+      graft.QueryUtil.writeArtifact(
+        pqAssign(sub, c2).select(col("m"), col("vec_id"), col("cid")),
+        "vec_id", s"$stage/codes")
+      a2.unpersist(); c2.unpersist()
     }
     PqModel(subvectors(quantizedVecs(s, dir)),
       s.read.parquet(s"$out/a2"), s.read.parquet(s"$out/c2"),
@@ -774,8 +733,7 @@ object SimilarityQueries {
     * vec_id + 1e9 — the vector-side twin of the docs replay fixture. */
   private[queries] def prepareVecsReplay(s: SparkSession, sfDir: String): String = {
     import graft.cdc.ChangeRecord._
-    val sf = new java.io.File(sfDir).getName
-    val dir = s"/root/repo/.scratch/cdcdb_vecs_replay/$sf"
+    val dir = graft.Artifacts.dir("cdcdb_vecs_replay", sfDir)
     val base = Tables.load(s, sfDir, "embeddings")
     def img(over: Map[String, Column]) =
       struct(base.schema.fieldNames.toSeq

@@ -61,13 +61,8 @@ object StreamingQueries {
   private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
 
-  private def dbDir(sfDir: String): String = {
-    val sf = new java.io.File(sfDir).getName
-    s"/root/repo/.scratch/cdcdb/$sf"
-  }
-
   private[queries] def prepare(spark: SparkSession, sfDir: String): String = {
-    val dir = dbDir(sfDir)
+    val dir = graft.Artifacts.dir("cdcdb", sfDir)
     val base = Tables.load(spark, sfDir, "orders")
     FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
       snapshot = base,
@@ -775,7 +770,7 @@ object StreamingQueries {
         val dir = prepare(s, dir0)
         // one shared scratch database (engine boot amortized across runs);
         // a fresh table per run keeps executions independent
-        val sinkDir = "/root/repo/.scratch/jdbc_sink_db"
+        val sinkDir = s"${graft.Artifacts.Root}/jdbc_sink_db"
         val sinkTable = s"orders_sink_${System.nanoTime()}"
         val q = readStreamEarliest(s, dir)
           .writeStream
@@ -796,7 +791,7 @@ object StreamingQueries {
     "cdc_upsert_sink_merge" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         val dir = prepare(s, dir0)
-        val out = s"/root/repo/.scratch/upsert_sink/${System.nanoTime()}"
+        val out = graft.Artifacts.dir("upsert_sink", System.nanoTime().toString)
         val q = readStreamEarliest(s, dir)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -823,7 +818,7 @@ object StreamingQueries {
     "cdc_sink_rebucket" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         val dir = prepare(s, dir0)
-        val out = s"/root/repo/.scratch/upsert_sink/${System.nanoTime()}_rb"
+        val out = graft.Artifacts.dir("upsert_sink", s"${System.nanoTime()}_rb")
         val bound = ordersSpec.insBand + 1000000L
         // phase 1: drain updates+some inserts into the 4-bucket layout
         // chunk.size 4000 (not the 1000 the merge-granularity query

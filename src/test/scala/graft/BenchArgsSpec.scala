@@ -23,4 +23,20 @@ class BenchArgsSpec extends AnyFunSuite {
       assert(err.left.exists(_.endsWith(BenchArgs.usage)), args)
     }
   }
+
+  test("results fold: the fastest passing time; a query that failed in " +
+      "every pass is reported failed, whatever its times") {
+    val passes = Seq(
+      Map("a" -> (2.0, true), "b" -> (0.1, false), "c" -> (9.0, false)),
+      Map("a" -> (1.5, true), "b" -> (3.0, true), "c" -> (0.2, false)),
+      Map("a" -> (0.5, false), "b" -> (4.0, true), "c" -> (8.0, false)))
+    assert(Bench.fold(passes) === ((Map("a" -> 1.5, "b" -> 3.0), Seq("c"))))
+  }
+
+  test("results fold: failures are listed sorted, and no passes fold to " +
+      "nothing") {
+    val allFailed = Seq(Map("z" -> (1.0, false), "y" -> (2.0, false)))
+    assert(Bench.fold(allFailed) === ((Map.empty, Seq("y", "z"))))
+    assert(Bench.fold(Nil) === ((Map.empty, Nil)))
+  }
 }

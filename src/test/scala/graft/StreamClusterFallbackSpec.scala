@@ -33,7 +33,7 @@ class StreamClusterFallbackSpec extends SparkSpecBase {
     // the preceding test ran the query twice; its nanoTime-keyed
     // UpsertSink dirs must be gone (results are materialized via
     // localCheckpoint before the delete)
-    val root = new java.io.File("/root/repo/.scratch/stream_clusters")
+    val root = new java.io.File(Artifacts.Root, "stream_clusters")
     val left = Option(root.listFiles()).map(_.toSeq).getOrElse(Nil)
     assert(left.isEmpty, s"orphaned state dirs: ${left.map(_.getName)}")
   }
