@@ -10,11 +10,8 @@ import scala.util.matching.Regex
 /** The on-disk artifacts the queries, fixtures and harnesses share: one
   * scratch root, one path scheme and one publish step. */
 object Artifacts {
-  /** The scratch root: `$SPARK_GRAFT_SCRATCH` when set, else the
-    * gitignored `.scratch` under the working directory (the checkout's
-    * root for sbt's forked runs and tests and for the benchmark). */
-  val Root: String = Paths.get(
-    sys.env.getOrElse("SPARK_GRAFT_SCRATCH", ".scratch")).toAbsolutePath.toString
+  /** The gitignored scratch root inside the repo. */
+  val Root = "/root/repo/.scratch"
 
   /** `<Root>/<name>/<sf>`, where `<sf>` is the last path element of
     * `sfDir` (an input SF dir, or a per-run key). */

@@ -50,6 +50,42 @@ object Bench {
     (best, names.filterNot(best.contains).sorted)
   }
 
+  // Locale.ROOT: a comma-decimal default locale would render 1,234 and
+  // break the JSON the result lines exist to provide
+  private def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f",
+    Double.box(v))
+
+  /** The compact result line: `prefix` (the line's opening fields), the
+    * count of failed queries always, then as many failed names (at most
+    * half the room) and query times (slowest first) as keep the line
+    * within `budget` characters, with the names and times left out
+    * counted. */
+  def compactLine(prefix: String, results: Map[String, Double],
+      failed: Seq[String], budget: Int): String = {
+    // room left after the prefix and the fixed fields' brackets and counts
+    var room = budget - prefix.length - 120
+    // the entries that fit within `limit`, in order, and the values of
+    // the ones left out
+    def fit(entries: Seq[(String, Double)],
+        limit: Int): (Seq[String], Seq[Double]) = {
+      var used = 0
+      val (kept, left) = entries.partition { case (e, _) =>
+        val ok = used + e.length + 1 <= limit
+        if (ok) used += e.length + 1
+        ok
+      }
+      room -= used
+      (kept.map(_._1), left.map(_._2))
+    }
+    val (names, leftFailed) = fit(failed.map(n => s"\"$n\"" -> 0.0), room / 2)
+    val (times, left) = fit(results.toSeq.sortBy(-_._2)
+      .map { case (k, v) => s"\"$k\":${f3(v)}" -> v }, room)
+    prefix + s""","failed_count":${failed.size},"failed":[""" +
+      names.mkString(",") + s"""],"omitted_failed":${leftFailed.size},""" +
+      s""""queries":{${times.mkString(",")}},"omitted_fastest":${left.size},""" +
+      s""""omitted_sec":${f3(left.sum)}}"""
+  }
+
   /** Open file descriptors of this JVM, by target path (Linux procfs). */
   private def openFds: Seq[String] =
     Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
@@ -86,6 +122,9 @@ object Bench {
     catch { case e: Exception =>
       e.printStackTrace()
       spark.stop()
+      // last, so the fixture's name survives a capture of the output tail
+      System.out.flush(); System.err.flush()
+      System.err.println(e.getMessage)
       sys.exit(1)
     }
     // Warm EVERY query shape at the smallest SF: whole-stage codegen and
@@ -157,10 +196,6 @@ object Bench {
     val calibrated = opts.only.isEmpty
     val calPoints = scala.collection.mutable.ArrayBuffer.empty[Double]
     if (calibrated) calPoints += calibrate()
-    // Locale.ROOT: a comma-decimal default locale would render 1,234 and
-    // break the JSON these lines exist to provide
-    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(v))
     // --fds: open-descriptor growth of each query run, per pass
     val fdGrowth = scala.collection.mutable.Map.empty[String, Vector[Int]]
       .withDefaultValue(Vector.empty)
@@ -241,7 +276,8 @@ object Bench {
     val (results, failed) = fold(passes)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failedField = failed.map(n => s"\"$n\"").mkString(""""failed":[""", ",", "]")
+    val failedField = s""""failed_count":${failed.size},""" +
+      failed.map(n => s"\"$n\"").mkString(""""failed":[""", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // The quiet band is pinned for sf0.1 on this host generation
     // (BASELINE §3d); at any other SF the raw calibration seconds are
@@ -263,19 +299,10 @@ object Bench {
     // artifact loses the totals. Emit a final compact line guaranteed to fit:
     // ms-precision values, slowest queries first, truncated (with an explicit
     // omitted count/sum) once the line would outgrow the capture window.
-    val bySlowest = results.toSeq.sortBy(-_._2)
-    val budget = 1700 // line budget: capture window minus sbt's epilogue
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec"$calFields,"sf":"$sfDir",$failedField,"queries":{"""
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var len = head.length + 60 // reserve room for the closing fields
-    var omitted = 0; var omittedSec = 0.0
-    bySlowest.foreach { case (k, v) =>
-      val e = s"\"$k\":${f3(v)}"
-      if (len + e.length + 1 <= budget) { entries += e; len += e.length + 1 }
-      else { omitted += 1; omittedSec += v }
-    }
-    val compact = head + entries.mkString(",") +
-      s"""},"omitted_fastest":$omitted,"omitted_sec":${f3(omittedSec)}}"""
+    val compact = compactLine(
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec"$calFields,"sf":"$sfDir"""",
+      results, failed,
+      budget = 1700) // capture window minus sbt's epilogue
     // spark.stop BEFORE the compact line: shutdown hooks (executor cleanup,
     // temp-dir removal) log to stdout/stderr, and the recording harness only
     // keeps the last ~2000 chars — round 3's artifact was evicted by a

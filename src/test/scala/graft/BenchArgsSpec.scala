@@ -39,4 +39,28 @@ class BenchArgsSpec extends AnyFunSuite {
     assert(Bench.fold(allFailed) === ((Map.empty, Seq("y", "z"))))
     assert(Bench.fold(Nil) === ((Map.empty, Nil)))
   }
+
+  test("compact line: everything listed when it fits, with zero omitted") {
+    val line = Bench.compactLine("""{"metric":"total"""",
+      Map("a" -> 1.0, "b" -> 2.5), Seq("c"), budget = 1700)
+    assert(line === """{"metric":"total","failed_count":1,"failed":["c"],""" +
+      """"omitted_failed":0,"queries":{"b":2.500,"a":1.000},""" +
+      """"omitted_fastest":0,"omitted_sec":0.000}""")
+  }
+
+  test("compact line: many failures stay within the budget, the failed " +
+      "count always shown and the slowest times kept") {
+    val prefix = """{"metric":"total","value":12.345,"unit":"sec","sf":"x"""" +
+      ""","calibration_points_s":[1.234,1.345]"""
+    val failed = (1 to 200).map(i => f"failing_query_name_$i%03d")
+    val results = (1 to 200).map(i => f"passing_query_name_$i%03d" -> i * 0.5).toMap
+    val line = Bench.compactLine(prefix, results, failed, budget = 1700)
+    assert(line.length <= 1700, line.length)
+    assert(line.startsWith(prefix + ""","failed_count":200,"failed":["failing_query_name_001""""))
+    assert(line.contains(""""queries":{"passing_query_name_200":100.000,"""))
+    val listed = """"(failing|passing)_query_name_\d+"""".r.findAllIn(line).size
+    val omitted = """"omitted_(failed|fastest)":(\d+)""".r
+      .findAllMatchIn(line).map(_.group(2).toInt).sum
+    assert(listed + omitted === 400)
+  }
 }
