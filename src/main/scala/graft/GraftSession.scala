@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession factory. Every entry point (Bench, Verify,
   * SmokeMain, ScaleCheck, DetCheck and the test suite) runs on a local
   * session built here, so a result or a timing taken by one of them holds
-  * for the others. */
+  * for the others. Local `file:` I/O goes through `graft.fs.NoForkLocalFs`
+  * (README, "Local file I/O"), installed by `core-site.xml`, not here. */
 object GraftSession {
 
   /** `SPARK_GRAFT_CPUS`, else the host's processor count. */

@@ -28,6 +28,15 @@ The quick-field probes (`scanLongField` and friends) have no layer of their
 own: a probe counts for the layer of the code that called it. Prints one
 line per layer with its sample count and share, then the N most frequent
 executing frames of one layer (--show, default "other").
+
+    python3 tools/jfr_layers.py RECORDING.jfr --forks [--top N]
+
+counts the recording's `jdk.ProcessStart` events (in the `profile`
+settings) instead: one line per command word (`chmod`, `readlink`, ...)
+with its count, then the N most frequent call sites that started it. A
+call site is the first frame outside the JDK and Hadoop's process
+plumbing (`org.apache.hadoop.util.Shell`, `FileUtil.execCommand`), e.g.
+`org.apache.hadoop.fs.RawLocalFileSystem.setPermission` for `chmod`.
 """
 import argparse
 import collections
@@ -93,18 +102,51 @@ def classify(frames):
     return "other"
 
 
+def read_events(recording, event):
+    out = subprocess.run(
+        ["jfr", "print", "--json", "--stack-depth", "256",
+         "--events", event, recording],
+        check=True, capture_output=True, text=True).stdout
+    return json.loads(out)["recording"]["events"]
+
+
+# frames that start a process rather than ask for one
+FORK_PLUMBING = ("java.", "jdk.", "sun.", "org.apache.hadoop.util.Shell",
+                 "org.apache.hadoop.fs.FileUtil.execCommand")
+
+
+def forks(recording, top):
+    words = collections.Counter()
+    sites = collections.defaultdict(collections.Counter)
+    for e in read_events(recording, "jdk.ProcessStart"):
+        v = e["values"]
+        word = (v.get("command") or "").split(" ", 1)[0].rsplit("/", 1)[-1]
+        frames = (v.get("stackTrace") or {}).get("frames") or []
+        names = [frame_name(f) for f in frames]
+        site = next((n for n in names if not n.startswith(FORK_PLUMBING)),
+                    names[-1] if names else "?")
+        words[word] += 1
+        sites[word][site] += 1
+    print(f"{sum(words.values())} process starts")
+    for word, n in words.most_common():
+        print(f"  {n:>6}  {word}")
+        for site, k in sites[word].most_common(top):
+            print(f"  {k:>14}  {site}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("recording")
     ap.add_argument("--thread", default="Executor task launch worker")
     ap.add_argument("--top", type=int, default=10)
     ap.add_argument("--show", default="other")
+    ap.add_argument("--forks", action="store_true",
+                    help="count jdk.ProcessStart by command word and call site")
     a = ap.parse_args()
-    out = subprocess.run(
-        ["jfr", "print", "--json", "--stack-depth", "256",
-         "--events", "jdk.ExecutionSample", a.recording],
-        check=True, capture_output=True, text=True).stdout
-    events = json.loads(out)["recording"]["events"]
+    if a.forks:
+        forks(a.recording, a.top)
+        return
+    events = read_events(a.recording, "jdk.ExecutionSample")
     counts = collections.Counter()
     shown = collections.Counter()
     for e in events:
