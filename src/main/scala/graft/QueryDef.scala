@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** One verifiable operator/query: the Spark implementation plus (when
   * SQL-expressible) the equivalent DuckDB oracle SQL over the same parquet
@@ -24,17 +25,21 @@ object MoneyMath {
 }
 
 object QueryUtil {
-  /** Resolve a drained memory-sink table and DROP its temp-view entry: the
-    * returned DataFrame's analyzed plan keeps the sink's rows reachable for
-    * exactly as long as the caller holds it, while the catalog no longer
-    * pins every drained stream's result for the session's lifetime (a
-    * 3-pass benchmark over the streaming queries would otherwise
-    * accumulate three driver-resident copies per query). */
-  def detachMemorySink(s: SparkSession, name: String): DataFrame = {
-    val df = s.table(name)
-    df.queryExecution.analyzed // force resolution before the view goes away
-    s.catalog.dropTempView(name)
-    df
+  /** Run `df` to the end (`Trigger.AvailableNow`) into a memory sink and
+    * return the drained rows. `table` resolves the sink's plan at once, so
+    * the rows stay reachable for exactly as long as the caller holds the
+    * result; the sink's temp view is dropped on every path, a failed
+    * stream included, so the catalog never pins a drained result for the
+    * session's lifetime (a 3-pass benchmark over the streaming queries
+    * would otherwise accumulate three driver-resident copies per query). */
+  def drain(df: Dataset[_], mode: String = "append"): DataFrame = {
+    val s = df.sparkSession
+    val name = s"drain_${System.nanoTime()}"
+    try {
+      df.writeStream.format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      s.table(name)
+    } finally s.catalog.dropTempView(name)
   }
 
   /** Scope `spark.sql.shuffle.partitions` around a stateful-streaming

@@ -7,7 +7,7 @@ import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 
 /** Hadoop's `file:` file systems, minus their process starts. Without the
   * native Hadoop library, `RawLocalFileSystem` runs `chmod` for every
@@ -15,7 +15,9 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsSer
   * state-store file) and `readlink` for every `getFileLinkStatus` (each
   * FileContext rename). These classes make the same calls in-process and
   * change nothing else: the `.crc` side files, Spark's checkpoint file
-  * manager and its no-overwrite rename stay as they are.
+  * manager and its no-overwrite rename stay as they are. One read differs
+  * from Hadoop's `LocalFs`: [[NoForkLocalFs]] checks the `.crc` of a
+  * checkpoint file Spark reads back, which stock `LocalFs` skips.
   * `src/main/resources/core-site.xml` installs them as `fs.file.impl` and
   * `fs.AbstractFileSystem.file.impl`. */
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {
@@ -58,5 +60,11 @@ class NoForkRawLocalFs(uri: URI, conf: Configuration)
   override def isValidName(src: String): Boolean = true
 }
 
-/** `fs.AbstractFileSystem.file.impl`: checksummed, like Hadoop's `LocalFs`. */
-class NoForkLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NoForkRawLocalFs(uri, conf))
+/** `fs.AbstractFileSystem.file.impl`: checksummed, like Hadoop's `LocalFs`,
+  * and on every read. */
+class NoForkLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NoForkRawLocalFs(uri, conf)) {
+  /** `FilterFs.open(Path)` hands the raw file system the read and skips the
+    * `.crc`; this is how Spark reads offset-log, commit-log and state-store
+    * files. Read through the checked `open(Path, Int)` instead. */
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

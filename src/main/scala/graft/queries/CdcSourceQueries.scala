@@ -63,17 +63,13 @@ object CdcSourceQueries {
     * return the collected changelog rows. */
   private def runStream(spark: SparkSession, dir: String, mode: String,
       changelogMode: String = "all"): DataFrame = {
-    val name = s"cdc_stream_${mode}_${changelogMode}_${System.nanoTime()}"
-    val q = spark.readStream.format("graft-cdc")
+    val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "orders")
       .option("scan.startup.mode", mode)
       .option("changelog.mode", changelogMode)
       .option("scan.incremental.snapshot.chunk.size", "1000")
       .load()
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.QueryUtil.detachMemorySink(spark, name)
+    graft.QueryUtil.drain(stream)
   }
 
   def defs: Map[String, QueryDef] = Map(
@@ -336,15 +332,18 @@ object CdcSourceQueries {
             Thread.sleep(50L)
           }
         }
-        await(expectA, "dyn_a snapshot")
-        FileCdcDatabase.write(s, dir, "dyn_b", "graft", custSpec.pk,
-          snapshot = half(even = false),
-          changes = ChangelogGen.changes(half(even = false),
-            custSpec.copy(table = "dyn_b")),
-          snapshotPartitions = 4, force = true)
-        await(expectA + expectB, "dyn_b live pickup")
-        q.stop()
-        val changelog = graft.QueryUtil.detachMemorySink(s, name)
+        // a live poll, not a drain: stop it and drop its sink on every path
+        val changelog = try {
+          await(expectA, "dyn_a snapshot")
+          FileCdcDatabase.write(s, dir, "dyn_b", "graft", custSpec.pk,
+            snapshot = half(even = false),
+            changes = ChangelogGen.changes(half(even = false),
+              custSpec.copy(table = "dyn_b")),
+            snapshotPartitions = 4, force = true)
+          await(expectA + expectB, "dyn_b live pickup")
+          q.stop()
+          s.table(name) // resolved at once: the rows outlive the view
+        } finally { q.stop(); s.catalog.dropTempView(name) }
         // even/odd key domains are disjoint (copies shift by an even 1e9),
         // so one materialization over the shared pk space is exact
         Materialize.materialize(changelog, Seq(custSpec.pk))

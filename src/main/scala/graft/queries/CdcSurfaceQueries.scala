@@ -3,7 +3,6 @@ package graft.queries
 import graft.cdc._
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -81,27 +80,25 @@ object CdcSurfaceQueries {
     spark.read.parquet(dir).toDF("value").as[String]
   }
 
-  private[queries] def prepareCorrupt(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val dir = graft.Artifacts.dir("cdcdb_corrupt", sfDir)
-    val base = Tables.load(spark, sfDir, "orders")
-    FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
-      snapshot = base,
-      changes = ChangelogGen.changes(base, ordersSpec),
-      snapshotPartitions = 8)
-    val marker = Paths.get(dir, "orders", "_CORRUPTED")
-    if (!Files.exists(marker)) {
+  /** The `orders` database with two undecodable lines spliced into the
+    * middle of its log. Corrupted in the stage and published once, so no
+    * reader sees it clean and a torn build is rebuilt from scratch. */
+  private[graft] def prepareCorrupt(spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.once("cdcdb_corrupt", 1, sfDir) { dir =>
+      import java.nio.file.{Files, Paths}
+      val base = Tables.load(spark, sfDir, "orders")
+      FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
+        snapshot = base,
+        changes = ChangelogGen.changes(base, ordersSpec),
+        snapshotPartitions = 8)
       val logFile = Paths.get(
         FileCdcDatabase.dataFiles(dir, "orders", "log").head)
       val lines = Files.readAllLines(logFile)
       val mid = lines.size / 2
       lines.add(mid, """{"this_is":"not an envelope", "x": [1,2""")
       lines.add(mid, """{"hello": 42, "no_offset_field": true}""")
-      Files.write(logFile, lines, StandardOpenOption.TRUNCATE_EXISTING)
-      Files.writeString(marker, "ok")
+      Files.write(logFile, lines)
     }
-    dir
-  }
 
   /** Fixture with a TRUNCATE event between the update band (~1e6) and the
     * insert band (~2e9): post-truncate state = only the inserted copies
@@ -229,17 +226,13 @@ object CdcSurfaceQueries {
     "cdc_rate_limited_stream" -> QueryDef(
       (s, dir0) => {
         val dir = prepare(s, dir0)
-        val name = s"cdc_rate_${System.nanoTime()}"
-        val q = s.readStream.format("graft-cdc")
+        val stream = s.readStream.format("graft-cdc")
           .option("path", dir).option("table", "orders")
           .option("scan.startup.mode", "earliest")
           .option("scan.stream.max-events-per-trigger", "4000")
           .option("scan.incremental.snapshot.chunk.size", "1000")
           .load()
-          .writeStream.format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        opCounts(graft.QueryUtil.detachMemorySink(s, name))
+        opCounts(graft.QueryUtil.drain(stream))
       },
       Some("""SELECT __op, n FROM (
              |  SELECT '+I' AS __op, (SELECT COUNT(*) FROM orders WHERE o_orderkey % 100 = 1) AS n

@@ -754,11 +754,10 @@ object DedupQueries {
     // arrive after deletes, so deleted sources pair with nothing late).
     "cdc_stream_lsh_ingest" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
         import graft.cdc.ChangeRecord._
         import s.implicits._
         val dir = prepareDocsReplay(s, dir0)
-        val name = s"slsh_${System.nanoTime()}"
         val nBase = Tables.load(s, dir0, "documents").count()
         val evts = s.readStream.format("graft-cdc")
           .option("path", dir).option("table", "documents")
@@ -781,13 +780,8 @@ object DedupQueries {
             bucketStep(streamBucketCap))
           .filter(_.op == "p")
           .map(b => LshPair(b.id_a, b.id_b, b.m.toDouble / 16.0d))
-        val q = pairs.toDF()
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         // the same pair surfaces in up to 4 band buckets (identical est)
-        graft.QueryUtil.detachMemorySink(s, name).dropDuplicates("id_a", "id_b")
+        graft.QueryUtil.drain(pairs).dropDuplicates("id_a", "id_b")
           .orderBy(col("id_a"), col("id_b"))
       },
       Some {
@@ -859,11 +853,10 @@ object DedupQueries {
     // batch job over the accumulated corpus ever reruns.
     "cdc_stream_winnow_ingest" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 2) {
-        import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+        import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
         import graft.cdc.ChangeRecord._
         import s.implicits._
         val dir = prepareDocsReplay(s, dir0)
-        val name = s"swin_${System.nanoTime()}"
         val nBase = Tables.load(s, dir0, "documents").count()
         val evts = s.readStream.format("graft-cdc")
           .option("path", dir).option("table", "documents")
@@ -892,13 +885,8 @@ object DedupQueries {
           .flatMapGroupsWithState[WinnowBucketState, WinnowPairEvt](
             OutputMode.Append(), GroupStateTimeout.NoTimeout())(
             winnowBucketStep(streamWinnowCap))
-        val q = pairs.toDF()
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         // one emission per shared surviving bucket → the match count
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(pairs)
           .groupBy(col("id_a"), col("id_b"))
           .agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 2)

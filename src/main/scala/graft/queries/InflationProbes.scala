@@ -183,9 +183,8 @@ object InflationProbes {
     graft.cdc.FileCdcDatabase.write(s, replay, "documents", "graft",
       "doc_id", snapshot = base.limit(0), changes = ins)
     val n = base.count()
-    val name = s"scale_ingest_${k}_${System.nanoTime()}"
     try graft.QueryUtil.withShufflePartitions(s, 4) {
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
       val evts = s.readStream.format("graft-cdc")
         .option("path", replay).option("table", "documents")
         .option("scan.startup.mode", "earliest")
@@ -201,16 +200,13 @@ object InflationProbes {
           .as(Seq("band", "key")),
           col("doc_id"), col("off"), col("op"), col("sig"))
         .as[DedupQueries.BandEvt]
-      val q = evts.groupByKey(e => (e.band, e.key))
+      val stream = evts.groupByKey(e => (e.band, e.key))
         .flatMapGroupsWithState[DedupQueries.BucketState,
           DedupQueries.BucketEvt](
           OutputMode.Append(), GroupStateTimeout.NoTimeout())(
           DedupQueries.bucketStep(cap))
-        .filter(_.op == "p").toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val pairs = graft.QueryUtil.detachMemorySink(s, name).count()
+        .filter(_.op == "p")
+      val pairs = graft.QueryUtil.drain(stream).count()
       // batch-side bucket census: arrivals each bucket SAW vs the cap
       val buckets = base.select(col("doc_id"),
           minHashSignature(shingleHashes(col("text"), 3), 16).as("sig"))
@@ -255,9 +251,8 @@ object InflationProbes {
     graft.cdc.FileCdcDatabase.write(s, replay, "documents", "graft",
       "doc_id", snapshot = base.limit(0), changes = ins)
     val n = base.count()
-    val name = s"scale_winnow_${k}_${System.nanoTime()}"
     try graft.QueryUtil.withShufflePartitions(s, 2) {
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
       val evts = s.readStream.format("graft-cdc")
         .option("path", replay).option("table", "documents")
         .option("scan.startup.mode", "earliest")
@@ -283,11 +278,7 @@ object InflationProbes {
           DedupQueries.WinnowPairEvt](
           OutputMode.Append(), GroupStateTimeout.NoTimeout())(
           DedupQueries.winnowBucketStep(cap))
-      val q = pairEvts.toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sunk = graft.QueryUtil.detachMemorySink(s, name).cache()
+      val sunk = graft.QueryUtil.drain(pairEvts).cache()
       val emitted = sunk.count()
       val streamPairs = sunk.groupBy(col("id_a"), col("id_b"))
         .agg(count(lit(1)).as("ns")).filter(col("ns") >= 2).count()
@@ -352,9 +343,7 @@ object InflationProbes {
       infl.write.mode("overwrite").parquet(s"$replay/events.parquet")
       val n = s.read.parquet(s"$replay/events.parquet").count()
       graft.QueryUtil.withShufflePartitions(s, 2) {
-        import org.apache.spark.sql.streaming.Trigger
         import org.apache.spark.sql.types.LongType
-        val name = s"scale_outer_${k}_${System.nanoTime()}"
         // stream the written DIRECTORY directly: Tables.eventsStream's
         // pathGlobFilter matches the sf dirs' single-file layout, not a
         // Spark-written events.parquet/part-*.parquet directory
@@ -369,18 +358,14 @@ object InflationProbes {
           .select(col("user_id"), col("ts").as("p_ts"),
             col("event_id").as("purchase_id"))
           .withWatermark("p_ts", "1 hour")
-        val q = purchases.join(clicks,
+        val stream = purchases.join(clicks,
             col("user_id") === col("c_user") &&
               col("c_ts").cast(LongType) >= col("p_ts").cast(LongType)
                 - 600 &&
               col("c_ts").cast(LongType) <= col("p_ts").cast(LongType),
             "leftOuter")
           .select(col("user_id"), col("purchase_id"), col("click_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val sunk = graft.QueryUtil.detachMemorySink(s, name).cache()
+        val sunk = graft.QueryUtil.drain(stream).cache()
         val out = sunk.count()
         val matched = sunk.filter(col("click_id").isNotNull).count()
         sunk.unpersist()

@@ -1656,11 +1656,10 @@ object SimilarityQueries {
     // so the maintained index matches the relational oracle exactly.
     "cdc_stream_ivf_ingest" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
-        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
         import graft.cdc.ChangeRecord._
         import s.implicits._
         val dir = prepareVecsReplay(s, dir0)
-        val name = s"sivf_${System.nanoTime()}"
         val nBase = emb(s, dir0).count()
         // static coarse structure, driver-held (8 centroids × 64 ints)
         val scale = emb(s, dir0).select(explode(col("embedding")).as("x"))
@@ -1704,10 +1703,7 @@ object SimilarityQueries {
           .flatMapGroupsWithState[CellState, CellVer](
             OutputMode.Append(), GroupStateTimeout.NoTimeout())(
             ivfCellTransition)
-        val q = vers.toDF().writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(vers)
           .groupBy(col("cell"))
           .agg(max_by(struct(col("n_live"), col("sum_ids")), col("off"))
             .as("v"))

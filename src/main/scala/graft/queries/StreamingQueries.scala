@@ -115,9 +115,7 @@ object StreamingQueries {
       // streaming state is O(windows×types): size stores to state volume
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         import org.apache.spark.sql.types._
-        val name = s"hourly_${System.nanoTime()}"
-        val streamed = Tables.eventsStream(s, dir0)
-        val q = streamed
+        val hourly = Tables.eventsStream(s, dir0)
           .withWatermark("ts", "30 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -125,11 +123,7 @@ object StreamingQueries {
               .as("sum_value"))
           .select(col("window.start").as("hour"), col("event_type"),
             col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(hourly, "update")
           .groupBy(col("hour"), col("event_type"))
           .agg(max_by(struct(col("n"), col("sum_value")), col("n")).as("v"))
           .select(col("hour"), col("event_type"), col("v.n").as("n"),
@@ -158,12 +152,11 @@ object StreamingQueries {
         import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
         import s.implicits._
         val W = 86400L
-        val name = s"wfunnel_${System.nanoTime()}"
         val ds = Tables.eventsStream(s, dir0)
           .select(col("user_id"), col("event_type"), col("event_id"),
             col("ts").cast(LongType).as("tse"))
           .as[(Long, String, Long, Long)]
-        val q = ds.groupByKey(_._1)
+        val stream = ds.groupByKey(_._1)
           .flatMapGroupsWithState[FunnelState, (Long, Int)](
             OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
             (user, it, st) =>
@@ -174,12 +167,8 @@ object StreamingQueries {
               Iterator.single((user, fs.stage))
           }
           .toDF("user_id", "stage")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         // stage is monotone per user: the final emission is the max
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(stream, "update")
           .groupBy(col("user_id"))
           .agg(max(col("stage")).cast(LongType).as("stage"))
           .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
@@ -199,7 +188,6 @@ object StreamingQueries {
       // query vs 8, 2 shaves another ~12%; a real cluster sizes up only
       // when per-partition state no longer fits an executor)
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 2) {
-        val name = s"ssj_${System.nanoTime()}"
         def eventsStream = Tables.eventsStream(s, dir0)
         import org.apache.spark.sql.types.LongType
         val clicks = eventsStream.filter(col("event_type") === "click")
@@ -214,16 +202,12 @@ object StreamingQueries {
         // matching the oracle's floor(epoch(...)) exactly
         // stream-stream joins emit append-only pairs; the rollup runs as a
         // batch aggregation over the drained sink
-        val q = purchases.join(clicks,
+        val stream = purchases.join(clicks,
             col("user_id") === col("c_user") &&
               col("c_ts").cast(LongType) >= col("p_ts").cast(LongType) - 600 &&
               col("c_ts").cast(LongType) <= col("p_ts").cast(LongType))
           .select(col("user_id"), col("purchase_id"), col("click_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(stream)
           .groupBy(col("user_id"), col("purchase_id"))
           .agg(count(lit(1)).as("n_prior_clicks"))
           .orderBy(col("user_id"), col("purchase_id"))
@@ -250,7 +234,6 @@ object StreamingQueries {
     // (StreamOuterAvailableNowSpec pins the behavior.)
     "q_stream_left_outer_join" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 2) {
-        val name = s"slo_${System.nanoTime()}"
         def eventsStream = Tables.eventsStream(s, dir0)
         import org.apache.spark.sql.types.LongType
         val clicks = eventsStream.filter(col("event_type") === "click")
@@ -261,17 +244,13 @@ object StreamingQueries {
           .select(col("user_id"), col("ts").as("p_ts"),
             col("event_id").as("purchase_id"))
           .withWatermark("p_ts", "1 hour")
-        val q = purchases.join(clicks,
+        val stream = purchases.join(clicks,
             col("user_id") === col("c_user") &&
               col("c_ts").cast(LongType) >= col("p_ts").cast(LongType) - 600 &&
               col("c_ts").cast(LongType) <= col("p_ts").cast(LongType),
             "leftOuter")
           .select(col("user_id"), col("purchase_id"), col("click_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(stream)
           .groupBy(col("user_id"), col("purchase_id"))
           .agg(count(col("click_id")).as("n_prior_clicks"))
           .orderBy(col("user_id"), col("purchase_id"))
@@ -307,7 +286,6 @@ object StreamingQueries {
     // deterministic end-of-stream semantics on both sides.
     "q_stream_full_outer_join" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 2) {
-        val name = s"sfo_${System.nanoTime()}"
         def eventsStream = Tables.eventsStream(s, dir0)
         import org.apache.spark.sql.types.LongType
         val clicks = eventsStream.filter(col("event_type") === "click")
@@ -318,18 +296,14 @@ object StreamingQueries {
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
             col("event_id").as("purchase_id"))
           .withWatermark("p_ts", "1 hour")
-        val q = purchases.join(clicks,
+        val stream = purchases.join(clicks,
             col("p_user") === col("c_user") &&
               col("c_ts").cast(LongType) >= col("p_ts").cast(LongType) - 600 &&
               col("c_ts").cast(LongType) <= col("p_ts").cast(LongType),
             "fullOuter")
           .select(col("p_user"), col("c_user"), col("purchase_id"),
             col("click_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(stream)
           .select(coalesce(col("p_user"), col("c_user")).as("user_id"),
             when(col("purchase_id").isNotNull && col("click_id").isNotNull,
               "both").when(col("purchase_id").isNotNull, "p_only")
@@ -375,18 +349,12 @@ object StreamingQueries {
     // watermark. Counts per event_type after dedup match batch DISTINCT.
     "q_stream_dedup" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
-        val name = s"sdd_${System.nanoTime()}"
-        val streamed = Tables.eventsStream(s, dir0)
-        val q = streamed
+        val perType = Tables.eventsStream(s, dir0)
           .withWatermark("ts", "1 hour")
           .dropDuplicates("user_id", "event_type")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_users"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name).orderBy(col("event_type"))
+        graft.QueryUtil.drain(perType, "complete").orderBy(col("event_type"))
       },
       Some("""SELECT event_type, COUNT(DISTINCT user_id) AS n_users
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
@@ -400,24 +368,20 @@ object StreamingQueries {
     "q_stream_session_window" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         import org.apache.spark.sql.types._
-        val name = s"ssw_${System.nanoTime()}"
         // timestamp→long cast floor-divides micros by 1e6: exactly the
         // oracle's floor(epoch(ts)) second truncation
         val streamed = Tables.eventsStream(s, dir0)
           .withColumn("tse", col("ts").cast(LongType))
           .withColumn("tst", timestamp_seconds(col("tse")))
-        val q = streamed
+        val sessions = streamed
           .withWatermark("tst", "1 hour")
           .groupBy(col("user_id"), session_window(col("tst"), "1800 seconds"))
           .agg(count(lit(1)).as("n_events"),
             min(col("tse")).as("sess_start"), max(col("tse")).as("sess_end"))
           .select(col("user_id"), col("session_window.start").as("ws"),
             col("n_events"), col("sess_start"), col("sess_end"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete") // session windows reject update mode
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        // session windows reject update mode
+        graft.QueryUtil.drain(sessions, "complete")
           .groupBy(col("user_id"), col("ws"))
           .agg(max_by(struct(col("n_events"), col("sess_start"),
             col("sess_end")), col("n_events")).as("v"))
@@ -458,15 +422,10 @@ object StreamingQueries {
     "cdc_stream_stateful_upserts" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         val dir = prepare(s, dir0)
-        val name = s"stateful_${System.nanoTime()}"
         val ups = StreamMaterialize.upserts(
           readStreamEarliest(s, dir), Seq(ordersSpec.pk))
-        val q = ups.writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         // collapse the upsert stream: newest op per key, deletes drop out
-        val collected = graft.QueryUtil.detachMemorySink(s, name)
+        val collected = graft.QueryUtil.drain(ups, "update")
         val last = collected.groupBy(col("k"))
           .agg(max_by(struct(col("op"), col("off"), col("img")), col("off"))
             .as("v"))
@@ -490,16 +449,11 @@ object StreamingQueries {
         val dir = prepare(s, dir0)
         val cust = Tables.load(s, dir0, "customer")
           .select(col("c_custkey"), col("c_mktsegment"))
-        val name = s"senrich_${System.nanoTime()}"
-        val q = readStreamEarliest(s, dir)
+        val stream = readStreamEarliest(s, dir)
           .filter(col(OpCol) === RowKind.Insert)
           .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("c_mktsegment"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(stream)
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n_inserted"))
           .orderBy(col("c_mktsegment"))
@@ -522,17 +476,12 @@ object StreamingQueries {
         val dir = prepare(s, dir0)
         val cust = Tables.load(s, dir0, "customer")
           .select(col("c_custkey"), col("c_mktsegment"))
-        val name = s"echlog_${System.nanoTime()}"
-        val q = readStreamEarliest(s, dir)
+        val stream = readStreamEarliest(s, dir)
           .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("o_totalprice"),
             col("c_mktsegment"), col(OpCol), col(OffsetCol),
             col(TsCol), col(DbCol), col(TableCol))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        Materialize.materialize(graft.QueryUtil.detachMemorySink(s, name), Seq("o_orderkey"))
+        Materialize.materialize(graft.QueryUtil.drain(stream), Seq("o_orderkey"))
           .select(col("o_orderkey"), col("o_totalprice"),
             col("c_mktsegment"))
           .orderBy(col("o_orderkey"))
@@ -558,14 +507,10 @@ object StreamingQueries {
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         import org.apache.spark.sql.types.DoubleType
         val dir = prepare(s, dir0)
-        val name = s"retract_${System.nanoTime()}"
-        val q = StreamMaterialize.retractAgg(
+        val stream = StreamMaterialize.retractAgg(
             readStreamEarliest(s, dir), "o_orderstatus", "o_totalprice")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         // newest version per group = the current aggregate
-        graft.QueryUtil.detachMemorySink(s, name).groupBy(col("g"))
+        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
           .agg(max_by(struct(col("cnt"), col("total")), col("ver")).as("v"))
           .select(col("g").as("o_orderstatus"),
             col("v.cnt").as("n_delta"),
@@ -602,14 +547,10 @@ object StreamingQueries {
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         import org.apache.spark.sql.types.DoubleType
         val dir = prepare(s, dir0)
-        val name = s"retractmm_${System.nanoTime()}"
-        val q = StreamMaterialize.retractMinMax(
+        val stream = StreamMaterialize.retractMinMax(
             readStreamEarliest(s, dir), "o_orderstatus", "o_totalprice")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         // newest version per group = the current extremes
-        graft.QueryUtil.detachMemorySink(s, name).groupBy(col("g"))
+        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
           .agg(max_by(struct(col("n"), col("min_m"), col("max_m")),
             col("ver")).as("v"))
           .select(col("g").as("o_orderstatus"),
@@ -654,13 +595,9 @@ object StreamingQueries {
     "cdc_stream_kmv_distinct" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         val dir = prepare(s, dir0)
-        val name = s"kmv_${System.nanoTime()}"
-        val q = StreamMaterialize.kmvSketch(
+        val stream = StreamMaterialize.kmvSketch(
             readStreamEarliest(s, dir), "o_orderpriority", "o_orderkey", 8)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name).groupBy(col("g"))
+        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
           .agg(max_by(col("kth"), col("ver")).as("kth"))
           .select(col("g").as("o_orderpriority"), col("kth"),
             round(lit(7.0d) * lit(1152921504606846976.0d) /
@@ -703,14 +640,10 @@ object StreamingQueries {
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         import org.apache.spark.sql.types.DoubleType
         val dir = prepare(s, dir0)
-        val name = s"retractq_${System.nanoTime()}"
-        val q = StreamMaterialize.retractQuantile(
+        val stream = StreamMaterialize.retractQuantile(
             readStreamEarliest(s, dir), "o_orderstatus", "o_totalprice",
             binWidthCents = 1048576L)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name).groupBy(col("g"))
+        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
           .agg(max_by(struct(col("n_net"), col("p50_est"), col("p95_est"),
             col("p99_est")), col("ver")).as("v"))
           .select(col("g").as("o_orderstatus"), col("v.n_net").as("n_net"),
@@ -879,14 +812,10 @@ object StreamingQueries {
         val joined = ChangelogJoin.join(
           src("orders"), "o_orderkey", "o_custkey",
           src("customer"), "c_custkey", "c_custkey")
-        val name = s"chjoin_${System.nanoTime()}"
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         val oSchema = Tables.load(s, dir0, "orders").schema
         val cSchema = Tables.load(s, dir0, "customer").schema
         ChangelogJoin
-          .materializeJoined(graft.QueryUtil.detachMemorySink(s, name))
+          .materializeJoined(graft.QueryUtil.drain(joined, "update"))
           .select(from_json(col("limg"), oSchema).as("l"),
             from_json(col("rimg"), cSchema).as("r"))
           .select(col("l.o_orderkey"), col("l.o_totalprice"),
@@ -930,14 +859,10 @@ object StreamingQueries {
         val joined = ChangelogJoin.join(
           src("orders"), "o_orderkey", "o_custkey",
           src("customer"), "c_custkey", "c_custkey")
-        val name = s"chjoinr_${System.nanoTime()}"
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
         val oSchema = Tables.load(s, dir0, "orders").schema
         val cSchema = Tables.load(s, dir0, "customer").schema
         ChangelogJoin
-          .materializeJoined(graft.QueryUtil.detachMemorySink(s, name))
+          .materializeJoined(graft.QueryUtil.drain(joined, "update"))
           .select(from_json(col("limg"), oSchema).as("l"),
             from_json(col("rimg"), cSchema).as("r"))
           .select(col("l.o_orderkey"), col("l.o_totalprice"),
@@ -983,16 +908,12 @@ object StreamingQueries {
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
         val dir = prepare(s, dir0)
         import s.implicits._
-        val name = s"scd2s_${System.nanoTime()}"
         val evs = readStreamEarliest(s, dir)
           .filter(col(OpCol) =!= RowKind.UpdateBefore)
           .select(col("o_orderkey").as("k"), col(OffsetCol).as("off"),
             col(OpCol).as("op"), col("o_totalprice").as("price"))
           .as[Scd2Ev]
-        val q = scd2ClosedStream(evs).writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        graft.QueryUtil.detachMemorySink(s, name)
+        graft.QueryUtil.drain(scd2ClosedStream(evs))
           .select(col("o_orderkey"), col("o_totalprice"),
             col("valid_from"), col("valid_to"))
           .orderBy(col("o_orderkey"), col("valid_from"))

@@ -157,4 +157,27 @@ class CdcParseErrorSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("fail|skip"), e.getMessage)
   }
+
+  test("cdcdb_corrupt: a rebuild after a torn build (no _DONE) leaves " +
+    "exactly two unparseable log lines") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.queries.CdcSurfaceQueries.prepareCorrupt
+    val sf = tmpDir("corrupt-sf")
+    (1L to 300L).map(i => (i, i * 1.5)).toDF("o_orderkey", "o_totalprice")
+      .write.parquet(s"$sf/orders.parquet")
+    val dir = prepareCorrupt(spark, sf)
+    def unparseable(): Int = {
+      val log = graft.cdc.FileCdcDatabase.dataFiles(dir, "orders", "log").head
+      Files.readAllLines(Paths.get(log)).asScala
+        .count(!_.contains(s"\"${graft.cdc.ChangeRecord.OffsetCol}\":"))
+    }
+    try {
+      assert(unparseable() === 2)
+      Files.delete(Paths.get(dir, "_DONE"))
+      assert(prepareCorrupt(spark, sf) === dir)
+      assert(Files.exists(Paths.get(dir, "_DONE")))
+      assert(unparseable() === 2)
+    } finally QueryUtil.deleteRecursively(new java.io.File(dir))
+  }
 }

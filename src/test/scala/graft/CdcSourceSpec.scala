@@ -523,17 +523,13 @@ class CdcSourceSpec extends SparkSpecBase {
   test("bounded offset: a stream drains to the bound and idles there") {
     val dir = tmpDir("cdc-bounded-stream")
     writeDb(dir, 6L)
-    val name = s"bounded_${System.nanoTime()}"
-    val q = spark.readStream.format("graft-cdc")
+    val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .option("scan.bounded.offset", "4")
       .option("scan.stream.max-events-per-trigger", "2")
       .load()
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val offs = spark.table(name).select(OffsetCol)
+    val offs = QueryUtil.drain(stream).select(OffsetCol)
       .collect().map(_.getLong(0)).toSet
     assert(offs === Set(1L, 2L, 3L, 4L), "drained exactly to the bound")
   }
@@ -544,12 +540,11 @@ class CdcSourceSpec extends SparkSpecBase {
     // minus newest consumed __ts_ms; ChangelogGen stamps ts = offset here)
     val dir = tmpDir("cdc-metrics")
     writeDb(dir, 6L)
-    val name = s"metrics_${System.nanoTime()}"
     val q = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .load()
-      .writeStream.format("memory").queryName(name)
+      .writeStream.format("noop")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val progress = q.recentProgress.filter(_.sources.nonEmpty)
@@ -562,7 +557,6 @@ class CdcSourceSpec extends SparkSpecBase {
     // positive and finite; -1 would mean the seek failed
     val lag = m.get("currentFetchEventTimeLag").toLong
     assert(lag > 0L, s"expected a positive event-time lag, got $lag")
-    graft.QueryUtil.detachMemorySink(spark, name)
   }
 
   test("per-reader resource scopes: one reader's sweep leaves the other open") {
@@ -1016,8 +1010,7 @@ class CdcSourceSpec extends SparkSpecBase {
     "(first micro-batch only, restart-safe)") {
     val dir = tmpDir("cdc-skip-stream")
     writeDb(dir, 6L)
-    val name = s"skipstream_${System.nanoTime()}"
-    val q = spark.readStream.format("graft-cdc")
+    val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "specific-offset")
       .option("scan.startup.specific-offset", "2")
@@ -1026,10 +1019,7 @@ class CdcSourceSpec extends SparkSpecBase {
       // force multiple micro-batches so later batches prove unaffected
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table(name).select(OpCol, OffsetCol).collect()
+    val got = QueryUtil.drain(stream).select(OpCol, OffsetCol).collect()
       .map(x => (x.getString(0), x.getLong(1))).toSeq.sortBy(_._2)
     assert(got === Seq(("+U", 4L), ("-D", 5L), ("+I", 6L)))
   }

@@ -3,7 +3,6 @@ package graft
 import graft.cdc.ChangeRecord._
 import graft.cdc.{ChangelogJoin, FileCdcDatabase}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -70,12 +69,8 @@ class ChangelogJoinSpec extends SparkSpecBase {
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
 
-    val name = s"chj_${System.nanoTime()}"
-    val q = ChangelogJoin.join(src("l"), "id", "ck", src("r"), "ck", "ck")
-      .writeStream.format("memory").queryName(name).outputMode("update")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val out = QueryUtil.detachMemorySink(spark, name).cache()
+    val out = QueryUtil.drain(
+      ChangelogJoin.join(src("l"), "id", "ck", src("r"), "ck", "ck"), "update").cache()
 
     // final state: all three left rows joined to ck=10 with the updated
     // segment; nothing joined to the deleted ck=20
@@ -142,12 +137,8 @@ class ChangelogJoinSpec extends SparkSpecBase {
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
 
-    val name = s"chjm_${System.nanoTime()}"
-    val q = ChangelogJoin.join(src("l2"), "id", "ck", src("r2"), "rid", "ck")
-      .writeStream.format("memory").queryName(name).outputMode("update")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val out = QueryUtil.detachMemorySink(spark, name)
+    val out = QueryUtil.drain(
+      ChangelogJoin.join(src("l2"), "id", "ck", src("r2"), "rid", "ck"), "update")
 
     val fin = ChangelogJoin.materializeJoined(out)
       .select(col("lpk"), col("rpk"),

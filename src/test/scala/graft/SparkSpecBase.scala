@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM: four cores
@@ -14,8 +15,19 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpecBase extends AnyFunSuite {
+abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.session
+
+  /** Fails the suite that leaves a streaming query running: the session is
+    * shared, so a leaked query would keep running through every later
+    * suite. The leaked queries are stopped first, so only this suite fails. */
+  override def afterAll(): Unit =
+    try SparkSession.getDefaultSession.foreach { s =>
+      val leaked = s.streams.active
+      leaked.foreach(_.stop())
+      if (leaked.nonEmpty) fail("streaming queries left running: " +
+        leaked.map(q => Option(q.name).getOrElse(q.id.toString)).mkString(", "))
+    } finally super.afterAll()
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -3,7 +3,6 @@ package graft
 import graft.cdc.ChangeRecord._
 import graft.cdc.{FileCdcDatabase, StreamMaterialize, UpsertSink}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -105,18 +104,13 @@ class StreamMaterializeSpec extends SparkSpecBase {
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
       force = true)
 
-    val name = s"ups_${System.nanoTime()}"
     val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
-    val q = StreamMaterialize.upserts(stream, Seq("id"))
-      .writeStream.format("memory").queryName(name).outputMode("update")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val rows = spark.table(name)
+    val rows = QueryUtil.drain(
+        StreamMaterialize.upserts(stream, Seq("id")), "update")
       .select("k", "off", "op").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
     // id1 upserted twice (state advanced), id2 deleted
@@ -190,26 +184,23 @@ class StreamMaterializeSpec extends SparkSpecBase {
       Row(2L, "d", 20L, "graft", "t", Row(2L, "g1", 20.0), null))), env)
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
       force = true)
-    val name = s"retract_${System.nanoTime()}"
     val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
-    val q = StreamMaterialize.retractAgg(stream, "g", "m")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val fin = spark.table(name).groupBy(col("g"))
+    val drained = QueryUtil.drain(
+      StreamMaterialize.retractAgg(stream, "g", "m"), "update")
+    val fin = drained.groupBy(col("g"))
       .agg(max_by(struct(col("cnt"), col("total")), col("ver")).as("v"))
       .collect()
       .map(r => (r.getString(0), (r.getStruct(1).getLong(0),
         r.getStruct(1).getDecimal(1).doubleValue()))).toMap
     assert(fin === Map("g1" -> ((-1L, 10.0))))
-    assert(spark.table(name).select(max(col("ver"))).collect()(0)
+    assert(drained.select(max(col("ver"))).collect()(0)
       .getLong(0) >= 2L, "retractions crossed at least two micro-batches")
     // every batch's emission carried a monotone per-group version
-    val vers = spark.table(name).select("g", "ver").collect()
+    val vers = drained.select("g", "ver").collect()
       .map(r => (r.getString(0), r.getLong(1)))
     assert(vers.groupBy(_._1).forall { case (_, vs) =>
       vs.map(_._2).sorted.sameElements(1L to vs.length) })
@@ -236,17 +227,13 @@ class StreamMaterializeSpec extends SparkSpecBase {
       Row(4L, "d", 40L, "graft", "t", Row(3L, "g1", 40.0), null))), env)
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
       force = true)
-    val name = s"retractmm_${System.nanoTime()}"
     val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
-    val q = StreamMaterialize.retractMinMax(stream, "g", "m")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table(name)
+    val rows = QueryUtil.drain(
+        StreamMaterialize.retractMinMax(stream, "g", "m"), "update")
       .select("g", "n", "min_m", "max_m", "ver").collect()
       .map(r => (r.getLong(4), (r.getLong(1),
         Option(r.getDecimal(2)).map(_.doubleValue()),
@@ -278,16 +265,13 @@ class StreamMaterializeSpec extends SparkSpecBase {
       Row(4L, "d", 40L, "graft", "t", Row(22L, "g1"), null))), env)
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
       force = true)
-    val name = s"kmv_${System.nanoTime()}"
     val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
-    val q = StreamMaterialize.kmvSketch(stream, "g", "id", 2)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val drained = QueryUtil.drain(
+      StreamMaterialize.kmvSketch(stream, "g", "id", 2), "update")
     import graft.functions.TextFunctions.md5Long
     val hashes = spark.range(1).select(
         md5Long(lit("11")).as("h1"), md5Long(lit("22")).as("h2"),
@@ -295,7 +279,7 @@ class StreamMaterializeSpec extends SparkSpecBase {
       .collect()(0)
     val sorted = Seq(hashes.getLong(0), hashes.getLong(1),
       hashes.getLong(2)).sorted
-    val byVer = spark.table(name).select("ver", "kth").collect()
+    val byVer = drained.select("ver", "kth").collect()
       .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
       .toMap
     // after all three inserts the 2nd-smallest hash is the kth minimum
@@ -325,17 +309,13 @@ class StreamMaterializeSpec extends SparkSpecBase {
       Row(4L, "d", 40L, "graft", "t", Row(3L, "g1", 25.0), null))), env)
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
       force = true)
-    val name = s"retractq_${System.nanoTime()}"
     val stream = spark.readStream.format("graft-cdc")
       .option("path", dir).option("table", "t")
       .option("scan.startup.mode", "earliest")
       .option("scan.stream.max-events-per-trigger", "1")
       .load()
-    val q = StreamMaterialize.retractQuantile(stream, "g", "m", 1000L)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val byVer = spark.table(name)
+    val byVer = QueryUtil.drain(
+        StreamMaterialize.retractQuantile(stream, "g", "m", 1000L), "update")
       .select("ver", "n_net", "p50_est", "p99_est").collect()
       .map(r => (r.getLong(0), (r.getLong(1),
         Option(r.get(2)).map(_.asInstanceOf[Double]),
@@ -467,7 +447,6 @@ class StreamMaterializeSpec extends SparkSpecBase {
       Row(30L, "d", 0L, "graft", "t", Row(1L, 3.0), null))), env)
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes,
       force = true)
-    val name = s"scd2spec_${System.nanoTime()}"
     // 1 event per trigger: every open version must survive in state across
     // a micro-batch boundary before it closes
     val evs = spark.readStream.format("graft-cdc")
@@ -479,11 +458,8 @@ class StreamMaterializeSpec extends SparkSpecBase {
       .select(col("id").as("k"), col(OffsetCol).as("off"),
         col(OpCol).as("op"), col("price").as("price"))
       .as[Scd2Ev]
-    val q = StreamingQueries.scd2ClosedStream(evs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table(name).as[Scd2Closed].collect().toSet
+    val got = QueryUtil.drain(StreamingQueries.scd2ClosedStream(evs))
+      .as[Scd2Closed].collect().toSet
     assert(got === Set(
       Scd2Closed(1L, 2.0, 10L, 20L),
       Scd2Closed(1L, 3.0, 20L, 30L)), got)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Trigger.AvailableNow + left-outer join semantics on a one-file input:
@@ -24,17 +23,13 @@ class StreamOuterAvailableNowSpec extends SparkSpecBase {
       .select(col("user_id"), col("ts").as("p_ts"),
         col("event_id").as("purchase_id"))
       .withWatermark("p_ts", "1 hour")
-    val q = purchases.join(clicks,
+    val joined = purchases.join(clicks,
         col("user_id") === col("c_user") &&
           col("c_ts").cast(LongType) >= col("p_ts").cast(LongType) - 600 &&
           col("c_ts").cast(LongType) <= col("p_ts").cast(LongType),
         "leftOuter")
       .select(col("user_id"), col("purchase_id"), col("click_id"))
-      .writeStream.format("memory").queryName("soan")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("soan")
+    val got = QueryUtil.drain(joined)
 
     val ev = Tables.load(spark, dir0, "events")
     val wmRow = ev.agg(

@@ -52,6 +52,6 @@ class StreamOuterJoinSpec extends SparkSpecBase {
       assert(rows.contains((1L, 100L, 98L)), s"matched pair missing: $rows")
       assert(rows.contains((2L, 100L, -1L)),
         s"outer null row not emitted after watermark: $rows")
-    } finally q.stop()
+    } finally { q.stop(); spark.catalog.dropTempView("soj") }
   }
 }

@@ -18,7 +18,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FSDataInputStream, FileAlreadyExistsException, FileContext, FileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.types._
 
 /** The fork-free `file:` file systems (`core-site.xml`): installed, the same
@@ -51,11 +51,15 @@ class NoForkLocalFsSpec extends SparkSpecBase {
     val fc = FileContext.getLocalFSFileContext
     val viaFs = new Path(dir.resolve("fs.bin").toUri)
     val viaFc = new Path(dir.resolve("fc.bin").toUri)
+    val viaFcOpen = new Path(dir.resolve("fc-open.bin").toUri)
     val o1 = fs.create(viaFs); o1.write(data); o1.close()
-    val o2 = fc.create(viaFc, EnumSet.of(CreateFlag.CREATE)); o2.write(data); o2.close()
-    // FileContext.open(path) alone reads the raw file unchecked (Hadoop's
-    // FilterFs.open(Path) bypasses ChecksumFs); with a buffer size it checks
-    Seq[(Path, Path => FSDataInputStream)](viaFs -> (fs.open(_)), viaFc -> (fc.open(_, 4096)))
+    Seq(viaFc, viaFcOpen).foreach { p =>
+      val o = fc.create(p, EnumSet.of(CreateFlag.CREATE)); o.write(data); o.close()
+    }
+    // FileContext.open(path), without a buffer size, is how Spark reads
+    // checkpoint files back
+    Seq[(Path, Path => FSDataInputStream)](viaFs -> (fs.open(_)),
+        viaFc -> (fc.open(_, 4096)), viaFcOpen -> (fc.open(_)))
       .foreach { case (p, open) =>
         def readAll(): Array[Byte] = {
           val in = open(p)
@@ -149,8 +153,9 @@ class NoForkLocalFsSpec extends SparkSpecBase {
       started)
   }
 
-  test("zero-fork guard: a checkpointed retractAgg stream and a sink merge " +
-    "start no chmod, readlink, stat or ls") {
+  /** A three-event CDC database `t` (insert, update, delete) over a
+    * two-row snapshot. */
+  private def writeRetractDb(): String = {
     val dir = tmpDir("nofork-db")
     val pay = StructType(Seq(
       StructField("id", LongType), StructField("g", StringType),
@@ -167,19 +172,55 @@ class NoForkLocalFsSpec extends SparkSpecBase {
       Row(2L, "u", 20L, "graft", "t", Row(1L, "g1", 10.0), Row(1L, "g1", 40.0)),
       Row(3L, "d", 30L, "graft", "t", Row(2L, "g1", 20.0), null))), env)
     FileCdcDatabase.write(spark, dir, "t", "graft", "id", snapshot, changes, force = true)
-    def cdc(mode: String) = Map("path" -> dir, "table" -> "t", "scan.startup.mode" -> mode)
+    dir
+  }
+
+  private def cdc(dir: String, mode: String) =
+    Map("path" -> dir, "table" -> "t", "scan.startup.mode" -> mode)
+
+  /** A retractAgg stream over `dir`'s log, one event per micro-batch, run
+    * to the end under `checkpoint`. */
+  private def runRetractAgg(dir: String, checkpoint: String): StreamingQuery = {
+    val q = StreamMaterialize.retractAgg(spark.readStream.format("graft-cdc")
+        .options(cdc(dir, "earliest"))
+        .option("scan.stream.max-events-per-trigger", "1").load(), "g", "m")
+      .writeStream.format("noop")
+      .option("checkpointLocation", checkpoint)
+      .outputMode("update").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  test("zero-fork guard: a checkpointed retractAgg stream and a sink merge " +
+    "start no chmod, readlink, stat or ls") {
+    val dir = writeRetractDb()
     val started = processStarts {
-      val q = StreamMaterialize.retractAgg(spark.readStream.format("graft-cdc")
-          .options(cdc("earliest"))
-          .option("scan.stream.max-events-per-trigger", "1").load(), "g", "m")
-        .writeStream.format("memory").queryName(s"nofork_${System.nanoTime()}")
-        .option("checkpointLocation", tmpDir("nofork-ckpt"))
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val q = runRetractAgg(dir, tmpDir("nofork-ckpt"))
       assert(q.recentProgress.count(_.numInputRows > 0) === 3)
-      UpsertSink.mergeInto(spark, spark.read.format("graft-cdc").options(cdc("initial")).load(),
+      UpsertSink.mergeInto(spark, spark.read.format("graft-cdc").options(cdc(dir, "initial")).load(),
         Seq("id"), tmpDir("nofork-sink") + "/state")
     }
     assert(fileToolStarts(started).isEmpty, fileToolStarts(started).take(5))
+  }
+
+  test("a restarted stream whose latest offset-log file has a flipped bit " +
+    "fails with a ChecksumException") {
+    val dir = writeRetractDb()
+    val ckpt = tmpDir("nofork-ckpt-crc")
+    runRetractAgg(dir, ckpt)
+    val offsets = Paths.get(ckpt, "offsets")
+    val latest = offsets.resolve(offsets.toFile.list()
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).maxBy(_.toLong))
+    // the last digit of the batch timestamp: the file still parses
+    val text = Files.readString(latest)
+    val key = "\"batchTimestampMs\":"
+    val start = text.indexOf(key) + key.length
+    val pos = start + text.drop(start).takeWhile(_.isDigit).length - 1
+    val raf = new RandomAccessFile(latest.toFile, "rw")
+    try { raf.seek(pos); raf.write(text(pos) ^ 1) } finally raf.close()
+    val e = intercept[StreamingQueryException](runRetractAgg(dir, ckpt))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[ChecksumException]),
+      chain.map(_.toString).mkString("\n"))
   }
 }
