@@ -31,7 +31,8 @@ object Artifacts {
     * its artifact is kept and this build is dropped. A target dir without
     * `_DONE` (a build from before this protocol, or a torn one) is
     * rebuilt. Building also removes `<name>_v<k>` for every `k` below
-    * `version` and staging dirs of dead processes. Within a JVM a
+    * `version`, the unversioned `<name>` a build from before versioning
+    * left, and staging dirs of dead processes. Within a JVM a
     * re-entrant lock per target keeps concurrent callers from building
     * twice; a build may call `once` for another target. */
   def once(name: String, version: Int, sfDir: String)(
@@ -97,12 +98,15 @@ object Artifacts {
       if (!ProcessHandle.of(pid).isPresent) QueryUtil.deleteRecursively(f)
     }
 
-  /** Remove every `<name>_v<k>` with `k` below `version`. */
-  private def sweepVersions(name: String, version: Int): Unit =
-    children(new java.io.File(Root),
-        (Regex.quote(name) + """_v(\d+)""").r).foreach { case (f, k) =>
-      if (k < version) QueryUtil.deleteRecursively(f)
+  /** Remove every `<name>_v<k>` with `k` below `version`, and the bare
+    * `<name>` as version 0. */
+  private def sweepVersions(name: String, version: Int): Unit = {
+    val root = new java.io.File(Root)
+    QueryUtil.deleteRecursively(new java.io.File(root, name))
+    children(root, (Regex.quote(name) + """_v(\d+)""").r).foreach {
+      case (f, k) => if (k < version) QueryUtil.deleteRecursively(f)
     }
+  }
 
   /** Entries of `dir` whose name matches `pattern`, with its one number. */
   private def children(dir: java.io.File,

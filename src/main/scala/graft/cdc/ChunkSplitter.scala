@@ -67,19 +67,9 @@ object ChunkSplitter {
   def splitEvenlySizedChunks(min: Long, max: Long, rowCount: Long,
       chunkSize: Int): Seq[ChunkRange] = {
     val step = dynamicChunkStep(min, max, rowCount, chunkSize)
-    val bounds = Iterator.iterate(min + step)(_ + step)
+    fromCuts(Iterator.iterate(min + step)(_ + step)
       .takeWhile(b => b <= max && b > min) // overflow guard: stop on wrap
-      .toSeq
-    val cuts = bounds
-    if (cuts.isEmpty) Seq(ChunkRange(0, None, None))
-    else {
-      val first = ChunkRange(0, None, Some(cuts.head))
-      val mids = cuts.sliding(2).zipWithIndex.collect {
-        case (Seq(a, b), i) => ChunkRange(i + 1, Some(a), Some(b))
-      }.toSeq
-      val last = ChunkRange(cuts.size, Some(cuts.last), None)
-      (first +: mids) :+ last
-    }
+      .toSeq)
   }
 
   /**
@@ -90,19 +80,10 @@ object ChunkSplitter {
    * StatementUtils.java:99-130). A JDBC dialect would push this back as SQL.
    */
   def splitUnevenlySizedChunks(sortedKeys: Iterator[Long],
-      chunkSize: Int): Seq[ChunkRange] = {
-    val cuts = sortedKeys.zipWithIndex
+      chunkSize: Int): Seq[ChunkRange] =
+    fromCuts(sortedKeys.zipWithIndex
       .collect { case (k, i) if i > 0 && i % chunkSize == 0 => k }
-      .toSeq.distinct
-    if (cuts.isEmpty) Seq(ChunkRange(0, None, None))
-    else {
-      val first = ChunkRange(0, None, Some(cuts.head))
-      val mids = cuts.sliding(2).zipWithIndex.collect {
-        case (Seq(a, b), i) => ChunkRange(i + 1, Some(a), Some(b))
-      }.toSeq
-      (first +: mids) :+ ChunkRange(cuts.size, Some(cuts.last), None)
-    }
-  }
+      .toSeq.distinct)
 
   /**
    * Uneven split driven by the store itself: repeatedly ask the dialect for
@@ -158,17 +139,9 @@ object ChunkSplitter {
     if (sorted.isEmpty || numChunks <= 1) Seq(ChunkRange(0, None, None))
     else {
       val n = sorted.size
-      val cuts = (1 until numChunks)
+      fromCuts((1 until numChunks)
         .map(i => sorted((i.toLong * n / numChunks).toInt.min(n - 1)))
-        .distinct
-      if (cuts.isEmpty) Seq(ChunkRange(0, None, None))
-      else {
-        val first = ChunkRange(0, None, Some(cuts.head))
-        val mids = cuts.sliding(2).zipWithIndex.collect {
-          case (Seq(a, b), i) => ChunkRange(i + 1, Some(a), Some(b))
-        }.toSeq
-        (first +: mids) :+ ChunkRange(cuts.size, Some(cuts.last), None)
-      }
+        .distinct)
     }
   }
 

@@ -72,15 +72,22 @@ object Materialize {
    */
   def materialize(emitted: DataFrame, keyCols: Seq[String]): DataFrame = {
     val payload = emitted.schema.fieldNames.filterNot(MetaCols.contains).toSeq
-    val img = struct((col(OpCol) +: payload.map(col)): _*)
-    val newest = emitted
-      .filter(col(OpCol) =!= RowKind.UpdateBefore)
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(img, col(OffsetCol)).as("__v"))
-    newest
+    newest(emitted, keyCols, payload)
       .filter(col(s"__v.$OpCol") =!= RowKind.Delete)
       .select(payload.map(c => col(s"__v.$c").as(c)): _*)
   }
+
+  /** The newest-wins reduction of every materializer ([[materialize]],
+    * [[UpsertSink.mergeInto]], `JdbcUpsertSink.mergeInto`): drop `-U` rows,
+    * then keep per `keys` the row with the greatest `__offset`, as `keys`
+    * ++ `__v` = struct(`__op`, `fields`…). A key whose newest row is a `-D`
+    * keeps it; the caller drops it or stores a tombstone. */
+  private[cdc] def newest(rows: DataFrame, keys: Seq[String],
+      fields: Seq[String]): DataFrame =
+    rows.filter(col(OpCol) =!= RowKind.UpdateBefore)
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(struct((col(OpCol) +: fields.map(col)): _*),
+        col(OffsetCol)).as("__v"))
 
   /** Envelope → current state in one call. */
   def materializeEnvelope(envelope: DataFrame, keyCols: Seq[String]): DataFrame =

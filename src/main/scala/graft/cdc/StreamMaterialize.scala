@@ -2,8 +2,8 @@ package graft.cdc
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DecimalType, StringType, StructType}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 
 /**
  * Streaming changelog materialization — the stateful half of the engine's
@@ -71,11 +71,68 @@ object StreamMaterialize {
       .toDF()
   }
 
+  /** The changelog sign of a row kind, shared by the versioned operators:
+    * `+I`/`+U` add (+1), `-U`/`-D` retract (−1). The operators require a
+    * retract stream (`changelog.mode=all`); anything but the four row
+    * kinds — a raw external op code, say — throws, naming `operator`. An
+    * upsert stream (a lone `+U`, no `-U`) carries only valid kinds, so it
+    * is NOT detected: its updates add without retracting the old image. */
+  private def sign(op: String, operator: String): Int = op match {
+    case RowKind.Insert | RowKind.UpdateAfter => 1
+    case RowKind.UpdateBefore | RowKind.Delete => -1
+    case other => throw new IllegalArgumentException(
+      s"$operator requires a retract (changelog.mode=all) stream with ops " +
+        s"+I/+U/-U/-D, got '$other'; an upsert stream is not detected")
+  }
+
+  /** The keyed-state skeleton of the versioned operators. Each micro-batch
+    * folds a group's rows into its state (`zero` for a new group) with
+    * `step`, which gets the group's next version (`ver` of the state + 1)
+    * and returns the new state and the one row to emit. So the output holds
+    * one row per touched group per batch, and the row with the newest
+    * `ver` of a group is its current value ([[latest]]). With `NoTimeout`
+    * and no initial state Spark calls the function only for groups that
+    * have rows in the batch. */
+  private def versioned[E, S: Encoder, O: Encoder](evs: Dataset[E])(
+      key: E => String, zero: S)(ver: S => Long)(
+      step: (String, S, Iterator[E], Long) => (S, O)): DataFrame =
+    evs.groupByKey(key)(Encoders.STRING)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (g: String, rows: Iterator[E], state: GroupState[S]) =>
+          val st = state.getOption.getOrElse(zero)
+          val (next, out) = step(g, st, rows, ver(st) + 1)
+          state.update(next)
+          Iterator.single(out)
+      }
+      .toDF()
+
+  /** The current value per group of a versioned operator's drained
+    * output: `g` ++ `cols` of the group's row with the newest `ver`. */
+  private[graft] def latest(versions: DataFrame, cols: String*): DataFrame =
+    versions.groupBy(col("g"))
+      .agg(max_by(struct(cols.map(col): _*), col("ver")).as("v"))
+      .select(col("g") +: cols.map(c => col(s"v.$c").as(c)): _*)
+
   /** (group, op, measure) event for the retract aggregate. */
   case class AggEv(g: String, op: String, m: java.math.BigDecimal)
   case class AggState(cnt: Long, total: java.math.BigDecimal, ver: Long)
   case class AggOut(g: String, cnt: Long, total: java.math.BigDecimal,
       ver: Long)
+
+  private val Zero = new java.math.BigDecimal("0.00")
+
+  /** (g, op, DECIMAL(18,2) measure) events of a retract operator. */
+  private def aggEvents(emitted: DataFrame, groupCol: String,
+      measureCol: String): Dataset[AggEv] = {
+    val spark = emitted.sparkSession
+    import spark.implicits._
+    emitted.select(
+        col(groupCol).cast(StringType).as("g"),
+        col(OpCol).as("op"),
+        col(measureCol).cast(DecimalType(18, 2)).as("m"))
+      .as[AggEv]
+  }
 
   /** Streaming changelog → incrementally maintained per-group COUNT/SUM
     * with retractions — the Flink retract-aggregate re-expressed as keyed
@@ -85,50 +142,39 @@ object StreamMaterialize {
     * emits the group's new running totals with a monotone version, so the
     * newest version per group IS the current aggregate (Update output
     * mode). Measures ride exact DECIMAL(18,2) — additions commute, the
-    * result is independent of event partitioning and batch slicing. */
+    * result is independent of event partitioning and batch slicing. The
+    * input must be a retract stream (see [[sign]]). */
   def retractAgg(emitted: DataFrame, groupCol: String,
       measureCol: String): DataFrame = {
     val spark = emitted.sparkSession
-    import org.apache.spark.sql.types.{DecimalType, StringType}
     import spark.implicits._
-    val evs = emitted.select(
-        col(groupCol).cast(StringType).as("g"),
-        col(OpCol).as("op"),
-        col(measureCol).cast(DecimalType(18, 2)).as("m"))
-      .as[AggEv]
-    evs.groupByKey(_.g)
-      .flatMapGroupsWithState[AggState, AggOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[AggEv], state: GroupState[AggState]) =>
-          val zero = new java.math.BigDecimal("0.00")
-          val st = state.getOption.getOrElse(AggState(0L, zero, 0L))
-          var cnt = st.cnt
-          var tot = st.total
-          var n = 0
-          rows.foreach { e =>
-            val m = if (e.m == null) zero else e.m
-            e.op match {
-              case RowKind.Insert | RowKind.UpdateAfter =>
-                cnt += 1; tot = tot.add(m)
-              case RowKind.UpdateBefore | RowKind.Delete =>
-                cnt -= 1; tot = tot.subtract(m)
-              case other =>
-                // upsert-mode streams (lone +U, no -U) or raw external ops
-                // would silently corrupt the totals — fail loudly instead
-                throw new IllegalArgumentException(
-                  s"retractAgg requires a retract (changelog.mode=all) " +
-                    s"stream with ops +I/+U/-U/-D, got '$other'")
-            }
-            n += 1
-          }
-          if (n == 0) Iterator.empty
-          else {
-            state.update(AggState(cnt, tot, st.ver + 1))
-            Iterator.single(AggOut(g, cnt, tot, st.ver + 1))
-          }
+    versioned(aggEvents(emitted, groupCol, measureCol))(
+        _.g, AggState(0L, Zero, 0L))(_.ver) { (g, st, rows, ver) =>
+      var cnt = st.cnt
+      var tot = st.total
+      rows.foreach { e =>
+        val m = if (e.m == null) Zero else e.m
+        if (sign(e.op, "retractAgg") > 0) { cnt += 1; tot = tot.add(m) }
+        else { cnt -= 1; tot = tot.subtract(m) }
       }
-      .toDF()
+      (AggState(cnt, tot, ver), AggOut(g, cnt, tot, ver))
+    }
   }
+
+  /** The multiset step of [[retractMinMax]] and [[retractQuantile]]: each
+    * row moves the net count of its measure's `valueKey` by the row's
+    * sign, dropping a count that reaches zero; NULL measures are skipped. */
+  private def netCounts[K](counts: Map[K, Long], rows: Iterator[AggEv],
+      operator: String)(valueKey: java.math.BigDecimal => K): Map[K, Long] =
+    rows.foldLeft(counts) { (acc, e) =>
+      val d = sign(e.op, operator)
+      if (e.m == null) acc
+      else {
+        val k = valueKey(e.m)
+        val c = acc.getOrElse(k, 0L) + d
+        if (c == 0L) acc.removed(k) else acc.updated(k, c)
+      }
+    }
 
   case class MmState(counts: Map[String, Long], ver: Long)
   case class MmOut(g: String, n: Long, min_m: java.math.BigDecimal,
@@ -153,50 +199,19 @@ object StreamMaterialize {
   def retractMinMax(emitted: DataFrame, groupCol: String,
       measureCol: String): DataFrame = {
     val spark = emitted.sparkSession
-    import org.apache.spark.sql.types.{DecimalType, StringType}
     import spark.implicits._
-    val evs = emitted.select(
-        col(groupCol).cast(StringType).as("g"),
-        col(OpCol).as("op"),
-        col(measureCol).cast(DecimalType(18, 2)).as("m"))
-      .as[AggEv]
-    evs.groupByKey(_.g)
-      .flatMapGroupsWithState[MmState, MmOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[AggEv], state: GroupState[MmState]) =>
-          val st = state.getOption.getOrElse(MmState(Map.empty, 0L))
-          var counts = st.counts
-          var n = 0
-          rows.foreach { e =>
-            if (e.m != null) {
-              val k = e.m.toPlainString
-              val d = e.op match {
-                case RowKind.Insert | RowKind.UpdateAfter => 1L
-                case RowKind.UpdateBefore | RowKind.Delete => -1L
-                case other => throw new IllegalArgumentException(
-                  s"retractMinMax requires a retract (changelog.mode=all) " +
-                    s"stream with ops +I/+U/-U/-D, got '$other'")
-              }
-              val c = counts.getOrElse(k, 0L) + d
-              counts = if (c == 0L) counts.removed(k)
-                else counts.updated(k, c)
-            }
-            n += 1
-          }
-          if (n == 0) Iterator.empty
-          else {
-            state.update(MmState(counts, st.ver + 1))
-            val live = counts.collect { case (k, c) if c > 0L =>
-              new java.math.BigDecimal(k)
-            }.toSeq
-            def ext(cmp: Int): java.math.BigDecimal =
-              if (live.isEmpty) null
-              else live.reduce((a, b) => if (a.compareTo(b) * cmp <= 0) a else b)
-            Iterator.single(MmOut(g, counts.valuesIterator.sum,
-              ext(1), ext(-1), st.ver + 1))
-          }
-      }
-      .toDF()
+    versioned(aggEvents(emitted, groupCol, measureCol))(
+        _.g, MmState(Map.empty, 0L))(_.ver) { (g, st, rows, ver) =>
+      val counts = netCounts(st.counts, rows, "retractMinMax")(_.toPlainString)
+      val live = counts.collect { case (k, c) if c > 0L =>
+        new java.math.BigDecimal(k)
+      }.toSeq
+      def ext(cmp: Int): java.math.BigDecimal =
+        if (live.isEmpty) null
+        else live.reduce((a, b) => if (a.compareTo(b) * cmp <= 0) a else b)
+      (MmState(counts, ver),
+        MmOut(g, counts.valuesIterator.sum, ext(1), ext(-1), ver))
+    }
   }
 
   case class QbState(counts: Map[Long, Long], ver: Long)
@@ -217,56 +232,27 @@ object StreamMaterialize {
   def retractQuantile(emitted: DataFrame, groupCol: String,
       measureCol: String, binWidthCents: Long): DataFrame = {
     val spark = emitted.sparkSession
-    import org.apache.spark.sql.types.{DecimalType, StringType}
     import spark.implicits._
-    val evs = emitted.select(
-        col(groupCol).cast(StringType).as("g"),
-        col(OpCol).as("op"),
-        col(measureCol).cast(DecimalType(18, 2)).as("m"))
-      .as[AggEv]
-    evs.groupByKey(_.g)
-      .flatMapGroupsWithState[QbState, QbOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[AggEv], state: GroupState[QbState]) =>
-          val st = state.getOption.getOrElse(QbState(Map.empty, 0L))
-          var counts = st.counts
-          var n = 0
-          rows.foreach { e =>
-            if (e.m != null) {
-              val cents = e.m.movePointRight(2).longValueExact()
-              val bin = Math.floorDiv(cents, binWidthCents)
-              val d = e.op match {
-                case RowKind.Insert | RowKind.UpdateAfter => 1L
-                case RowKind.UpdateBefore | RowKind.Delete => -1L
-                case other => throw new IllegalArgumentException(
-                  s"retractQuantile requires a retract stream, got '$other'")
-              }
-              val c = counts.getOrElse(bin, 0L) + d
-              counts = if (c == 0L) counts.removed(bin)
-                else counts.updated(bin, c)
-            }
-            n += 1
-          }
-          if (n == 0) Iterator.empty
-          else {
-            state.update(QbState(counts, st.ver + 1))
-            val pos = counts.toSeq.filter(_._2 > 0L).sortBy(_._1)
-            val npos = pos.iterator.map(_._2).sum
-            def est(p: Long): java.lang.Double =
-              if (npos == 0L) null
-              else {
-                val rank = (npos * p + 99L) / 100L
-                var cum = 0L
-                val hit = pos.find { case (_, c) => cum += c; cum >= rank }
-                hit.map { case (bin, _) =>
-                  Double.box(bin * binWidthCents / 100.0d)
-                }.orNull
-              }
-            Iterator.single(QbOut(g, npos, est(50L), est(95L), est(99L),
-              st.ver + 1))
-          }
+    versioned(aggEvents(emitted, groupCol, measureCol))(
+        _.g, QbState(Map.empty, 0L))(_.ver) { (g, st, rows, ver) =>
+      val counts = netCounts(st.counts, rows, "retractQuantile") { m =>
+        Math.floorDiv(m.movePointRight(2).longValueExact(), binWidthCents)
       }
-      .toDF()
+      val pos = counts.toSeq.filter(_._2 > 0L).sortBy(_._1)
+      val npos = pos.iterator.map(_._2).sum
+      def est(p: Long): java.lang.Double =
+        if (npos == 0L) null
+        else {
+          val rank = (npos * p + 99L) / 100L
+          var cum = 0L
+          val hit = pos.find { case (_, c) => cum += c; cum >= rank }
+          hit.map { case (bin, _) =>
+            Double.box(bin * binWidthCents / 100.0d)
+          }.orNull
+        }
+      (QbState(counts, ver),
+        QbOut(g, npos, est(50L), est(95L), est(99L), ver))
+    }
   }
 
   case class KmvEv(g: String, op: String, h: Long)
@@ -287,7 +273,6 @@ object StreamMaterialize {
   def kmvSketch(emitted: DataFrame, groupCol: String, keyCol: String,
       k: Int): DataFrame = {
     val spark = emitted.sparkSession
-    import org.apache.spark.sql.types.StringType
     import spark.implicits._
     val evs = emitted.select(
         col(groupCol).cast(StringType).as("g"),
@@ -295,32 +280,15 @@ object StreamMaterialize {
         graft.functions.TextFunctions.md5Long(
           col(keyCol).cast(StringType)).as("h"))
       .as[KmvEv]
-    evs.groupByKey(_.g)
-      .flatMapGroupsWithState[KmvState, KmvOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[KmvEv], state: GroupState[KmvState]) =>
-          val st = state.getOption.getOrElse(KmvState(Seq.empty, 0L))
-          var n = 0
-          val fresh = scala.collection.mutable.ArrayBuffer.empty[Long]
-          rows.foreach { e =>
-            e.op match {
-              case RowKind.Insert | RowKind.UpdateAfter => fresh += e.h
-              case RowKind.UpdateBefore | RowKind.Delete => () // insert-only
-              case other => throw new IllegalArgumentException(
-                s"kmvSketch expects changelog ops +I/+U/-U/-D, got '$other'")
-            }
-            n += 1
-          }
-          if (n == 0) Iterator.empty
-          else {
-            val mins = (st.mins ++ fresh).distinct.sorted.take(k)
-            state.update(KmvState(mins, st.ver + 1))
-            val kth: java.lang.Long =
-              if (mins.size >= k) Long.box(mins(k - 1)) else null
-            Iterator.single(KmvOut(g, kth, st.ver + 1))
-          }
-      }
-      .toDF()
+    versioned(evs)(_.g, KmvState(Seq.empty, 0L))(_.ver) {
+      (g, st, rows, ver) =>
+        // insert-only: retractions are checked, then skipped
+        val fresh = rows.filter(e => sign(e.op, "kmvSketch") > 0).map(_.h)
+        val mins = (st.mins ++ fresh).distinct.sorted.take(k)
+        val kth: java.lang.Long =
+          if (mins.size >= k) Long.box(mins(k - 1)) else null
+        (KmvState(mins, ver), KmvOut(g, kth, ver))
+    }
   }
 
   /** Decode an upsert stream's image JSON back into payload columns
@@ -411,11 +379,8 @@ object UpsertSink {
         .withColumn(BucketCol, bucketOf))
     val combined = existing.map(_.unionByName(incoming)).getOrElse(incoming)
     // newest image per key; deletes drop the key
-    val img = struct((col(OpCol) +: col(OffsetCol) +: payload.map(col)): _*)
-    val merged = combined
-      .filter(col(OpCol) =!= RowKind.UpdateBefore)
-      .groupBy((keyCols :+ BucketCol).map(col): _*)
-      .agg(max_by(img, col(OffsetCol)).as("__v"))
+    val merged = Materialize
+      .newest(combined, keyCols :+ BucketCol, OffsetCol +: payload)
       .filter(col(s"__v.$OpCol") =!= RowKind.Delete)
       .select(col(BucketCol) +:
         (payload :+ OffsetCol).map(c => col(s"__v.$c").as(c)): _*)

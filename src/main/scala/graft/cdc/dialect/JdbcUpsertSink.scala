@@ -80,14 +80,11 @@ object JdbcUpsertSink {
     val payloadFields = payload.map(n => batch.schema(n))
     ensureTable(path, table, payloadFields, keyCols)
 
-    // newest event per key within the batch — one upsert/delete per key
-    val img = struct((col(OpCol) +: col(OffsetCol) +: payload.map(col)): _*)
-    val newest = batch
-      .filter(col(OpCol) =!= RowKind.UpdateBefore)
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(img, col(OffsetCol)).as("v"))
-      .select(col(s"v.$OpCol").as("gop") +: col(s"v.$OffsetCol").as("goff")
-        +: payload.map(c => col(s"v.$c").as(c)): _*)
+    // newest event per key within the batch — one upsert/tombstone per key
+    val newest = graft.cdc.Materialize
+      .newest(batch, keyCols, OffsetCol +: payload)
+      .select(col(s"__v.$OpCol").as("gop") +: col(s"__v.$OffsetCol").as("goff")
+        +: payload.map(c => col(s"__v.$c").as(c)): _*)
 
     val nonKey = payload.filterNot(keyCols.contains)
     val keyCond = keyCols.map(k => s"$k = ?").mkString(" AND ")

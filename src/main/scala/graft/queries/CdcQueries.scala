@@ -19,16 +19,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object CdcQueries {
 
   import ChangeRecord._
+  import CdcSourceQueries.{orderCols, ordersSpec}
 
-  private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-    "o_totalprice", "o_orderdate", "o_orderpriority")
   private val partCols = Seq("p_partkey", "p_name", "p_brand", "p_type",
     "p_size", "p_retailprice")
   private val custCols = Seq("c_custkey", "c_name", "c_nationkey",
     "c_acctbal", "c_mktsegment")
 
-  private val ordersSpec = ChangelogGen.Spec(pk = "o_orderkey",
-    measure = "o_totalprice", table = "orders")
   private val partSpec = ChangelogGen.Spec(pk = "p_partkey",
     measure = "p_retailprice", table = "part")
   private val custSpec = ChangelogGen.Spec(pk = "c_custkey",

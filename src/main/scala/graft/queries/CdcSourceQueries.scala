@@ -19,12 +19,14 @@ object CdcSourceQueries {
 
   import ChangeRecord._
 
-  private val ordersSpec = ChangelogGen.Spec(pk = "o_orderkey",
+  /** The `orders` changelog spec and projected columns shared by every CDC
+    * query family that reads the `orders` fixture. */
+  private[queries] val ordersSpec = ChangelogGen.Spec(pk = "o_orderkey",
     measure = "o_totalprice", table = "orders")
   /** Bound for the time-travel query: inside the update band (updBand + pk),
     * past the first ~3000 keys — partial updates at every test SF. */
   private val StateAtBound = ordersSpec.updBand + 3000L
-  private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+  private[queries] val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
 
   /** Idempotently materialize the file CDC database for `orders` at this sf.

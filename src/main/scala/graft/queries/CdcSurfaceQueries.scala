@@ -14,22 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object CdcSurfaceQueries {
 
   import ChangeRecord._
-
-  private val ordersSpec = ChangelogGen.Spec(pk = "o_orderkey",
-    measure = "o_totalprice", table = "orders")
-  private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-    "o_totalprice", "o_orderdate", "o_orderpriority")
-
-  /** The `orders` CDC database (shared with CdcSourceQueries.prepare). */
-  private[queries] def prepare(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.Artifacts.dir("cdcdb", sfDir)
-    val base = Tables.load(spark, sfDir, "orders")
-    FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
-      snapshot = base,
-      changes = ChangelogGen.changes(base, ordersSpec),
-      snapshotPartitions = 32)
-    dir
-  }
+  import CdcSourceQueries.{orderCols, ordersSpec, prepare}
 
   /** Two shards of `orders` split by key parity — the sharded-table layout
     * the reference's `table-name` regex captures (P1). */
@@ -332,7 +317,7 @@ object CdcSurfaceQueries {
     "cdc_temporal_join" -> QueryDef(
       (s, dir0) => {
         import org.apache.spark.sql.expressions.Window
-        val dir = CdcSourceQueries.prepare(s, dir0)
+        val dir = prepare(s, dir0)
         CdcSourceQueries.prepareCustomer(s, dir0)
         val base = s.read.format("graft-cdc")
           .option("path", dir).option("table", "customer")

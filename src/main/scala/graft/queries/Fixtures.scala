@@ -23,10 +23,8 @@ object Fixtures {
     "CdcSourceQueries.prepareTz" -> CdcSourceQueries.prepareTz,
     "CdcSourceQueries.prepareMongo" -> CdcSourceQueries.prepareMongo,
     "CdcSourceQueries.prepareCharset" -> CdcSourceQueries.prepareCharset,
-    "CdcSurfaceQueries.prepare" -> CdcSurfaceQueries.prepare,
     "CdcSurfaceQueries.prepareSharded" -> CdcSurfaceQueries.prepareSharded,
     "CdcSurfaceQueries.prepareCorrupt" -> CdcSurfaceQueries.prepareCorrupt,
-    "StreamingQueries.prepare" -> StreamingQueries.prepare,
     "PipelineQueries.prepareBucketed" -> PipelineQueries.prepareBucketed,
     "DedupQueries.prepareDocs" -> DedupQueries.prepareDocs,
     "DedupQueries.prepareDocsReplay" -> DedupQueries.prepareDocsReplay,

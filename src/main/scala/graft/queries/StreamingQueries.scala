@@ -16,6 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object StreamingQueries {
 
   import ChangeRecord._
+  import CdcSourceQueries.{orderCols, ordersSpec, prepare}
 
   /** Per-user windowed-funnel state: the two running maxima the batch
     * windows compute, plus the deepest stage reached — O(1) per user. */
@@ -56,20 +57,6 @@ object StreamingQueries {
     fs
   }
 
-  private val ordersSpec = ChangelogGen.Spec(pk = "o_orderkey",
-    measure = "o_totalprice", table = "orders")
-  private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-    "o_totalprice", "o_orderdate", "o_orderpriority")
-
-  private[queries] def prepare(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.Artifacts.dir("cdcdb", sfDir)
-    val base = Tables.load(spark, sfDir, "orders")
-    FileCdcDatabase.write(spark, dir, "orders", "graft", ordersSpec.pk,
-      snapshot = base,
-      changes = ChangelogGen.changes(base, ordersSpec),
-      snapshotPartitions = 32)
-    dir
-  }
 
   private def readStreamEarliest(s: SparkSession, dir: String): DataFrame = {
     // Rate limit scaled to the log size: enough to exercise state across
@@ -509,12 +496,11 @@ object StreamingQueries {
         val dir = prepare(s, dir0)
         val stream = StreamMaterialize.retractAgg(
             readStreamEarliest(s, dir), "o_orderstatus", "o_totalprice")
-        // newest version per group = the current aggregate
-        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
-          .agg(max_by(struct(col("cnt"), col("total")), col("ver")).as("v"))
+        StreamMaterialize.latest(
+            graft.QueryUtil.drain(stream, "update"), "cnt", "total")
           .select(col("g").as("o_orderstatus"),
-            col("v.cnt").as("n_delta"),
-            col("v.total").cast(DoubleType).as("total_delta"))
+            col("cnt").as("n_delta"),
+            col("total").cast(DoubleType).as("total_delta"))
           .orderBy(col("o_orderstatus"))
       },
       Some("""SELECT o_orderstatus, CAST(SUM(dc) AS BIGINT) AS n_delta,
@@ -549,14 +535,12 @@ object StreamingQueries {
         val dir = prepare(s, dir0)
         val stream = StreamMaterialize.retractMinMax(
             readStreamEarliest(s, dir), "o_orderstatus", "o_totalprice")
-        // newest version per group = the current extremes
-        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
-          .agg(max_by(struct(col("n"), col("min_m"), col("max_m")),
-            col("ver")).as("v"))
+        StreamMaterialize.latest(
+            graft.QueryUtil.drain(stream, "update"), "n", "min_m", "max_m")
           .select(col("g").as("o_orderstatus"),
-            col("v.n").as("n_delta"),
-            col("v.min_m").cast(DoubleType).as("min_m"),
-            col("v.max_m").cast(DoubleType).as("max_m"))
+            col("n").as("n_delta"),
+            col("min_m").cast(DoubleType).as("min_m"),
+            col("max_m").cast(DoubleType).as("max_m"))
           .orderBy(col("o_orderstatus"))
       },
       Some("""WITH deltas AS (
@@ -597,8 +581,7 @@ object StreamingQueries {
         val dir = prepare(s, dir0)
         val stream = StreamMaterialize.kmvSketch(
             readStreamEarliest(s, dir), "o_orderpriority", "o_orderkey", 8)
-        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
-          .agg(max_by(col("kth"), col("ver")).as("kth"))
+        StreamMaterialize.latest(graft.QueryUtil.drain(stream, "update"), "kth")
           .select(col("g").as("o_orderpriority"), col("kth"),
             round(lit(7.0d) * lit(1152921504606846976.0d) /
               col("kth").cast(org.apache.spark.sql.types.DoubleType), 4)
@@ -643,13 +626,12 @@ object StreamingQueries {
         val stream = StreamMaterialize.retractQuantile(
             readStreamEarliest(s, dir), "o_orderstatus", "o_totalprice",
             binWidthCents = 1048576L)
-        graft.QueryUtil.drain(stream, "update").groupBy(col("g"))
-          .agg(max_by(struct(col("n_net"), col("p50_est"), col("p95_est"),
-            col("p99_est")), col("ver")).as("v"))
-          .select(col("g").as("o_orderstatus"), col("v.n_net").as("n_net"),
-            col("v.p50_est").cast(DoubleType).as("p50_est"),
-            col("v.p95_est").cast(DoubleType).as("p95_est"),
-            col("v.p99_est").cast(DoubleType).as("p99_est"))
+        StreamMaterialize.latest(graft.QueryUtil.drain(stream, "update"),
+            "n_net", "p50_est", "p95_est", "p99_est")
+          .select(col("g").as("o_orderstatus"), col("n_net"),
+            col("p50_est").cast(DoubleType).as("p50_est"),
+            col("p95_est").cast(DoubleType).as("p95_est"),
+            col("p99_est").cast(DoubleType).as("p99_est"))
           .orderBy(col("o_orderstatus"))
       },
       Some("""WITH deltas AS (
@@ -802,7 +784,7 @@ object StreamingQueries {
     // customer deletes cascading retractions onto their orders — must land.
     "cdc_stream_join_materialized" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
-        val dir = CdcSourceQueries.prepare(s, dir0)
+        val dir = prepare(s, dir0)
         CdcSourceQueries.prepareCustomer(s, dir0)
         def src(table: String): DataFrame = s.readStream.format("graft-cdc")
           .option("path", dir).option("table", table)
@@ -844,7 +826,7 @@ object StreamingQueries {
     // property. Result = join of the two sides' log-touched final states.
     "cdc_stream_join_retractions" -> QueryDef(
       (s, dir0) => graft.QueryUtil.withShufflePartitions(s, 4) {
-        val dir = CdcSourceQueries.prepare(s, dir0)
+        val dir = prepare(s, dir0)
         CdcSourceQueries.prepareCustomer(s, dir0)
         def src(table: String): DataFrame = {
           val logEvents = FileCdcDatabase.readMeta(dir, table).maxOffset

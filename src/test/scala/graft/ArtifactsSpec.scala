@@ -105,13 +105,23 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a version bump removes every older version of that name only") {
     val name = s"${prefix}_x"
-    val others = Seq(s"${name}y_v1", s"${name}_v1x", s"${name}_w", name)
+    val others = Seq(s"${name}y_v1", s"${name}_v1x", s"${name}_w")
     (Seq(s"${name}_v1", s"${name}_v2") ++ others).foreach { d =>
       touch(Paths.get(Artifacts.dir(d, sf), "f"))
     }
     Artifacts.once(name, 3, sf)(out => touch(Paths.get(out, "f")))
     val left = names(Paths.get(Artifacts.Root)).filter(_.startsWith(name))
     assert(left === (others :+ s"${name}_v3").toSet)
+  }
+
+  test("the unversioned dir of a build from before versioning is swept " +
+    "as version 0") {
+    val name = s"${prefix}_bare"
+    val other = s"${name}x"
+    Seq(name, other).foreach(d => touch(Paths.get(Artifacts.dir(d, sf), "f")))
+    Artifacts.once(name, 1, sf)(out => touch(Paths.get(out, "f")))
+    val left = names(Paths.get(Artifacts.Root)).filter(_.startsWith(name))
+    assert(left === Set(other, s"${name}_v1"))
   }
 
   test("a build may call once for another target without deadlock") {

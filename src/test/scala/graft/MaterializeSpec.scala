@@ -1,8 +1,9 @@
 package graft
 
 import graft.cdc.ChangeRecord._
-import graft.cdc.Materialize
-import org.apache.spark.sql.Row
+import graft.cdc.{Materialize, UpsertSink}
+import graft.cdc.dialect.JdbcUpsertSink
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Changelog emission + materialization semantics on a handcrafted envelope
@@ -67,5 +68,37 @@ class MaterializeSpec extends SparkSpecBase {
     val state = Materialize.materializeEnvelope(weird, Seq("id"))
       .collect().map(_.getLong(0)).toSeq
     assert(state === Seq(1L))
+  }
+
+  test("Materialize, UpsertSink and JdbcUpsertSink reach one state") {
+    // insert; two updates of one key in one batch; a delete; a re-insert
+    // after the delete; then the middle batch replayed
+    def emitted(rows: (Long, String, Long, String)*): DataFrame = {
+      val schema = StructType(payload.fields ++ Seq(
+        StructField(OpCol, StringType), StructField(OffsetCol, LongType),
+        StructField(TsCol, LongType), StructField(DbCol, StringType),
+        StructField(TableCol, StringType)))
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (id, v, off, op) => Row(id, v, op, off, off, "db", "t") }),
+        schema)
+    }
+    val b1 = emitted((1L, "a", 1L, "+I"), (2L, "b", 2L, "+I"))
+    val b2 = emitted(
+      (1L, "a", 3L, "-U"), (1L, "a2", 3L, "+U"),
+      (1L, "a2", 4L, "-U"), (1L, "a3", 4L, "+U"),
+      (2L, "b", 5L, "-D"))
+    val b3 = emitted((2L, "b2", 6L, "+I"), (3L, "c", 7L, "+I"))
+    val log = Seq(b1, b2, b3, b2)
+    val want = Set((1L, "a3"), (2L, "b2"), (3L, "c"))
+    def rows(df: DataFrame) = df.select("id", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+
+    assert(rows(Materialize.materialize(log.reduce(_ union _), Seq("id"))) === want)
+    val sink = tmpDir("one-state-sink") + "/state"
+    log.foreach(UpsertSink.mergeInto(spark, _, Seq("id"), sink))
+    assert(rows(UpsertSink.readState(spark, sink)) === want)
+    val db = tmpDir("one-state-jdbc")
+    log.foreach(JdbcUpsertSink.mergeInto(_, Seq("id"), db, "t_one"))
+    assert(rows(JdbcUpsertSink.readBack(spark, db, "t_one")) === want)
   }
 }

@@ -324,6 +324,60 @@ class StreamMaterializeSpec extends SparkSpecBase {
     assert(byVer(4L) === ((2L, Some(0.0), Some(10.0))), byVer)
   }
 
+  /** The four versioned operators over (g, `__op`, m, id) rows. */
+  private val versionedOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "retractAgg" -> (StreamMaterialize.retractAgg(_, "g", "m")),
+    "retractMinMax" -> (StreamMaterialize.retractMinMax(_, "g", "m")),
+    "retractQuantile" -> (StreamMaterialize.retractQuantile(_, "g", "m", 1000L)),
+    "kmvSketch" -> (StreamMaterialize.kmvSketch(_, "g", "id", 2)))
+
+  test("versioned operators emit one row per touched group per batch, and " +
+    "ver counts the batches that touched the group") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val batches = Seq(
+      Seq(("g1", "+I", 10.0, 1L), ("g1", "+I", 20.0, 2L), ("g2", "+I", 5.0, 3L)),
+      Seq(("g1", "-D", 10.0, 1L)),
+      Seq(("g2", "-U", 5.0, 3L), ("g2", "+U", 7.0, 3L), ("g3", "+I", 1.0, 4L)),
+      Seq(("g1", "-U", 20.0, 2L), ("g1", "+U", 30.0, 2L),
+        ("g1", "+I", 40.0, 5L)))
+    val touched = batches.map(_.map(_._1).toSet)
+    versionedOps.foreach { case (name, op) =>
+      val in = MemoryStream[(String, String, Double, Long)]
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
+      val q = op(in.toDF().toDF("g", OpCol, "m", "id"))
+        .writeStream.outputMode("update")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          b.select("g", "ver").collect()
+            .foreach(r => out.add((id, r.getString(0), r.getLong(1))))
+        }
+        .start()
+      try batches.foreach { rows => in.addData(rows); q.processAllAvailable() }
+      finally q.stop()
+      import scala.jdk.CollectionConverters._
+      val rows = out.asScala.toSeq
+      val byBatch = rows.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
+      assert(byBatch.map(_.sorted) === touched.map(_.toSeq.sorted), name)
+      val vers = rows.groupBy(_._2).map { case (g, rs) => g -> rs.map(_._3) }
+      touched.flatten.distinct.foreach { g =>
+        assert(vers(g) === (1L to touched.count(_(g)).toLong), s"$name $g")
+      }
+    }
+  }
+
+  test("versioned operators reject a raw external op code, naming the " +
+    "operator") {
+    val raw = Seq(("g1", "u", 1.0, 1L)).toDF("g", OpCol, "m", "id")
+    versionedOps.foreach { case (name, op) =>
+      val e = intercept[Exception](op(raw).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(
+        s"$name requires a retract (changelog.mode=all) stream")), msgs)
+      assert(msgs.exists(_.contains("got 'u'")), msgs)
+    }
+  }
+
   test("mergeInto pins the bucket count on first write") {
     val out = tmpDir("sink-pin") + "/state"
     val b1 = emitted((1L to 16L).map(i => (i, s"v$i", i, "+I")))
